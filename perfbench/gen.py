@@ -1,95 +1,63 @@
-"""Seeded input generation for the benchmark workloads.
+"""Seeded inputs for the benchmark workloads.
 
-Every table is a pure function of the seed: the same seed gives the same
-rows and the same files. The program under test only ever sees the parquet
-files written here; the in-memory rows are kept for the benchmark's own
-reference checks and layer samples.
+The text comes from the repository's ``documents`` test tables, copied to
+``perfbench/data/sf0.1`` and ``perfbench/data/sf0.01`` so that the benchmark
+reads nothing outside its checkout. The seed goes into every document key,
+so it moves the doc ids, the ``spans_from_text`` family rotation and the
+drawn page counts. The program under test only sees the parquet tables
+written here; the benchmark reads them back for its own reference checks
+and layer samples.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import random
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from samu_ocr_extraction_poc_spark import fixtures as FX
+from samu_ocr_extraction_poc_spark.plans.pipeline import route_doc_type
+from samu_ocr_extraction_poc_spark.schema import DOCUMENTS_SCHEMA
 
-FILLER = (
-    "the claim was filed on behalf of plaintiff and reviewed by counsel for "
-    "payment under the policy with notice of the hearing in this matter as "
-    "stated in the record after review of the medical bills and letters"
-).split()
-NAMES = ["Jane Roe", "John Doe", "Mary Major", "Richard Miles", "Ann Smith", "Dr. Lee Park"]
-ORGS = ["Acme Insurance Group", "Jackson County Hospital", "Summit Bank", "Harbor Clinic LLC"]
-PLACES = ["Missouri", "Kansas", "Texas", "Ohio", "Jackson County"]
-MOOD = ["approved", "denied", "pleased", "unhappy", "resolved", "damages", "thanks", "overdue"]
-MONTHS = ["January", "March", "June", "August", "October", "December"]
-
-# spans_from_text picks a family from sha256(key) % 20 (fixtures.py); the
-# benchmark mirrors that rotation only to label its per-family samples.
-_ROTATION = [(9, "letter"), (10, "email"), (13, "html"), (15, "transcript"),
-             (17, "pleading"), (18, "medical"), (19, "expense"), (20, "media")]
-SMALL_FAMILIES = [name for _, name in _ROTATION]
-FAMILIES = SMALL_FAMILIES + ["book"]
-
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
-# the Arrow form of schema.DOCUMENTS_SCHEMA
-ARROW_DOCS = pa.schema([
-    pa.field("doc_id", pa.string(), nullable=False),
-    pa.field("spans", pa.list_(pa.struct([
-        pa.field("kind", pa.string()), pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()), pa.field("offset", pa.int32()),
-    ]))),
-])
-
-# media_ref -> text for every image reference the generators emit
-OCR_LOOKUP = {f"img-{i:03d}": f"Scanned exhibit {i} signed by Jane Roe on June {i + 1}, 2023" for i in range(7)}
+SMALL_FAMILIES = ["letter", "email", "html", "transcript", "pleading", "medical", "expense", "media"]
+FAMILIES = SMALL_FAMILIES + ["book"]
+OCR_LOOKUP = FX.OCR_LOOKUP
 
 
-def family_of(key: str) -> str:
-    sel = int(hashlib.sha256(key.encode()).hexdigest()[:8], 16) % 20
-    return next(name for bound, name in _ROTATION if sel < bound)
+def documents_path(sf: str) -> str:
+    return os.path.join(DATA, sf, "documents.parquet")
 
 
-def prose(rng: random.Random, n_words: int) -> str:
-    """Legal-correspondence-like text that gives every NLP stand-in work:
-    names, organisations, places, dates, amounts and sentiment words."""
-    out: list[str] = []
-    while len(out) < n_words:
-        r = rng.random()
-        if r < 0.62:
-            out.append(rng.choice(FILLER))
-        elif r < 0.70:
-            out.extend(rng.choice(NAMES).split())
-        elif r < 0.76:
-            out.extend(rng.choice(ORGS).split())
-        elif r < 0.81:
-            out.extend(rng.choice(PLACES).split())
-        elif r < 0.87:
-            out.extend([rng.choice(MONTHS), f"{rng.randint(1, 28)},", str(rng.randint(2015, 2024))])
-        elif r < 0.93:
-            out.append(f"${rng.randint(100, 99999):,}.{rng.randint(0, 99):02d}")
-        else:
-            out.append(rng.choice(MOOD))
-    return " ".join(out[:n_words])
+def family_of(spans: list[dict]) -> str:
+    """The family a document's span kinds put it in: the program's own
+    router, with the two splits ``spans_from_text`` makes inside a route,
+    medical entities vs expense fields and letters vs media-heavy docs."""
+    kinds = [s["kind"] for s in spans]
+    route = route_doc_type(set(kinds))
+    if route == "medical":
+        return "medical" if "med_entity" in kinds else "expense"
+    if route == "correspondence_letter":
+        return "media" if kinds.count("media") > 1 else "letter"
+    return {"correspondence_email": "email", "correspondence_transcript": "transcript"}.get(route, route)
 
 
 @dataclass
 class Corpus:
-    """An interleaved ``documents(doc_id, spans)`` corpus plus what the
-    generator knows about it."""
+    """An interleaved ``documents(doc_id, spans)`` corpus as the benchmark
+    holds it in the driver."""
 
     doc_ids: list[str] = field(default_factory=list)
     spans: list[list[dict]] = field(default_factory=list)
     families: list[str] = field(default_factory=list)
-    expected_errors: int = 0
 
-    def add(self, key: str, spans: list[dict], family: str) -> None:
-        self.doc_ids.append(FX.doc_id_for(key))
+    def add(self, doc_id: str, spans: list[dict], family: str) -> None:
+        self.doc_ids.append(doc_id)
         self.spans.append(spans)
         self.families.append(family)
 
@@ -103,44 +71,51 @@ class Corpus:
             out.setdefault(fam, []).append(i)
         return out
 
-    def write(self, path: str, n_files: int) -> None:
-        """Materialize as ``n_files`` parquet files, documents dealt
-        round-robin."""
-        os.makedirs(path, exist_ok=True)
-        for f in range(n_files):
-            idx = range(f, len(self.doc_ids), n_files)
-            table = pa.table({
-                "doc_id": [self.doc_ids[i] for i in idx],
-                "spans": [[{k: s[k] for k in SPAN_FIELDS} for s in self.spans[i]] for i in idx],
-            }, schema=ARROW_DOCS)
-            pq.write_table(table, os.path.join(path, f"part-{f:04d}.parquet"))
+
+def synth(spark, seed: int, sf: str, n_docs: int, replicate: int = 1):
+    """``fixtures.synth_corpus_from_documents`` over the first ``n_docs``
+    rows of the ``sf`` documents table, keyed ``<seed>/<doc_id>``."""
+    docs = spark.read.parquet(documents_path(sf)).where(F.col("doc_id") < n_docs)
+    keyed = docs.select(F.concat_ws("/", F.lit(str(seed)), F.col("doc_id").cast("string")).alias("doc_id"), "text")
+    return FX.synth_corpus_from_documents(keyed, replicate=replicate)
 
 
-def _bad_pleading(corpus: Corpus, seed: int, i: int) -> None:
-    """A pleading with no 'vs.' line: extraction turns it into one
+def as_frame(spark, docs: list[tuple[str, list[dict]]]):
+    """(key, spans) pairs as a ``documents`` frame, doc_id = sha256(key)."""
+    return spark.createDataFrame(
+        [(FX.doc_id_for(k), [tuple(s[f] for f in SPAN_FIELDS) for s in spans]) for k, spans in docs],
+        schema=DOCUMENTS_SCHEMA,
+    )
+
+
+def bad_pleadings(seed: int, n: int) -> list[tuple[str, list[dict]]]:
+    """Pleadings with no 'vs.' line: extraction turns each into one
     ``BadFormatError`` row, so the generator knows the error count."""
-    corpus.add(f"{seed}/bad/{i}", FX.bad_pleading_doc(), "pleading")
-    corpus.expected_errors += 1
+    return [(f"{seed}/bad/{i}", FX.bad_pleading_doc()) for i in range(n)]
 
 
-def mixed_corpus(seed: int, n_docs: int, bad_every: int = 500) -> Corpus:
-    """Small documents across every ``spans_from_text`` family: the seed is
-    part of each key, so it moves doc ids and the family rotation."""
-    rng = random.Random(seed)
+def materialize(frame, out: str, n_files: int) -> None:
+    frame.repartition(n_files).write.mode("overwrite").parquet(out)
+
+
+def read_corpus(path: str) -> Corpus:
+    """A materialized table read back into the driver."""
+    table = pq.read_table(path)
     corpus = Corpus()
-    for i in range(n_docs):
-        if i % bad_every == bad_every - 1:
-            _bad_pleading(corpus, seed, i)
-            continue
-        key = f"{seed}/doc/{i}"
-        corpus.add(key, FX.spans_from_text(key, prose(rng, rng.randint(20, 90))), family_of(key))
+    for d, spans in zip(table["doc_id"].to_pylist(), table["spans"].to_pylist()):
+        corpus.add(d, spans, "")
     return corpus
 
 
-def line_pool(rng: random.Random, n: int = 2048) -> list[str]:
-    """Prose lines that book pages draw from; drawing keeps generation of
-    book-scale filings cheap."""
-    return [prose(rng, 9) for _ in range(n)]
+def line_pool(sf: str = "sf0.1") -> list[str]:
+    """Every line ``spans_from_text`` cuts from the documents table's texts;
+    book pages draw from it."""
+    n = FX.WORDS_PER_LINE
+    out = []
+    for text in pq.read_table(documents_path(sf), columns=["text"])["text"].to_pylist():
+        words = text.split()
+        out += [" ".join(words[i:i + n]) for i in range(0, len(words), n)]
+    return out
 
 
 def book_spans(rng: random.Random, pool: list[str], n_pages: int, lines_per_page: int,
@@ -155,7 +130,7 @@ def book_spans(rng: random.Random, pool: list[str], n_pages: int, lines_per_page
                   f"Division {rng.randint(1, 12)}", "ACME HOSPITAL LLC,", "Defendants."):
             spans.append(FX.span("line", t))
         spans.append(FX.span("query", "alias=state;text=In which state is this filed?", "q1"))
-        spans.append(FX.span("query_result", rng.choice(PLACES).upper(), "q1"))
+        spans.append(FX.span("query_result", f"STATE {rng.randint(1, 50)}", "q1"))
     for p in range(2 if pleading else 1, n_pages + 1):
         spans.append(FX.span("page_break", str(p)))
         for i in range(lines_per_page):
@@ -178,84 +153,58 @@ def page_ladder(rng: random.Random, n: int, max_pages: int) -> list[int]:
     return pages
 
 
-def book_corpus(seed: int, n_books: int, giant_pages: int, letter_pages: int, pleading_pages: int,
-                lines_per_page: int, n_small: int) -> Corpus:
-    """Book-scale filings mixed with a thin body of small documents: one
-    letter filing of ``giant_pages`` (the straggler, the same length on
-    every seed), then the rest split between the letter and the pleading
-    route on seeded page ladders. The seed moves which filing is how long,
-    not how much work there is. Pleadings stay shorter: paragraph
-    segmentation grows with pages times paragraphs."""
+def books(seed: int, n_books: int, giant_pages: int, letter_pages: int, pleading_pages: int,
+          lines_per_page: int) -> list[tuple[str, list[dict]]]:
+    """Book-scale filings: one letter filing of ``giant_pages`` (the
+    straggler, the same length on every seed), then the rest split between
+    the letter and the pleading route on seeded page ladders. The seed moves
+    which filing is how long, not how much work there is. Pleadings stay
+    shorter: paragraph segmentation grows with pages times paragraphs."""
     rng = random.Random(seed * 7919 + 1)
-    pool = line_pool(rng)
+    pool = line_pool()
     rest = n_books - 1
     kinds = [(p, False) for p in page_ladder(rng, rest - rest // 2, letter_pages)]
     kinds += [(p, True) for p in page_ladder(rng, rest // 2, pleading_pages)]
     kinds.append((giant_pages, False))
     rng.shuffle(kinds)
-    corpus = Corpus()
-    for b, (n_pages, pleading) in enumerate(kinds):
-        corpus.add(f"{seed}/book/{b}", book_spans(rng, pool, n_pages, lines_per_page, pleading), "book")
-    small = mixed_corpus(seed, n_small, bad_every=n_small)
-    corpus.doc_ids += small.doc_ids
-    corpus.spans += small.spans
-    corpus.families += small.families
-    corpus.expected_errors += small.expected_errors
-    return corpus
+    return [(f"{seed}/book/{b}", book_spans(rng, pool, n_pages, lines_per_page, pleading))
+            for b, (n_pages, pleading) in enumerate(kinds)]
 
 
 def family_samples(seed: int, per_family: int, book_pages: int) -> Corpus:
     """A fixed-size sample of every family for the driver-side layer timings:
-    the same generator as the workloads, drawn until each family is full."""
-    rng = random.Random(seed * 31 + 5)
+    the first ``per_family`` documents of each family in the sf0.1 table,
+    keyed as ``extract_mixed`` keys them, and two books."""
+    table = pq.read_table(documents_path("sf0.1"), columns=["doc_id", "text"])
     corpus = Corpus()
     counts = dict.fromkeys(SMALL_FAMILIES, 0)
-    i = 0
-    while min(counts.values()) < per_family:
-        key = f"{seed}/sample/{i}"
-        i += 1
-        fam = family_of(key)
+    for doc_id, text in zip(table["doc_id"].to_pylist(), table["text"].to_pylist()):
+        key = f"{seed}/{doc_id}"
+        spans = FX.spans_from_text(key, text)
+        fam = family_of(spans)
         if counts[fam] < per_family:
             counts[fam] += 1
-            corpus.add(key, FX.spans_from_text(key, prose(rng, rng.randint(20, 90))), fam)
-    pool = line_pool(rng, 256)
+            corpus.add(FX.doc_id_for(key), spans, fam)
+        if min(counts.values()) >= per_family:
+            break
+    rng = random.Random(seed * 31 + 5)
+    pool = line_pool()
     for b in range(2):
-        corpus.add(f"{seed}/sample-book/{b}", book_spans(rng, pool, book_pages, 20, pleading=b == 1), "book")
+        corpus.add(FX.doc_id_for(f"{seed}/sample-book/{b}"),
+                   book_spans(rng, pool, book_pages, 20, pleading=b == 1), "book")
     return corpus
 
 
-_BASE_WORDS = (
-    "join hash row batch scan column customer filter small slow merge order vector "
-    "line table data agg value key stream window a spark part group big sort query fast the"
-).split()
-# 900 words: few shingles repeat by chance, so the only near-duplicates are
-# the planted ones
-CURATION_VOCAB = [f"{w}{k}" if k else w for k in range(30) for w in _BASE_WORDS]
-LANGS = ["en", "en", "en", "de", "fr", "es", "zh"]
-
-
-def documents_table(seed: int, n_docs: int, n_clusters: int, cluster_size: int) -> pa.Table:
-    """The ``documents(doc_id, text, lang, source, n_chars)`` table the
-    curation queries read. Random texts share almost no shingles; each of
-    the ``n_clusters`` planted clusters is one 60-word text repeated
-    ``cluster_size`` times with a different last word. So the dedup
-    queries find clusters of one shape and the loop operators run the same
-    number of rounds on every seed."""
-    rng = random.Random(seed * 104729 + 3)
-    texts = [" ".join(rng.choice(CURATION_VOCAB) for _ in range(rng.randint(12, 90))) for _ in range(n_docs)]
-    slots = rng.sample(range(n_docs), n_clusters * cluster_size)
-    for c in range(n_clusters):
-        base = " ".join(rng.choice(CURATION_VOCAB) for _ in range(60))
-        for j in range(cluster_size):
-            texts[slots[c * cluster_size + j]] = f"{base} dup{j}"
-    rows = {
-        "doc_id": list(range(n_docs)),
-        "text": texts,
-        "lang": [rng.choice(LANGS) for _ in range(n_docs)],
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": [len(t) for t in texts],
-    }
-    return pa.table(rows, schema=pa.schema([
-        ("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
-        ("source", pa.string()), ("n_chars", pa.int64()),
-    ]))
+def curation_table(seed: int, n_docs: int, out: str) -> int:
+    """The sf0.01 ``documents`` table for the curation queries: its first
+    ``n_docs`` rows, the doc ids shifted by ``seed * 10**6`` and the rows
+    shuffled by the seed. The shift keeps the ids' order, so the loop
+    operators, whose components take the smallest id, run the same rounds
+    on every seed; the texts stay the same."""
+    table = pq.read_table(documents_path("sf0.01")).slice(0, n_docs)
+    ids = pa.array([d + seed * 10**6 for d in table["doc_id"].to_pylist()], pa.int64())
+    table = table.set_column(0, "doc_id", ids)
+    table = table.take(random.Random(seed).sample(range(table.num_rows), table.num_rows))
+    os.makedirs(out, exist_ok=True)
+    pq.write_table(table, os.path.join(out, "documents.parquet"))
+    return table.num_rows

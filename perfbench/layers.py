@@ -23,7 +23,7 @@ from samu_ocr_extraction_poc_spark.operators.html import strip_boilerplate
 from samu_ocr_extraction_poc_spark.operators.pages import get_page_text, line_texts
 from samu_ocr_extraction_poc_spark.operators.pleading import get_header, get_numbered_paragraphs
 from samu_ocr_extraction_poc_spark.plans.pipeline import extract_document
-from samu_ocr_extraction_poc_spark.schema import RESULT_SCHEMA
+from samu_ocr_extraction_poc_spark.schema import DOCUMENTS_SCHEMA, RESULT_SCHEMA
 from samu_ocr_extraction_poc_spark.sources.readers import load_documents
 
 import gen
@@ -53,6 +53,7 @@ PER_LAYER = {
     "self.op_s": "s", "self.job_s": "s", "self.stage_s": "s", "trace.overhead_s": "s",
 }
 
+ARROW_DOCS = to_arrow_schema(DOCUMENTS_SCHEMA)
 ARROW_OUT = to_arrow_schema(T.StructType(list(RESULT_SCHEMA.fields) + [T.StructField("part_id", T.IntegerType())]))
 
 
@@ -91,7 +92,7 @@ def arrow_boundary(corpus: gen.Corpus, input_path: str | None, out: dict) -> flo
     else:
         table = pa.table({"doc_id": corpus.doc_ids,
                           "spans": [[{k: s[k] for k in gen.SPAN_FIELDS} for s in sp] for sp in corpus.spans]},
-                         schema=gen.ARROW_DOCS)
+                         schema=ARROW_DOCS)
         batches = table.to_batches(max_chunksize=256)
     n = sum(b.num_rows for b in batches)
     results = []

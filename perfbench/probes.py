@@ -13,6 +13,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 PAGE = os.sysconf("SC_PAGE_SIZE")
+TICK = os.sysconf("SC_CLK_TCK")
 
 
 def cores() -> int:
@@ -61,6 +62,20 @@ def _tree_rss_bytes(root: int) -> int:
         except OSError:
             continue
     return total
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds, user and system, that ``root`` and its descendants have
+    used, counting the exited children each one has waited for."""
+    total = 0
+    for pid in _process_tree(root):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += sum(int(v) for v in fields[11:15])  # utime stime cutime cstime
+    return total / TICK
 
 
 class RssSampler:

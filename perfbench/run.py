@@ -13,6 +13,7 @@ the span trace to ``.perfbench_work/traces/``. See perfbench/README.md.
 from __future__ import annotations
 
 import argparse
+import concurrent.futures
 import json
 import os
 import platform
@@ -32,11 +33,13 @@ SETUP_REPEATS = 3
 TAIL_BEYOND = 10
 
 END_TO_END = {  # name -> unit; the ones gated by BENCHMARK.json
-    "setup_s": "s", "docs_per_s": "1/s", "op_s.p50": "s", "peak_rss_mb": "MB",
+    "setup_s": "s", "cpu_s.p50": "s", "peak_rss_mb": "MB",
 }
-REPORTED = {  # printed on every run, n/a where a workload has none
-    "spans_per_s": "1/s", "op_s.tail": "s", "resume_s": "s", "write_amp": "ratio",
-    "ops_failed_frac": "ratio",
+# printed on every run, n/a where a workload has none. The op walls are not
+# gated: on a shared host they move with the neighbours' load (README)
+REPORTED = {
+    "docs_per_s": "1/s", "op_s.p50": "s", "spans_per_s": "1/s", "op_s.tail": "s",
+    "resume_s": "s", "write_amp": "ratio", "ops_failed_frac": "ratio",
 }
 
 
@@ -59,6 +62,12 @@ def tail(values: list[float]) -> tuple[float, float] | None:
     return 100.0 * (k + 1) / n, sorted(values)[k]
 
 
+def timed(fn, *args) -> float:
+    t = time.perf_counter()
+    fn(*args)
+    return time.perf_counter() - t
+
+
 def start_spark(app: str, n_cores: int, work: str):
     from samu_ocr_extraction_poc_spark.session import get_spark
 
@@ -70,8 +79,10 @@ def start_spark(app: str, n_cores: int, work: str):
     os.environ["TMPDIR"] = tempfile.tempdir = tmp
     # Python workers import the package too, whatever the working directory
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
-    # a fixed heap, so peak RSS does not follow the JVM's heap sizing;
-    # -XX:-UsePerfData writes no hsperfdata file outside the work directory
+    # the package's session settings but for the heap, fixed at 2 GB: with
+    # the package's 8 GB ceiling the JVM grows its heap as it likes, and peak
+    # RSS varied 2.2-4.4 GB across seeds. -XX:-UsePerfData writes no
+    # hsperfdata file outside the work directory
     return get_spark(app, cores=n_cores, extra_conf={
         "spark.driver.memory": "2g",
         "spark.local.dir": local,
@@ -97,15 +108,19 @@ def stop_spark(spark) -> None:
 
 
 def run_op(wl, spark, i: int, traced: bool):
-    """One op; one that raises counts as failed, like a wrong output."""
+    """One op; one that raises counts as failed, like a wrong output. Its
+    CPU time is that of the whole process tree while it ran."""
+    import probes
     from workloads import OpResult
 
     spark.sparkContext.setJobGroup(f"op-{i}", wl.name)
-    t0 = time.perf_counter()
+    t0, cpu0 = time.perf_counter(), probes.tree_cpu_s(os.getpid())
     try:
-        return wl.op(spark, i, traced)
+        res = wl.op(spark, i, traced)
     except Exception:  # noqa: BLE001 - the loop keeps going and counts it
-        return OpResult(time.perf_counter() - t0, 0, ok=False, why=traceback.format_exc(limit=3))
+        res = OpResult(time.perf_counter() - t0, 0, ok=False, why=traceback.format_exc(limit=3))
+    res.cpu_s = probes.tree_cpu_s(os.getpid()) - cpu0
+    return res
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -152,7 +167,7 @@ def main(argv: list[str] | None = None) -> int:
             for r in range(SETUP_REPEATS):
                 out = os.path.join(work, f"input-{r}")
                 t = time.perf_counter()
-                wl.generate(out)
+                wl.generate(spark, out)
                 gen_s.append(time.perf_counter() - t)
                 if r:
                     shutil.rmtree(os.path.join(work, f"input-{r - 1}"))
@@ -160,13 +175,16 @@ def main(argv: list[str] | None = None) -> int:
             run_op(wl, spark, -1, traced=False)
             cold_s = time.perf_counter() - t
             setup_s = session_s + statistics.median(gen_s) + cold_s
-            # not set-up work: the JIT keeps warming for several more ops
-            t = time.perf_counter()
-            for i in range(wl.warmup_ops):
-                run_op(wl, spark, -2 - i, traced=False)
-            warm_s = time.perf_counter() - t
-
-            wl.reference(spark)  # untimed: what every op is checked against
+            # not set-up work: the JIT keeps warming for several more ops.
+            # Meanwhile a second thread builds what every op is checked
+            # against; the driver is mostly idle while an op runs
+            with concurrent.futures.ThreadPoolExecutor(1) as pool:
+                ref = pool.submit(timed, wl.reference, spark)
+                t = time.perf_counter()
+                for i in range(wl.warmup_ops):
+                    run_op(wl, spark, -2 - i, traced=False)
+                warm_s = time.perf_counter() - t
+                ref_s = ref.result()
 
             ops, started = [], time.perf_counter()
             while True:
@@ -199,18 +217,19 @@ def main(argv: list[str] | None = None) -> int:
 
     walls = [o.wall_s for o in ops]
     failed = sum(not o.ok for o in ops)
-    total_wall = sum(walls)
     e2e = {
         "setup_s": setup_s,
-        "docs_per_s": sum(o.docs for o in ops) / total_wall,
-        "op_s.p50": statistics.median(walls),
+        "cpu_s.p50": statistics.median(o.cpu_s for o in ops),
         "peak_rss_mb": rss.peak_mb,
     }
     tl = tail(walls)
     resume = [o.layers["resume.s"] for o in ops if "resume.s" in o.layers]
     amp = [o.layers["write.amp"] for o in ops if "write.amp" in o.layers]
     reported = {
-        "spans_per_s": sum(o.spans for o in ops) / total_wall if wl.n_spans else None,
+        # at the median op: one op slowed by the host moves a mean, not this
+        "docs_per_s": statistics.median(o.docs / o.wall_s for o in ops),
+        "op_s.p50": statistics.median(walls),
+        "spans_per_s": statistics.median(o.spans / o.wall_s for o in ops) if wl.n_spans else None,
         "op_s.tail": tl[1] if tl else None,
         "resume_s": statistics.median(resume) if resume else None,
         "write_amp": statistics.median(amp) if amp else None,
@@ -220,11 +239,13 @@ def main(argv: list[str] | None = None) -> int:
     print(f"# perfbench {json.dumps(meta)}")
     print(f"# setup: session {session_s:.3f} s, generate+materialize median of "
           f"{SETUP_REPEATS} {statistics.median(gen_s):.3f} s, first op {cold_s:.3f} s; "
-          f"then {wl.warmup_ops} unmeasured warm-up ops {warm_s:.3f} s")
+          f"then {wl.warmup_ops} unmeasured warm-up ops {warm_s:.3f} s, "
+          f"the reference alongside them {ref_s:.3f} s")
     print(f"# ops: {len(ops)} attempted, {failed} failed; op_s.p50 over {len(ops)} ops; "
           + (f"op_s.tail is p{tl[0]:.1f} ({TAIL_BEYOND} ops beyond it)" if tl else
              f"op_s.tail n/a (needs more than {TAIL_BEYOND} ops)"))
     print("# op walls (s): " + " ".join(f"{w:.3f}" for w in walls))
+    print("# op CPU, process tree (s): " + " ".join(f"{o.cpu_s:.2f}" for o in ops))
     for name, value in e2e.items():
         print(f"{name:<44} {value:>16.6f} {END_TO_END[name]}")
     for name, value in reported.items():

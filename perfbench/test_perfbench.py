@@ -71,15 +71,25 @@ def test_per_layer_metrics_every_workload(workload, seed):
     assert {"op", "spark.job", "spark.stage"} <= {s["name"] for s in spans}
 
 
-def test_inputs_follow_the_seed():
+def test_inputs_follow_the_seed(tmp_path):
     import gen
+    import pyarrow.parquet as pq
 
-    a, b = gen.mixed_corpus(7, 50), gen.mixed_corpus(7, 50)
+    a, b = gen.family_samples(7, 3, 4), gen.family_samples(7, 3, 4)
     assert a.doc_ids == b.doc_ids and a.spans == b.spans
-    assert gen.mixed_corpus(8, 50).doc_ids != a.doc_ids
-    assert gen.documents_table(3, 80, 2, 4).equals(gen.documents_table(3, 80, 2, 4))
-    books = [gen.book_corpus(s, 9, 200, 100, 60, 5, 10) for s in (1, 2)]
-    pages = [[sum(sp["kind"] == "page_break" for sp in spans) for spans in c.spans[:9]] for c in books]
+    assert sorted(set(a.families)) == sorted(gen.FAMILIES)
+    assert gen.family_samples(8, 3, 4).doc_ids != a.doc_ids
+
+    def curation(seed: int, name: str):
+        gen.curation_table(seed, 80, str(tmp_path / name))
+        return pq.read_table(tmp_path / name / "documents.parquet")
+
+    tables = [curation(3, "a"), curation(3, "b"), curation(4, "c")]
+    assert tables[0].equals(tables[1]) and not tables[0].equals(tables[2])
+    # the seed shifts the ids, never the texts
+    assert sorted(tables[0]["text"].to_pylist()) == sorted(tables[2]["text"].to_pylist())
+    books = [gen.books(s, 9, 200, 100, 60, 5) for s in (1, 2)]
+    pages = [[sum(sp["kind"] == "page_break" for sp in spans) for _, spans in c] for c in books]
     # the seed moves which filing is how long, not the total
     assert pages[0] != pages[1] and abs(sum(pages[0]) - sum(pages[1])) <= 9
 
@@ -92,7 +102,7 @@ def test_corrupted_output_counts_as_failed_op(monkeypatch):
     spark = run.start_spark("perfbench-test", probes.cores(), work)
     try:
         wl = workloads.ExtractMixed(1, work, 0.02)
-        wl.generate(os.path.join(work, "input"))
+        wl.generate(spark, os.path.join(work, "input"))
         wl.reference(spark)
         assert run.run_op(wl, spark, 0, False).ok
 

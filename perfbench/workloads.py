@@ -29,8 +29,8 @@ ARROW_RESULT = to_arrow_schema(RESULT_SCHEMA)
 
 @dataclass
 class OpResult:
-    """One op: its wall, what it processed, whether its output checked
-    out, and (traced) the Spark jobs it ran."""
+    """One op: its wall and the process tree's CPU time, what it processed,
+    whether its output checked out, and (traced) the Spark jobs it ran."""
 
     wall_s: float
     docs: int
@@ -38,6 +38,7 @@ class OpResult:
     ok: bool = True
     why: str = ""
     proc_s: float = 0.0
+    cpu_s: float = 0.0
     layers: dict = field(default_factory=dict)
     jobs: list[int] = field(default_factory=list)
     stats: probes.JobStats | None = None
@@ -78,8 +79,9 @@ class Workload:
     n_docs = 0
     n_spans = 0
     corpus: gen.Corpus | None = None
-    ref = None  # set by reference(); the warm-up ops run before it, unchecked
-    warmup_ops = 4  # unmeasured ops after the first, while the JIT warms
+    expected_errors = 0
+    ref = None  # set by reference(); warm-up ops that end before it are unchecked
+    warmup_ops = 2  # unmeasured ops after the first, while the JIT warms
 
     def __init__(self, seed: int, workdir: str, scale: float):
         self.seed, self.workdir, self.scale = seed, workdir, scale
@@ -87,11 +89,14 @@ class Workload:
     def sized(self, n: int, floor: int = 1) -> int:
         return max(floor, int(round(n * self.scale)))
 
-    def generate(self, out: str) -> None:
+    def generate(self, spark, out: str) -> None:
         """Build the inputs from the seed and write them under ``out``."""
         raise NotImplementedError
 
     def reference(self, spark) -> None:
+        """Read the inputs back and build what every op is checked against.
+        It runs on a second thread alongside the warm-up ops, so ``ref`` is
+        set once, when it is complete."""
         raise NotImplementedError
 
     def op(self, spark, i: int, traced: bool) -> OpResult:
@@ -107,21 +112,27 @@ class Extract(Workload):
     sunk into the digest aggregate."""
 
     n_files = 8
+    # the process tree's CPU time per op falls for about a dozen ops while
+    # the JIT compiles (12, 8, 7.4, 6.9 ... 6.5 at the 8th, then a plateau
+    # of ~5.1 CPU-seconds from the 13th on, on the 4-core host)
+    warmup_ops = 12
 
-    def corpus_for(self) -> gen.Corpus:
+    def frame(self, spark):
+        """The seeded input as a ``documents`` frame; sets
+        ``expected_errors``."""
         raise NotImplementedError
 
-    def generate(self, out: str) -> None:
-        self.corpus = self.corpus_for()
+    def generate(self, spark, out: str) -> None:
+        gen.materialize(self.frame(spark), out, self.n_files)
         self.input_path = out
-        self.n_docs, self.n_spans = len(self.corpus.doc_ids), self.corpus.n_spans
-        self.corpus.write(out, self.n_files)
 
     def reference(self, spark) -> None:
+        self.corpus = gen.read_corpus(self.input_path)
+        self.n_docs, self.n_spans = len(self.corpus.doc_ids), self.corpus.n_spans
         self.ref = reference_digest(spark, self.corpus, os.path.join(self.workdir, "reference.parquet"))
-        if self.ref[:2] != (self.n_docs, self.corpus.expected_errors):
+        if self.ref[:2] != (self.n_docs, self.expected_errors):
             raise RuntimeError(f"reference pass gave {self.ref[:2]}, generator expects "
-                               f"{(self.n_docs, self.corpus.expected_errors)}")
+                               f"{(self.n_docs, self.expected_errors)}")
 
     def op(self, spark, i: int, traced: bool) -> OpResult:
         j0 = probes.next_job_id(spark)
@@ -136,12 +147,18 @@ class Extract(Workload):
 
 
 class ExtractMixed(Extract):
-    """Many small documents of every family: per-document overhead dominates."""
+    """The whole sf0.1 ``documents`` table through ``synth_corpus_from_documents``
+    (5,000 small documents of every family) and one malformed pleading per
+    500: per-document overhead dominates."""
 
     name = "extract_mixed"
 
-    def corpus_for(self) -> gen.Corpus:
-        return gen.mixed_corpus(self.seed, self.sized(4000, 40))
+    def frame(self, spark):
+        n_docs = self.sized(5000, 40)
+        self.expected_errors = max(1, n_docs // 500)
+        # past 5,000 the table is replicated: --scale 20 gives ~10^5 documents
+        return gen.synth(spark, self.seed, "sf0.1", min(n_docs, 5000), -(-n_docs // 5000)).union(
+            gen.as_frame(spark, gen.bad_pleadings(self.seed, self.expected_errors)))
 
 
 class ExtractBook(Extract):
@@ -150,10 +167,13 @@ class ExtractBook(Extract):
 
     name = "extract_book"
 
-    def corpus_for(self) -> gen.Corpus:
-        return gen.book_corpus(self.seed, n_books=self.sized(24, 3), giant_pages=self.sized(600, 12),
-                               letter_pages=self.sized(150, 12), pleading_pages=self.sized(80, 12),
-                               lines_per_page=20, n_small=self.sized(400, 20))
+    def frame(self, spark):
+        self.expected_errors = 1
+        books = gen.books(self.seed, n_books=self.sized(24, 3), giant_pages=self.sized(600, 12),
+                          letter_pages=self.sized(150, 12), pleading_pages=self.sized(80, 12),
+                          lines_per_page=20)
+        small = gen.synth(spark, self.seed, "sf0.01", self.sized(400, 20))
+        return gen.as_frame(spark, books + gen.bad_pleadings(self.seed, 1)).union(small)
 
 
 class ResumeWrite(Workload):
@@ -163,16 +183,15 @@ class ResumeWrite(Workload):
     resume path."""
 
     name = "resume_write"
-    warmup_ops = 2
     n_parts = 8
 
-    def generate(self, out: str) -> None:
-        self.corpus = gen.mixed_corpus(self.seed + 1_000_003, self.sized(3000, 40))
+    def generate(self, spark, out: str) -> None:
+        gen.materialize(gen.synth(spark, self.seed, "sf0.01", self.sized(500, 20), replicate=6), out, 4)
         self.input_path = out
-        self.n_docs, self.n_spans = len(self.corpus.doc_ids), self.corpus.n_spans
-        self.corpus.write(out, 4)
 
     def reference(self, spark) -> None:
+        self.corpus = gen.read_corpus(self.input_path)
+        self.n_docs, self.n_spans = len(self.corpus.doc_ids), self.corpus.n_spans
         self.ref = reference_digest(spark, self.corpus, os.path.join(self.workdir, "reference.parquet"))
 
     @classmethod
@@ -259,15 +278,13 @@ class Curation(Workload):
     scheduling dominate."""
 
     name = "curation_loops"
-    warmup_ops = 0
+    # op walls keep falling for three ops while the JVM warms: ~27 s cold,
+    # then ~12, ~9.6, ~8.7 s on the 4-core host
+    warmup_ops = 1
 
-    def generate(self, out: str) -> None:
-        os.makedirs(out, exist_ok=True)
-        n = self.sized(500, 60)
-        table = gen.documents_table(self.seed, n, n_clusters=max(2, n // 50), cluster_size=4)
+    def generate(self, spark, out: str) -> None:
+        self.n_docs = gen.curation_table(self.seed, self.sized(500, 60), out)
         self.input_path = out
-        self.n_docs = table.num_rows
-        pq.write_table(table, os.path.join(out, "documents.parquet"))
 
     def reference(self, spark) -> None:
         import duckdb
@@ -276,13 +293,13 @@ class Curation(Workload):
         con.execute(f"SET threads TO {probes.cores()}")
         con.execute(f"CREATE VIEW documents AS SELECT * FROM '{self.input_path}/documents.parquet'")
         oracles = entry.oracle_sql()
-        self.ref = {}
+        ref = {}
         for q in CURATION_QUERIES:
             res = con.execute(oracles[q])
             cols = [d[0] for d in res.description]
-            self.ref[q] = canonical(cols, res.fetchall())
+            ref[q] = canonical(cols, res.fetchall())
         con.close()
-        self.queries = entry.queries()
+        self.ref = ref  # whole, in one step: the warm-up op may be reading it
 
     def op(self, spark, i: int, traced: bool) -> OpResult:
         sc = spark.sparkContext
