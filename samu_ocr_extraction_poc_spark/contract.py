@@ -531,25 +531,14 @@ FROM (SELECT DISTINCT doc_id FROM sig WHERE doc_id % 5 = 0) s LEFT JOIN ihit USI
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: minhash-LSH pairs -> distributed connected
-    components (operators/dedup.py:connected_components, min-label
-    propagation) -> cluster sizes. The end-to-end dedup story: candidates,
-    clusters, one canonical (min doc_id = the component label) per
-    cluster. The oracle computes the same min over the transitive closure
-    with a recursive CTE."""
+    components (operators/dedup.py:connected_components, large-star/
+    small-star contraction) -> cluster sizes. The end-to-end dedup story:
+    candidates, clusters, one canonical (min doc_id = the component label)
+    per cluster. The oracle computes the same min over the transitive
+    closure with a recursive CTE."""
     sig = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8, k=3)
     pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
     cc = DD.connected_components(pairs)
-    return cc.groupBy("component").agg(F.count("*").alias("n_members"))
-
-
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters via alternating large-star/small-star contraction
-    (operators/dedup.py:connected_components_star) — O(log n) rounds vs
-    min-label's O(diameter); both variants share the recursive-CTE oracle,
-    so the driver gate cross-checks them against each other too."""
-    sig = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8, k=3)
-    pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
-    cc = DD.connected_components_star(pairs)
     return cc.groupBy("component").agg(F.count("*").alias("n_members"))
 
 
@@ -1920,12 +1909,11 @@ FROM su JOIN cuts ON cuts.lang = su.lang
 
 def media_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL media decode under the driver gate (sources/media.py:
-    decode_media, default = real codecs since r5; reference analog: S5
-    sync image OCR, lib/text-extractor.ts:155-181): 96 deterministic
-    VALID containers (P6 PPM / 24-bit BMP images, PCM WAV audio,
-    concatenated-P6 video streams from synth_media_table(real_bytes=
-    True)) decode through the pure-stdlib codecs into true pixel/sample
-    statistics. Per media: dimensions, frame count, and an md5 digest of
+    decode_media; reference analog: S5 sync image OCR,
+    lib/text-extractor.ts:155-181): 96 deterministic VALID containers
+    (P6 PPM / 24-bit BMP images, PCM WAV audio, concatenated-P6 video
+    streams from synth_media_table) decode through the pure-stdlib codecs
+    into true pixel/sample statistics. Per media: dimensions, frame count, and an md5 digest of
     the 16 feature values integer-rounded to 4 decimals (floor(x*1e4 +
     0.5) on the float32-cast value — floor, not round(), so both
     engines' tie behavior is identical by construction).
@@ -1941,7 +1929,7 @@ def media_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE op sequence on both engines."""
     from .sources import media as MD
 
-    dec = MD.decode_media(MD.synth_media_table(spark, n=96, real_bytes=True))
+    dec = MD.decode_media(MD.synth_media_table(spark, n=96))
     iv = F.transform(
         F.col("feature"),
         lambda x: F.floor(x.cast("double") * 10000 + F.lit(0.5)).cast("bigint"),
@@ -5063,9 +5051,9 @@ FROM ghn1 n1 JOIN ghex e ON e.lang = n1.lang
 # `simhash`, `bpe_token_counts` — the first three displaced by the
 # round-5-new block, which takes priority: a new entry is NEVER-checked,
 # a displaced one is r03-green); each has same-family in-window coverage
-# (bpe_train_long, winnow_pairs'/shared_window_pairs' window family, the
-# r04-green star CC variant, simhash_near_pairs) and they are FIRST in
-# line for the r6 rotation.
+# (bpe_train_long, winnow_pairs'/shared_window_pairs' window family,
+# simhash_near_pairs; dedup_components has no in-window sibling) and
+# they are FIRST in line for the r6 rotation.
 # Positions 51+ were all green in CORRECTNESS_r04 (every entry stays under
 # the local driver-faithful gate at sf0.001+sf0.01 regardless of position).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -5269,7 +5257,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "page_group_concat": page_group_concat,
     "dedup_exact": dedup_exact,
     "minhash_lsh_pairs": minhash_lsh_pairs_q,
-    "dedup_components_star": dedup_components_star,
     "dedup_apply": dedup_apply,
     "semantic_dedup": semantic_dedup_q,
     "bpe_train_merges": bpe_train_q,
@@ -5297,7 +5284,6 @@ ORACLE_SQL: dict[str, str] = {
     "minhash_signatures": MINHASH_SQL,
     "minhash_lsh_pairs": LSH_SQL,
     "dedup_components": CC_SQL,
-    "dedup_components_star": CC_SQL,
     "dedup_apply": DEDUP_APPLY_SQL,
     "simhash": SIMHASH_SQL,
     "simhash_near_pairs": SIMHASH_PAIRS_SQL,

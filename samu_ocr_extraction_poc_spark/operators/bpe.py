@@ -13,8 +13,8 @@ pair counting, which is exactly a distributed aggregation:
   token corpus becomes a few-million-row frame after one hash agg;
 - each round is one partial-aggregable groupBy (pair -> sum(freq)) plus a
   1-row argmax (orderBy+limit(1) = TakeOrderedAndProject, never a global
-  sort) collected to the driver — the same single-scalar-per-round driver
-  probe discipline as connected_components' convergence check;
+  sort) collected to the driver — the same one-row-per-round driver
+  probe discipline as connected_components' convergence aggregate;
 - the merge itself is a narrow string replace over the word table.
 
 Symbol sequences are represented as "(sym)(sym)..." strings: each symbol
@@ -89,8 +89,8 @@ def bpe_train(
     one ``replace`` per round on top of the cached word table, so round r
     would re-execute all r prior replaces — O(n_merges²) work and unbounded
     plan depth at real vocabulary sizes (10k+ merges). Every
-    ``checkpoint_every`` rounds the frame is localCheckpoint(eager)-ed,
-    exactly the connected_components pattern: work per round becomes
+    ``checkpoint_every`` rounds the frame is localCheckpoint(eager)-ed, so
+    work per round becomes
     O(checkpoint_every) replaces over a vocabulary-sized frame and Catalyst
     never sees more than ``checkpoint_every`` nested projections.
     """

@@ -1025,7 +1025,6 @@ def keep_canonical(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    use_star: bool = True,
 ) -> DataFrame:
     """APPLY near-dup dedup to the corpus: cluster the candidate pairs
     (connected components) and keep exactly one document per cluster — the
@@ -1036,12 +1035,9 @@ def keep_canonical(
     Plan shape at scale: the drop-list (clustered non-minima) is tiny
     relative to the corpus — one left_anti join against it; no shuffle of
     the corpus beyond that join (AQE broadcasts the drop side when it
-    fits). The star-contraction clusterer is the default (O(log n) rounds
-    and measured faster wall-clock than min-label's O(diameter) at every
-    sandbox sf; both backends are pinned to agree and share one oracle).
-    Returns the surviving input rows, all columns.
+    fits). Returns the surviving input rows, all columns.
     """
-    cc = (connected_components_star if use_star else connected_components)(pairs)
+    cc = connected_components(pairs)
     drop = cc.where(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
@@ -1070,132 +1066,17 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    max_iter: int = 25,
+    max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """Distributed connected components over a near-dup pair graph — the
     step that turns pairwise candidates into dedup CLUSTERS (each cluster
-    keeps one canonical document). Iterative min-label propagation: every
-    vertex repeatedly adopts the smallest label among itself and its
-    neighbors; converges in O(graph diameter) rounds, so the final label of
-    every vertex is the minimum doc id of its component (deterministic,
-    engine-replayable — the DuckDB oracle computes the same min over the
-    transitive closure).
-
-    Per-round cache discipline mirrors kmeans_assign: persist + materialize
-    the new label frame, then release the previous one — O(1) cached frames
-    however many rounds run. Early-exits when a round changes nothing.
-
-    Returns (doc_id, component).
-    """
-    directed = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # localCheckpoint, not persist: the loop's per-round plans reference
-    # `edges` (and through it the caller's whole upstream lineage — scan,
-    # shingle explode, band self-join). A persist caches DATA but analysis/
-    # optimization still walks the full tree once per reference, so the
-    # FIRST round paid ~2 s of pure Catalyst planning at sandbox scale; a
-    # flat LogicalRDD base makes every round's plan O(round) (r6, guide
-    # §3.3: planning time itself can become the bottleneck).
-    edges = (
-        directed.union(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-        .persist()
-    )
-    # labels only ever DECREASE under min-propagation, so sum(label) is a
-    # strictly-decreasing convergence measure: one aggregate job per round
-    # both materializes the persisted frame and detects the fixpoint (a
-    # separate changed-rows join would double the per-round job count).
-    # The sum runs in DECIMAL(38,0): with 64-bit ids at 10^9+ vertices a
-    # BIGINT sum can overflow (ANSI-mode throw, or a silent wrap where a
-    # collision could falsely signal convergence — ADVICE r2); 38 digits
-    # hold sum(2^63 * 10^12) with room to spare.
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    #
-    # Persisting caches DATA but the LOGICAL plan still nests one
-    # join+union per round — past ~25 rounds (long-chain graphs) Catalyst's
-    # tree blows the JVM stack. Every checkpoint_every rounds the frame is
-    # localCheckpoint(eager)-ed instead, which truncates the lineage; the
-    # superseded checkpoint blocks are released by Spark's ContextCleaner
-    # once dereferenced, so live cached frames stay O(1).
-    checkpoint_every = 8
-    prev_sum = labels.agg(label_sum).collect()[0][0]
-    converged = False
-    for it in range(max_iter):
-        neigh = edges.join(
-            labels.withColumnRenamed("id", "dst"), "dst"
-        ).select(F.col("src").alias("id"), "label")
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        if (it + 1) % checkpoint_every == 0:
-            # eager=False: the convergence aggregate below is the round's
-            # materializing action — it computes AND caches the checkpoint
-            # RDD in one job instead of a count job followed by the agg job
-            # (r6: one scheduled job per round, not two)
-            new_labels = new_labels.localCheckpoint(eager=False)
-        else:
-            new_labels = new_labels.persist()
-        new_sum = new_labels.agg(label_sum).collect()[0][0]
-        _release_frame(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            if stats is not None:
-                stats["rounds"] = it + 1
-            break
-        prev_sum = new_sum
-    if not converged:
-        # falling off the loop would silently return WRONG components (a
-        # chain longer than max_iter splits into bogus pieces) — fail loud.
-        # _release_frame, not plain unpersist (r6 review): unpersist is a
-        # no-op for the localCheckpoint-ed edges, and the last round's
-        # labels would otherwise stay pinned across the caller's
-        # raise-max_iter retry.
-        _release_frame(labels)
-        _release_frame(edges)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter"
-        )
-    # eager localCheckpoint (r6): the persisted labels frame still CARRIES
-    # the whole loop's logical lineage (~2 Exchanges x rounds nested — the
-    # r6 plan diff counted 694 Exchange nodes in the nominal final plan),
-    # so every downstream action re-paid Catalyst analysis of the full
-    # loop tree before hitting the cache. The flat LogicalRDD hand-off is
-    # the same discipline the star variant and kmeans_assign already use;
-    # it also lets the loop's own frames be released here instead of
-    # leaking the last round's cache into the caller.
-    out = labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("component")
-    ).localCheckpoint(eager=True)
-    _release_frame(labels)
-    _release_frame(edges)
-    return out
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
+    keeps one canonical document). Alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log n) rounds regardless of graph diameter, vs min-label
-    propagation's O(diameter) (:func:`connected_components`). The variant
-    to reach for on chain-heavy graphs; both agree on every graph (pinned
-    by tests/test_scale_paths.py cross-checks and the dedup_components_star
-    driver oracle).
+    Beyond") — O(log n) rounds regardless of graph diameter. The label of
+    every vertex is the minimum doc id of its component (deterministic;
+    the DuckDB oracle computes the same min over the transitive closure,
+    and tests/test_scale_paths.py pins it against a union-find reference).
 
     Per round, the edge set is rewritten (edges always kept canonical
     src > dst, no self-loops):
@@ -1207,8 +1088,7 @@ def connected_components_star(
 
     At the fixpoint the edges form star forests: every non-minimum vertex
     points directly at its component's minimum id, so labels read straight
-    off the edge list (same (doc_id, component) contract and the same
-    min-id labels as connected_components).
+    off the edge list.
 
     Convergence detection (r6): the fixpoint of the alternation is exactly
     the star forests (Kiveris et al. Thm. 1), and with the canonical
@@ -1230,9 +1110,7 @@ def connected_components_star(
     references the previous frame ~4 times (the adjacency union reads it
     twice, small-star joins the large-star output against its own
     aggregate), so persist-only rounds grow the logical plan ~4^rounds and
-    OOM Catalyst/AQE's plan stringification within a handful of rounds
-    (min-label's 2 references/round tolerates persist between checkpoints;
-    this does not).
+    OOM Catalyst/AQE's plan stringification within a handful of rounds.
 
     Returns (doc_id, component).
     """
@@ -1293,8 +1171,8 @@ def connected_components_star(
         # no .distinct() here (r6): duplicate (dst, m) rows don't change
         # small-star's min aggregate, and its trailing distinct removes
         # them from the round output — the dedup shuffle was pure cost
-        # (one Exchange per round removed, verified value-neutral by the
-        # star-vs-min-label cross-checks).
+        # (one Exchange per round removed, verified value-neutral against
+        # the union-find reference and the DuckDB oracle).
         return (
             adj.join(m, "src")
             .where(F.col("dst") > F.col("src"))
@@ -1365,7 +1243,7 @@ def connected_components_star(
     if not converged:
         _release_frame(edges)
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds; "
+            f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter (expected O(log n) rounds)"
         )
     # star forest read-off: non-minimum vertices appear as src exactly

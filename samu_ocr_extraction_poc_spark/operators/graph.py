@@ -56,6 +56,8 @@ def synth_link_graph(
     # n may be passed by a caller that already knows |nodes| (the pagerank
     # contract entry counts the same id set twice otherwise — one
     # distinct+count job saved; value-identical by definition)
+    if n is not None and n <= 0:
+        raise ValueError(f"synth_link_graph: n must be positive, got {n}")
     if n is None:
         n = nodes.select(id_col).distinct().count()
     ids = nodes.select(F.col(id_col).cast("bigint").alias("src")).distinct()
@@ -127,6 +129,8 @@ def pagerank(
     )
     if n is None:
         n = node_t.count()
+    if n <= 0:
+        raise ValueError(f"pagerank: n must be positive, got {n}")
     teleport = ((100 - damping_pct) * (scale // n)) // 100
     # A checkpointed LogicalRDD carries NO size statistics, so without a
     # hint every per-iteration join planned as SortMergeJoin (16 extra
@@ -134,11 +138,15 @@ def pagerank(
     # observed as SMJ 0->16 in the r6 plan diff). The rank/degree/share
     # tables are all <= n rows; gate an explicit broadcast on the SAME
     # size logic the planner would apply if it had stats (~64 bytes/row
-    # vs the 10 MB autoBroadcastJoinThreshold). Above the bound the joins
-    # stay sort-merge — at 10^9 nodes broadcasting ranks would be wrong,
-    # and n is already collected for the teleport term, so the gate costs
-    # nothing extra.
-    _bcast = n * 64 < 10 * 1024 * 1024
+    # vs the session's autoBroadcastJoinThreshold, read as the typed
+    # SQLConf value; <= 0 means broadcasting is off, so no hint). Above
+    # the bound the joins stay sort-merge — at 10^9 nodes broadcasting
+    # ranks would be wrong, and n is already collected for the teleport
+    # term, so the gate costs nothing extra.
+    threshold = (
+        nodes.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    _bcast = n * 64 < threshold
     _hint = F.broadcast if _bcast else (lambda d: d)
     # All joins below are name-based using-joins on freshly-aliased
     # columns: from iteration 2 the ranks lineage contains the edge

@@ -375,76 +375,6 @@ def run_extraction(
     return selected.mapInArrow(_extract, out_schema)
 
 
-def run_extraction_grouped(
-    docs: DataFrame,
-    ocr_lookup: dict[str, str] | None = None,
-    thresholds: medical.Thresholds = medical.DEFAULT_THRESHOLDS,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Skew-tolerant formulation (SURVEY.md §7): explode spans to bounded
-    rows, shuffle on doc_id, regroup with ``groupBy().applyInPandas``.
-
-    Semantically identical to :func:`run_extraction` (verified in tests);
-    physically different: a huge filing travels as thousands of small span
-    rows through the exchange (Spark spills and AQE splits freely) instead
-    of one giant row, and only re-materializes per group inside the Arrow
-    stage.
-
-    Measured tradeoff (BENCH.md): at 400-page/12k-span documents the
-    single-row path is ~14x FASTER (no explode+shuffle; 12k spans is still
-    small in absolute terms) — reach for this path only when single
-    documents are large enough to break Arrow batches or executor memory
-    (book-scale, ~10^5+ spans), or rely on split_by_pages chunking instead.
-    Uses ``applyInArrow`` (not applyInPandas) for the same reason the
-    single-row path uses mapInArrow: the wide nested result row is built
-    C++-side by pyarrow, skipping pandas object-dtype inference in BOTH
-    directions.
-    """
-    import pyarrow as pa
-
-    ocr = ocr_lookup or {}
-    spark = docs.sparkSession
-    n_parts = n_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bc_ocr = spark.sparkContext.broadcast(ocr)
-    thr = thresholds
-
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    out_schema = T.StructType(
-        list(RESULT_SCHEMA.fields) + [T.StructField("part_id", T.IntegerType())]
-    )
-    arrow_schema = to_arrow_schema(out_schema)
-
-    exploded = docs.select(
-        "doc_id",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int").alias("part_id"),
-        F.explode("spans").alias("span"),
-    ).select(
-        "doc_id",
-        "part_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-    def _extract_group(table: pa.Table) -> pa.Table:
-        rows = table.to_pylist()
-        doc_id = rows[0]["doc_id"]
-        part_id = int(rows[0]["part_id"])
-        spans = [
-            {k: r[k] for k in ("kind", "text", "media_ref", "offset")} for r in rows
-        ]
-        t0 = time.perf_counter_ns()
-        row = extract_document(doc_id, spans, bc_ocr.value, thr)
-        row["proc_us"] = (time.perf_counter_ns() - t0) // 1000
-        row["part_id"] = part_id
-        return pa.Table.from_pylist([row], schema=arrow_schema)
-
-    return exploded.groupBy("doc_id").applyInArrow(_extract_group, out_schema)
-
-
 def pages_table(results: DataFrame) -> DataFrame:
     """K3 text-artifact sidecar: per-page rows (doc_id, page, text), the
     relational form of the reference's ``${docId}/textract/extracted${i}.txt``

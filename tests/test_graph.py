@@ -6,6 +6,7 @@ graph-shaping rules."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from samu_ocr_extraction_poc_spark.operators import graph as GR
@@ -109,6 +110,41 @@ def test_pagerank_checkpoint_path_identical(spark):
         for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=0).collect()
     }
     assert a == b
+
+
+def test_pagerank_and_synth_link_graph_reject_nonpositive_n(spark):
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    for bad in (0, -3):
+        with pytest.raises(ValueError, match="n must be positive"):
+            GR.pagerank(nodes, edges, n=bad)
+        with pytest.raises(ValueError, match="n must be positive"):
+            GR.synth_link_graph(nodes, n=bad)
+
+
+def test_pagerank_broadcast_gate_follows_session_threshold(spark):
+    """The rank/degree joins get a broadcast hint only when the estimated
+    table (64 B x n) fits under spark.sql.autoBroadcastJoinThreshold; a
+    threshold <= 0 (broadcasting off) or below the estimate gives no hint.
+    Ranks are the same either way."""
+    nodes = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
+    edges = spark.createDataFrame([(i, (i + 1) % 10) for i in range(10)], "src long, dst long")
+
+    def run():
+        ranks = GR.pagerank(nodes, edges, iterations=2)
+        plan = ranks._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("strategy=broadcast"), sorted(ranks.collect())
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        n_hints, want = run()
+        assert n_hints > 0  # 640 B under the default threshold
+        for value in ("-1", "100"):  # off; below the 640 B estimate
+            spark.conf.set(key, value)
+            assert run() == (0, want)
+    finally:
+        spark.conf.set(key, old)
 
 
 def _py_triangles(und_edges):

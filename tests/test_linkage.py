@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from samu_ocr_extraction_poc_spark.operators import linkage as LK
@@ -128,3 +130,20 @@ def test_linkage_deterministic_across_runs(spark):
     b = sorted(tuple(r) for r in LK.blocked_link_pairs(
         LK.synth_dirty_records(df)).collect())
     assert a == b and len(a) > 0
+
+
+def test_failed_link_pairs_release_the_record_checkpoint(spark):
+    """An analysis error in the blocking/scoring plan must not leave the
+    checkpointed record table cached for the session's lifetime."""
+    # boolean cents: the records checkpoint fine, then the balance-band
+    # blocking key (cents DIV 10000) fails analysis
+    recs = spark.createDataFrame(
+        [(10, 1, "000000001", 7, True, "AUTO"), (20, 2, "000000001", 7, False, "AUTO")],
+        "rec_id long, entity_id long, name_digits string, nationkey long, "
+        "cents boolean, segment string",
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(AnalysisException):
+        LK.blocked_link_pairs(recs)
+    assert jsc.getPersistentRDDs().size() == before

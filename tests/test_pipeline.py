@@ -173,25 +173,6 @@ def test_pages_and_attachments_sidecars(spark):
     assert any("Offer terms attached." in a["content"] for a in atts)
 
 
-def test_grouped_extraction_equals_single_row_path(spark):
-    """run_extraction_grouped (explode -> shuffle -> applyInPandas regroup,
-    the skew-tolerant path) must produce identical results to the
-    single-row Arrow path, skew doc included."""
-    from samu_ocr_extraction_poc_spark.plans.pipeline import run_extraction_grouped
-
-    docs = FX.canonical_corpus(spark, with_skew=True)
-    drop = ["proc_us", "part_id"]
-    a = {
-        r["doc_id"]: {k: v for k, v in r.asDict(recursive=True).items() if k not in drop}
-        for r in run_extraction(docs, FX.OCR_LOOKUP).collect()
-    }
-    b = {
-        r["doc_id"]: {k: v for k, v in r.asDict(recursive=True).items() if k not in drop}
-        for r in run_extraction_grouped(docs, FX.OCR_LOOKUP).collect()
-    }
-    assert a == b
-
-
 def test_poison_document_degrades_to_error_row(spark, monkeypatch):
     """Any unexpected per-document exception must become an error-status row
     (poison-doc guard) — the job itself never fails."""

@@ -58,25 +58,15 @@ def test_pages_distributed_matches_in_row(spark):
 # --- multimodal plumbing -------------------------------------------------------
 
 
-def test_media_decode_deterministic(spark):
-    # legacy sha256-fake path, reachable only by explicit opt-out since r5
-    media = synth_media_table(spark, n=30)
-    a = {r["media_ref"]: r.asDict() for r in decode_media(media, use_real_codecs=False).collect()}
-    b = {r["media_ref"]: r.asDict() for r in decode_media(media, use_real_codecs=False).collect()}
-    assert a == b
-    row = a["m-0000"]
-    assert len(row["feature"]) == 16
-    assert all(0.0 <= f <= 1.0 for f in row["feature"])
-    assert row["media_type"] == "image" and row["n_frames"] == 1
-
-
 def test_media_real_codec_roundtrip(spark):
-    """REAL decode (round 4): valid PPM/BMP/WAV/P6-stream containers parse
-    with the pure-stdlib codecs — exact dimensions, frame counts and pixel
-    statistics, no lookup fallback and no error rows."""
-    media = synth_media_table(spark, n=30, real_bytes=True)
-    # DEFAULT path: real codecs (r5 flip) — no flag needed
+    """REAL decode: valid PPM/BMP/WAV/P6-stream containers parse with the
+    pure-stdlib codecs — exact dimensions, frame counts and pixel
+    statistics, no lookup fallback and no error rows; decoding twice gives
+    identical rows."""
+    media = synth_media_table(spark, n=30)
     rows = {r["media_ref"]: r for r in decode_media(media).collect()}
+    again = {r["media_ref"]: r for r in decode_media(media).collect()}
+    assert rows == again
     assert len(rows) == 30
     assert all(r["error"] is None for r in rows.values())
     for i in range(30):
@@ -168,7 +158,7 @@ def test_media_poison_blob_degrades_to_error_row(spark):
     from samu_ocr_extraction_poc_spark.sources.media import MEDIA_SCHEMA
 
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_ref"]: r for r in decode_media(media, use_real_codecs=True).collect()}
+    out = {r["media_ref"]: r for r in decode_media(media).collect()}
     assert out["ok"]["error"] is None and out["ok"]["width"] == 2
     assert out["bad"]["error"] and out["bad"]["feature"] is None
     assert "truncated" in out["trunc"]["error"]
@@ -179,22 +169,35 @@ def test_media_poison_blob_degrades_to_error_row(spark):
 
 
 def test_frame_sample_and_resize(spark):
-    media = synth_media_table(spark, n=30)
-    decoded = decode_media(media, use_real_codecs=False).cache()
-    frames = frame_sample(decoded, every_n=5)
-    fr = frames.groupBy("media_ref").count().collect()
-    assert fr and all(r["count"] >= 1 for r in fr)
-    rs = resize_plan(decoded, max_side=128).collect()
-    for r in rs:
-        assert max(r["target_w"], r["target_h"]) <= 128
-        # aspect preserved within rounding
-        assert abs(r["target_w"] / r["target_h"] - r["width"] / r["height"]) < 0.1
+    import math
+
+    decoded = decode_media(synth_media_table(spark, n=30)).cache()
+    frames = frame_sample(decoded, every_n=2)
+    fr = {r["media_ref"]: r["count"] for r in frames.groupBy("media_ref").count().collect()}
+    # only video rows are sampled: frames 0, 2, ... of 1 + i % 4
+    assert fr == {f"m-{i:04d}": len(range(0, 1 + i % 4, 2)) for i in range(2, 30, 3)}
+    # audio decodes to 0x0: no target (and no division by zero under ANSI)
+    rs = {r["media_ref"]: r for r in resize_plan(decoded, max_side=6).collect()}
+    assert len(rs) == 30
+    for i in range(30):
+        r = rs[f"m-{i:04d}"]
+        if i % 3 == 1:
+            assert (r["width"], r["height"]) == (0, 0)
+            assert r["target_w"] is None and r["target_h"] is None
+            continue
+        w, h = 8 + i % 5, 6 + i % 4
+        scale = min(1.0, 6 / max(w, h))
+        assert (r["width"], r["height"]) == (w, h)
+        assert (r["target_w"], r["target_h"]) == (
+            math.floor(w * scale + 0.5),
+            math.floor(h * scale + 0.5),
+        )
 
 
 def test_media_features_feed_similarity(spark):
     from samu_ocr_extraction_poc_spark.operators.similarity import brute_topk
 
-    decoded = decode_media(synth_media_table(spark, n=30, real_bytes=True)).withColumnRenamed(
+    decoded = decode_media(synth_media_table(spark, n=30)).withColumnRenamed(
         "media_ref", "vec_id"
     ).withColumnRenamed("feature", "embedding")
     out = brute_topk(decoded.limit(25), decoded.limit(3), k=2)
@@ -521,9 +524,9 @@ def test_hyperplane_lsh_recall_vs_brute(spark):
 
 
 def test_connected_components_known_graph(spark):
-    """Min-label propagation on a known graph: two chains and an isolated
-    pair; labels converge to each component's min id, caches are released
-    (only the edges/labels of the RETURNED frame may remain)."""
+    """Known graph: two chains and an isolated pair; labels converge to
+    each component's min id, caches are released (only the returned eager
+    frame may remain)."""
     from samu_ocr_extraction_poc_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -790,16 +793,12 @@ def test_chunk_documents_matches_python_reference(spark):
 
 def test_connected_components_matches_union_find(spark):
     """Randomized (seeded) equivalence vs a plain union-find reference on a
-    200-edge graph with several components and long chains — BOTH variants
-    (min-label propagation and large-star/small-star contraction) must
-    agree with it, and the star variant must need fewer rounds than the
-    chain diameter (its O(log n) vs O(diameter) advantage)."""
+    200-edge graph with several components and long chains, and the
+    large-star/small-star contraction needs far fewer rounds than the
+    chain diameter (O(log n), not O(diameter))."""
     import random
 
-    from samu_ocr_extraction_poc_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from samu_ocr_extraction_poc_spark.operators.dedup import connected_components
 
     rng = random.Random(13)
     edges = set()
@@ -814,15 +813,10 @@ def test_connected_components_matches_union_find(spark):
         if a != b:
             edges.add((min(a, b), max(a, b)))
     pairs = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
-    ml_stats: dict = {}
+    stats: dict = {}
     got = {
         r["doc_id"]: r["component"]
-        for r in connected_components(pairs, max_iter=50, stats=ml_stats).collect()
-    }
-    star_stats: dict = {}
-    got_star = {
-        r["doc_id"]: r["component"]
-        for r in connected_components_star(pairs, max_iter=20, stats=star_stats).collect()
+        for r in connected_components(pairs, stats=stats).collect()
     }
 
     parent: dict[int, int] = {}
@@ -843,38 +837,16 @@ def test_connected_components_matches_union_find(spark):
         expected_groups.setdefault(find(v), set()).add(v)
     expected = {v: min(grp) for root, grp in expected_groups.items() for v in grp}
     assert got == expected
-    assert got_star == expected
-    # the 30-edge chain forces min-label to ~diameter rounds; star
-    # contraction collapses it in O(log n)
-    assert ml_stats["rounds"] >= 25
-    assert star_stats["rounds"] <= 8, f"star took {star_stats['rounds']} rounds"
+    # star contraction collapses the 30-edge chain in O(log n) rounds
+    assert stats["rounds"] <= 8, f"took {stats['rounds']} rounds"
 
 
-def test_connected_components_star_known_graph_and_cache(spark):
-    """Star-contraction variant on the known graph: same labels as
-    min-label, isolated-pair and chain components intact, caches released
-    (only the returned eager frame may remain)."""
-    from samu_ocr_extraction_poc_spark.operators.dedup import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 22), (21, 22)],
-        "doc_a long, doc_b long",
-    )
-    sc = spark.sparkContext
-    before = sc._jsc.getPersistentRDDs().size()
-    cc = connected_components_star(pairs)
-    got = {r["doc_id"]: r["component"] for r in cc.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    after = sc._jsc.getPersistentRDDs().size()
-    assert after - before <= 1
-
-
-def test_connected_components_star_forest_early_stop(spark):
+def test_connected_components_forest_early_stop(spark):
     """r6 convergence detection: the round that PRODUCES the star forest is
     detected directly (no fingerprint-equality confirming round), and an
     input that already IS a star forest runs zero rounds — labels are
     unchanged in both cases."""
-    from samu_ocr_extraction_poc_spark.operators.dedup import connected_components_star
+    from samu_ocr_extraction_poc_spark.operators.dedup import connected_components
 
     # isolated pairs + an existing star: already a forest -> 0 rounds
     forest = spark.createDataFrame(
@@ -883,7 +855,7 @@ def test_connected_components_star_forest_early_stop(spark):
     stats = {}
     got = {
         r["doc_id"]: r["component"]
-        for r in connected_components_star(forest, stats=stats).collect()
+        for r in connected_components(forest, stats=stats).collect()
     }
     assert stats["rounds"] == 0
     assert got == {1: 1, 2: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
@@ -894,7 +866,7 @@ def test_connected_components_star_forest_early_stop(spark):
     stats = {}
     got = {
         r["doc_id"]: r["component"]
-        for r in connected_components_star(chain, stats=stats).collect()
+        for r in connected_components(chain, stats=stats).collect()
     }
     assert stats["rounds"] == 1
     assert got == {1: 1, 2: 1, 3: 1}
@@ -902,14 +874,13 @@ def test_connected_components_star_forest_early_stop(spark):
     # empty pair set: trivially converged, empty labels, no crash
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     stats = {}
-    assert connected_components_star(empty, stats=stats).count() == 0
+    assert connected_components(empty, stats=stats).count() == 0
     assert stats["rounds"] == 0
 
 
-def test_keep_canonical_both_variants_agree(spark):
+def test_keep_canonical_keeps_component_minima(spark):
     """keep_canonical drops every clustered non-minimum and keeps isolated
-    docs untouched; the min-label and star-contraction cluster backends
-    produce the same surviving corpus."""
+    docs untouched."""
     from samu_ocr_extraction_poc_spark.operators.dedup import keep_canonical
 
     docs = spark.createDataFrame(
@@ -923,10 +894,6 @@ def test_keep_canonical_both_variants_agree(spark):
     expect = {1, 10, 20, 99}  # component minima + the isolated doc 99
     kept = {r["doc_id"] for r in keep_canonical(docs, pairs).collect()}
     assert kept == expect
-    kept_minlabel = {
-        r["doc_id"] for r in keep_canonical(docs, pairs, use_star=False).collect()
-    }
-    assert kept_minlabel == expect
     # all input columns survive
     assert keep_canonical(docs, pairs).columns == ["doc_id", "text"]
 
