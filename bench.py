@@ -3,10 +3,11 @@
 $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Also evidences the north_rule two-cluster-size scaling criterion as the
-sandbox proxy: the flagship extraction job at local[4] vs local[16] (N vs
-4N) on the same materialized corpus, interleaved rounds, reporting docs/sec
-at both plus raw and host-ceiling-normalized scaling efficiency. See
-BENCH.md / BASELINE.md for method and rationale.
+sandbox proxy: the flagship extraction job at local[CPUS // 4] vs
+local[CPUS] (N vs 4N; CPUS defaults to nproc) on the same materialized
+corpus, interleaved rounds, reporting docs/sec at both plus raw and
+host-ceiling-normalized scaling efficiency. See BENCH.md / BASELINE.md for
+method and rationale.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") == "1"
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "48"))
 
@@ -376,21 +377,17 @@ def run_scaling() -> dict:
         _materialize_corpus(prep, SF_DIR, REPLICATE, corpus_dir)
         prep.stop()
 
-        # N vs 4N parallelism. 4 and 16 rather than 8 and 32: during the
-        # Arrow UDF stage each core's task thread (JVM serde) is paired with
-        # a Python worker, so local[32] would oversubscribe the 32-core host
-        # 2x and measure contention, not scaling.
+        # N vs 4N parallelism, derived from CPUS so the hi side never asks
+        # for more cores than the bench runs on: during the Arrow UDF stage
+        # each core's task thread (JVM serde) is paired with a Python
+        # worker, so local[CPUS] already keeps ~2x CPUS threads busy, and
+        # anything wider measures contention, not scaling.
         #
         # Measurements are INTERLEAVED (lo, hi, lo, hi, ...) and efficiency
         # is computed per adjacent round, then the best round is reported —
         # a transient host-load burst hits both configs of a round rather
         # than silently skewing one side.
-        # 2 vs 8 was also probed and is WORSE (0.65-0.67): per-core
-        # throughput on this shared VM declines with active-thread count
-        # well below saturation (background tenants, load avg 3-4), so the
-        # smaller configs just sample the noise differently. 4/16 with a
-        # doubled corpus (REPLICATE=48) measured best.
-        lo_cores, hi_cores = 4, 16
+        lo_cores, hi_cores = max(1, CPUS // 4), CPUS
         # 4 rounds since round 3 (was 5): the suite grew to 32 queries plus
         # a shuffle-path scaling job, and total bench time must stay well
         # under any driver timeout; rounds-2-5 history shows the best round
@@ -564,8 +561,9 @@ def main() -> None:
         "cpus": CPUS,
     }
     if scaling:
+        lo_key, hi_key = f"local{scaling['n_cores']}", f"local{scaling['n4_cores']}"
         full["scaling"] = scaling
-        full["docs_per_sec"] = scaling["local16"]["docs_per_sec"]
+        full["docs_per_sec"] = scaling[hi_key]["docs_per_sec"]
 
     # Full per-query maps + scaling blocks go to a side file; the FINAL
     # stdout line stays compact because the driver tail-captures only the
@@ -587,10 +585,10 @@ def main() -> None:
         "queries": {n: round(v, 2) for n, v in queries.items()},
     }
     if scaling:
-        compact["docs_per_sec"] = scaling["local16"]["docs_per_sec"]
+        compact["docs_per_sec"] = scaling[hi_key]["docs_per_sec"]
         sc = {
-            "local4_dps": scaling["local4"]["docs_per_sec"],
-            "local16_dps": scaling["local16"]["docs_per_sec"],
+            f"{lo_key}_dps": scaling[lo_key]["docs_per_sec"],
+            f"{hi_key}_dps": scaling[hi_key]["docs_per_sec"],
             "eff": scaling["scaling_efficiency"],
             "eff_median": scaling["scaling_efficiency_median"],
             "eff_norm": scaling["scaling_efficiency_normalized"],

@@ -3,7 +3,8 @@
 checkpoint-resume (SURVEY.md §3, §7; BASELINE.json north_rule).
 
 Physical plan (SURVEY.md §4): partition-pruned scan -> (repartition on
-hash(doc_id) only when needed for write co-location or input parallelism) ->
+hash(doc_id) only when the caller asks for write co-location, or when the
+scan has fewer splits than ``defaultParallelism``, the executor slots) ->
 ONE mapInArrow stage fusing all per-document operators (mirroring the
 reference's hand-fused Lambda handlers) -> narrow selects -> partitioned
 writes. At most one wide shuffle total.
@@ -314,6 +315,28 @@ def extract_document(
     return res
 
 
+def decode_spans(col) -> list[list]:
+    """``[x or [] for x in col.to_pylist()]`` for a ``spans``
+    list<struct> Arrow column, built from one ``to_pylist()`` per struct
+    field instead of one Python conversion per span. Null lists become
+    ``[]``; null struct elements stay ``None``."""
+    offsets = col.offsets.to_pylist()
+    lo = offsets[0]
+    # col.values ignores the list's own slice offset; offsets index into it
+    structs = col.values.slice(lo, offsets[-1] - lo)
+    names = [f.name for f in structs.type]
+    items = [
+        dict(zip(names, vals))
+        for vals in zip(*(structs.field(i).to_pylist() for i in range(len(names))))
+    ]
+    if structs.null_count:
+        items = [x if ok else None for x, ok in zip(items, structs.is_valid().to_pylist())]
+    out = [items[a - lo : b - lo] for a, b in zip(offsets, offsets[1:])]
+    if col.null_count:
+        out = [x if ok else [] for x, ok in zip(out, col.is_valid().to_pylist())]
+    return out
+
+
 def run_extraction(
     docs: DataFrame,
     ocr_lookup: dict[str, str] | None = None,
@@ -351,25 +374,33 @@ def run_extraction(
         lookup = bc_ocr.value
         for rb in batches:
             rows = []
-            for d in rb.to_pylist():
+            for doc_id, spans, part_id in zip(
+                rb.column("doc_id").to_pylist(),
+                decode_spans(rb.column("spans")),
+                rb.column("part_id").to_pylist(),
+            ):
                 t0 = time.perf_counter_ns()
-                row = extract_document(d["doc_id"], d["spans"] or [], lookup, thr)
+                row = extract_document(doc_id, spans, lookup, thr)
                 row["proc_us"] = (time.perf_counter_ns() - t0) // 1000
-                row["part_id"] = d["part_id"]
+                row["part_id"] = part_id
                 rows.append(row)
             yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     # Partitioning discipline (north_rule / SURVEY.md §4): the UDF stage is
     # narrow — it runs on the scan's file-level partitions when those already
-    # provide enough parallelism (the normal case on a many-file Iceberg
-    # corpus). The explicit hash repartition on doc_id is applied only when
-    # (a) the caller needs rows co-located with their lineage partition for
-    # a partitioned write (run_resumable), or (b) the input arrives in fewer
-    # splits than we have executor slots (small/unsplittable files).
+    # cover the executor slots (the normal case on a many-file Iceberg
+    # corpus). The hash repartition on part_id is applied only when (a) the
+    # caller needs rows co-located with their lineage partition for a
+    # partitioned write (run_resumable, streaming ingest: repartition=True),
+    # or (b) the scan has fewer splits than ``defaultParallelism``
+    # (small/unsplittable files). The bar is the slot count, not n_parts
+    # (shuffle partitions, 2x cores by default): every Python task costs a
+    # fixed setup before its first document, so shuffling to 2x the slots
+    # doubles that cost for no extra parallelism.
     with_part = docs.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
     selected = with_part.select("doc_id", "spans", "part_id")
     if repartition is None:
-        repartition = docs.rdd.getNumPartitions() < n_parts
+        repartition = docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
     if repartition:
         selected = selected.repartition(n_parts, "part_id")
     return selected.mapInArrow(_extract, out_schema)

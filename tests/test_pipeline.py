@@ -8,6 +8,7 @@ import pytest
 
 from samu_ocr_extraction_poc_spark import fixtures as FX
 from samu_ocr_extraction_poc_spark.plans.pipeline import (
+    decode_spans,
     lineage_from_results,
     run_extraction,
     run_resumable,
@@ -275,3 +276,58 @@ def test_plain_text_ingestion_adapter(spark):
         spark.createDataFrame([(99, "")], "doc_id long, text string")
     )
     assert empty.collect()[0]["spans"] == []
+
+
+def test_decode_spans_matches_to_pylist():
+    """The column-wise span decode equals the per-row to_pylist() decode on
+    null lists, empty lists, null struct elements, null fields and slices."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from samu_ocr_extraction_poc_spark.schema import SPANS_TYPE
+
+    s = {"kind": "line", "text": "a", "media_ref": "", "offset": 0}
+    col = pa.array(
+        [
+            [s],
+            None,
+            [],
+            [s, None, {"kind": None, "text": None, "media_ref": None, "offset": None}],
+            [{"kind": "media", "text": "", "media_ref": "img-1", "offset": 7}],
+            None,
+            [s, s],
+            [],
+            [{"kind": "page_break", "text": None, "media_ref": "m", "offset": None}],
+        ],
+        type=to_arrow_type(SPANS_TYPE),
+    )
+    rb = pa.RecordBatch.from_arrays([col], names=["spans"])
+    for batch in (rb, rb.slice(3, 5), rb.slice(1, 1), rb.slice(9, 0)):
+        c = batch.column("spans")
+        assert decode_spans(c) == [x or [] for x in c.to_pylist()]
+
+
+def test_decode_spans_on_corpus_batches(spark):
+    """Every Arrow batch mapInArrow hands the UDF, on the canonical corpus
+    (with the 400-page filing) and on spans synthesized from the edge-case
+    texts, decodes as to_pylist() does."""
+    import pyarrow as pa
+
+    from test_oracle_edge import EDGE_DOCS
+
+    edge = FX.synth_corpus_from_documents(
+        spark.createDataFrame(
+            EDGE_DOCS, "doc_id long, text string, lang string, source string, n_chars long"
+        )
+    )
+
+    def _check(batches):
+        for rb in batches:
+            c = rb.column("spans")
+            ok = decode_spans(c) == [x or [] for x in c.to_pylist()]
+            yield pa.RecordBatch.from_pydict({"n": [rb.num_rows], "ok": [ok]})
+
+    for docs in (FX.canonical_corpus(spark, with_skew=True), edge):
+        rows = docs.mapInArrow(_check, "n long, ok boolean").collect()
+        assert all(r["ok"] for r in rows)
+        assert sum(r["n"] for r in rows) == docs.count()

@@ -413,8 +413,38 @@ def test_extraction_is_narrow_on_wide_input(spark, tmp_path):
     res = run_extraction(wide, n_parts=4, repartition=False)
     plan = _plan(res)
     # no shuffle between the scan and the Arrow stage
-    scan_to_udf = plan.split("MapInPandas")[-1]
+    assert "MapInArrow" in plan
+    scan_to_udf = plan.split("MapInArrow")[-1]
     assert "Exchange" not in scan_to_udf
+
+
+def test_extraction_shuffles_only_below_the_slots(spark, tmp_path):
+    """Default run_extraction repartitions on part_id only when the scan has
+    fewer splits than defaultParallelism, not fewer than n_parts."""
+    from samu_ocr_extraction_poc_spark.plans.pipeline import run_extraction
+
+    slots = spark.sparkContext.defaultParallelism
+    docs = FX.canonical_corpus(spark)
+    wide_loc, narrow_loc = str(tmp_path / "wide"), str(tmp_path / "narrow")
+    docs.repartition(slots).write.parquet(wide_loc)
+    docs.coalesce(1).write.parquet(narrow_loc)
+    wide, narrow = spark.read.parquet(wide_loc), spark.read.parquet(narrow_loc)
+    assert wide.rdd.getNumPartitions() >= slots
+    assert narrow.rdd.getNumPartitions() == 1
+
+    # n_parts defaults to the shuffle partitions; session.get_spark sets
+    # them to 2x cores, so n_parts > slots as in a default session
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(2 * slots))
+    try:
+        wide_plan = _plan(run_extraction(wide))
+        narrow_plan = _plan(run_extraction(narrow))
+    finally:
+        spark.conf.set(key, saved)
+    assert "MapInArrow" in wide_plan
+    assert "Exchange" not in wide_plan.split("MapInArrow")[-1]
+    assert "Exchange hashpartitioning(part_id" in narrow_plan.split("MapInArrow")[-1]
 
 
 def test_exclude_manifest_files(spark, tmp_path):
