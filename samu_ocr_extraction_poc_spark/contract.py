@@ -2153,7 +2153,9 @@ DSIR_SELECT_SQL = (
 def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (operators/bpe.py:bpe_train;
     Sennrich et al. 2016): 8 merge rounds over the corpus's weighted word
-    vocabulary, each round one pair-count aggregation + a 1-row argmax.
+    vocabulary, each round one pair-count aggregation + a 1-row argmax, or,
+    for a vocabulary within the broadcast budget, the same rounds on the
+    driver over one collect of the word table.
     Pinned byte-identical to the classic single-process reference
     algorithm in tests/test_scale_paths.py; the oracle unrolls the same
     rounds in DuckDB (same '(sym)(sym)' representation, same greedy-left
@@ -2166,12 +2168,15 @@ def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_train_long_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training long enough that the lineage-truncation path fires
-    under the driver gate (VERDICT r4 item 6): 24 merge rounds with the
-    default ``checkpoint_every=16``, so round 16 localCheckpoint(eager)s
-    the vocabulary frame mid-training and rounds 17-24 build on the
-    truncated lineage — the exact mechanism that keeps Catalyst analysis
-    cost bounded at production merge counts (operators/bpe.py:120). The
+    """BPE training at 24 merge rounds (VERDICT r4 item 6), past the
+    default ``checkpoint_every=16``: on the Spark loop, round 16
+    localCheckpoint(eager)s the vocabulary frame mid-training and rounds
+    17-24 build on the truncated lineage — the mechanism that keeps
+    Catalyst analysis cost bounded at production merge counts. At sf0.001
+    and sf0.01 the vocabulary is small enough that bpe_train finishes on
+    the driver instead, so this entry checks the merges, not the
+    checkpoint path; tests/test_scale_paths.py's lineage-truncation test
+    pins that path by running with the broadcast threshold at -1. The
     oracle unrolls the same 24 rounds in DuckDB; values are integer
     counts + symbol strings, so parity is exact by construction."""
     from .operators import bpe as BP
@@ -2497,9 +2502,10 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the quality gate and the LSH->components canonical gate are
     # independent up to the final doc_id joins — materialize the quality
     # side concurrently with the components chain (guide §2.6): the
-    # executors are mostly idle during the components loop's driver
-    # barriers, so the gate job back-fills them for free (values
-    # unchanged; each job is what it was sequentially)
+    # executors idle while the driver plans the LSH jobs and, on small
+    # pair sets, runs the components' union-find finish, so the gate job
+    # back-fills them (values unchanged; each job is what it was
+    # sequentially)
     def _q_gate():
         return CP.quality_filter(docs).select("doc_id").localCheckpoint(eager=True)
 

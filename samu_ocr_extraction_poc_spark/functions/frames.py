@@ -11,11 +11,15 @@ involved. Value-identical — the same literals, typed by explicit CASTs.
 Use for the package's bounded literal tables (sketch meta sentinels,
 percentile lists, shard offset tables, merge tables); NOT for anything
 data-scale.
+
+The same module owns the one rule for "small enough to hold on the
+driver": the session's ``spark.sql.autoBroadcastJoinThreshold``, the
+budget Spark itself uses to ship a table to every executor.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 
 def _sql_literal(v, typ: str) -> str:
@@ -43,3 +47,23 @@ def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
         for r in rows
     )
     return spark.sql(f"SELECT * FROM (VALUES {values}) AS t({names})")
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes, read
+    as the typed SQLConf value (so "10m" and "-1" parse as Spark parses
+    them); <= 0 means broadcasting is off."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def collect_within_budget(df: DataFrame, row_bytes: int) -> list[Row] | None:
+    """All rows of ``df`` when it has at most ``broadcast_threshold //
+    row_bytes`` of them, else None. One ``limit(bound + 1).collect()``:
+    the caller finishes on the driver with the rows, or goes on with
+    ``df`` itself when None comes back. A threshold <= 0 returns None
+    without running anything."""
+    bound = broadcast_threshold(df.sparkSession) // row_bytes
+    if bound <= 0:
+        return None
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.frames import broadcast_threshold
 from .corpus import _md5_bucket
 
 PR_SCALE = 10**12
@@ -143,10 +144,7 @@ def pagerank(
     # the bound the joins stay sort-merge — at 10^9 nodes broadcasting
     # ranks would be wrong, and n is already collected for the teleport
     # term, so the gate costs nothing extra.
-    threshold = (
-        nodes.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    )
-    _bcast = n * 64 < threshold
+    _bcast = n * 64 < broadcast_threshold(nodes.sparkSession)
     _hint = F.broadcast if _bcast else (lambda d: d)
     # All joins below are name-based using-joins on freshly-aliased
     # columns: from iteration 2 the ranks lineage contains the edge

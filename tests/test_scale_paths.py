@@ -3,6 +3,8 @@ readers, and plan-quality assertions (pushdown / broadcast / narrow UDF)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,25 @@ from samu_ocr_extraction_poc_spark.sources.readers import load_documents, write_
 from samu_ocr_extraction_poc_spark.streaming.ingest import stream_event_metrics, stream_extract
 
 SF = "/root/testdata/sf0.001"
+
+# The loop operators (connected_components, bpe_train) finish small inputs
+# on the driver under the session's broadcast budget and run their Spark
+# loops otherwise: each (threshold, finish) pair runs one of the two paths.
+FINISH_PATHS = [(None, "driver"), ("-1", "spark")]
+
+
+@contextlib.contextmanager
+def override_broadcast_threshold(spark, value):
+    """Run with spark.sql.autoBroadcastJoinThreshold set to ``value`` (None:
+    the session's own), restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        if value is not None:
+            spark.conf.set(key, value)
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 # --- skew / giant-doc splitting ----------------------------------------------
@@ -843,11 +864,6 @@ def test_connected_components_matches_union_find(spark):
         if a != b:
             edges.add((min(a, b), max(a, b)))
     pairs = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
-    stats: dict = {}
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(pairs, stats=stats).collect()
-    }
 
     parent: dict[int, int] = {}
 
@@ -866,46 +882,57 @@ def test_connected_components_matches_union_find(spark):
     for v in parent:
         expected_groups.setdefault(find(v), set()).add(v)
     expected = {v: min(grp) for root, grp in expected_groups.items() for v in grp}
-    assert got == expected
-    # star contraction collapses the 30-edge chain in O(log n) rounds
-    assert stats["rounds"] <= 8, f"took {stats['rounds']} rounds"
+    for threshold, finish in FINISH_PATHS:
+        stats: dict = {}
+        with override_broadcast_threshold(spark, threshold):
+            got = {
+                r["doc_id"]: r["component"]
+                for r in connected_components(pairs, stats=stats).collect()
+            }
+        assert got == expected
+        assert stats["finish"] == finish
+        if finish == "spark":
+            # star contraction collapses the 30-edge chain in O(log n) rounds
+            assert 1 <= stats["rounds"] <= 8, f"took {stats['rounds']} rounds"
 
 
 def test_connected_components_forest_early_stop(spark):
     """r6 convergence detection: the round that PRODUCES the star forest is
     detected directly (no fingerprint-equality confirming round), and an
     input that already IS a star forest runs zero rounds — labels are
-    unchanged in both cases."""
+    unchanged in both cases. The driver finish runs no round at all."""
     from samu_ocr_extraction_poc_spark.operators.dedup import connected_components
 
     # isolated pairs + an existing star: already a forest -> 0 rounds
     forest = spark.createDataFrame(
         [(1, 2), (10, 11), (20, 21), (20, 22)], "doc_a long, doc_b long"
     )
-    stats = {}
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(forest, stats=stats).collect()
-    }
-    assert stats["rounds"] == 0
-    assert got == {1: 1, 2: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
     # depth-2 chain: NOT a forest (2 is src and dst); one large+small round
     # contracts it, and the forest test fires on that same round's output
     chain = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    stats = {}
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(chain, stats=stats).collect()
-    }
-    assert stats["rounds"] == 1
-    assert got == {1: 1, 2: 1, 3: 1}
-
-    # empty pair set: trivially converged, empty labels, no crash
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    stats = {}
-    assert connected_components(empty, stats=stats).count() == 0
-    assert stats["rounds"] == 0
+    for threshold, finish in FINISH_PATHS:
+        with override_broadcast_threshold(spark, threshold):
+            stats = {}
+            got = {
+                r["doc_id"]: r["component"]
+                for r in connected_components(forest, stats=stats).collect()
+            }
+            assert (stats["finish"], stats["rounds"]) == (finish, 0)
+            assert got == {1: 1, 2: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+            stats = {}
+            got = {
+                r["doc_id"]: r["component"]
+                for r in connected_components(chain, stats=stats).collect()
+            }
+            assert (stats["finish"], stats["rounds"]) == (finish, 1 if finish == "spark" else 0)
+            assert got == {1: 1, 2: 1, 3: 1}
+
+            # empty pair set: trivially converged, empty labels, no crash
+            stats = {}
+            assert connected_components(empty, stats=stats).count() == 0
+            assert (stats["finish"], stats["rounds"]) == (finish, 0)
 
 
 def test_keep_canonical_keeps_component_minima(spark):
@@ -922,10 +949,80 @@ def test_keep_canonical_keeps_component_minima(spark):
         "doc_a long, doc_b long",
     )
     expect = {1, 10, 20, 99}  # component minima + the isolated doc 99
-    kept = {r["doc_id"] for r in keep_canonical(docs, pairs).collect()}
-    assert kept == expect
-    # all input columns survive
-    assert keep_canonical(docs, pairs).columns == ["doc_id", "text"]
+    for threshold, finish in FINISH_PATHS:
+        with override_broadcast_threshold(spark, threshold):
+            kept = keep_canonical(docs, pairs)
+            # the driver finish's labels are an Arrow LocalRelation; the
+            # loop's are a checkpointed RDD
+            plan = kept._jdf.queryExecution().optimizedPlan().toString()
+            assert ("LocalRelation" in plan) == (finish == "driver"), plan
+            assert {r["doc_id"] for r in kept.collect()} == expect
+            # all input columns survive
+            assert kept.columns == ["doc_id", "text"]
+
+
+def test_release_frame_swallows_only_py4j_errors():
+    """_release_frame's best-effort RDD release tolerates the JVM-side miss
+    (a py4j error) and lets any other error through."""
+    from py4j.protocol import Py4JError
+
+    from samu_ocr_extraction_poc_spark.operators.dedup import _release_frame
+
+    class Frame:
+        def __init__(self, exc):
+            self.exc, self.unpersisted = exc, False
+
+        def unpersist(self):
+            self.unpersisted = True
+
+        @property
+        def _jdf(self):
+            raise self.exc
+
+    gone = Frame(Py4JError("gone"))
+    _release_frame(gone)
+    assert gone.unpersisted
+    with pytest.raises(TypeError):
+        _release_frame(Frame(TypeError("bug")))
+
+
+def test_connected_components_driver_finish_matches_loop(spark):
+    """The driver finish drops edges exactly as the loop does (a pair with a
+    null endpoint, self-loops, duplicate and reversed pairs) and returns the
+    loop's labels and column types, also for an empty pair set and int ids;
+    on a small graph it schedules at most 2 jobs (the loop: one per round
+    plus the read-off)."""
+    from samu_ocr_extraction_poc_spark.operators.dedup import connected_components
+
+    messy = [
+        (1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (None, 5), (5, None),
+        (None, None), (7, 8), (8, 7), (9, 10), (11, 10), (12, 12),
+    ]
+    graphs = [
+        spark.createDataFrame(messy, "doc_a long, doc_b long"),
+        spark.createDataFrame([], "doc_a long, doc_b long"),
+        spark.createDataFrame([(4, 2), (2, 6), (None, 1)], "doc_a int, doc_b int"),
+    ]
+    sc = spark.sparkContext
+    for pairs in graphs:
+        out = {}
+        for threshold, finish in FINISH_PATHS:
+            group = f"cc-finish-{finish}"
+            stats = {}
+            with override_broadcast_threshold(spark, threshold):
+                sc.setJobGroup(group, group)
+                try:
+                    before = set(sc.statusTracker().getJobIdsForGroup(group))
+                    cc = connected_components(pairs, stats=stats)
+                    jobs = set(sc.statusTracker().getJobIdsForGroup(group)) - before
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+            assert stats["finish"] == finish
+            out[finish] = (sorted(cc.collect()), cc.schema, len(jobs))
+        assert out["driver"][:2] == out["spark"][:2]
+        assert out["driver"][2] <= 2, out
+    labels = dict(sorted(connected_components(graphs[0]).collect()))
+    assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 9, 10: 9, 11: 9}
 
 
 def test_remove_boilerplate_known_corpus(spark):
@@ -2156,9 +2253,13 @@ def test_bpe_train_matches_classic_reference(spark):
             vocab = newv
         return merges, vocab
 
-    got = bpe_train(docs, n_merges=10)
     want, final_vocab = ref_bpe(texts, 10)
-    assert [tuple(r) for r in got] == want
+    for threshold, finish in FINISH_PATHS:
+        stats: dict = {}
+        with override_broadcast_threshold(spark, threshold):
+            got = bpe_train(docs, n_merges=10, stats=stats)
+        assert stats["finish"] == finish
+        assert [tuple(r) for r in got] == want
 
     # encode totals must equal the reference vocabulary's symbol counts
     ref_tokens = collections.Counter()
@@ -2230,8 +2331,15 @@ def test_bpe_train_many_merges_with_lineage_truncation(spark):
 
     want = ref_bpe(text, 110)
     assert len(want) == 110  # the corpus really sustains 110 merge rounds
-    got = bpe_train(docs, n_merges=110, checkpoint_every=8)
-    assert [tuple(r) for r in got] == want
+    for threshold, finish in FINISH_PATHS:
+        stats: dict = {}
+        with override_broadcast_threshold(spark, threshold):
+            got = bpe_train(docs, n_merges=110, checkpoint_every=8, stats=stats)
+        assert [tuple(r) for r in got] == want
+        # the loop truncates its lineage every 8 rounds; the finish has none
+        assert (stats["finish"], stats["checkpoints"]) == (
+            (finish, 110 // 8) if finish == "spark" else (finish, 0)
+        )
 
 
 def test_winnowing_guarantee_and_sampling_rate(spark):
@@ -2684,7 +2792,12 @@ def test_bpe_battery_matches_python_reference(spark, texts):
     docs = spark.createDataFrame(
         [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    assert [tuple(r) for r in bpe_train(docs, n_merges=6)] == ref_bpe(texts, 6)
+    want = ref_bpe(texts, 6)
+    for threshold, finish in FINISH_PATHS:
+        stats: dict = {}
+        with override_broadcast_threshold(spark, threshold):
+            assert [tuple(r) for r in bpe_train(docs, n_merges=6, stats=stats)] == want
+        assert stats["finish"] == finish
 
 
 def test_segment_dedup_and_winnow_python_replay(spark):
