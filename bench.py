@@ -117,9 +117,6 @@ HEADLINE = [
     "ccnet_buckets",
     "shuffle_order",
     "gopher_repetition",
-    # the stride-k screen is the 100 TB path for exact-substring dedup;
-    # timed alongside the stride-1 exact entry above
-    "remove_shared_windows_screened",
     # iterative link analysis (all-integer, 8 scheduled join rounds) and the
     # df-screened all-pairs weighted similarity (the Bayardo screen is what
     # bounds the quadratic stage; ~10 s at sf0.1, dominated by the self-join)
@@ -197,8 +194,10 @@ def _dedup_shuffle_job(spark, corpus_dir: str) -> int:
     """The SHUFFLE-path scaling job: the extraction job above is narrow
     (embarrassingly parallel), so it evidences scan/UDF scaling but not
     shuffle scaling. This job assembles each doc's text from its spans
-    (narrow), computes minhash signatures (shingle explode + partial-agg
-    groupBy — shuffle 1) and counts distinct signatures (shuffle 2).
+    (narrow), computes minhash signatures (row-local, also narrow) and
+    counts distinct signatures (the one shuffle). Before the signatures
+    went row-local they were a shingle explode + partial-agg groupBy, a
+    second shuffle, so scaling numbers from that version do not compare.
     Deliberately NO pair join: the replicated bench corpus is
     signature-identical by construction, so banded self-joins would be
     quadratic in the replication factor rather than representative.

@@ -32,7 +32,6 @@ TOP = [
     "curate_corpus",
     "dedup_apply",
     "dedup_components",
-    "remove_shared_windows_screened",
     "curate_corpus_v2",
     "semantic_dedup",
     "remove_shared_windows",

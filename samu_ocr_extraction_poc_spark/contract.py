@@ -2031,26 +2031,6 @@ def remove_shared_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.remove_shared_windows(docs, k=16)
 
 
-def remove_shared_windows_screened_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two-pass screen+verify variant of remove_shared_windows
-    (operators/dedup.py:remove_shared_windows_screened — the 100 TB cost
-    path: each token md5-hashed once, window keys a polynomial fold over
-    the token hashes, exact md5 re-hash only on candidate windows). Output
-    is BIT-IDENTICAL to the stride-1 exact pass by construction, so it
-    shares REMOVE_SHARED_SQL — the oracle check proves the screen loses
-    nothing on the same injected-passage corpus."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 23 == 0,
-            F.concat(F.col("text"), F.lit(" " + DUP_PASSAGE)),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return DD.remove_shared_windows_screened(docs, k=16)
-
-
 REMOVE_SHARED_SQL = f"""
 WITH rdocs AS (SELECT doc_id,
                       CASE WHEN doc_id % 23 = 0 THEN text || ' {DUP_PASSAGE}'
@@ -5060,6 +5040,9 @@ FROM ghn1 n1 JOIN ghex e ON e.lang = n1.lang
 # (bpe_train_long, winnow_pairs'/shared_window_pairs' window family,
 # simhash_near_pairs; dedup_components has no in-window sibling) and
 # they are FIRST in line for the r6 rotation.
+# When an in-window entry is deleted, the head of the position-51+ block
+# moves up into the freed slot (block (e) below) rather than reshuffling
+# the window.
 # Positions 51+ were all green in CORRECTNESS_r04 (every entry stays under
 # the local driver-faithful gate at sf0.001+sf0.01 regardless of position).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -5075,7 +5058,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- (b) new in round 5 (never driver-checked by construction)
     "media_features": media_features_q,
     "bpe_train_long": bpe_train_long_q,
-    "remove_shared_windows_screened": remove_shared_windows_screened_q,
     "cms_word_counts": cms_word_counts_q,
     "length_quantiles": length_quantiles_q,
     "source_length_quantiles": source_length_quantiles_q,
@@ -5118,11 +5100,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- (d) r03-only block (last driver-checked r03), oldest-first fill
     "contamination_check": contamination_check_q,
     "shuffle_order": shuffle_order_q,
+    # --- (e) first in line of the displaced block below, refilled into
+    # the last slot when a round-5 entry was deleted: simhash_near_pairs
+    # (r03-green, displaced by the skew/cms-audit block)
+    "simhash_near_pairs": simhash_near_pairs,
     # ---------------------- position 51+ -------------------------------
     # skew/cms-audit displacements by the never-checked skew_audit /
-    # cms_join_size block: simhash_near_pairs (r03-green; the near-dup
-    # pairs family in-window via minhash_jaccard_est — LSH candidates +
-    # exact verify — and remove_shared_windows), pack_assignments
+    # cms_join_size block: pack_assignments
     # (r03-green; the pack family's only in-window entry, so pack has NO
     # in-window coverage this round — the standing policy still applies:
     # a never-checked entry outranks any green one, and pack_assignments
@@ -5136,7 +5120,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # evidence in the window, which is exactly why it's the safest cut;
     # the quality-rule family stays in-window via c4_rules AND
     # gopher_repetition).
-    "simhash_near_pairs": simhash_near_pairs,
     "pack_assignments": pack_assignments_q,
     "props_parse": props_parse,
     "gopher_rules": gopher_rules_q,
@@ -5315,7 +5298,6 @@ ORACLE_SQL: dict[str, str] = {
     "boilerplate_strip": BOILERPLATE_SQL,
     "segment_dedup": SEGMENT_DEDUP_SQL,
     "remove_shared_windows": REMOVE_SHARED_SQL,
-    "remove_shared_windows_screened": REMOVE_SHARED_SQL,
     "gopher_rules": GOPHER_SQL,
     "gopher_repetition": GOPHER_REP_SQL,
     "c4_rules": C4_SQL,

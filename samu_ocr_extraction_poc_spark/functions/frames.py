@@ -3,14 +3,16 @@
 ``spark.createDataFrame(py_rows, ...)`` builds a PYTHON-RDD-backed frame:
 every action that touches it — including a 2-row sketch-meta sentinel
 read — schedules a distributed job that spins a Python worker to unpickle
-the rows (profiled 0.3-1.2 s per collect at bench scale). A SQL ``VALUES``
-list parses to a LocalRelation instead: joins broadcast it from the
-driver, sentinel collects are driver-local, and no Python worker is ever
-involved. Value-identical — the same literals, typed by explicit CASTs.
+the rows (profiled 0.3-1.2 s per collect at bench scale). An Arrow table
+handed to ``createDataFrame`` with an explicit schema is parsed on the
+JVM into a LocalRelation instead: joins broadcast it from the driver,
+sentinel collects are driver-local, and no Python worker is ever
+involved. Any row count works, zero included, and every value
+round-trips as typed (NaN, quotes and backslashes too).
 
 Use for the package's bounded literal tables (sketch meta sentinels,
-percentile lists, shard offset tables, merge tables); NOT for anything
-data-scale.
+percentile lists, shard offset tables, merge tables, driver-finished loop
+results); NOT for anything data-scale.
 
 The same module owns the one rule for "small enough to hold on the
 driver": the session's ``spark.sql.autoBroadcastJoinThreshold``, the
@@ -19,34 +21,24 @@ budget Spark itself uses to ship a table to every executor.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
-def _sql_literal(v, typ: str) -> str:
-    t = typ.strip().upper()
-    if v is None:
-        return f"CAST(NULL AS {t})"
-    if t in ("STRING", "VARCHAR"):
-        escaped = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{escaped}'"
-    if t == "DOUBLE":
-        return f"CAST({float(v)!r} AS DOUBLE)"
-    return f"CAST({int(v)} AS {t})"
-
-
-def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """Literal frame from ``rows`` with the ``"name type, name type"``
-    DDL schema, built as a SQL VALUES LocalRelation (see module doc).
-    ``rows`` must be non-empty (SQL VALUES cannot be empty)."""
-    if not rows:
-        raise ValueError("values_frame needs at least one row")
-    cols = [c.strip().rsplit(" ", 1) for c in ddl.split(",")]
-    names = ", ".join(n.strip() for n, _ in cols)
-    values = ", ".join(
-        "(" + ", ".join(_sql_literal(v, t) for v, (_, t) in zip(r, cols)) + ")"
-        for r in rows
+def values_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """Literal frame from ``rows`` (tuples in column order) with ``schema``,
+    a ``"name type, name type"`` DDL string or a StructType, built from an
+    Arrow table as a LocalRelation (see module doc)."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
-    return spark.sql(f"SELECT * FROM (VALUES {values}) AS t({names})")
+    return spark.createDataFrame(table, schema)
 
 
 def broadcast_threshold(spark: SparkSession) -> int:

@@ -19,13 +19,15 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
+_MAX_IN_FLIGHT = 3
 
-def run_jobs(*thunks: Callable[[], Any], max_workers: int = 3) -> list[Any]:
+
+def run_jobs(*thunks: Callable[[], Any]) -> list[Any]:
     """Run each thunk (a callable performing a Spark action and returning
     its result frame/value) concurrently; return their results in input
     order. Exceptions propagate (the first raising future re-raises)."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(thunks))) as pool:
+    with ThreadPoolExecutor(max_workers=min(_MAX_IN_FLIGHT, len(thunks))) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

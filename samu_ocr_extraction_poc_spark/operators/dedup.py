@@ -3,10 +3,10 @@
 All DataFrame-native (no Python in the hot path). Scale notes per operator:
 
 - exact: one hash-aggregate shuffle on md5(text); AQE coalesces.
-- minhash/LSH: explode(shingles) -> one groupBy(doc) for signatures ->
-  explode(bands) -> self-equi-join on (band_id, key). At 100 TB the band
-  join is the only wide shuffle; band keys are uniform by construction
-  (md5), so no salting needed.
+- minhash/LSH: row-local signatures (array HOFs over the in-row shingle
+  array, no shuffle) -> explode(bands) -> self-equi-join on (band_id,
+  key). At 100 TB the band join is the only wide shuffle; band keys are
+  uniform by construction (md5), so no salting needed.
 - simhash: explode(tokens) -> single groupBy(doc) computing all 32 bit-sums
   map-side (partial aggregation); no join.
 - n-gram Jaccard: candidate generation via the shingle inverted index with
@@ -18,14 +18,13 @@ bit-for-bit (engine-native xxhash/murmur differ across engines).
 
 from __future__ import annotations
 
-import pyarrow as pa
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
-from ..functions.frames import collect_within_budget
+from ..functions.frames import collect_within_budget, values_frame
 from ..functions.textfns import let_bound, normalized, token_count, token_md5_long, tokens
 
 SIMHASH_BITS = 32
@@ -107,40 +106,31 @@ def minhash_signatures(
     """MinHash signature per doc: h_i = min over shingles of
     (a_i * md5int(shingle) + b_i) mod (2^31 - 1). Columns h0..h{n-1}.
 
-    One md5 per shingle (not per hash function), one explode + one
-    partial-aggregating groupBy — scales linearly; no state beyond the
-    signature row per doc.
+    Row-local (:func:`row_minhash`): no explode, no groupBy, no shuffle —
+    one narrow projection, so the same plan serves batch and streaming.
+    The signature struct is selected once and expanded in a second
+    select: expanding it in the same select would leave one copy of the
+    tokenizer per hash function in the optimized plan.
     """
-    exploded = doc_shingles(df, text_col, id_col, k).withColumn(
-        "x", shingle_base_hash(F.col("shingle"))
-    )
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[i]) * F.col("x") + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return exploded.groupBy("doc_id").agg(*aggs)
+    return df.select(
+        F.col(id_col).alias("doc_id"), row_minhash(F.col(text_col), num_hashes, k).alias("mh")
+    ).select("doc_id", "mh.*")
 
 
-def row_minhash(
-    text_col: Column, num_hashes: int = 8, k: int = 3
-) -> list[Column]:
-    """The SAME minhash signature as :func:`minhash_signatures`, computed
-    ROW-LOCALLY (array HOFs over the in-row shingle array — array_min of
-    the linear transforms) instead of explode + groupBy-min. Value-identical
-    by construction (same shingles(), same hash family, min over the same
-    set); pinned by a test. This is the streaming form: no aggregation
+def row_minhash(text_col: Column, num_hashes: int = 8, k: int = 3) -> Column:
+    """The minhash signature of one row as a struct<h0..h{n-1}>: one md5
+    per shingle (not per hash function), LET-BOUND (textfns.let_bound) so
+    every hash function's array_min reads the same shingle-hash array
+    instead of re-running the tokenizer once per hash. No aggregation
     state, so it composes with dropDuplicatesWithinWatermark (streaming
-    aggregations before a stateful dedup are not allowed, and an exploded
-    groupBy would be exactly that).
+    aggregations before a stateful dedup are not allowed).
 
-    Returns the h0..h{n-1} Columns."""
-    xs = F.transform(shingles(text_col, k), shingle_base_hash)
+    Select it once under an alias and expand the alias (``"mh.*"``) in a
+    following select, as :func:`minhash_signatures` does."""
 
     # NOTE: the per-hash index must be captured by closure, not a lambda
     # default — F.transform passes the ARRAY INDEX to any two-arg lambda.
-    def _h(i: int) -> Column:
+    def _h(xs: Column, i: int) -> Column:
         return F.array_min(
             F.transform(
                 xs,
@@ -149,7 +139,10 @@ def row_minhash(
             )
         ).alias(f"h{i}")
 
-    return [_h(i) for i in range(num_hashes)]
+    return let_bound(
+        F.transform(shingles(text_col, k), shingle_base_hash),
+        lambda xs: F.struct(*[_h(xs, i) for i in range(num_hashes)]),
+    )
 
 
 def _banded(
@@ -686,7 +679,6 @@ def remove_shared_windows(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 16,
-    eager: bool = True,
 ) -> DataFrame:
     """Exact-substring dedup APPLY (completes the Lee et al. "Deduplicating
     Training Data Makes Language Models Better" story that
@@ -707,7 +699,9 @@ def remove_shared_windows(
 
     Plan shape at scale: sliding-window explode (stride 1, fan-out n-k+1
     per doc; each window hashed to a 60-bit md5 key — O(n*k) chars hashed,
-    the price of exactness; raise the stride for a cheaper screen) ->
+    the price of exactness; a token-hash screen that re-hashed only
+    candidate windows was measured slower at every tested scale — its
+    text join-back and collect_list grow with the corpus too) ->
     first-occurrence agg min(struct(doc_id, start)) per hash (two-phase
     partial agg, md5-uniform keys, no skew) -> decision join on the hash ->
     interval explode of duplicate windows (fan-out k per DUPLICATE only —
@@ -742,21 +736,16 @@ def remove_shared_windows(
         .select("doc_id", F.explode("ws").alias("w"))
         .select("doc_id", F.col("w.s").alias("s"), F.col("w.h").alias("h"))
     )
-    if eager:
-        # flat materialized window frame (multi-referenced by the
-        # first-occurrence agg and the decision join — guide §3.3)
-        wins = wins.localCheckpoint(eager=False)
+    # flat materialized window frame (multi-referenced by the
+    # first-occurrence agg and the decision join — guide §3.3)
+    wins = wins.localCheckpoint(eager=False)
     first = wins.groupBy("h").agg(F.min(F.struct("doc_id", "s")).alias("f"))
     dup = (
         wins.join(first, "h")
         .where(~((F.col("doc_id") == F.col("f.doc_id")) & (F.col("s") == F.col("f.s"))))
         .select("doc_id", "s")
     )
-    out = _strip_dup_windows(df, dup, text_col, id_col, k)
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return out
-    out = out.localCheckpoint(eager=True)
+    out = _strip_dup_windows(df, dup, text_col, id_col, k).localCheckpoint(eager=True)
     _release_frame(wins)
     return out
 
@@ -764,7 +753,7 @@ def remove_shared_windows(
 def _strip_dup_windows(
     df: DataFrame, dup: DataFrame, text_col: str, id_col: str, k: int
 ) -> DataFrame:
-    """Shared removal tail for the exact-substring APPLY family: duplicate
+    """Removal tail of :func:`remove_shared_windows`: duplicate
     (doc_id, s) window starts -> interval cover -> per-document removed-
     position ARRAYS (the only shuffled payload — duplicate metadata, tiny
     in clean corpora) -> one broadcast-friendly left join back onto the
@@ -807,120 +796,6 @@ def _strip_dup_windows(
             ).alias("clean_text"),
         )
     )
-
-
-# rolling-screen constants: 31-bit Mersenne modulus keeps every product in
-# the fold under 2^52 (BIGINT-safe on both engines); the base is any odd
-# constant below the modulus
-_ROLL_M = 2147483647  # 2^31 - 1
-_ROLL_B = 1000003
-
-
-def remove_shared_windows_screened(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    eager: bool = True,
-) -> DataFrame:
-    """Two-pass :func:`remove_shared_windows` for the 100 TB path: the
-    stride-1 exact pass md5-hashes every k-token window string — O(n*k)
-    characters hashed, the dominant cost at corpus scale (the docstring's
-    documented price of exactness). This variant cuts the char-hashing
-    ~k-fold while producing BIT-IDENTICAL output (pinned by
-    tests/test_scale_paths.py::test_remove_shared_windows_screened_identical):
-
-    Pass 1 (screen): each token is md5-hashed ONCE (O(n) chars), and each
-    window's screen key is a k-term polynomial fold over the precomputed
-    token hashes mod 2^31-1 — pure JVM integer arithmetic, no further
-    char hashing. Identical window content folds to an identical key, so
-    a key with global count >= 2 marks every occurrence of every truly
-    duplicated window: false negatives are impossible; false positives
-    (31-bit birthday collisions) only add candidates.
-
-    Pass 2 (verify-on-candidates): ONLY candidate windows are re-hashed
-    with the exact 60-bit md5 window key (in clean corpora a vanishing
-    fraction of n), then the keep-first / interval-cover / re-assembly
-    tail runs on verified duplicates exactly as in
-    :func:`remove_shared_windows` — a hash with a single exact occurrence
-    is its own first occurrence and drops out of the duplicate set, so
-    collision-induced candidates cannot remove anything. Every occurrence
-    of a duplicated content is a candidate (same content ⇒ same screen
-    key), so first-occurrence over candidates equals global
-    first-occurrence.
-
-    Shuffle volume matches the exact pass (one groupBy over n window
-    keys); the saving is CPU — char hashing down from n*k*chars_per_token
-    to n*chars_per_token + bounded candidate re-hashing.
-    """
-    n = token_count(F.col(text_col))
-    screen_keys = let_bound(
-        F.transform(tokens(F.col(text_col)), lambda t: token_md5_long(t) % _ROLL_M),
-        lambda th: F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda s: F.struct(
-                s.alias("s"),
-                F.aggregate(
-                    F.slice(th, s, k),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: (acc * _ROLL_B + x) % _ROLL_M,
-                ).alias("rk"),
-            ),
-        ),
-    )
-    wins = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.when(n >= k, screen_keys)
-            .otherwise(F.array().cast("array<struct<s:int,rk:bigint>>"))
-            .alias("ws"),
-        )
-        .select("doc_id", F.explode("ws").alias("w"))
-        .select("doc_id", F.col("w.s").alias("s"), F.col("w.rk").alias("rk"))
-    )
-    if eager:
-        # flat materialized window frame (multi-referenced by the
-        # first-occurrence agg and the decision join — guide §3.3)
-        wins = wins.localCheckpoint(eager=False)
-    cand_keys = wins.groupBy("rk").agg(F.count("*").alias("c")).where(F.col("c") >= 2)
-    cand = wins.join(cand_keys.select("rk"), "rk").select("doc_id", "s")
-    # pass 2: exact md5 only for candidate windows — group the starts per
-    # doc, join the text back once, slice+hash each candidate window
-    cand_by_doc = cand.groupBy("doc_id").agg(F.collect_list("s").alias("ss"))
-    exact = (
-        df.select(F.col(id_col).alias("doc_id"), text_col)
-        .join(cand_by_doc, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(
-                let_bound(
-                    tokens(F.col(text_col)),
-                    lambda toks: F.transform(
-                        F.col("ss"),
-                        lambda s: F.struct(
-                            s.alias("s"),
-                            token_md5_long(
-                                F.array_join(F.slice(toks, s, k), " ")
-                            ).alias("h"),
-                        ),
-                    ),
-                )
-            ).alias("w"),
-        )
-        .select("doc_id", F.col("w.s").alias("s"), F.col("w.h").alias("h"))
-    )
-    first = exact.groupBy("h").agg(F.min(F.struct("doc_id", "s")).alias("f"))
-    dup = (
-        exact.join(first, "h")
-        .where(~((F.col("doc_id") == F.col("f.doc_id")) & (F.col("s") == F.col("f.s"))))
-        .select("doc_id", "s")
-    )
-    out = _strip_dup_windows(df, dup, text_col, id_col, k)
-    if not eager:
-        return out
-    out = out.localCheckpoint(eager=True)
-    _release_frame(wins)
-    return out
 
 
 def cross_corpus_contamination(
@@ -1295,8 +1170,9 @@ def _components_on_driver(
     """Union-find over canonical (src, dst) edges; every vertex is labelled
     with its component's minimum id (a root is only ever attached under a
     smaller root, so each root is its component's minimum). Returns
-    (doc_id, component) typed like the loop's output, from an Arrow table:
-    a LocalRelation, so a join against it broadcasts with no Python RDD."""
+    (doc_id, component) typed like the loop's output as a
+    :func:`values_frame`, so a join against it broadcasts with no Python
+    RDD."""
     parent: dict = {}
 
     def find(x):
@@ -1313,12 +1189,10 @@ def _components_on_driver(
         a, b = find(src), find(dst)
         if a != b:
             parent[max(a, b)] = min(a, b)
-    ids = list(parent)
     schema = StructType(
         [
             StructField("doc_id", fields[0].dataType, fields[0].nullable),
             StructField("component", fields[1].dataType, fields[1].nullable),
         ]
     )
-    table = pa.table({"doc_id": ids, "component": [find(v) for v in ids]})
-    return spark.createDataFrame(table, schema)
+    return values_frame(spark, [(v, find(v)) for v in list(parent)], schema)

@@ -148,7 +148,6 @@ def bloom_probe(
     id_col: str = "doc_id",
     m_bits: int = 1 << 18,
     k: int = 3,
-    eager: bool = True,
 ) -> DataFrame:
     """Probe a :func:`bloom_build` filter: an element is a (probable)
     member iff ALL k of its bit positions are set. Validates the
@@ -169,15 +168,8 @@ def bloom_probe(
     means "probably in the corpus" (false positives possible at the
     standard Bloom rate, deterministic here; false negatives
     impossible).
-
-    ``eager=False`` (the dedup-ops plan-inspection convention) skips the
-    checkpoint — no checkpointed RDD is left behind per call, at the
-    price of the probe plan recomputing the build; long-lived callers
-    probing many batches should localCheckpoint the filter ONCE
-    themselves and pass eager=False here.
     """
-    if eager:
-        bloom = bloom.localCheckpoint(eager=True)
+    bloom = bloom.localCheckpoint(eager=True)
     meta = {
         r["word_idx"]: r["bits"]
         for r in bloom.where(F.col("word_idx") < 0).collect()
@@ -307,19 +299,15 @@ def cms_merge(
     b: DataFrame,
     width: int = 1 << 12,
     depth: int = 4,
-    eager: bool = True,
 ) -> DataFrame:
     """Merge two :func:`cms_build` sketches: per-cell sum of the count
     rows (the CMS linearity property — the merged sketch is exactly the
     sketch of the concatenated inputs), after a meta handshake on BOTH
     inputs (2 rows each). Meta rows are carried once, not summed. Inputs
     are localCheckpoint-ed so the handshake collect and the merged plan
-    read one materialization each (the bloom_probe discipline);
-    ``eager=False`` skips the checkpoints for plan inspection / callers
-    managing their own materialization."""
-    if eager:
-        a = a.localCheckpoint(eager=True)
-        b = b.localCheckpoint(eager=True)
+    read one materialization each (the bloom_probe discipline)."""
+    a = a.localCheckpoint(eager=True)
+    b = b.localCheckpoint(eager=True)
     for side, frame in (("left merge input", a), ("right merge input", b)):
         _cms_handshake(frame, side, width, depth)
     cells = (
@@ -337,7 +325,6 @@ def cms_query(
     key_col: str = "key",
     width: int = 1 << 12,
     depth: int = 4,
-    eager: bool = True,
 ) -> DataFrame:
     """Point-estimate keys against a :func:`cms_build` sketch: estimate =
     min over the depth rows of the key's cell counts (an absent cell is
@@ -349,11 +336,8 @@ def cms_query(
     materialization; the cell table is broadcastable at any corpus size
     (bounded by depth*width rows). Returns (key, est) — one row per
     DISTINCT probe key; est >= the key's true built count, with
-    deterministic md5-collision overestimates. ``eager=False`` skips the
-    checkpoint (plan inspection / caller-managed materialization — the
-    bloom_probe convention)."""
-    if eager:
-        cms = cms.localCheckpoint(eager=True)
+    deterministic md5-collision overestimates."""
+    cms = cms.localCheckpoint(eager=True)
     _cms_handshake(cms, "query", width, depth)
     cells = cms.where(F.col("d") >= 0)
     pos = _cms_positions(
@@ -409,7 +393,7 @@ def cms_inner_product(
     (mass from the d=0 row sum, max over all cells; two bounded
     aggregates, exact python-int arithmetic). Returns one row: ``est``
     (BIGINT). ``eager=False`` skips the localCheckpoints (plan
-    inspection; the cms_merge convention)."""
+    inspection, or inputs the caller has already materialized)."""
     if eager:
         a = a.localCheckpoint(eager=True)
         b = b.localCheckpoint(eager=True)
@@ -468,8 +452,8 @@ def cms_heavy_hitters(
 ) -> DataFrame:
     """EXACT heavy hitters via a CMS screen + verify-on-candidates — the
     sketch-as-screen composition (Cormode & Muthukrishnan 2005 §4;
-    Charikar et al. 2002's find-then-verify discipline, and the
-    remove_shared_windows_screened precedent applied to frequencies):
+    Charikar et al. 2002's find-then-verify discipline applied to
+    frequencies):
     return every key whose exact occurrence count satisfies
     ``cnt * den >= total * num`` (frequency >= num/den of the stream).
 
@@ -611,8 +595,8 @@ def _hist_handshake(
 ) -> DataFrame:
     """localCheckpoint + meta validation; returns the materialized frame
     so the caller's plan reads the same materialization the handshake
-    collected (the bloom_probe/cms_query discipline, including its
-    eager=False opt-out)."""
+    collected (the bloom_probe/cms_query discipline); ``eager=False``
+    skips the checkpoint."""
     if eager:
         hist = hist.localCheckpoint(eager=True)
     meta = {r["b"]: r["cnt"] for r in hist.where(F.col("b") < 0).collect()}
@@ -632,15 +616,13 @@ def hist_merge(
     lo: int = 0,
     hi: int = 1 << 20,
     n_bins: int = 256,
-    eager: bool = True,
 ) -> DataFrame:
     """Merge two :func:`hist_build` sketches: per-bin sum of the count
     rows (exactly the histogram of the concatenated inputs), after the
     meta handshake on BOTH inputs. Meta rows are carried once, not
-    summed. ``eager=False`` skips the handshake checkpoints (the
-    bloom_probe convention)."""
-    a = _hist_handshake(a, lo, hi, n_bins, "left merge input", eager)
-    b = _hist_handshake(b, lo, hi, n_bins, "right merge input", eager)
+    summed."""
+    a = _hist_handshake(a, lo, hi, n_bins, "left merge input")
+    b = _hist_handshake(b, lo, hi, n_bins, "right merge input")
     cells = (
         a.where(F.col("b") >= 0)
         .unionByName(b.where(F.col("b") >= 0))
@@ -677,7 +659,7 @@ def hist_quantiles(
     cumulative sum is a self-join over <= n_bins^2 pairs and the rest are
     broadcast-size cross joins, so nothing in the plan scales with corpus
     size and no SinglePartition window appears. ``eager=False`` skips
-    the handshake checkpoint (the bloom_probe convention)."""
+    the handshake checkpoint (plan inspection)."""
     hist = _hist_handshake(hist, lo, hi, n_bins, "quantile read", eager)
     spark = hist.sparkSession
     cells = hist.where(F.col("b") >= 0)
@@ -1023,7 +1005,7 @@ def _hll_handshake(
     grouped: bool = False,
 ) -> DataFrame:
     """localCheckpoint + STRICT meta validation (the bloom_probe
-    discipline, including its eager=False opt-out): the sentinel set
+    discipline; ``eager=False`` skips the checkpoint): the sentinel set
     must match exactly — (p, w_bits) for a global build, plus the
     grouped marker for a grouped one — so a grouped register table can
     never slip into the global read-off/merge (where cross-group
@@ -1050,18 +1032,15 @@ def hll_merge(
     b: DataFrame,
     p: int = 8,
     w_bits: int = 32,
-    eager: bool = True,
 ) -> DataFrame:
     """Merge two :func:`hll_build` sketches: per-bucket MAX of the
     register rows — exactly the sketch of the concatenated input
     streams (max is associative/commutative/idempotent, so any merge
     tree, any partitioning, any duplication gives the identical table;
     the property the hll_merge contract entry proves cross-engine).
-    Meta handshake on BOTH inputs first; meta rows carried once.
-    ``eager=False`` skips the handshake checkpoints (the bloom_probe
-    convention)."""
-    a = _hll_handshake(a, p, w_bits, "left merge input", eager)
-    b = _hll_handshake(b, p, w_bits, "right merge input", eager)
+    Meta handshake on BOTH inputs first; meta rows carried once."""
+    a = _hll_handshake(a, p, w_bits, "left merge input")
+    b = _hll_handshake(b, p, w_bits, "right merge input")
     cells = (
         a.where(F.col("bucket") >= 0)
         .unionByName(b.where(F.col("bucket") >= 0))
@@ -1183,7 +1162,6 @@ def hll_estimate_grouped(
     group_col: str,
     p: int = 8,
     w_bits: int = 32,
-    eager: bool = True,
 ) -> DataFrame:
     """Per-group raw HLL estimate read-off — :func:`_hll_readoff`'s
     staged integer arithmetic (the SAME code object the global
@@ -1199,9 +1177,7 @@ def hll_estimate_grouped(
     reg = reg.withColumnRenamed(group_col, "g__")
     # handshake on the meta rows (NULL group); _hll_handshake filters
     # bucket < 0, which selects exactly the sentinels incl. the marker
-    reg = _hll_handshake(
-        reg, p, w_bits, "grouped estimate read", eager, grouped=True
-    )
+    reg = _hll_handshake(reg, p, w_bits, "grouped estimate read", grouped=True)
     agg = (
         reg.where(F.col("bucket") >= 0)
         .groupBy("g__")

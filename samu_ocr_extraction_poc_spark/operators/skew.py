@@ -165,7 +165,6 @@ def skew_audit(
     key_col: str,
     top_k: int = 20,
     hot_share_e4: int = 100,
-    eager: bool = True,
 ) -> DataFrame:
     """Join-key skew REPORT — the measurement that decides whether a key
     needs :func:`salted_join` (or a broadcast, or AQE skew handling)
@@ -202,10 +201,9 @@ def skew_audit(
     keys count as a key of their own (NULL joins match nothing
     downstream, but their row mass still skews the build side of a
     shuffle, so the audit must see them). The counts frame feeds both
-    the totals aggregate and the top-k, so ``eager=True`` (default)
-    localCheckpoints it once instead of re-running the fact-side scan +
-    count shuffle per consumer; ``eager=False`` keeps the declarative
-    lineage (plan inspection)."""
+    the totals aggregate and the top-k, so it is localCheckpoint-ed once
+    instead of re-running the fact-side scan + count shuffle per
+    consumer."""
     if top_k < 1:
         raise ValueError(f"skew_audit: top_k must be >= 1, got {top_k}")
     counts = (
@@ -213,8 +211,7 @@ def skew_audit(
         .groupBy("key")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    if eager:
-        counts = counts.localCheckpoint(eager=True)
+    counts = counts.localCheckpoint(eager=True)
     totals = counts.agg(
         F.sum("cnt").cast("bigint").alias("total"),
         F.count("*").cast("bigint").alias("n_keys"),

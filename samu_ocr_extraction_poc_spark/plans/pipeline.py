@@ -22,6 +22,7 @@ import time
 from collections.abc import Iterator
 
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -475,9 +476,14 @@ def run_resumable(
             .select("part_id")
             .distinct()
         )
-        todo = with_part.join(F.broadcast(done), "part_id", "left_anti")
-    except Exception:  # no lineage yet -> fresh run
+    except AnalysisException as e:
+        # only a missing lineage directory means a fresh run; any other
+        # read failure must not silently reprocess the whole input
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         todo = with_part
+    else:
+        todo = with_part.join(F.broadcast(done), "part_id", "left_anti")
 
     results = run_extraction(
         todo.drop("part_id"), ocr_lookup=ocr_lookup, n_parts=n_parts, repartition=True

@@ -159,9 +159,9 @@ def stream_near_dedup(
         f"{ts_col} timestamp"
     )
     docs = spark.readStream.schema(schema).parquet(input_dir)
-    sig_cols = row_minhash(F.col("text"), num_hashes=num_hashes)
     return (
-        docs.select("*", *sig_cols)
+        docs.select("*", row_minhash(F.col("text"), num_hashes=num_hashes).alias("mh"))
+        .select(*docs.columns, "mh.*")
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark([f"h{i}" for i in range(num_hashes)])
         .drop(*[f"h{i}" for i in range(num_hashes)])
@@ -311,8 +311,9 @@ def stream_probe_dedup(
     idx = band_index
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     docs = spark.readStream.schema(schema).parquet(input_dir)
-    sig_cols = row_minhash(F.col("text"), num_hashes=num_hashes, k=k)
-    out = docs.select("*", *sig_cols)
+    out = docs.select(
+        "*", row_minhash(F.col("text"), num_hashes=num_hashes, k=k).alias("mh")
+    ).select(*docs.columns, "mh.*")
     for b in range(n_bands):
         key = F.concat_ws(
             "_", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]

@@ -44,7 +44,7 @@ DOC_QUERIES = [
     "bloom_probe",
     # round-5 additions (media_features synthesizes its own table; the
     # rest are documents-based and must hold on the pathological corpus)
-    "remove_shared_windows_screened", "bpe_train_long", "cms_word_counts",
+    "bpe_train_long", "cms_word_counts",
     "length_quantiles", "source_length_quantiles", "ccnet_buckets",
     "gopher_repetition", "shuffle_order", "heavy_hitters", "vocab_coverage",
     "hashed_classify", "alpha_mix", "hll_distinct", "hll_merge",

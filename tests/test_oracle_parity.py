@@ -148,7 +148,8 @@ def test_every_query_is_oracled_or_allowlisted():
 # (insertion order). This list IS the round-5 rotation decision — the
 # flagship extraction family, the r5-new entries (media_features,
 # bpe_train_long), the kept r4-new block, then the stalest evidence first:
-# the r02-only pair and the r03-only fill (the entries cut by the cap —
+# the r02-only pair, the r03-only fill, and simhash_near_pairs, the head
+# of the position-51+ block, in the slot a deleted entry freed (the entries cut by the cap —
 # dedup_components, simhash, bpe_token_counts, budget_sample, pii_redact,
 # stratified_sample, sample_documents, chunk_documents, rollup_revenue,
 # pivot_status_by_segment, doc_digests —
@@ -162,7 +163,7 @@ DRIVER_WINDOW_50 = [
     "extract_email_text_check", "extract_transcript_text_check",
     "extract_html_text_check", "extract_pleading_medical_text_check",
     "html_strip",
-    "media_features", "bpe_train_long", "remove_shared_windows_screened",
+    "media_features", "bpe_train_long",
     "cms_word_counts", "length_quantiles", "source_length_quantiles",
     "ccnet_buckets", "gopher_repetition", "heavy_hitters", "vocab_coverage",
     "hashed_classify", "alpha_mix", "hll_distinct", "hll_merge",
@@ -177,6 +178,7 @@ DRIVER_WINDOW_50 = [
     "user_sessions",
     "contamination_check",
     "shuffle_order",
+    "simhash_near_pairs",
 ]
 
 

@@ -146,6 +146,44 @@ def test_resume_equals_single_run(spark, tmp_path):
         assert single_rows[k] == v
 
 
+def test_resume_fresh_only_when_lineage_is_missing(spark, tmp_path):
+    """Only a missing lineage directory means a fresh run. Lineage that
+    exists but cannot be read is an error: the call raises and no results
+    are written. Two such cases: a file that is not parquet (it fails when
+    the lineage is scanned), and a directory layout that does not match
+    the lineage table (it fails while the read is planned, which a
+    catch-all fresh-run fallback used to swallow)."""
+    import os
+
+    docs = FX.canonical_corpus(spark)
+    fresh = str(tmp_path / "fresh")
+    assert run_resumable(spark, docs, fresh, n_parts=4, ocr_lookup=FX.OCR_LOOKUP).count() == docs.count()
+    lineage = spark.read.parquet(f"{fresh}/lineage").collect()
+    assert sum(r["n_docs"] for r in lineage) == docs.count()
+
+    def unreadable_file(lineage):
+        lineage.mkdir(parents=True)
+        (lineage / "part-00000.parquet").write_bytes(b"not a parquet file")
+
+    def mismatched_layout(lineage):
+        spark.range(2).write.parquet(str(lineage / "a=1"))
+        spark.range(2).write.parquet(str(lineage / "b=2"))
+
+    for corrupt in (unreadable_file, mismatched_layout):
+        out = tmp_path / corrupt.__name__
+        corrupt(out / "lineage")
+        with pytest.raises(Exception) as err:
+            run_resumable(spark, docs, str(out), n_parts=4, ocr_lookup=FX.OCR_LOOKUP)
+        assert "PATH_NOT_FOUND" not in str(err.value)
+        written = [
+            f
+            for _, _, files in os.walk(out / "results")
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        assert written == [], corrupt.__name__
+
+
 def test_skew_doc_processes(spark):
     docs = FX.canonical_corpus(spark, with_skew=True)
     res = run_extraction(docs, FX.OCR_LOOKUP)
