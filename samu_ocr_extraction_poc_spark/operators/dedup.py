@@ -200,8 +200,10 @@ def build_band_index(
         .partitionBy("band_id")
         .parquet(f"{location}/bands")
     )
-    corpus.sparkSession.createDataFrame(
-        [(num_hashes, rows_per_band, k)], "num_hashes int, rows_per_band int, k int"
+    values_frame(
+        corpus.sparkSession,
+        [(num_hashes, rows_per_band, k)],
+        "num_hashes int, rows_per_band int, k int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{location}/meta")
 
 

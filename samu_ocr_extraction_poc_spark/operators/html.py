@@ -105,13 +105,11 @@ class _ContentParser(HTMLParser):
 
 
 def strip_boilerplate(html: str) -> list[str]:
-    """Return the main-content text blocks in document order."""
+    """Return the main-content text blocks in document order. A parser
+    failure raises; ``extract_document`` turns it into an error row."""
     parser = _ContentParser()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        return []
+    parser.feed(html)
+    parser.close()
     kept: list[tuple[int, frozenset[int], str]] = []
     for blk in parser.blocks:
         text = _WS_RE.sub(" ", " ".join(blk.texts)).strip()

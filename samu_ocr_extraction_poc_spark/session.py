@@ -4,6 +4,15 @@ Local mode here; the same knobs are what we'd ship to a 1000-executor
 cluster: AQE on (runtime re-plan + skew-join splitting), Arrow batching
 capped so a 400-page filing's span array doesn't blow an Arrow batch,
 shuffle partitions sized to parallelism instead of the 200 default.
+
+Python workers start from :mod:`.pydaemon` (``spark.python.daemon.module``),
+which takes Spark's zip and jar archives off the worker's import path so a
+task's ``importlib.invalidate_caches()`` has no archive to re-read. The
+package's parent directory is appended to ``spark.executorEnv.PYTHONPATH``
+(after any value in ``extra_conf``) so workers find that module wherever
+the driver found the package. A session built without :func:`get_spark`
+(e.g. ``scripts/run_pipeline.py`` under ``spark-submit``) keeps pyspark's
+default daemon.
 """
 
 from __future__ import annotations
@@ -11,6 +20,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import pydaemon
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -58,8 +71,14 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", pydaemon.__name__)
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    pythonpath = (extra_conf.pop("spark.executorEnv.PYTHONPATH", ""), _PACKAGE_PARENT)
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in pythonpath if p)
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -8,17 +8,16 @@ identical schemas. Writers expose the bucketing/partitioning discipline the
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import DOCUMENTS_SCHEMA
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[attr-defined]
-        return True
-    except Exception:
-        return False
+    """Whether the session's JVM can load Iceberg's ``Table`` class. py4j
+    answers a missing class with a ``JavaPackage``, not an error."""
+    return isinstance(spark._jvm.org.apache.iceberg.Table, JavaClass)  # type: ignore[attr-defined]
 
 
 def load_documents(spark: SparkSession, location: str) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from samu_ocr_extraction_poc_spark import fixtures as FX
+from samu_ocr_extraction_poc_spark.schema import DOCUMENTS_SCHEMA
 from samu_ocr_extraction_poc_spark.plans.pipeline import (
     decode_spans,
     lineage_from_results,
@@ -227,6 +228,41 @@ def test_poison_document_degrades_to_error_row(spark, monkeypatch):
     assert row["status"] == "error"
     assert "RuntimeError: synthetic poison" in row["error"]
     assert row["out_spans"]  # still re-interleaved
+
+
+def test_html_parser_failure_is_counted_error_row(spark, monkeypatch):
+    """A boilerplate-strip parser failure makes the HTML document an error
+    row that lineage counts, not a 'done' row with no text."""
+    from samu_ocr_extraction_poc_spark.operators import html
+    from samu_ocr_extraction_poc_spark.plans import pipeline as P
+
+    class ParserBroke(Exception):
+        pass
+
+    def boom(self, data):
+        raise ParserBroke("synthetic parser failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(html._ContentParser, "feed", boom)
+        row = P.extract_document("html-poison", FX.html_doc(), FX.OCR_LOOKUP)
+    assert row["status"] == "error"
+    assert row["error"].startswith("ParserBroke:")
+    # the same failure from real input, through the Arrow stage and lineage:
+    # html.parser raises AssertionError on an unknown marked-section keyword
+    broken = FX.html_doc()
+    broken[0] = {**broken[0], "text": FX.HTML_RAW.replace("<article>", "<![bogus[x]]><article>")}
+    docs = spark.createDataFrame(
+        [(d, [tuple(s[f] for f in ("kind", "text", "media_ref", "offset")) for s in spans])
+         for d, spans in [("html-ok", FX.html_doc()), ("html-broken", broken)]],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    res = run_extraction(docs, FX.OCR_LOOKUP, n_parts=2)
+    status = {r["doc_id"]: (r["status"], r["error"]) for r in res.collect()}
+    assert status["html-ok"] == ("done", None)
+    assert status["html-broken"][0] == "error"
+    assert status["html-broken"][1].startswith("AssertionError:")
+    lin = lineage_from_results(res, "html").collect()
+    assert sum(r["n_errors"] for r in lin) == 1
 
 
 def test_resume_lineage_appends_incrementally(spark, tmp_path):

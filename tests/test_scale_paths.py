@@ -237,6 +237,15 @@ def test_write_and_load_documents_bucketed(spark, tmp_path):
     assert back.select("doc_id").distinct().count() == docs.count()
 
 
+def test_iceberg_unavailable_without_its_jars(spark):
+    """The test session has no Iceberg jars, so bare table names must take
+    the parquet fallback. py4j answers a missing class with a JavaPackage,
+    not an error."""
+    from samu_ocr_extraction_poc_spark.sources.readers import iceberg_available
+
+    assert iceberg_available(spark) is False
+
+
 # --- streaming -----------------------------------------------------------------
 
 
