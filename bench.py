@@ -317,12 +317,12 @@ def run_amortization(spark) -> dict:
         corpus = docs.where(F.col("doc_id") % 5 != 0)
         batch = docs.where(F.col("doc_id") % 5 == 0)
         lsh_loc = os.path.join(d, "lsh")
-        build_sec = _timed(lambda: DD.build_band_index(corpus, lsh_loc), n=1)
+        build_sec = _timed(lambda: DD.build_band_index(DD.band_index(corpus), lsh_loc), n=1)
         inline_sec = _timed(
-            lambda: DD.lsh_probe_dedup(corpus, batch).count()
+            lambda: DD.lsh_probe_dedup(batch, DD.band_index(corpus)).count()
         )
         indexed_sec = _timed(
-            lambda: DD.lsh_probe_dedup_indexed(spark, lsh_loc, batch).count()
+            lambda: DD.lsh_probe_dedup(batch, DD.load_band_index(spark, lsh_loc)).count()
         )
         out["lsh_probe"] = {
             "build_sec": build_sec,

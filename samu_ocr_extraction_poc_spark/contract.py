@@ -509,7 +509,7 @@ def incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
-    return DD.lsh_probe_dedup(corpus, batch, num_hashes=8, rows_per_band=2, k=3)
+    return DD.lsh_probe_dedup(batch, DD.band_index(corpus, num_hashes=8, rows_per_band=2, k=3))
 
 
 INCREMENTAL_DEDUP_SQL = _SHINGLE_SQL_BASE + """

@@ -22,6 +22,7 @@ budget Spark itself uses to ship a table to every executor.
 from __future__ import annotations
 
 import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
@@ -59,3 +60,21 @@ def collect_within_budget(df: DataFrame, row_bytes: int) -> list[Row] | None:
         return None
     rows = df.limit(bound + 1).collect()
     return rows if len(rows) <= bound else None
+
+
+def release_frame(df: DataFrame) -> None:
+    """Release whatever backs an intermediate frame: the CacheManager entry
+    for persist()-ed frames (plain unpersist), AND the cached internal RDD
+    behind a localCheckpoint-ed frame — Dataset.unpersist() does NOT cover
+    the latter (checkpoint RDDs bypass the CacheManager), so without this
+    an iterative loop leaks one cached RDD per checkpoint until the
+    ContextCleaner happens to reclaim it (observed: never, while the py4j
+    bridge pins the plan objects). The frame must not be used afterwards.
+    """
+    df.unpersist()
+    try:
+        lp = df._jdf.queryExecution().logical()
+        if lp.getClass().getName().endswith("LogicalRDD"):
+            lp.rdd().unpersist(False)
+    except Py4JError:
+        pass  # the JVM side is already gone; the cleaner reclaims the RDD

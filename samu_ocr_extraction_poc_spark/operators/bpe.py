@@ -39,9 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.frames import collect_within_budget, values_frame
+from ..functions.frames import collect_within_budget, release_frame, values_frame
 from ..functions.textfns import let_bound, normalized, tokens
-from .dedup import _release_frame
 
 
 def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
@@ -151,15 +150,15 @@ def bpe_train(
             if checkpoint_every and idx % checkpoint_every == 0:
                 cur = cur.localCheckpoint(eager=True)
                 if ckpt is not None:
-                    _release_frame(ckpt)
+                    release_frame(ckpt)
                 ckpt, n_ckpt = cur, n_ckpt + 1
         if stats is not None:
             stats.update(finish="spark", checkpoints=n_ckpt)
         return merges
     finally:
-        _release_frame(words)
+        release_frame(words)
         if ckpt is not None:
-            _release_frame(ckpt)
+            release_frame(ckpt)
 
 
 def _train_on_driver(rows: list[Row], n_merges: int) -> list[tuple[int, str, str, str, int]]:

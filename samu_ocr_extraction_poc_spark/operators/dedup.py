@@ -18,13 +18,12 @@ bit-for-bit (engine-native xxhash/murmur differ across engines).
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
-from ..functions.frames import collect_within_budget, values_frame
+from ..functions.frames import collect_within_budget, release_frame, values_frame
 from ..functions.textfns import let_bound, normalized, token_count, token_md5_long, tokens
 
 SIMHASH_BITS = 32
@@ -145,22 +144,24 @@ def row_minhash(text_col: Column, num_hashes: int = 8, k: int = 3) -> Column:
     )
 
 
+def band_key(band: int, rows_per_band: int) -> Column:
+    """Band ``band``'s bucket key over an h0..h{n-1} signature row: its
+    ``rows_per_band`` hash values joined with "_"."""
+    return F.concat_ws(
+        "_", *[F.col(f"h{band * rows_per_band + r}") for r in range(rows_per_band)]
+    )
+
+
 def _banded(
     signatures: DataFrame, num_hashes: int, rows_per_band: int
 ) -> DataFrame:
     """(doc_id, band_id, band_key) rows from an h0..h{n-1} signature frame
     — the banding shared by the self-join (lsh_candidate_pairs) and the
     index-probe (lsh_probe_dedup) constructions."""
-    n_bands = num_hashes // rows_per_band
     bands = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    "_", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
+            F.struct(F.lit(b).alias("band_id"), band_key(b, rows_per_band).alias("band_key"))
+            for b in range(num_hashes // rows_per_band)
         ]
     )
     return signatures.select("doc_id", F.explode(bands).alias("band")).select(
@@ -168,124 +169,113 @@ def _banded(
     )
 
 
-def build_band_index(
+def band_index(
     corpus: DataFrame,
-    location: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 8,
     rows_per_band: int = 2,
     k: int = 3,
-) -> None:
-    """Build and PERSIST the minhash-LSH band index (VERDICT r3 item 7 —
-    the amortization :func:`build_ivf_index` already gives the ANN path):
-    (index_id, band_id, band_key) written as one directory partition per
-    band, band_key-sorted within each, plus a 1-row meta table pinning the
-    signature-family parameters so probes can refuse a mismatched index.
-    Built ONCE per corpus; every subsequent batch ingest
-    (:func:`lsh_probe_dedup_indexed`) and streaming query
-    (streaming/ingest.stream_probe_dedup) probes the table instead of
-    re-running the corpus shingle+minhash pipeline, and the per-band
-    ``band_id = b`` filters prune the scan to single directories."""
-    idx = _banded(
-        minhash_signatures(corpus, text_col, id_col, num_hashes, k),
-        num_hashes,
-        rows_per_band,
-    ).select(F.col("doc_id").alias("index_id"), "band_id", "band_key")
-    n_bands = num_hashes // rows_per_band
+) -> DataFrame:
+    """The corpus's minhash-LSH band index: lazy (index_id, band_id,
+    band_key) rows, one per document and band. ``band_key`` carries the
+    signature parameters ``{num_hashes, rows_per_band, k}`` as column
+    metadata, so every probe (:func:`lsh_probe_dedup`,
+    streaming/ingest.stream_probe_dedup) computes the batch's band keys
+    with the parameters the index was built with: a probe with other
+    parameters would never collide and would pass every duplicate as new.
+    The metadata survives persist and the parquet round trip of
+    :func:`build_band_index` / :func:`load_band_index`."""
+    params = {"num_hashes": num_hashes, "rows_per_band": rows_per_band, "k": k}
+    return _banded(
+        minhash_signatures(corpus, text_col, id_col, num_hashes, k), num_hashes, rows_per_band
+    ).select(
+        F.col("doc_id").alias("index_id"),
+        "band_id",
+        F.col("band_key").alias("band_key", metadata=params),
+    )
+
+
+def band_index_params(index: DataFrame) -> tuple[int, int, int]:
+    """(num_hashes, rows_per_band, k) of a :func:`band_index` frame, read
+    from its ``band_key`` metadata. Raises ValueError when the metadata is
+    missing (a frame not built by :func:`band_index`, or a table written
+    before the index carried its parameters)."""
+    meta = index.schema["band_key"].metadata
+    try:
+        return meta["num_hashes"], meta["rows_per_band"], meta["k"]
+    except KeyError:
+        raise ValueError(
+            "band_key carries no signature parameters; rebuild the index with "
+            "build_band_index(band_index(corpus, ...), location)"
+        ) from None
+
+
+def build_band_index(index: DataFrame, location: str) -> None:
+    """Write a :func:`band_index` frame to ``{location}/bands``: one
+    directory partition per band, band_key-sorted within each, the
+    signature parameters kept in band_key's metadata. Built ONCE per
+    corpus; every later batch ingest and streaming query probes the
+    :func:`load_band_index` table instead of re-running the corpus
+    shingle+minhash pipeline, and the per-band ``band_id = b`` filters
+    prune the scan to single directories."""
+    num_hashes, rows_per_band, _ = band_index_params(index)
     (
-        idx.repartition(n_bands, "band_id")
+        index.select("index_id", "band_id", "band_key")
+        .repartition(num_hashes // rows_per_band, "band_id")
         .sortWithinPartitions("band_id", "band_key")
         .write.mode("overwrite")
         .partitionBy("band_id")
         .parquet(f"{location}/bands")
     )
-    values_frame(
-        corpus.sparkSession,
-        [(num_hashes, rows_per_band, k)],
-        "num_hashes int, rows_per_band int, k int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{location}/meta")
 
 
-def load_band_index(
-    spark,
-    location: str,
-    num_hashes: int | None = None,
-    rows_per_band: int | None = None,
-    k: int | None = None,
-) -> DataFrame:
-    """Read a persisted band index back as the (index_id, band_id,
-    band_key) frame the probe paths accept. When the caller states the
-    signature parameters it expects — including the shingle size ``k``,
-    which changes the key space just as much as the hash family — a
-    mismatch with the index's recorded meta raises instead of silently
-    probing incompatible band keys (which would never collide and wave
-    every duplicate through as new)."""
-    meta = spark.read.parquet(f"{location}/meta").collect()[0]
-    for name, want in (("num_hashes", num_hashes), ("rows_per_band", rows_per_band), ("k", k)):
-        if want is not None and meta[name] != want:
-            raise ValueError(
-                f"band index at {location} was built with {name}="
-                f"{meta[name]}, probe expects {want}"
-            )
-    return spark.read.parquet(f"{location}/bands").select(
-        "index_id", "band_id", "band_key"
-    )
+def load_band_index(spark: SparkSession, location: str) -> DataFrame:
+    """Read a :func:`build_band_index` table back as the (index_id,
+    band_id, band_key) frame the probes accept. Raises ValueError when
+    the table's band_key has no signature parameters: such an index must
+    be rebuilt, not probed with guessed parameters."""
+    index = spark.read.parquet(f"{location}/bands").select("index_id", "band_id", "band_key")
+    try:
+        band_index_params(index)
+    except ValueError as e:
+        raise ValueError(f"band index at {location}: {e}") from None
+    return index
 
 
 def lsh_probe_dedup(
-    corpus: DataFrame | None,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    k: int = 3,
-    eager: bool = True,
-    band_index: DataFrame | None = None,
+    batch: DataFrame, index: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """INCREMENTAL near-dup dedup: probe a NEW batch against the EXISTING
+    """INCREMENTAL near-dup dedup: probe a NEW batch against an EXISTING
     corpus's minhash-LSH band index — the batch-ingest production shape
     (a self-join over corpus+batch would re-pair the whole history on
     every ingest; the probe join touches only batch x matching-bucket
-    rows). Same signature family and banding as lsh_candidate_pairs.
+    rows). Same signature family and banding as lsh_candidate_pairs, with
+    the parameters read from ``index`` (:func:`band_index_params`).
 
-    Pass ``band_index`` (an (index_id, band_id, band_key) frame, normally
-    :func:`load_band_index` over a :func:`build_band_index` table) to skip
-    rebuilding the corpus index — the amortized production path; giving
-    only ``corpus`` derives the index inline (one-shot exploratory use).
+    ``index`` is ``band_index(corpus)`` for one-shot use, or
+    ``load_band_index(spark, location)`` over a :func:`build_band_index`
+    table — the amortized production path.
 
-    Returns one row per batch document: every document — even empty text —
-    has a signature (shingles() yields the "" shingle for empty docs, so
-    an empty incoming doc collides with any empty indexed doc: exact-dup
-    semantics, the right verdict for a dedup gate).
+    Returns one lazy row per batch document: every document — even empty
+    text — has a signature (shingles() yields the "" shingle for empty
+    docs, so an empty incoming doc collides with any empty indexed doc:
+    exact-dup semantics, the right verdict for a dedup gate).
     (doc_id, n_index_hits, is_new 0/1) — is_new=0 means some corpus
-    document shares a band bucket (near-dup: drop or re-route).
+    document shares a band bucket (near-dup: drop or re-route). The
+    signature is row-local, so the spine's ``doc_id`` projection reads
+    the batch scan alone and the signature is computed once, on the
+    probe side.
     """
-    if band_index is not None:
-        idx = band_index.select("index_id", "band_id", "band_key")
-    else:
-        if corpus is None:
-            raise ValueError("pass either corpus or band_index")
-        idx = _banded(
-            minhash_signatures(corpus, text_col, id_col, num_hashes, k),
-            num_hashes,
-            rows_per_band,
-        ).select(F.col("doc_id").alias("index_id"), "band_id", "band_key")
+    num_hashes, rows_per_band, k = band_index_params(index)
     new_sig = minhash_signatures(batch, text_col, id_col, num_hashes, k)
-    if eager:
-        # new_sig feeds the banded probe AND the left-join spine; the idx
-        # is read once by the probe join, so it needs no cache at all.
-        # No pre-count (r6): the single eager action below fills the
-        # cache in one job.
-        new_sig.persist()
     hits = (
         _banded(new_sig, num_hashes, rows_per_band)
-        .join(idx, ["band_id", "band_key"])
+        .join(index.select("index_id", "band_id", "band_key"), ["band_id", "band_key"])
         .groupBy("doc_id")
         .agg(F.countDistinct("index_id").alias("nh"))
     )
-    out = (
+    return (
         new_sig.select("doc_id")
         .join(hits, "doc_id", "left")
         .select(
@@ -293,40 +283,6 @@ def lsh_probe_dedup(
             F.coalesce(F.col("nh"), F.lit(0)).cast("bigint").alias("n_index_hits"),
             F.when(F.col("nh").isNull(), 1).otherwise(0).cast("int").alias("is_new"),
         )
-    )
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return out
-    out = out.localCheckpoint(eager=True)
-    new_sig.unpersist()
-    return out
-
-
-def lsh_probe_dedup_indexed(
-    spark,
-    location: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    k: int = 3,
-) -> DataFrame:
-    """:func:`lsh_probe_dedup` against a PERSISTED index
-    (:func:`build_band_index`): reads the band table (meta-validated,
-    including the shingle size) instead of recomputing the corpus
-    signatures — each ingest pays only for the batch side plus a
-    bucket-join against the table scan."""
-    idx = load_band_index(spark, location, num_hashes, rows_per_band, k)
-    return lsh_probe_dedup(
-        None,
-        batch,
-        text_col,
-        id_col,
-        num_hashes,
-        rows_per_band,
-        k,
-        band_index=idx,
     )
 
 
@@ -364,7 +320,7 @@ def lsh_candidate_pairs(
         # (persist accretion across bench passes — ADVICE r2)
         .localCheckpoint(eager=True)
     )
-    _release_frame(signatures)
+    release_frame(signatures)
     return out
 
 
@@ -463,8 +419,8 @@ def minhash_jaccard_estimates(
         # after the unpersist (the lsh_candidate_pairs discipline)
         .localCheckpoint(eager=True)
     )
-    _release_frame(shing)
-    _release_frame(sig)
+    release_frame(shing)
+    release_frame(sig)
     return out
 
 
@@ -748,7 +704,7 @@ def remove_shared_windows(
         .select("doc_id", "s")
     )
     out = _strip_dup_windows(df, dup, text_col, id_col, k).localCheckpoint(eager=True)
-    _release_frame(wins)
+    release_frame(wins)
     return out
 
 
@@ -925,24 +881,6 @@ def keep_canonical(
     return df.join(drop, id_col, "left_anti")
 
 
-def _release_frame(df: DataFrame) -> None:
-    """Release whatever backs an intermediate frame: the CacheManager entry
-    for persist()-ed frames (plain unpersist), AND the cached internal RDD
-    behind a localCheckpoint-ed frame — Dataset.unpersist() does NOT cover
-    the latter (checkpoint RDDs bypass the CacheManager), so without this
-    an iterative loop leaks one cached RDD per checkpoint until the
-    ContextCleaner happens to reclaim it (observed: never, while the py4j
-    bridge pins the plan objects). The frame must not be used afterwards.
-    """
-    df.unpersist()
-    try:
-        lp = df._jdf.queryExecution().logical()
-        if lp.getClass().getName().endswith("LogicalRDD"):
-            lp.rdd().unpersist(False)
-    except Py4JError:
-        pass  # the JVM side is already gone; the cleaner reclaims the RDD
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -983,10 +921,10 @@ def connected_components(
     the old edge-set-fingerprint equality needed one extra confirming
     round to observe "nothing changed" (rounds = k+1 instead of k; one
     full large+small star pass saved per call, and an input that is
-    already a star forest runs zero rounds). The multiset fingerprint
-    (count + decimal(38,0) sum of a 48-bit md5 prefix per edge) is kept as
-    a secondary stop so a hypothetical forest-test gap degrades to the old
-    behavior instead of looping. Cache discipline: O(1) live frames, and
+    already a star forest runs zero rounds). The forest test is the only
+    stop: an unchanged edge set is a fixpoint, hence a star forest, so no
+    other "nothing changed" test could fire first, and ``max_iter`` raises
+    on non-convergence. Cache discipline: O(1) live frames, and
     the lineage is localCheckpoint-truncated EVERY round — a star round
     references the previous frame ~4 times (the adjacency union reads it
     twice, small-star joins the large-star output against its own
@@ -1003,42 +941,22 @@ def connected_components(
     Returns (doc_id, component).
     """
 
-    def _round_stats(e: DataFrame):
+    def _is_star_forest(e: DataFrame) -> bool:
         """ONE aggregate job: materializes ``e`` (eager=False checkpoint
-        upstream) and returns (n, h, is_forest). Stacks each edge into
-        (side, node, other) rows and aggregates per node first (partial-
+        upstream) and returns whether it is a star forest. Stacks each
+        edge into (side, node) rows and aggregates per node first (partial-
         aggregable, no Expand — a count-distinct formulation planned an
         Expand plus an extra exchange and cost more than the round it
         saved), then reduces to one row: a node violates forestness when
         it is the src of more than one edge or is both a src and a dst."""
         stacked = e.select(
-            F.expr(
-                "inline(array("
-                "struct(0 as side, src as node, dst as other), "
-                "struct(1 as side, dst as node, src as other)))"
-            )
+            F.expr("inline(array(struct(0 as side, src as node), struct(1 as side, dst as node)))")
         )
         per_node = stacked.groupBy("node").agg(
             F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("ns"),
             F.max("side").alias("mx"),
-            F.sum(
-                F.when(
-                    F.col("side") == 0,
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws("_", F.col("node"), F.col("other"))),
-                            1,
-                            12,
-                        ),
-                        16,
-                        10,
-                    ).cast("decimal(38,0)"),
-                )
-            ).alias("hs"),
         )
         row = per_node.agg(
-            F.sum("ns").alias("n"),
-            F.sum("hs").alias("h"),
             F.max(
                 F.when(
                     (F.col("ns") > 1) | ((F.col("ns") > 0) & (F.col("mx") == 1)),
@@ -1046,8 +964,7 @@ def connected_components(
                 ).otherwise(0)
             ).alias("bad"),
         ).collect()[0]
-        is_forest = (row["bad"] or 0) == 0
-        return row["n"] or 0, row["h"], is_forest
+        return (row["bad"] or 0) == 0
 
     def _large_star(e: DataFrame) -> DataFrame:
         adj = e.unionByName(
@@ -1124,7 +1041,7 @@ def connected_components(
             if stats is not None:
                 stats.update(rounds=0, finish="driver")
             return _components_on_driver(pairs.sparkSession, rows, edges0.schema.fields)
-        prev_n, prev_h, converged = _round_stats(edges)
+        converged = _is_star_forest(edges)
         rounds = 0
         while not converged:
             if rounds == max_iter:
@@ -1132,19 +1049,17 @@ def connected_components(
                     f"connected_components did not converge in {max_iter} rounds; "
                     "raise max_iter (expected O(log n) rounds)"
                 )
-            # eager=False: the round-stats aggregate is the round's
+            # eager=False: the forest-test aggregate is the round's
             # materializing action — one scheduled job per round instead
             # of a checkpoint-count job plus the aggregate job (the
             # previous frame is only released after this aggregate has
             # run, so the new frame's checkpoint data is in place first)
             prev, edges = edges, _small_star(_large_star(edges)).localCheckpoint(eager=False)
             try:
-                cur_n, cur_h, is_forest = _round_stats(edges)
+                converged = _is_star_forest(edges)
             finally:
-                _release_frame(prev)
+                release_frame(prev)
             rounds += 1
-            converged = is_forest or (cur_n, cur_h) == (prev_n, prev_h)
-            prev_n, prev_h = cur_n, cur_h
         if stats is not None:
             stats.update(rounds=rounds, finish="spark")
         # star forest read-off: non-minimum vertices appear as src exactly
@@ -1163,7 +1078,7 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
     finally:
-        _release_frame(edges)
+        release_frame(edges)
 
 
 def _components_on_driver(

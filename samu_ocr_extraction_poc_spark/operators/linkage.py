@@ -139,7 +139,7 @@ def blocked_link_pairs(records: DataFrame, threshold: int = DEFAULT_THRESHOLD) -
     # RESULT is eager-checkpointed below so this base can be released
     # before returning (the pair-operator convention) — a lazy return
     # would pin the full record copy for the caller's lifetime.
-    from .dedup import _release_frame
+    from ..functions.frames import release_frame
 
     r = records.select("rec_id", "entity_id", "name_digits", "nationkey",
                        "cents", "segment").localCheckpoint(eager=True)
@@ -206,4 +206,4 @@ def blocked_link_pairs(records: DataFrame, threshold: int = DEFAULT_THRESHOLD) -
         )
         return scored.where(F.col("score") >= threshold).localCheckpoint(eager=True)
     finally:
-        _release_frame(r)
+        release_frame(r)

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _release_frame
+from ..functions.frames import release_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -305,7 +305,7 @@ def kmeans_assign(
     out = assign.select(F.col("vid").alias(id_col), "cluster").localCheckpoint(
         eager=True
     )
-    _release_frame(base)
+    release_frame(base)
     return out
 
 

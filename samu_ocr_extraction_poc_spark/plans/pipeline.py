@@ -39,7 +39,7 @@ from ..operators.expense import expenses_by_page
 from ..operators.html import strip_boilerplate
 from ..operators.layout import reading_order_lines
 from ..operators.pages import get_page_text, line_texts, real_pages
-from ..operators.pleading import BadFormatError, get_header, get_numbered_paragraphs, get_queries
+from ..operators.pleading import get_header, get_numbered_paragraphs, get_queries
 from ..schema import LINEAGE_SCHEMA, RESULT_SCHEMA
 
 _QUERY_ALIASES = ("state", "county", "court", "district")  # stack.PleadingExtractor.ts:41-50
@@ -158,6 +158,27 @@ def _reinterleave(
     for i, s in enumerate(out):
         s["offset"] = i
     return out
+
+
+def _salvaged_spans(
+    spans: list[dict],
+    ocr_lookup: dict[str, str],
+    html_blocks: dict[int, list[str]],
+    layout_lines: list[str] | None,
+) -> list[dict]:
+    """An error row's out_spans: :func:`_reinterleave`'s output, with each
+    html span the family branch did not parse parsed here on its own, so
+    only a span whose parse raises contributes nothing; line, media and
+    the other html spans stay."""
+    html_blocks = dict(html_blocks)
+    for s in spans:
+        off = s.get("offset") or 0
+        if s.get("kind") == "html" and s.get("text") and off not in html_blocks:
+            try:
+                html_blocks[off] = strip_boilerplate(s["text"])
+            except Exception:  # noqa: BLE001
+                html_blocks[off] = []
+    return _reinterleave(spans, ocr_lookup, html_blocks, layout_lines)
 
 
 def extract_document(
@@ -297,21 +318,16 @@ def extract_document(
             res.update(status="done", error=None, raw_text=None)
             res["doc_type"] = "unknown"
         res["out_spans"] = _reinterleave(spans, ocr_lookup, html_blocks, layout_lines)
-    except BadFormatError as e:
-        # BadFormatError docs emit an error-status row instead of failing the
-        # job (lineage requirement, SURVEY §7 'what's hard').
-        res["status"] = "error"
-        res["error"] = f"BadFormatError: {e}"
-        res["out_spans"] = _reinterleave(spans, ocr_lookup, html_blocks, layout_lines)
     except Exception as e:  # noqa: BLE001 — poison-document guard
-        # At 10^12 docs a single malformed document must NOT fail the job:
-        # any unexpected per-document failure degrades to an error row (the
-        # lineage table surfaces it; the partition still completes).
+        # BadFormatError docs, and at 10^12 docs any single malformed
+        # document, emit an error-status row instead of failing the job
+        # (lineage requirement, SURVEY §7 'what's hard'; the lineage table
+        # surfaces it and the partition still completes).
         res["status"] = "error"
         res["error"] = f"{type(e).__name__}: {e}"
         try:
-            res["out_spans"] = _reinterleave(spans, ocr_lookup, html_blocks, layout_lines)
-        except Exception:
+            res["out_spans"] = _salvaged_spans(spans, ocr_lookup, html_blocks, layout_lines)
+        except Exception:  # noqa: BLE001
             res["out_spans"] = []
     return res
 

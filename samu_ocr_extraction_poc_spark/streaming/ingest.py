@@ -233,101 +233,49 @@ def stream_curate(
     )
 
 
-def stream_probe_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    corpus: DataFrame | None = None,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    band_index: DataFrame | None = None,
-    return_index: bool = False,
-    index_location: str | None = None,
-    k: int = 3,
-):
+def stream_probe_dedup(spark: SparkSession, input_dir: str, index: DataFrame):
     """Streaming INCREMENTAL dedup against an already-indexed corpus (the
     streaming form of operators/dedup.lsh_probe_dedup): each arriving
     document's minhash band keys are computed ROW-LOCALLY (row_minhash —
-    no aggregation state), then the stream is anti-joined against the
-    static corpus band index once per band. A document survives iff NO
-    band key collides with any indexed document — exists-any-collision
+    no aggregation state) with the signature parameters read from
+    ``index`` (dedup.band_index_params), then the stream is anti-joined
+    against the static band index once per band. A document survives iff
+    NO band key collides with any indexed document — exists-any-collision
     expressed as ``n_bands`` chained stream-static left_anti equality
     joins (supported by Structured Streaming; a per-doc hit-count
     aggregation would need a watermarked stateful agg for the same
     verdict).
 
-    Pass ``index_location`` (a ``build_band_index`` table) to probe a
-    persisted index — the PREFERRED production path: the read is
-    META-VALIDATED against this query's num_hashes/rows_per_band, so a
-    parameter-mismatched index raises instead of silently never
-    colliding (every duplicate waved through as "new"); the per-band
-    ``band_id = b`` filters prune the scan to one directory partition
-    each, and the table's lifecycle is owned by its storage, not this
-    query. ``band_index`` accepts an already-loaded frame instead — the
-    caller then owns BOTH its lifecycle AND the parameter handshake
-    (load it via ``load_band_index(spark, loc, num_hashes,
-    rows_per_band, k)`` with ALL the explicit params, never bare). When only the
-    raw ``corpus`` is given, its index is built ONCE here, persisted and
-    eagerly materialized — otherwise every micro-batch would re-run the
-    corpus shingle+minhash pipeline once per band anti-join. That
-    persisted frame lives until explicitly released (ADVICE r3): call
-    with ``return_index=True`` to receive it alongside the stream and
-    ``unpersist()`` it deterministically when the query stops; otherwise
-    it is freed only when the ContextCleaner collects it.
+    ``index`` is a ``load_band_index(spark, location)`` table — the
+    production path: the per-band ``band_id = b`` filters prune its scan
+    to one directory partition each — or a ``band_index(corpus)`` frame.
+    The caller owns the index's lifecycle: every micro-batch re-reads
+    ``index`` once per band, so an inline ``band_index(corpus)`` frame
+    should be persisted by the caller and unpersisted when the query
+    stops.
 
     Returns the streaming DataFrame of documents NOT already in the
-    corpus (the ones an ingest pipeline forwards) — or a
-    ``(stream, band_index)`` pair when ``return_index=True``.
+    corpus (the ones an ingest pipeline forwards).
     """
-    from ..operators.dedup import (
-        _banded,
-        load_band_index,
-        minhash_signatures,
-        row_minhash,
-    )
+    from ..operators.dedup import band_index_params, band_key, row_minhash
 
+    num_hashes, rows_per_band, k = band_index_params(index)
     n_bands = num_hashes // rows_per_band
-    if index_location is not None:
-        if band_index is not None:
-            raise ValueError("pass index_location or band_index, not both")
-        # validate ALL THREE signature-family params, including the
-        # shingle size k — it changes the key space just as much as the
-        # hash family (review r4 pass 3)
-        band_index = load_band_index(
-            spark,
-            index_location,
-            num_hashes=num_hashes,
-            rows_per_band=rows_per_band,
-            k=k,
-        )
-    if band_index is None:
-        if corpus is None:
-            raise ValueError("pass corpus, band_index, or index_location")
-        band_index = _banded(
-            minhash_signatures(corpus, num_hashes=num_hashes, k=k),
-            num_hashes,
-            rows_per_band,
-        ).persist()
-        band_index.count()
-    idx = band_index
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     docs = spark.readStream.schema(schema).parquet(input_dir)
     out = docs.select(
         "*", row_minhash(F.col("text"), num_hashes=num_hashes, k=k).alias("mh")
     ).select(*docs.columns, "mh.*")
     for b in range(n_bands):
-        key = F.concat_ws(
-            "_", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        )
-        band_idx = idx.where(F.col("band_id") == b).select(
+        band_idx = index.where(F.col("band_id") == b).select(
             F.col("band_key").alias(f"__bk{b}")
         )
-        out = out.withColumn(f"__k{b}", key).join(
+        out = out.withColumn(f"__k{b}", band_key(b, rows_per_band)).join(
             band_idx, F.col(f"__k{b}") == F.col(f"__bk{b}"), "left_anti"
         )
-    out = out.drop(
+    return out.drop(
         *[f"h{i}" for i in range(num_hashes)], *[f"__k{b}" for b in range(n_bands)]
     )
-    return (out, idx) if return_index else out
 
 
 def latest_hll_state(spark: SparkSession, state_dir: str):

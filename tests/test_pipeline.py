@@ -265,6 +265,19 @@ def test_html_parser_failure_is_counted_error_row(spark, monkeypatch):
     assert sum(r["n_errors"] for r in lin) == 1
 
 
+def test_html_parse_failure_row_keeps_its_other_spans():
+    """Only the HTML span whose parse raised drops out of an error row's
+    out_spans: the document's media span is still OCR'd in place."""
+    from samu_ocr_extraction_poc_spark.plans import pipeline as P
+
+    broken = FX.html_doc()
+    broken[0] = {**broken[0], "text": FX.HTML_RAW.replace("<article>", "<![bogus[x]]><article>")}
+    row = P.extract_document("html-broken", broken, FX.OCR_LOOKUP)
+    assert row["status"] == "error" and row["error"].startswith("AssertionError:")
+    assert [(s["kind"], s["media_ref"]) for s in row["out_spans"]] == [("ocr_text", "img-003")]
+    assert row["out_spans"][0]["text"] == FX.OCR_LOOKUP["img-003"]
+
+
 def test_resume_lineage_appends_incrementally(spark, tmp_path):
     """Lineage accumulates per run (no full-table re-read/rewrite): rows
     from the first run survive the resume, and the resume adds only the

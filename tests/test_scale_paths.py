@@ -971,11 +971,11 @@ def test_keep_canonical_keeps_component_minima(spark):
 
 
 def test_release_frame_swallows_only_py4j_errors():
-    """_release_frame's best-effort RDD release tolerates the JVM-side miss
+    """release_frame's best-effort RDD release tolerates the JVM-side miss
     (a py4j error) and lets any other error through."""
     from py4j.protocol import Py4JError
 
-    from samu_ocr_extraction_poc_spark.operators.dedup import _release_frame
+    from samu_ocr_extraction_poc_spark.functions.frames import release_frame
 
     class Frame:
         def __init__(self, exc):
@@ -989,10 +989,10 @@ def test_release_frame_swallows_only_py4j_errors():
             raise self.exc
 
     gone = Frame(Py4JError("gone"))
-    _release_frame(gone)
+    release_frame(gone)
     assert gone.unpersisted
     with pytest.raises(TypeError):
-        _release_frame(Frame(TypeError("bug")))
+        release_frame(Frame(TypeError("bug")))
 
 
 def test_connected_components_driver_finish_matches_loop(spark):
@@ -2462,6 +2462,7 @@ def test_new_corpus_ops_plan_shapes(spark):
 
     # the checkpointed pair ops' interiors (PLANS.md dumps them as scans)
     from samu_ocr_extraction_poc_spark.operators.dedup import (
+        band_index,
         contamination_report,
         lsh_probe_dedup,
     )
@@ -2472,11 +2473,10 @@ def test_new_corpus_ops_plan_shapes(spark):
     for plan in (
         _plan(winnow_candidate_pairs(docs, eager=False)),
         _plan(contamination_report(train, test_side, eager=False)),
-        _plan(lsh_probe_dedup(train, test_side, eager=False)),
+        _plan(lsh_probe_dedup(test_side, band_index(train))),
     ):
         assert "SinglePartition" not in plan
         assert "Window" not in plan
-    spark.catalog.clearCache()  # release the eager=False test caches
 
 
 def test_contamination_report_verdicts(spark):
@@ -2532,6 +2532,7 @@ def test_lsh_probe_dedup_flags_known_dup(spark):
     in none (is_new=1), and the probe agrees with the self-join
     construction on the same split."""
     from samu_ocr_extraction_poc_spark.operators.dedup import (
+        band_index,
         lsh_candidate_pairs,
         lsh_probe_dedup,
         minhash_signatures,
@@ -2546,7 +2547,7 @@ def test_lsh_probe_dedup_flags_known_dup(spark):
         [(10, corpus_text), (11, "fresh never seen words nowhere in any index at all")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in lsh_probe_dedup(corpus, batch).collect()}
+    out = {r["doc_id"]: r for r in lsh_probe_dedup(batch, band_index(corpus)).collect()}
     assert out[10]["is_new"] == 0 and out[10]["n_index_hits"] >= 1
     assert out[11]["is_new"] == 1 and out[11]["n_index_hits"] == 0
 
@@ -2565,8 +2566,9 @@ def test_lsh_probe_dedup_flags_known_dup(spark):
 def test_stream_probe_dedup_matches_batch(spark, tmp_path):
     """Streaming incremental dedup (stream-static anti joins against the
     corpus band index): the streamed survivors are exactly the batch
-    lsh_probe_dedup's is_new=1 set on the same corpus/batch split."""
-    from samu_ocr_extraction_poc_spark.operators.dedup import lsh_probe_dedup
+    lsh_probe_dedup's is_new=1 set on the same corpus/batch split, probing
+    a band_index(corpus) frame the caller persisted."""
+    from samu_ocr_extraction_poc_spark.operators.dedup import band_index, lsh_probe_dedup
     from samu_ocr_extraction_poc_spark.streaming.ingest import stream_probe_dedup
 
     base = (
@@ -2585,15 +2587,16 @@ def test_stream_probe_dedup_matches_batch(spark, tmp_path):
     batch = spark.createDataFrame(
         batch_rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
+    idx = band_index(corpus).persist()
     want_new = {
-        r["doc_id"] for r in lsh_probe_dedup(corpus, batch).collect() if r["is_new"] == 1
+        r["doc_id"] for r in lsh_probe_dedup(batch, idx).collect() if r["is_new"] == 1
     }
     assert want_new == {11, 12}  # premise: the near-dup is flagged
 
     d = str(tmp_path / "probe_stream")
     batch.coalesce(1).write.mode("overwrite").parquet(d)
     q = (
-        stream_probe_dedup(spark, d, corpus)
+        stream_probe_dedup(spark, d, idx)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("probe_out")
@@ -2602,26 +2605,8 @@ def test_stream_probe_dedup_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM probe_out").collect()}
-    assert got == want_new
-
-    # pre-built index path: same survivors from a band_index frame the
-    # caller owns (the persisted-index-table deployment shape)
-    from samu_ocr_extraction_poc_spark.operators.dedup import _banded, minhash_signatures
-
-    idx = _banded(minhash_signatures(corpus), 8, 2).persist()
-    idx.count()
-    q2 = (
-        stream_probe_dedup(spark, d, band_index=idx)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("probe_out2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM probe_out2").collect()}
     idx.unpersist()
-    assert got2 == want_new
+    assert got == want_new
 
 
 def test_band_index_roundtrip_and_pruning(spark, tmp_path):
@@ -2630,10 +2615,11 @@ def test_band_index_roundtrip_and_pruning(spark, tmp_path):
     verdicts; meta guards refuse a mismatched signature family; per-band
     filters prune the scan to single directory partitions."""
     from samu_ocr_extraction_poc_spark.operators.dedup import (
+        band_index,
+        band_index_params,
         build_band_index,
         load_band_index,
         lsh_probe_dedup,
-        lsh_probe_dedup_indexed,
     )
 
     corpus_text = "the quick brown fox jumps over the lazy dog again and again today"
@@ -2646,31 +2632,110 @@ def test_band_index_roundtrip_and_pruning(spark, tmp_path):
         "doc_id long, text string",
     )
     loc = str(tmp_path / "bandidx")
-    build_band_index(corpus, loc)
+    build_band_index(band_index(corpus), loc)
 
-    direct = {tuple(r) for r in lsh_probe_dedup(corpus, batch).collect()}
-    indexed = {tuple(r) for r in lsh_probe_dedup_indexed(spark, loc, batch).collect()}
+    direct = {tuple(r) for r in lsh_probe_dedup(batch, band_index(corpus)).collect()}
+    loaded = load_band_index(spark, loc)
+    indexed = {tuple(r) for r in lsh_probe_dedup(batch, loaded).collect()}
     assert indexed == direct and len(indexed) == 2
+    # the table carries the signature family it was built with (k
+    # included: it changes the key space as much as the hash family), so
+    # no probe can use other parameters than the index's own
+    assert band_index_params(loaded) == (8, 2, 3)
+    assert not (tmp_path / "bandidx" / "meta").exists()
 
-    with pytest.raises(ValueError, match="num_hashes"):
-        load_band_index(spark, loc, num_hashes=16)
-    with pytest.raises(ValueError, match="rows_per_band"):
-        load_band_index(spark, loc, rows_per_band=4)
-    # k changes the key space just as much: a k=5 probe against a k=3
-    # index would never collide and wave every duplicate through
-    with pytest.raises(ValueError, match="k="):
-        lsh_probe_dedup_indexed(spark, loc, batch, k=5)
-
-    plan = _plan(load_band_index(spark, loc).where(F.col("band_id") == 2))
+    plan = _plan(loaded.where(F.col("band_id") == 2))
     assert "PartitionFilters" in plan
     assert "band_id" in plan.split("PartitionFilters", 1)[1][:200]
 
 
+def test_band_index_without_parameters_is_refused(spark, tmp_path):
+    """A bands/ table whose band_key carries no signature parameters (the
+    layout written before the index described itself: plain parquet next
+    to a meta/ table) is refused with a rebuild hint instead of being
+    probed with guessed parameters."""
+    from samu_ocr_extraction_poc_spark.operators.dedup import load_band_index
+
+    loc = str(tmp_path / "old_idx")
+    spark.createDataFrame(
+        [(1, b, f"{b}_{b}") for b in range(4)], "index_id long, band_id int, band_key string"
+    ).write.partitionBy("band_id").parquet(f"{loc}/bands")
+    spark.createDataFrame(
+        [(8, 2, 3)], "num_hashes int, rows_per_band int, k int"
+    ).write.parquet(f"{loc}/meta")
+    with pytest.raises(ValueError, match="rebuild"):
+        load_band_index(spark, loc)
+
+
+def test_probes_use_the_index_signature_parameters(spark, tmp_path):
+    """An index built with num_hashes=16, rows_per_band=4, k=5 is probed
+    with those parameters: the batch and the stream probe, over the index
+    frame and over its persisted table, flag exactly the batch documents
+    in a cross-split candidate pair of the self-join over corpus + batch
+    with the same parameters."""
+    from samu_ocr_extraction_poc_spark.operators.dedup import (
+        band_index,
+        build_band_index,
+        load_band_index,
+        lsh_candidate_pairs,
+        lsh_probe_dedup,
+        minhash_signatures,
+    )
+    from samu_ocr_extraction_poc_spark.streaming.ingest import stream_probe_dedup
+
+    base = (
+        "the fast key order sort table scan merge part window small hash "
+        "scan join order batch stream spark window dup data group query row"
+    )
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    corpus = spark.createDataFrame(
+        [(1, base, "en", "s1", 10), (2, "some indexed corpus content here today", "en", "s2", 10)],
+        schema,
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, base + " alpha", "en", "s3", 10),  # near-dup of doc 1
+            (11, base, "en", "s3", 10),  # exact copy of doc 1
+            (12, "fresh unseen words nowhere indexed at all", "en", "s4", 10),
+            (13, "another genuinely new document body here", "en", "s5", 10),
+        ],
+        schema,
+    )
+    pairs = lsh_candidate_pairs(
+        minhash_signatures(corpus.unionByName(batch), num_hashes=16, k=5), 16, 4
+    )
+    flagged = {b for a, b in ((r["doc_a"], r["doc_b"]) for r in pairs.collect()) if a < 10 <= b}
+    assert flagged == {10, 11}  # premise: both populations present
+    want_new = {10, 11, 12, 13} - flagged
+
+    idx = band_index(corpus, num_hashes=16, rows_per_band=4, k=5).persist()
+    loc = str(tmp_path / "bandidx16")
+    build_band_index(idx, loc)
+    d = str(tmp_path / "probe_stream16")
+    batch.coalesce(1).write.mode("overwrite").parquet(d)
+    for name, index in (("frame", idx), ("table", load_band_index(spark, loc))):
+        verdicts = {r["doc_id"]: r["is_new"] for r in lsh_probe_dedup(batch, index).collect()}
+        assert {i for i, new in verdicts.items() if new == 1} == want_new, name
+        q = (
+            stream_probe_dedup(spark, d, index)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(f"probe16_{name}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = {r["doc_id"] for r in spark.sql(f"SELECT doc_id FROM probe16_{name}").collect()}
+        assert got == want_new, name
+    idx.unpersist()
+
+
 def test_stream_probe_dedup_persisted_index_and_lifecycle(spark, tmp_path):
     """stream_probe_dedup over a load_band_index table (no inline index
-    build at all), plus the return_index handle for deterministically
-    releasing an inline-built index (ADVICE r3)."""
+    build at all). The caller owns the index's lifecycle: the probe
+    persists nothing of its own."""
     from samu_ocr_extraction_poc_spark.operators.dedup import (
+        band_index,
         build_band_index,
         load_band_index,
         lsh_probe_dedup,
@@ -2693,18 +2758,20 @@ def test_stream_probe_dedup_persisted_index_and_lifecycle(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     want_new = {
-        r["doc_id"] for r in lsh_probe_dedup(corpus, batch).collect() if r["is_new"] == 1
+        r["doc_id"]
+        for r in lsh_probe_dedup(batch, band_index(corpus)).collect()
+        if r["is_new"] == 1
     }
     assert want_new == {11}
 
     loc = str(tmp_path / "bandidx")
-    build_band_index(corpus, loc)
+    build_band_index(band_index(corpus), loc)
     d = str(tmp_path / "probe_stream")
     batch.coalesce(1).write.mode("overwrite").parquet(d)
-    # index_location is the enforced-handshake path: the read validates
-    # this query's signature params against the table's meta
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
     q = (
-        stream_probe_dedup(spark, d, index_location=loc)
+        stream_probe_dedup(spark, d, load_band_index(spark, loc))
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("probe_idx_out")
@@ -2714,30 +2781,7 @@ def test_stream_probe_dedup_persisted_index_and_lifecycle(spark, tmp_path):
     q.awaitTermination(120)
     got = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM probe_idx_out").collect()}
     assert got == want_new
-
-    # a parameter-mismatched persisted index must refuse, not silently
-    # never-collide (which would wave every duplicate through as new)
-    with pytest.raises(ValueError, match="num_hashes"):
-        stream_probe_dedup(spark, d, index_location=loc, num_hashes=16)
-    # load_band_index still works for caller-owned frames — the caller
-    # then owns the handshake (explicit params)
-    assert load_band_index(spark, loc, num_hashes=8, rows_per_band=2).count() > 0
-
-    # inline-built index: the handle comes back for deterministic release
-    out, built = stream_probe_dedup(spark, d, corpus, return_index=True)
-    assert built.storageLevel.useMemory  # persisted until the caller frees it
-    q2 = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("probe_idx_out2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM probe_idx_out2").collect()}
-    assert got2 == want_new
-    built.unpersist()
-    assert not built.storageLevel.useMemory
+    assert cache.isEmpty() == was_empty
 
 
 BPE_BATTERY = [
