@@ -42,12 +42,23 @@ _STATES = {
 
 _HONORIFICS = {"Mr.", "Mrs.", "Ms.", "Dr.", "Judge", "Justice", "Hon."}
 
+# The tagger's patterns are tried at every position of every text, and nearly
+# every position fails. So each opens with a test of the one character every
+# match starts with: a failing position costs that test instead of a ``\b``
+# check followed by a (12-way, case-insensitive) alternation. The guarded
+# forms match exactly what the ``\b``-led forms matched (test_doccore
+# compares them).
+# - date: every alternative starts with a digit or a month's first letter, a
+#   word character, so ``\b`` there is ``(?<!\w)``.
 _DATE_RE = re.compile(
-    rf"\b(?:(?:19|20)\d{{2}}|\d{{1,2}}/\d{{1,2}}/\d{{2,4}}|(?:{_MONTHS})\s+\d{{1,2}}(?:,\s*\d{{4}})?)\b",
+    rf"(?<!\w)(?=[\djfmasond])(?:(?:19|20)\d{{2}}|\d{{1,2}}/\d{{1,2}}/\d{{2,4}}|(?:{_MONTHS})\s+\d{{1,2}}(?:,\s*\d{{4}})?)\b",
     re.IGNORECASE,
 )
-_QUANTITY_RE = re.compile(r"(?<![/\w])\$?\d+(?:,\d{3})*(?:\.\d+)?\b(?!/)")
-_CAP_RUN_RE = re.compile(r"\b(?:[A-Z][A-Za-z&.'-]*)(?:\s+(?:[A-Z][A-Za-z&.'-]*|of|the|and))*\b")
+# - quantity: a match starts with ``$`` or a digit.
+_QUANTITY_RE = re.compile(r"(?=[$\d])(?<![/\w])\$?\d+(?:,\d{3})*(?:\.\d+)?\b(?!/)")
+# - capitalized run: the first character is [A-Z], a word character, so
+#   ``\b`` there is ``(?<!\w)``; testing the letter first is the cheap order.
+_CAP_RUN_RE = re.compile(r"(?=[A-Z])(?<!\w)(?:[A-Z][A-Za-z&.'-]*)(?:\s+(?:[A-Z][A-Za-z&.'-]*|of|the|and))*\b")
 
 _POSITIVE = {
     "good", "great", "excellent", "happy", "pleased", "agree", "thank",

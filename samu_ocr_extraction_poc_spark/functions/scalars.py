@@ -1,16 +1,12 @@
-"""Scalar helpers: JS-parity parsing/formatting + Spark Column builders.
+"""Scalar helpers: JS-parity parsing/formatting.
 
 Python reimplementations of the reference's scalar functions (SURVEY.md §2.7)
-with exact JS semantics where the reference depends on them, plus the
-JVM-side Column equivalents used by the SQL-expressible operator surface.
+with exact JS semantics where the reference depends on them.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _FLOAT_RE = re.compile(r"^[+-]?(?:Infinity|\d+\.?\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?)")
 
@@ -75,23 +71,3 @@ def parse_document_value(raw: str | None) -> float | None:
         return None
     return js_parse_float(sanitize_expense_value(raw))
 
-
-# ---------------------------------------------------------------------------
-# Column builders (JVM-side, codegen'd) for the same scalars — used by the
-# relational/oracle-checked surface.
-# ---------------------------------------------------------------------------
-
-
-def generate_id(col: Column) -> Column:
-    """sha256 hex of a key -> documentId (lib/utils.ts:8-12)."""
-    return F.sha2(col, 256)
-
-
-def sanitize_expense_value_col(col: Column) -> Column:
-    """C2: strip ``[$,]`` globally + trim (lib/utils.ts:4-6)."""
-    return F.trim(F.regexp_replace(col, r"[$,]", ""))
-
-
-def money_fixed_2(col: Column) -> Column:
-    """C4: numeric -> 2-decimal string without thousands separators."""
-    return F.col(col) if isinstance(col, str) else col.cast("decimal(38,2)").cast("string")

@@ -186,12 +186,21 @@ def get_header(spans: list[dict]) -> dict:
     }
 
 
-def _para_start(num: int):
-    def pred(b: dict) -> bool:
-        t = b.get("text")
-        return t is not None and (t.startswith(f"{num}. ") or t == f"{num}.")
+_PARA_NUM_RE = re.compile(r"([1-9][0-9]*)\.(?: |\Z)")
 
-    return pred
+
+def _para_starts(blocks: list[dict]) -> dict[int, int]:
+    """Each paragraph number's first line index, from one pass: the line
+    whose text is ``f"{n}."`` or starts with ``f"{n}. "``. Looking a number
+    up here is JS ``findIndex`` over the whole list, so a first match that
+    lies before the current paragraph is kept."""
+    first: dict[int, int] = {}
+    for i, b in enumerate(blocks):
+        t = b.get("text")
+        m = _PARA_NUM_RE.match(t) if t else None
+        if m:
+            first.setdefault(int(m.group(1)), i)
+    return first
 
 
 _SENT_END = (".", "?", ":")
@@ -213,15 +222,16 @@ def get_numbered_paragraphs(blocks: list[dict]) -> list[str]:
     end instead (documented deviation — unreachable on well-formed fixtures).
     """
     paragraphs: list[list[str]] = []
+    starts = _para_starts(blocks)
     number = 1
-    start = _find_index(blocks, _para_start(number))
+    start = starts.get(number, -1)
     number += 1
-    end = _find_index(blocks, _para_start(number))
+    end = starts.get(number, -1)
     while start > 0 and end > 0:
         paragraphs.append([b["text"] for b in blocks[start:end]])
         start = end
         number += 1
-        end = _find_index(blocks, _para_start(number))
+        end = starts.get(number, -1)
 
     end = start
     while end < len(blocks) and not _ends_sentence(blocks[end] if 0 <= end < len(blocks) else None):

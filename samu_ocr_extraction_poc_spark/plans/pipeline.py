@@ -21,7 +21,7 @@ import json
 import time
 from collections.abc import Iterator
 
-
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,9 +124,10 @@ def _reinterleave(
     layout_lines: list[str] | None = None,
 ) -> list[dict]:
     """Re-interleave extraction output into ordered (kind, text, media_ref,
-    offset) spans — the north_rule per-row invariant. Content spans keep
-    input order; media is OCR'd in place; html expands to its kept blocks;
-    word_box groups collapse into reading-ordered lines.
+    offset) spans — the north_rule per-row invariant. ``spans`` must already
+    be sorted by offset, as :func:`extract_document` sorts them. Content
+    spans keep that order; media is OCR'd in place; html expands to its kept
+    blocks; word_box groups collapse into reading-ordered lines.
 
     ``html_blocks``/``layout_lines`` carry results already computed by the
     family branch so the DOM parse / XY-cut runs once per document.
@@ -134,7 +135,7 @@ def _reinterleave(
     html_blocks = html_blocks or {}
     out: list[dict] = []
     word_box_seen = False
-    for s in sorted(spans, key=lambda x: x.get("offset") or 0):
+    for s in spans:
         kind = s.get("kind")
         if kind == "line" and s.get("text"):
             out.append({"kind": "line", "text": s["text"], "media_ref": ""})
@@ -332,19 +333,35 @@ def extract_document(
     return res
 
 
+def _pylist(arr) -> list:
+    """``arr.to_pylist()``, converted in C++ through numpy for string arrays
+    and null-free integer arrays instead of one Python scalar at a time.
+    Other arrays take ``to_pylist()``: numpy would turn an integer array
+    with nulls into floats with NaN."""
+    t = arr.type
+    if (
+        pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or (pa.types.is_integer(t) and not arr.null_count)
+    ):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    return arr.to_pylist()
+
+
 def decode_spans(col) -> list[list]:
     """``[x or [] for x in col.to_pylist()]`` for a ``spans``
-    list<struct> Arrow column, built from one ``to_pylist()`` per struct
-    field instead of one Python conversion per span. Null lists become
-    ``[]``; null struct elements stay ``None``."""
-    offsets = col.offsets.to_pylist()
+    list<struct> Arrow column, built from one :func:`_pylist` conversion of
+    the list offsets and of each struct field instead of one Python
+    conversion per span. Null lists become ``[]``; null struct elements stay
+    ``None``."""
+    offsets = _pylist(col.offsets)
     lo = offsets[0]
     # col.values ignores the list's own slice offset; offsets index into it
     structs = col.values.slice(lo, offsets[-1] - lo)
     names = [f.name for f in structs.type]
     items = [
         dict(zip(names, vals))
-        for vals in zip(*(structs.field(i).to_pylist() for i in range(len(names))))
+        for vals in zip(*(_pylist(structs.field(i)) for i in range(len(names))))
     ]
     if structs.null_count:
         items = [x if ok else None for x, ok in zip(items, structs.is_valid().to_pylist())]
@@ -374,7 +391,6 @@ def run_extraction(
     bc_ocr = spark.sparkContext.broadcast(ocr)
     thr = thresholds
 
-    import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -392,9 +408,9 @@ def run_extraction(
         for rb in batches:
             rows = []
             for doc_id, spans, part_id in zip(
-                rb.column("doc_id").to_pylist(),
+                _pylist(rb.column("doc_id")),
                 decode_spans(rb.column("spans")),
-                rb.column("part_id").to_pylist(),
+                _pylist(rb.column("part_id")),
             ):
                 t0 = time.perf_counter_ns()
                 row = extract_document(doc_id, spans, lookup, thr)

@@ -125,6 +125,47 @@ def test_paragraphs_sentence_extension():
     assert get_numbered_paragraphs(blocks) == ["1. begins continues ends. afterwards"]
 
 
+def test_paragraphs_backward_first_match_is_kept():
+    # JS findIndex searches from line 0: paragraph 3's first marker lies
+    # before paragraph 2's, so 2 -> 3 is an empty slice and 3 -> 4 spans
+    # back over paragraph 2.
+    blocks = lines(["caption", "1. a", "3. c", "2. b", "4. d.", "x"])
+    assert get_numbered_paragraphs(blocks) == ["1. a 3. c", "", "3. c 2. b", "4. d. x"]
+
+
+def test_paragraphs_time_is_linear_in_the_filing():
+    """A caption plus P numbered 7-line paragraphs: doubling P may at most
+    ~2.5x the time (one paragraph-number lookup must not rescan the
+    filing)."""
+    import gc
+    import time
+
+    def filing(p):
+        texts = ["IN THE CIRCUIT COURT OF JACKSON COUNTY, MISSOURI"]
+        for n in range(1, p + 1):
+            texts += [f"{n}. Plaintiff states"] + [f"line {j} of {n}" for j in range(5)] + ["and so on."]
+        return lines(texts)
+
+    def best(blocks):
+        out = []
+        gc.disable()  # as timeit does: a collection is not the code's time
+        try:
+            for _ in range(3):
+                t0 = time.perf_counter()
+                paras = get_numbered_paragraphs(blocks)
+                out.append(time.perf_counter() - t0)
+        finally:
+            gc.enable()
+        return min(out), paras
+
+    small, paras = best(filing(800))
+    assert len(paras) == 800 and paras[1] == "2. Plaintiff states " + " ".join(
+        f"line {j} of 2" for j in range(5)) + " and so on."
+    large, paras = best(filing(1600))
+    assert len(paras) == 1600
+    assert large / small <= 2.5, (small, large)
+
+
 # --- J1 queries -------------------------------------------------------------
 
 
@@ -435,6 +476,68 @@ def test_nlp_pins():
     assert nlp.extract_key_phrases(text) == ["On June", "Dr Jane Roe", "Acme Hospital LLC"]
     assert nlp.extract_entity_types("") == []
     assert nlp.extract_entities_for_texts([None, "", "Missouri"]) == ["LOCATION"]
+
+
+def _tagger_corpus() -> list[str]:
+    """The sf0.1 documents texts (perfbench's copy), the edge-case texts,
+    every fixture span text and a seeded fuzz set built around what the
+    tagger's patterns hinge on: case-folding letters (``ſ`` folds to s,
+    Kelvin ``K`` to k, ``İ``, ``ß``), month names, ``/``, ``$``, separators
+    and ASCII and non-ASCII digits, glued with and without spaces."""
+    import random
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from test_oracle_edge import EDGE_DOCS
+
+    sf = Path(__file__).resolve().parents[1] / "perfbench" / "data" / "sf0.1"
+    texts = [t for t in pq.read_table(sf, columns=["text"])["text"].to_pylist() if t]
+    texts += [d[1] for d in EDGE_DOCS]
+    texts += [s["text"] for _, spans in FX.canonical_docs() for s in spans if s.get("text")]
+    tokens = [
+        "ſ", "\u212a", "\u0130", "ß", "/", "$", ",", ".", "-", "'", "&", "_", "x", "of", "the", "and",
+        "0", "1", "7", "19", "20", "1999", "2024", "12/31/2024", "3/4/99", "1/2", "\u0661\u0662",
+        "1,000", "$1,234.56", "12.5", "January", "june", "JULY", "ſeptember", "ſEPTEMBER",
+        "dec", "novembre", "May", "Acme", "Hospital", "LLC", "Dr.", "Missouri", "County", "K2",
+        "İstanbul", "Straße", "Jane", "ROE",
+    ]
+    seps = ["", " ", "  ", "\n", "/", ", "]
+    rng = random.Random(11)
+    for _ in range(20000):
+        texts.append("".join(rng.choice(tokens) + rng.choice(seps) for _ in range(rng.randint(1, 8))))
+    return texts
+
+
+def test_entity_patterns_match_their_unguarded_forms():
+    """The tagger's guarded patterns find exactly what their ``\\b``-led
+    forms found, kept here verbatim: the same (start, text) lists on every
+    corpus text, and the same ``_DATE_RE.match`` the tagger applies to each
+    quantity."""
+    import re
+
+    from samu_ocr_extraction_poc_spark.functions import nlp
+
+    months = "january|february|march|april|may|june|july|august|september|october|november|december"
+    unguarded = {
+        "_DATE_RE": re.compile(
+            rf"\b(?:(?:19|20)\d{{2}}|\d{{1,2}}/\d{{1,2}}/\d{{2,4}}|(?:{months})\s+\d{{1,2}}(?:,\s*\d{{4}})?)\b",
+            re.IGNORECASE,
+        ),
+        "_QUANTITY_RE": re.compile(r"(?<![/\w])\$?\d+(?:,\d{3})*(?:\.\d+)?\b(?!/)"),
+        "_CAP_RUN_RE": re.compile(r"\b(?:[A-Z][A-Za-z&.'-]*)(?:\s+(?:[A-Z][A-Za-z&.'-]*|of|the|and))*\b"),
+    }
+    found = dict.fromkeys(unguarded, 0)
+    for text in _tagger_corpus():
+        for name, old in unguarded.items():
+            want = [(m.start(), m.group()) for m in old.finditer(text)]
+            assert [(m.start(), m.group()) for m in getattr(nlp, name).finditer(text)] == want, (name, text)
+            found[name] += len(want)
+        for m in unguarded["_QUANTITY_RE"].finditer(text):
+            q = m.group()
+            assert bool(nlp._DATE_RE.match(q)) == bool(unguarded["_DATE_RE"].match(q)), q
+    # the corpus exercises every pattern
+    assert all(n > 1000 for n in found.values()), found
 
 
 def test_html_link_ratio_boundary():

@@ -9,6 +9,7 @@ import pytest
 from samu_ocr_extraction_poc_spark import fixtures as FX
 from samu_ocr_extraction_poc_spark.schema import DOCUMENTS_SCHEMA
 from samu_ocr_extraction_poc_spark.plans.pipeline import (
+    _pylist,
     decode_spans,
     lineage_from_results,
     run_extraction,
@@ -365,33 +366,59 @@ def test_plain_text_ingestion_adapter(spark):
     assert empty.collect()[0]["spans"] == []
 
 
+def _strict(x):
+    """A value with the type of every leaf spelled out, so 1 and 1.0, or
+    None and NaN, compare unequal."""
+    if isinstance(x, list):
+        return [_strict(v) for v in x]
+    if isinstance(x, dict):
+        return {k: _strict(v) for k, v in x.items()}
+    return (type(x).__name__, repr(x))
+
+
 def test_decode_spans_matches_to_pylist():
-    """The column-wise span decode equals the per-row to_pylist() decode on
-    null lists, empty lists, null struct elements, null fields and slices."""
+    """The column-wise span decode, and ``_pylist`` on every column it
+    converts, equal ``to_pylist()`` type for type: null and empty lists,
+    null struct elements, null string and int fields, slices at non-zero
+    offsets, an empty batch, multi-byte text and a large_string field."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    from samu_ocr_extraction_poc_spark.schema import SPANS_TYPE
-
-    s = {"kind": "line", "text": "a", "media_ref": "", "offset": 0}
-    col = pa.array(
-        [
-            [s],
-            None,
-            [],
-            [s, None, {"kind": None, "text": None, "media_ref": None, "offset": None}],
-            [{"kind": "media", "text": "", "media_ref": "img-1", "offset": 7}],
-            None,
-            [s, s],
-            [],
-            [{"kind": "page_break", "text": None, "media_ref": "m", "offset": None}],
-        ],
-        type=to_arrow_type(SPANS_TYPE),
-    )
-    rb = pa.RecordBatch.from_arrays([col], names=["spans"])
-    for batch in (rb, rb.slice(3, 5), rb.slice(1, 1), rb.slice(9, 0)):
-        c = batch.column("spans")
-        assert decode_spans(c) == [x or [] for x in c.to_pylist()]
+    for text_type in (pa.string(), pa.large_string()):
+        span = pa.struct([
+            ("kind", pa.string()),
+            ("text", text_type),
+            ("media_ref", pa.string()),
+            ("offset", pa.int32()),
+        ])
+        s = {"kind": "line", "text": "a", "media_ref": "", "offset": 0}
+        col = pa.array(
+            [
+                [s],
+                None,
+                [],
+                [s, None, {"kind": None, "text": None, "media_ref": None, "offset": None}],
+                [{"kind": "media", "text": "", "media_ref": "img-1", "offset": 7}],
+                None,
+                [s, {"kind": "line", "text": "Fähre 北京 — résumé 🙂", "media_ref": None, "offset": 3}],
+                [],
+                [{"kind": "page_break", "text": "ſ\u212a\u0130ß", "media_ref": "m", "offset": None}],
+                [{"kind": "line", "text": None, "media_ref": None, "offset": 2**31 - 1}, None],
+            ],
+            type=pa.list_(span),
+        )
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array([f"d{i}" if i % 4 else None for i in range(10)]), col,
+             pa.array(range(10), pa.int32()),
+             pa.array([7, None, -1, 0, None, 2**40, 3, 1, 2, 5], pa.int64())],
+            names=["doc_id", "spans", "part_id", "n"],
+        )
+        for batch in (rb, rb.slice(3, 5), rb.slice(1, 1), rb.slice(6), rb.slice(9, 0), rb.slice(0, 0)):
+            c = batch.column("spans")
+            assert _strict(decode_spans(c)) == _strict([x or [] for x in c.to_pylist()])
+            arrays = [batch.column(n) for n in ("doc_id", "part_id", "n")]
+            arrays += [c.offsets] + [c.values.field(i) for i in range(4)]
+            for a in arrays:
+                assert _strict(_pylist(a)) == _strict(a.to_pylist())
 
 
 def test_decode_spans_on_corpus_batches(spark):
