@@ -400,7 +400,7 @@ def run_scaling() -> dict:
                 pair = {}
                 for cores in (lo_cores, hi_cores):
                     # cores*4, not cores*2: the r5 shuffle A/B
-                    # (scripts/ab_shuffle.py, table in BENCH.md) measured
+                    # (table in BENCH.md) measured
                     # 4x both FASTER in absolute seconds at each level
                     # (finer tasks even out skew within the fixed core
                     # budget) and at the host's JVM scaling ceiling

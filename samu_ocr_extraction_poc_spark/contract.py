@@ -481,7 +481,7 @@ FROM sh GROUP BY doc_id
 
 def minhash_lsh_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8, k=3)
-    return DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
+    return DD.lsh_candidate_pairs(sig, rows_per_band=2)
 
 
 _LSH_CTES = _SHINGLE_SQL_BASE + """
@@ -537,7 +537,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cluster. The oracle computes the same min over the transitive
     closure with a recursive CTE."""
     sig = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8, k=3)
-    pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
+    pairs = DD.lsh_candidate_pairs(sig, rows_per_band=2)
     cc = DD.connected_components(pairs)
     return cc.groupBy("component").agg(F.count("*").alias("n_members"))
 
@@ -564,7 +564,7 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure and the same keep-min rule."""
     docs = _t(spark, sf_dir, "documents")
     sig = DD.minhash_signatures(docs, num_hashes=8, k=3)
-    pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
+    pairs = DD.lsh_candidate_pairs(sig, rows_per_band=2)
     return DD.keep_canonical(docs, pairs).select("doc_id", "lang", "n_chars")
 
 
@@ -1614,7 +1614,7 @@ def cms_word_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(TX.tokens(TX.normalized(F.col("text")))).alias("key"))
         .where(F.length("key") > 0)
     )
-    est = SK.cms_query(sk, probe, "key", width=1024, depth=3)
+    est = SK.cms_query(sk, probe, "key")
     exact = words.groupBy("key").agg(F.count("*").cast("bigint").alias("exact"))
     return est.join(exact, "key").select(
         F.col("key").alias("word"),
@@ -1767,9 +1767,7 @@ def length_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = SK.hist_build(
         docs.select(F.length("text").alias("len")), "len", lo=0, hi=4096, n_bins=64
     )
-    return SK.hist_quantiles(
-        h, [10, 25, 50, 75, 90, 99], lo=0, hi=4096, n_bins=64
-    )
+    return SK.hist_quantiles(h, [10, 25, 50, 75, 90, 99])
 
 
 LENGTH_QUANTILES_SQL = """
@@ -2491,7 +2489,7 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _canon_gate():
         sig = DD.minhash_signatures(docs, num_hashes=8, k=3)
-        pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
+        pairs = DD.lsh_candidate_pairs(sig, rows_per_band=2)
         return DD.keep_canonical(docs, pairs).select("doc_id")
 
     q, canon = run_jobs(_q_gate, _canon_gate)
@@ -3843,8 +3841,7 @@ def hll_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so it is materialized once too instead of re-aggregating the cached
     # hashed stream per consumer. The two materializations are
     # independent actions — overlapped from a thread pool (guide §2.6,
-    # the cms_join_size pattern). eager=False reads then skip the
-    # per-call checkpoints, the round-5 sketch convention.
+    # the cms_join_size pattern).
     from .functions.jobs import run_jobs
 
     full, merged = run_jobs(
@@ -3853,14 +3850,10 @@ def hll_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda: merged_lazy.localCheckpoint(eager=True),
     )
-    ef = SK.hll_estimate(full, eager=False).select(F.col("est").alias("est_full"))
-    em = SK.hll_estimate(merged, eager=False).select(
-        F.col("est").alias("est_merged")
-    )
-    mc = merged.where(F.col("bucket") >= 0).select(
-        "bucket", F.col("r").alias("rm")
-    )
-    fc = full.where(F.col("bucket") >= 0).select("bucket", F.col("r").alias("rf"))
+    ef = SK.hll_estimate(full).select(F.col("est").alias("est_full"))
+    em = SK.hll_estimate(merged).select(F.col("est").alias("est_merged"))
+    mc = merged.select("bucket", F.col("r").alias("rm"))
+    fc = full.select("bucket", F.col("r").alias("rf"))
     diffs = (
         mc.join(fc, "bucket", "full")
         .where(
@@ -4830,7 +4823,7 @@ def cms_join_size_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         ),
     )
-    est = SK.cms_inner_product(sk_a, sk_b, width=512, depth=3, eager=False)
+    est = SK.cms_inner_product(sk_a, sk_b)
     ca = keys_a.groupBy("k").agg(F.count("*").cast("bigint").alias("ca"))
     cb = keys_b.groupBy("k").agg(F.count("*").cast("bigint").alias("cb"))
     exact = ca.join(cb, "k").agg(

@@ -1,25 +1,33 @@
 """Small literal DataFrames as pure-JVM LocalRelations.
 
 ``spark.createDataFrame(py_rows, ...)`` builds a PYTHON-RDD-backed frame:
-every action that touches it — including a 2-row sketch-meta sentinel
-read — schedules a distributed job that spins a Python worker to unpickle
-the rows (profiled 0.3-1.2 s per collect at bench scale). An Arrow table
-handed to ``createDataFrame`` with an explicit schema is parsed on the
-JVM into a LocalRelation instead: joins broadcast it from the driver,
-sentinel collects are driver-local, and no Python worker is ever
-involved. Any row count works, zero included, and every value
-round-trips as typed (NaN, quotes and backslashes too).
+every action that touches it — even a 2-row read — schedules a
+distributed job that spins a Python worker to unpickle the rows
+(profiled 0.3-1.2 s per collect at bench scale). An Arrow table handed
+to ``createDataFrame`` with an explicit schema is parsed on the JVM into
+a LocalRelation instead: joins broadcast it from the driver, collects
+are driver-local, and no Python worker is ever involved. Any row count
+works, zero included, and every value round-trips as typed (NaN, quotes
+and backslashes too; a StructType schema keeps its column metadata).
 
-Use for the package's bounded literal tables (sketch meta sentinels,
-percentile lists, shard offset tables, merge tables, driver-finished loop
-results); NOT for anything data-scale.
+Use for the package's bounded literal tables (percentile lists, shard
+offset tables, merge tables, driver-finished loop results, sketch
+versions); NOT for anything data-scale.
 
 The same module owns the one rule for "small enough to hold on the
 driver": the session's ``spark.sql.autoBroadcastJoinThreshold``, the
 budget Spark itself uses to ship a table to every executor.
+
+It also owns the one reader of an artifact's parameters
+(:func:`column_params`): a build that other operators read later (the
+LSH band index, the Bloom, count-min, histogram and HLL sketches) stamps
+its parameters as metadata on its key column, so a reader takes no shape
+arguments and cannot disagree with the build.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import pyarrow as pa
 from py4j.protocol import Py4JError
@@ -40,6 +48,35 @@ def values_frame(
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
+
+
+def column_params(
+    df: DataFrame,
+    col: str,
+    names: tuple[str, ...],
+    build: str,
+    check: Callable[..., None] | None = None,
+) -> tuple:
+    """The parameters ``names`` that ``build`` stamped as metadata on
+    ``df``'s ``col`` (``DataFrame.withMetadata``), in that order. The
+    metadata rides the schema, so the read submits no Spark job, and it
+    survives persist, localCheckpoint and the parquet round trip.
+
+    A frame can come back from parquet, from outside the program, so the
+    values are validated: each must be an integer, and ``check(*values)``
+    may raise for combinations the build itself refuses. Raises
+    ValueError naming ``build`` when a parameter is missing or not an
+    integer."""
+    meta = df.schema[col].metadata if col in df.columns else {}
+    values = tuple(meta.get(n) for n in names)
+    if not all(isinstance(v, int) for v in values):
+        raise ValueError(
+            f"{col} carries no {build} parameters {names} (found {meta}); "
+            f"rebuild the frame with {build}"
+        )
+    if check is not None:
+        check(*values)
+    return values
 
 
 def broadcast_threshold(spark: SparkSession) -> int:

@@ -18,12 +18,14 @@ bit-for-bit (engine-native xxhash/murmur differ across engines).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
-from ..functions.frames import collect_within_budget, release_frame, values_frame
+from ..functions.frames import collect_within_budget, column_params, release_frame, values_frame
 from ..functions.textfns import let_bound, normalized, token_count, token_md5_long, tokens
 
 SIMHASH_BITS = 32
@@ -198,17 +200,11 @@ def band_index(
 
 def band_index_params(index: DataFrame) -> tuple[int, int, int]:
     """(num_hashes, rows_per_band, k) of a :func:`band_index` frame, read
-    from its ``band_key`` metadata. Raises ValueError when the metadata is
-    missing (a frame not built by :func:`band_index`, or a table written
-    before the index carried its parameters)."""
-    meta = index.schema["band_key"].metadata
-    try:
-        return meta["num_hashes"], meta["rows_per_band"], meta["k"]
-    except KeyError:
-        raise ValueError(
-            "band_key carries no signature parameters; rebuild the index with "
-            "build_band_index(band_index(corpus, ...), location)"
-        ) from None
+    from its ``band_key`` metadata (:func:`frames.column_params`). Raises
+    ValueError when the metadata is missing (a frame not built by
+    :func:`band_index`, or a table written before the index carried its
+    parameters)."""
+    return column_params(index, "band_key", ("num_hashes", "rows_per_band", "k"), "band_index")
 
 
 def build_band_index(index: DataFrame, location: str) -> None:
@@ -286,12 +282,13 @@ def lsh_probe_dedup(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, num_hashes: int = 8, rows_per_band: int = 2
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = 2) -> DataFrame:
     """Band the signature and self-join on band buckets -> candidate pairs
     (doc_a < doc_b). The classic banding construction (Broder; MMDS ch.3).
+    The signature length is the frame's own: every ``h<i>`` column is
+    banded, ``rows_per_band`` at a time.
     """
+    num_hashes = sum(1 for c in signatures.columns if re.fullmatch(r"h\d+", c))
     # the signature frame feeds both sides of the self-join; materialize it
     # eagerly — a lazy persist would let both join sides race to fill the
     # cache and compute the shingle pipeline twice (at scale: write the
@@ -355,7 +352,7 @@ def minhash_jaccard_estimates(
     # flat materialized signature table (multi-referenced: banding + both
     # per-pair signature join sides — the lsh_candidate_pairs discipline)
     sig = sig.localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs(sig, num_hashes, rows_per_band)
+    pairs = lsh_candidate_pairs(sig, rows_per_band)
     agree = None
     for i in range(num_hashes):
         term = F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)

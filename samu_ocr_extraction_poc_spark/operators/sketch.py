@@ -16,7 +16,7 @@ partitionings — DuckDB replays it with the same md5 arithmetic.
 
 from __future__ import annotations
 
-from ..functions.frames import values_frame
+from ..functions.frames import column_params, values_frame
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -63,15 +63,34 @@ def _group_sketch_sets(
     )
 
 
-# the Bloom meta rows' word_idx sentinels — below any real word index
-# (real word_idx >= 0: positions are md5_long % m_bits of a positive
-# 60-bit hash). TWO rows, one per parameter: packing (m_bits, k) into a
-# single value (the r4 scheme, m_bits*100+k) was ambiguous — any k >= 100
-# aliases a different (m_bits, k) pair onto the same sentinel, letting a
-# mismatched build/probe pass the handshake and emit false negatives
-# (r4 advice item).
-_BLOOM_META_M = -1
-_BLOOM_META_K = -2
+# the parameters each sketch family stamps on its key column, as
+# (key column, parameter names, build[, check]) — the arguments of
+# frames.column_params
+_BLOOM = ("word_idx", ("m_bits", "k"), "bloom_build")
+_CMS = ("d", ("width", "depth"), "cms_build")
+_HIST = ("b", ("lo", "hi", "n_bins"), "hist_build")
+
+
+def _stamp(sketch: DataFrame, spec: tuple, values: tuple) -> DataFrame:
+    """``sketch`` with ``values`` stamped as metadata on the spec's key
+    column, the form :func:`column_params` reads back."""
+    return sketch.withMetadata(spec[0], dict(zip(spec[1], values)))
+
+
+def _same_params(a: DataFrame, b: DataFrame, spec: tuple, what: str) -> tuple:
+    """The parameters two sketches of one family share, compared on the
+    driver: a merge or inner product of differently shaped sketches is
+    garbage, not an error, so any difference raises."""
+    pa, pb = column_params(a, *spec), column_params(b, *spec)
+    if pa != pb:
+        family = spec[2].split("_")[0]
+        raise ValueError(
+            f"{family} meta mismatch on right {what} input: it carries "
+            f"{dict(zip(spec[1], pb))}, the left input "
+            f"{dict(zip(spec[1], pa))} — both sides must be built with "
+            "identical parameters"
+        )
+    return pa
 
 
 def _bloom_positions(keyed: DataFrame, m_bits: int, k: int, key_col: str, *carry: str) -> DataFrame:
@@ -108,17 +127,14 @@ def bloom_build(
     memory membership structure an ingest pipeline probes BEFORE paying
     for the full dedup index (classic Bloom 1970; k md5-derived bit
     positions per key). Stored as (word_idx, bits) rows of 32-bit words
-    packed in BIGINT, plus TWO meta rows at word_idx=-1 (m_bits) and
-    word_idx=-2 (k) so :func:`bloom_probe` can refuse a
-    parameter-mismatched filter (the band-index meta-handshake
-    discipline — a silent mismatch would produce false NEGATIVES,
-    breaking the structure's one guarantee; separate rows because a
-    packed m_bits*100+k sentinel aliases any k>=100 onto a different
-    pair). Rows rather than one blob: the build is ONE
-    partial-aggregable groupBy/bit_or, and the filter stays mergeable
-    (union = bit_or again; identical meta rows OR to themselves, and
-    mismatched merges corrupt the sentinel so the probe refuses).
-    ~m_bits/32 rows regardless of corpus size.
+    packed in BIGINT; ``word_idx`` carries ``{m_bits, k}`` as column
+    metadata, so :func:`bloom_probe` computes positions with the
+    parameters the filter was built with (a probe with others would
+    emit false NEGATIVES, breaking the structure's one guarantee). Rows
+    rather than one blob: the build is ONE partial-aggregable
+    groupBy/bit_or, and the filter stays mergeable (union of filters
+    with the same parameters = bit_or again). ~m_bits/32 rows
+    regardless of corpus size.
 
     Determinism contract (the package's KMV argument): bit positions are
     pure md5 arithmetic, so build and probe — including FALSE-POSITIVE
@@ -129,16 +145,7 @@ def bloom_build(
         .groupBy("word_idx")
         .agg(F.expr("bit_or(b)").cast("bigint").alias("bits"))
     )
-    meta = values_frame(
-        df.sparkSession,
-        [(_BLOOM_META_M, m_bits), (_BLOOM_META_K, k)],
-        "word_idx bigint, bits bigint",
-    )
-    # prune-enabling no-op filter (r6): every real row's sentinel key is
-    # >= 0 by construction, and stating it lets Catalyst constant-fold a
-    # handshake's sentinel-only read (key < 0) to the literal meta branch
-    # instead of scanning the whole build input per handshake
-    return words.where(F.col("word_idx") >= 0).unionByName(meta)
+    return _stamp(words, _BLOOM, (m_bits, k))
 
 
 def bloom_probe(
@@ -146,21 +153,14 @@ def bloom_probe(
     batch: DataFrame,
     key_col: str = "key",
     id_col: str = "doc_id",
-    m_bits: int = 1 << 18,
-    k: int = 3,
 ) -> DataFrame:
-    """Probe a :func:`bloom_build` filter: an element is a (probable)
-    member iff ALL k of its bit positions are set. Validates the
-    filter's meta rows against this probe's (m_bits, k) first — a 2-row
-    driver probe, the BPE/CC argmax discipline — and raises on mismatch
-    rather than silently emitting false negatives. The filter frame is
-    localCheckpoint-ed first so the meta collect and the join read ONE
-    materialization (~m_bits/32 rows) instead of executing the build
-    aggregation twice (r4 advice item; callers probing many batches
-    should still materialize the filter once themselves). One equi-join
-    of the batch's k position rows against the word table (the filter
-    side is tiny — broadcastable at any corpus size since it is bounded
-    by m_bits/32 rows) + one all-positions-hit aggregate (min over the
+    """Probe a :func:`bloom_build` filter with its own (m_bits, k): an
+    element is a (probable) member iff ALL k of its bit positions are
+    set. Lazy — the read submits no job (callers probing many batches
+    should materialize the filter once themselves). One equi-join of the
+    batch's k position rows against the word table (the filter side is
+    tiny — broadcastable at any corpus size since it is bounded by
+    m_bits/32 rows) + one all-positions-hit aggregate (min over the
     per-position hit flags — robust to a doc_id appearing more than once
     in the batch, where a count==k test would return false negatives for
     genuine members; is_member then means "every probed key is a
@@ -169,24 +169,12 @@ def bloom_probe(
     standard Bloom rate, deterministic here; false negatives
     impossible).
     """
-    bloom = bloom.localCheckpoint(eager=True)
-    meta = {
-        r["word_idx"]: r["bits"]
-        for r in bloom.where(F.col("word_idx") < 0).collect()
-    }
-    if meta.get(_BLOOM_META_M) != m_bits or meta.get(_BLOOM_META_K) != k:
-        raise ValueError(
-            f"bloom filter meta mismatch: probe expects m_bits={m_bits}, k={k}, "
-            f"filter carries m_bits={meta.get(_BLOOM_META_M)}, "
-            f"k={meta.get(_BLOOM_META_K)} — "
-            "build and probe must use identical parameters"
-        )
-    words = bloom.where(F.col("word_idx") >= 0)
+    m_bits, k = column_params(bloom, *_BLOOM)
     probes = _bloom_positions(batch, m_bits, k, key_col, id_col).withColumnRenamed(
         id_col, "doc_id"
     )
     hits = (
-        probes.join(F.broadcast(words), "word_idx", "left")
+        probes.join(F.broadcast(bloom), "word_idx", "left")
         .select(
             "doc_id",
             F.when(
@@ -203,12 +191,6 @@ def bloom_probe(
     return hits.select(
         "doc_id", F.col("all_hit").cast("int").alias("is_member")
     )
-
-
-# Count-min meta sentinels: d is the depth row index (real rows d >= 0),
-# the separate-rows discipline from the Bloom handshake above.
-_CMS_META_W = -1
-_CMS_META_D = -2
 
 
 def _cms_positions(
@@ -249,10 +231,9 @@ def cms_build(
     cells regardless of corpus size. Each key occurrence adds its weight
     (default 1) to one cell per depth row; the build is ONE
     partial-aggregable groupBy/sum over (d, c). Mergeable: union of
-    sketches = per-cell sum (identical meta rows sum to doubled
-    sentinels, which the query refuses — a mismatched merge cannot pass).
-    Stored as (d, c, cnt) rows plus meta rows d=-1 (width) / d=-2
-    (depth), the Bloom separate-rows handshake.
+    sketches = per-cell sum (:func:`cms_merge`). Stored as (d, c, cnt)
+    rows; ``d`` carries ``{width, depth}`` as column metadata, read by
+    :func:`cms_query`, :func:`cms_merge` and :func:`cms_inner_product`.
 
     Determinism contract: cells are pure md5 arithmetic — estimates,
     including collision-induced overestimates, replay bit-identically on
@@ -266,80 +247,36 @@ def cms_build(
         .groupBy("d", "c")
         .agg(F.sum("w__").alias("cnt"))
     )
-    meta = values_frame(
-        df.sparkSession,
-        [(_CMS_META_W, 0, width), (_CMS_META_D, 0, depth)],
-        "d bigint, c bigint, cnt bigint",
-    )
-    # prune-enabling no-op filter (r6): every real row's sentinel key is
-    # >= 0 by construction, and stating it lets Catalyst constant-fold a
-    # handshake's sentinel-only read (key < 0) to the literal meta branch
-    # instead of scanning the whole build input per handshake
-    return cells.where(F.col("d") >= 0).unionByName(meta)
+    return _stamp(cells, _CMS, (width, depth))
 
 
-def _cms_handshake(frame: DataFrame, what: str, width: int, depth: int) -> None:
-    """Validate a cms_build frame's meta sentinel rows against the
-    caller's (width, depth) — the shared refuse-don't-garble check for
-    merge/query/inner-product (the _hll_handshake sibling; three
-    formerly-verbatim copies drifted apart is exactly the failure this
-    exists to prevent)."""
-    meta = {r["d"]: r["cnt"] for r in frame.where(F.col("d") < 0).collect()}
-    if meta.get(_CMS_META_W) != width or meta.get(_CMS_META_D) != depth:
-        raise ValueError(
-            f"cms meta mismatch on {what}: expected width={width}, "
-            f"depth={depth}, found width={meta.get(_CMS_META_W)}, "
-            f"depth={meta.get(_CMS_META_D)} — build and read must use "
-            "identical parameters"
-        )
-
-
-def cms_merge(
-    a: DataFrame,
-    b: DataFrame,
-    width: int = 1 << 12,
-    depth: int = 4,
-) -> DataFrame:
-    """Merge two :func:`cms_build` sketches: per-cell sum of the count
-    rows (the CMS linearity property — the merged sketch is exactly the
-    sketch of the concatenated inputs), after a meta handshake on BOTH
-    inputs (2 rows each). Meta rows are carried once, not summed. Inputs
-    are localCheckpoint-ed so the handshake collect and the merged plan
-    read one materialization each (the bloom_probe discipline)."""
-    a = a.localCheckpoint(eager=True)
-    b = b.localCheckpoint(eager=True)
-    for side, frame in (("left merge input", a), ("right merge input", b)):
-        _cms_handshake(frame, side, width, depth)
+def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two :func:`cms_build` sketches of identical (width, depth):
+    per-cell sum of the count rows (the CMS linearity property — the
+    merged sketch is exactly the sketch of the concatenated inputs).
+    Refuses differently shaped inputs; lazy, no job."""
+    params = _same_params(a, b, _CMS, "merge")
     cells = (
-        a.where(F.col("d") >= 0)
-        .unionByName(b.where(F.col("d") >= 0))
+        a.unionByName(b)
         .groupBy("d", "c")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-    return cells.unionByName(a.where(F.col("d") < 0))
+    return _stamp(cells, _CMS, params)
 
 
 def cms_query(
     cms: DataFrame,
     probe: DataFrame,
     key_col: str = "key",
-    width: int = 1 << 12,
-    depth: int = 4,
 ) -> DataFrame:
-    """Point-estimate keys against a :func:`cms_build` sketch: estimate =
-    min over the depth rows of the key's cell counts (an absent cell is
-    0 — only reachable for keys never built). Validates the sketch's
-    meta rows against this query's (width, depth) first and raises on
-    mismatch (the Bloom handshake; silently querying a differently-
-    shaped sketch returns garbage, not an error). The sketch frame is
-    localCheckpoint-ed so the meta collect and the join read one
-    materialization; the cell table is broadcastable at any corpus size
-    (bounded by depth*width rows). Returns (key, est) — one row per
-    DISTINCT probe key; est >= the key's true built count, with
+    """Point-estimate keys against a :func:`cms_build` sketch, with the
+    sketch's own (width, depth): estimate = min over the depth rows of
+    the key's cell counts (an absent cell is 0 — only reachable for keys
+    never built). Lazy, no job; the cell table is broadcastable at any
+    corpus size (bounded by depth*width rows). Returns (key, est) — one
+    row per DISTINCT probe key; est >= the key's true built count, with
     deterministic md5-collision overestimates."""
-    cms = cms.localCheckpoint(eager=True)
-    _cms_handshake(cms, "query", width, depth)
-    cells = cms.where(F.col("d") >= 0)
+    width, depth = column_params(cms, *_CMS)
     pos = _cms_positions(
         probe.select(F.col(key_col).alias("key")).distinct(),
         width,
@@ -348,7 +285,7 @@ def cms_query(
         "key",
     )
     return (
-        pos.join(F.broadcast(cells), ["d", "c"], "left")
+        pos.join(F.broadcast(cms), ["d", "c"], "left")
         .select("key", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
         .groupBy("key")
         .agg(F.min("cnt").cast("bigint").alias("est"))
@@ -356,13 +293,18 @@ def cms_query(
     )
 
 
-def cms_inner_product(
-    a: DataFrame,
-    b: DataFrame,
-    width: int = 1 << 12,
-    depth: int = 4,
-    eager: bool = True,
-) -> DataFrame:
+def _mass_max(cms: DataFrame, side: str) -> DataFrame:
+    """One row: the sketch's stream mass (the d=0 cells' sum) and its
+    largest cell, as ``mass_<side>`` / ``max_<side>``."""
+    return cms.agg(
+        F.coalesce(F.sum(F.when(F.col("d") == 0, F.col("cnt"))), F.lit(0)).alias(
+            f"mass_{side}"
+        ),
+        F.coalesce(F.max("cnt"), F.lit(0)).alias(f"max_{side}"),
+    )
+
+
+def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
     """Join-SIZE estimate from two :func:`cms_build` sketches (Cormode &
     Muthukrishnan 2005 §4.2): the inner product sum_k fA(k)*fB(k) — i.e.
     |A JOIN B| on the sketched key — estimated as
@@ -372,49 +314,33 @@ def cms_inner_product(
     mass, so est >= true join size, always (the CMS no-undercount
     guarantee lifted to pairs).
 
-    Plan shape: meta handshake on both inputs (2 bounded collects), one
-    hash join of the two cell tables on (d, c) — each side bounded by
+    Plan shape: one bounded collect (the overflow guard below), one hash
+    join of the two cell tables on (d, c) — each side bounded by
     depth*width rows regardless of corpus size — a per-d partial-
     aggregable sum (depth rows), and a min over those depth rows (the
     length_quantiles allowed scalar class). Estimating a 100 TB join
-    costs two sketch builds + O(depth*width) work, never the join.
+    costs two sketch builds + O(depth*width) work, never the join; pass
+    materialized sketches, since the guard and the join both read them.
 
     Inputs must share (width, depth) — cells for the same key must land
     in the same (d, c) on both sides, which the identical md5 cell
-    arithmetic guarantees only at identical shapes; the handshake
-    refuses mismatches. It also refuses sketch pairs whose dot product
-    could overflow BIGINT: each depth row's dot is bounded by
+    arithmetic guarantees only at identical shapes; differently shaped
+    inputs are refused. So are sketch pairs whose dot product could
+    overflow BIGINT: each depth row's dot is bounded by
     ``min(max_cell(A) * |B|_1, |A|_1 * max_cell(B))`` (sum_c A*B <=
     max(A) * sum_c B — the worst case is ALL mass co-occupying one cell,
     so dividing by width would under-guard skewed sketches), and when
     that bound reaches ~2^62 the non-ANSI sum would wrap silently and
     invert the no-undercount guarantee — the guard turns the wrap into
     an error telling the caller to pre-aggregate or split the streams
-    (mass from the d=0 row sum, max over all cells; two bounded
-    aggregates, exact python-int arithmetic). Returns one row: ``est``
-    (BIGINT). ``eager=False`` skips the localCheckpoints (plan
-    inspection, or inputs the caller has already materialized)."""
-    if eager:
-        a = a.localCheckpoint(eager=True)
-        b = b.localCheckpoint(eager=True)
-    stats = []
-    for side, frame in (
-        ("left inner-product input", a),
-        ("right inner-product input", b),
-    ):
-        _cms_handshake(frame, side, width, depth)
-        r = (
-            frame.where(F.col("d") >= 0)
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("d") == 0, F.col("cnt"))), F.lit(0)
-                ).alias("mass"),
-                F.coalesce(F.max("cnt"), F.lit(0)).alias("mx"),
-            )
-            .collect()[0]
-        )
-        stats.append((int(r["mass"]), int(r["mx"])))
-    (mass_a, max_a), (mass_b, max_b) = stats
+    (mass from the d=0 row sum, max over all cells; one collect of both
+    sides' two aggregates, exact python-int arithmetic). Returns one
+    row: ``est`` (BIGINT)."""
+    _width, depth = _same_params(a, b, _CMS, "inner-product")
+    s = _mass_max(a, "a").crossJoin(_mass_max(b, "b")).collect()[0]
+    mass_a, max_a, mass_b, max_b = (
+        int(s[c]) for c in ("mass_a", "max_a", "mass_b", "max_b")
+    )
     if min(max_a * mass_b, mass_a * max_b) >= 1 << 62:
         raise ValueError(
             f"cms inner-product overflow: the per-row dot bound "
@@ -423,8 +349,8 @@ def cms_inner_product(
             "limit — the sum would wrap silently; pre-aggregate or split "
             "the streams before sketching"
         )
-    ca = a.where(F.col("d") >= 0).select("d", "c", F.col("cnt").alias("cnt_a"))
-    cb = b.where(F.col("d") >= 0).select("d", "c", F.col("cnt").alias("cnt_b"))
+    ca = a.select("d", "c", F.col("cnt").alias("cnt_a"))
+    cb = b.select("d", "c", F.col("cnt").alias("cnt_b"))
     dots = (
         ca.join(cb, ["d", "c"])
         .groupBy("d")
@@ -492,9 +418,7 @@ def cms_heavy_hitters(
     """
     keyed = df.select(F.col(key_col).alias("k__"))
     flat = [0] * (depth * width)
-    for r in cms_build(keyed, "k__", width=width, depth=depth).where(
-        F.col("d") >= 0
-    ).collect():
+    for r in cms_build(keyed, "k__", width=width, depth=depth).collect():
         flat[r["d"] * width + r["c"]] = r["cnt"]
     total = sum(flat[:width])
     arr = F.lit(flat)
@@ -518,13 +442,6 @@ def cms_heavy_hitters(
         .where(F.col("cnt") * den >= bar)
         .withColumnRenamed("k__", key_col)
     )
-
-
-# Histogram meta sentinels: b is the bin index (real rows b >= 0), the
-# separate-rows discipline shared with the Bloom/CMS handshakes above.
-_HIST_META_LO = -1
-_HIST_META_HI = -2
-_HIST_META_N = -3
 
 
 def hist_build(
@@ -555,10 +472,9 @@ def hist_build(
     of the documented top bin) and RAISE in DuckDB — and it keeps the
     operands nonnegative, so Spark's DIV and DuckDB's // are the same
     floor division and the sketch and every quantile read off it replay
-    bit-identically. Stored as (b, cnt) rows
-    plus meta rows b=-1 (lo) / b=-2 (hi) / b=-3 (n_bins) — the
-    separate-rows parameter handshake (a mismatched read refuses rather
-    than interpolating against the wrong edges)."""
+    bit-identically. Stored as (b, cnt) rows; ``b`` carries ``{lo, hi,
+    n_bins}`` as column metadata, so every read interpolates against the
+    edges the sketch was built with."""
     span = hi - lo
     cells = (
         df.select(F.col(value_col).cast("bigint").alias("v__"))
@@ -578,71 +494,28 @@ def hist_build(
         .groupBy("b")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    meta = values_frame(
-        df.sparkSession,
-        [(_HIST_META_LO, lo), (_HIST_META_HI, hi), (_HIST_META_N, n_bins)],
-        "b bigint, cnt bigint",
-    )
-    # prune-enabling no-op filter (r6): every real row's sentinel key is
-    # >= 0 by construction, and stating it lets Catalyst constant-fold a
-    # handshake's sentinel-only read (key < 0) to the literal meta branch
-    # instead of scanning the whole build input per handshake
-    return cells.where(F.col("b") >= 0).unionByName(meta)
+    return _stamp(cells, _HIST, (lo, hi, n_bins))
 
 
-def _hist_handshake(
-    hist: DataFrame, lo: int, hi: int, n_bins: int, what: str, eager: bool = True
-) -> DataFrame:
-    """localCheckpoint + meta validation; returns the materialized frame
-    so the caller's plan reads the same materialization the handshake
-    collected (the bloom_probe/cms_query discipline); ``eager=False``
-    skips the checkpoint."""
-    if eager:
-        hist = hist.localCheckpoint(eager=True)
-    meta = {r["b"]: r["cnt"] for r in hist.where(F.col("b") < 0).collect()}
-    found = (meta.get(_HIST_META_LO), meta.get(_HIST_META_HI), meta.get(_HIST_META_N))
-    if found != (lo, hi, n_bins):
-        raise ValueError(
-            f"hist meta mismatch on {what}: expected (lo, hi, n_bins)="
-            f"{(lo, hi, n_bins)}, sketch carries {found} — "
-            "build and read must use identical parameters"
-        )
-    return hist
-
-
-def hist_merge(
-    a: DataFrame,
-    b: DataFrame,
-    lo: int = 0,
-    hi: int = 1 << 20,
-    n_bins: int = 256,
-) -> DataFrame:
-    """Merge two :func:`hist_build` sketches: per-bin sum of the count
-    rows (exactly the histogram of the concatenated inputs), after the
-    meta handshake on BOTH inputs. Meta rows are carried once, not
-    summed."""
-    a = _hist_handshake(a, lo, hi, n_bins, "left merge input")
-    b = _hist_handshake(b, lo, hi, n_bins, "right merge input")
+def hist_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two :func:`hist_build` sketches of identical (lo, hi,
+    n_bins): per-bin sum of the count rows (exactly the histogram of the
+    concatenated inputs). Refuses differently binned inputs; lazy, no
+    job."""
+    params = _same_params(a, b, _HIST, "merge")
     cells = (
-        a.where(F.col("b") >= 0)
-        .unionByName(b.where(F.col("b") >= 0))
+        a.unionByName(b)
         .groupBy("b")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-    return cells.unionByName(a.where(F.col("b") < 0))
+    return _stamp(cells, _HIST, params)
 
 
-def hist_quantiles(
-    hist: DataFrame,
-    percentiles: list[int],
-    lo: int = 0,
-    hi: int = 1 << 20,
-    n_bins: int = 256,
-    eager: bool = True,
-) -> DataFrame:
-    """Quantile read-off over a :func:`hist_build` sketch, fully
-    relational and fully integer — (p, rnk, est, bin_lo, bin_hi) per
-    requested integer percentile in [1, 100]:
+def hist_quantiles(hist: DataFrame, percentiles: list[int]) -> DataFrame:
+    """Quantile read-off over a :func:`hist_build` sketch, with the
+    sketch's own (lo, hi, n_bins), fully relational and fully integer —
+    (p, rnk, est, bin_lo, bin_hi) per requested integer percentile in
+    [1, 100]:
 
     - rnk = ceil(N * p / 100), the 1-based order statistic targeted
       (percentile_disc convention);
@@ -658,16 +531,16 @@ def hist_quantiles(
     Every frame here is bounded by n_bins or len(percentiles) rows — the
     cumulative sum is a self-join over <= n_bins^2 pairs and the rest are
     broadcast-size cross joins, so nothing in the plan scales with corpus
-    size and no SinglePartition window appears. ``eager=False`` skips
-    the handshake checkpoint (plan inspection)."""
-    hist = _hist_handshake(hist, lo, hi, n_bins, "quantile read", eager)
+    size and no SinglePartition window appears. Lazy, no job; the plan
+    reads ``hist`` three times, so pass a materialized sketch when its
+    build is costly."""
+    lo, hi, n_bins = column_params(hist, *_HIST)
     spark = hist.sparkSession
-    cells = hist.where(F.col("b") >= 0)
-    total = cells.agg(F.sum("cnt").cast("bigint").alias("n_total"))
+    total = hist.agg(F.sum("cnt").cast("bigint").alias("n_total"))
     # cumulative count per bin: sum over bins <= b (n_bins^2 pairs max)
     cum = (
-        cells.alias("a")
-        .join(F.broadcast(cells.alias("c")), F.col("c.b") <= F.col("a.b"))
+        hist.alias("a")
+        .join(F.broadcast(hist.alias("c")), F.col("c.b") <= F.col("a.b"))
         .groupBy(F.col("a.b").alias("b"), F.col("a.cnt").alias("cnt"))
         .agg(F.sum("c.cnt").cast("bigint").alias("cum"))
     )
@@ -825,18 +698,6 @@ def grouped_quantiles(
     )
 
 
-# HLL meta sentinels: bucket is the register index (real rows bucket >= 0),
-# the separate-rows parameter handshake shared with Bloom/CMS/hist above.
-# _HLL_META_G marks a GROUPED build (hll_build_grouped): without it a
-# grouped register table would pass the global handshake and the global
-# read-off would silently aggregate registers across all groups (occupied
-# > m, negative z_scaled) — the strict handshake refuses the cross-read
-# in both directions.
-_HLL_META_P = -1
-_HLL_META_W = -2
-_HLL_META_G = -3
-
-
 def hll_hash(col: Column, p: int = 8, w_bits: int = 32, prefix: str = "hll:") -> Column:
     """The HLL item hash: the first (p + w_bits)/4 hex chars of md5 as a
     BIGINT — identical on DuckDB via ('0x' || substr(md5(prefix || x),
@@ -858,6 +719,15 @@ def _hll_check_params(p: int, w_bits: int) -> None:
     # and num1 * 7213 * m inside BIGINT (see hll_estimate)
     if 2 * p + w_bits + 1 > 62:
         raise ValueError("2p + w_bits + 1 must be <= 62 (estimate overflow headroom)")
+
+
+# an HLL register table's parameters, stamped on bucket; ``grouped`` tells
+# a hll_build_grouped table from a global one, whose reads and merge would
+# silently aggregate registers across groups (occupied > m, negative
+# z_scaled)
+_HLL_NAMES = ("p", "w_bits", "grouped")
+_HLL = ("bucket", _HLL_NAMES, "hll_build", lambda p, w_bits, _g: _hll_check_params(p, w_bits))
+_HLL_GROUPED = ("bucket", _HLL_NAMES, "hll_build_grouped", _HLL[3])
 
 
 def hll_build(
@@ -885,9 +755,9 @@ def hll_build(
     groupBy/max to <= 2^p rows regardless of corpus size — duplicates
     never shuffle past the map side, which is the whole 100 TB story.
     Mergeable: union -> groupBy max is EXACTLY the sketch of the
-    concatenated streams (hll_merge). Stored as (bucket, r) rows plus
-    meta rows bucket=-1 (p) / bucket=-2 (w_bits), the separate-rows
-    handshake.
+    concatenated streams (hll_merge). Stored as (bucket, r) rows;
+    ``bucket`` carries ``{p, w_bits, grouped: false}`` as column
+    metadata, read by :func:`hll_estimate` and :func:`hll_merge`.
 
     ``pre_hashed=True`` treats ``key_col`` as an ALREADY-COMPUTED
     :func:`hll_hash` BIGINT (same p/w_bits) instead of raw items — the
@@ -898,16 +768,7 @@ def hll_build(
     are identical by construction (pinned by test)."""
     _hll_check_params(p, w_bits)
     cells = _hll_cells(df, key_col, p, w_bits, pre_hashed=pre_hashed)
-    meta = values_frame(
-        df.sparkSession,
-        [(_HLL_META_P, p), (_HLL_META_W, w_bits)],
-        "bucket bigint, r bigint",
-    )
-    # prune-enabling no-op filter (r6): every real row's sentinel key is
-    # >= 0 by construction, and stating it lets Catalyst constant-fold a
-    # handshake's sentinel-only read (key < 0) to the literal meta branch
-    # instead of scanning the whole build input per handshake
-    return cells.where(F.col("bucket") >= 0).unionByName(meta)
+    return _stamp(cells, _HLL, (p, w_bits, False))
 
 
 def _hll_cells(
@@ -996,68 +857,36 @@ def _hll_readoff(agg: DataFrame, p: int, w_bits: int, keep: tuple = ()) -> DataF
     )
 
 
-def _hll_handshake(
-    reg: DataFrame,
-    p: int,
-    w_bits: int,
-    what: str,
-    eager: bool = True,
-    grouped: bool = False,
-) -> DataFrame:
-    """localCheckpoint + STRICT meta validation (the bloom_probe
-    discipline; ``eager=False`` skips the checkpoint): the sentinel set
-    must match exactly — (p, w_bits) for a global build, plus the
-    grouped marker for a grouped one — so a grouped register table can
-    never slip into the global read-off/merge (where cross-group
-    aggregation would silently produce occupied > m and negative
-    z_scaled) and vice versa."""
-    if eager:
-        reg = reg.localCheckpoint(eager=True)
-    meta = {r["bucket"]: r["r"] for r in reg.where(F.col("bucket") < 0).collect()}
-    expected = {_HLL_META_P: p, _HLL_META_W: w_bits}
-    if grouped:
-        expected[_HLL_META_G] = 1
-    if meta != expected:
+def _hll_params(reg: DataFrame, grouped: bool, what: str) -> tuple[int, int]:
+    """(p, w_bits) of a register table, refusing a grouped table where a
+    global one is read and vice versa."""
+    p, w_bits, is_grouped = column_params(reg, *(_HLL_GROUPED if grouped else _HLL))
+    if is_grouped != grouped:
         raise ValueError(
-            f"hll meta mismatch on {what}: expected sentinels {expected}, "
-            f"sketch carries {meta} — build and read must use identical "
-            "parameters, and a grouped build (marker -3) is only readable "
-            "by the grouped read-off"
+            f"hll meta mismatch on {what}: a {'grouped' if is_grouped else 'global'} "
+            f"build reads only through hll_estimate{'_grouped' if is_grouped else ''}"
         )
-    return reg
+    return p, w_bits
 
 
-def hll_merge(
-    a: DataFrame,
-    b: DataFrame,
-    p: int = 8,
-    w_bits: int = 32,
-) -> DataFrame:
-    """Merge two :func:`hll_build` sketches: per-bucket MAX of the
-    register rows — exactly the sketch of the concatenated input
-    streams (max is associative/commutative/idempotent, so any merge
-    tree, any partitioning, any duplication gives the identical table;
-    the property the hll_merge contract entry proves cross-engine).
-    Meta handshake on BOTH inputs first; meta rows carried once."""
-    a = _hll_handshake(a, p, w_bits, "left merge input")
-    b = _hll_handshake(b, p, w_bits, "right merge input")
-    cells = (
-        a.where(F.col("bucket") >= 0)
-        .unionByName(b.where(F.col("bucket") >= 0))
-        .groupBy("bucket")
-        .agg(F.max("r").alias("r"))
-    )
-    return cells.unionByName(a.where(F.col("bucket") < 0))
+def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two :func:`hll_build` sketches of identical (p, w_bits):
+    per-bucket MAX of the register rows — exactly the sketch of the
+    concatenated input streams (max is associative/commutative/
+    idempotent, so any merge tree, any partitioning, any duplication
+    gives the identical table; the property the hll_merge contract entry
+    proves cross-engine). Refuses differently shaped or grouped inputs;
+    lazy, no job."""
+    params = _same_params(a, b, _HLL, "merge")
+    _hll_params(a, False, "merge")
+    cells = a.unionByName(b).groupBy("bucket").agg(F.max("r").alias("r"))
+    return _stamp(cells, _HLL, params)
 
 
-def hll_estimate(
-    reg: DataFrame,
-    p: int = 8,
-    w_bits: int = 32,
-    eager: bool = True,
-) -> DataFrame:
-    """Raw HLL estimate read-off, fully relational and fully INTEGER —
-    one row (m, occupied, n_zero, z_scaled, est):
+def hll_estimate(reg: DataFrame) -> DataFrame:
+    """Raw HLL estimate read-off with the sketch's own (p, w_bits), fully
+    relational and fully INTEGER — one row (m, occupied, n_zero,
+    z_scaled, est):
 
     - z_scaled = sum over all m registers of 2^(C - M_j) with
       C = w_bits + 1 (empty registers contribute 2^C), i.e. the HLL
@@ -1079,10 +908,10 @@ def hll_estimate(
 
     The scalar agg runs over <= m register rows — the length_quantiles
     allowed-SinglePartition class (a 1-row total over a bounded sketch,
-    never over corpus-sized data). ``eager=False`` skips the handshake
-    checkpoint."""
-    reg = _hll_handshake(reg, p, w_bits, "estimate read", eager)
-    agg = reg.where(F.col("bucket") >= 0).agg(*_hll_occupancy_aggs(w_bits + 1))
+    never over corpus-sized data). Lazy, no job; refuses a
+    :func:`hll_build_grouped` table."""
+    p, w_bits = _hll_params(reg, False, "estimate read")
+    agg = reg.agg(*_hll_occupancy_aggs(w_bits + 1))
     return _hll_readoff(agg, p, w_bits)
 
 
@@ -1129,57 +958,34 @@ def hll_build_grouped(
     partial-aggregable groupBy(group, bucket)/max to <= n_groups * 2^p
     rows regardless of corpus size. A hot group's duplicates still
     collapse map-side — the register table never skews even when the
-    group does. Meta rows carry bucket < 0 with a NULL group (a real
-    row always has bucket >= 0, so the sentinel can't collide), PLUS
-    the grouped-build marker (bucket = -3): the strict handshake makes
-    a grouped table unreadable by the global read-off/merge — feeding
-    one through hll_estimate would otherwise silently aggregate
-    registers across all groups (occupied > m, negative z_scaled).
-    Register construction is :func:`_hll_cells`, byte-identical to the
-    global build's. Mergeable per group by MAX, the hll_merge property
-    unchanged."""
+    group does. ``bucket`` carries ``{p, w_bits, grouped: true}`` as
+    column metadata: the global read-off and merge refuse a grouped
+    table (they would silently aggregate registers across all groups —
+    occupied > m, negative z_scaled), and :func:`hll_estimate_grouped`
+    refuses a global one. Register construction is :func:`_hll_cells`,
+    byte-identical to the global build's. Mergeable per group by MAX,
+    the hll_merge property unchanged."""
     _hll_check_params(p, w_bits)
     _hll_check_group_col(group_col)
     cells = _hll_cells(df, key_col, p, w_bits, group_col=group_col, pre_hashed=pre_hashed)
-    meta = values_frame(
-        df.sparkSession,
-        [(_HLL_META_P, p), (_HLL_META_W, w_bits), (_HLL_META_G, 1)],
-        "bucket bigint, r bigint",
-    ).select(F.lit(None).cast(cells.schema["g__"].dataType).alias("g__"), "bucket", "r")
-    # prune-enabling no-op filter (r6): every real row's sentinel key is
-    # >= 0 by construction, and stating it lets Catalyst constant-fold a
-    # handshake's sentinel-only read (key < 0) to the literal meta branch
-    # instead of scanning the whole build input per handshake
-    return (
-        cells.where(F.col("bucket") >= 0)
-        .unionByName(meta)
-        .withColumnRenamed("g__", group_col)
-    )
+    return _stamp(cells.withColumnRenamed("g__", group_col), _HLL_GROUPED, (p, w_bits, True))
 
 
-def hll_estimate_grouped(
-    reg: DataFrame,
-    group_col: str,
-    p: int = 8,
-    w_bits: int = 32,
-) -> DataFrame:
-    """Per-group raw HLL estimate read-off — :func:`_hll_readoff`'s
-    staged integer arithmetic (the SAME code object the global
-    hll_estimate runs), but as a PARTIAL-AGGREGABLE groupBy(group) over
-    the bounded register table (never a scalar SinglePartition: the
-    grouped form is exactly what removes it). Requires the grouped-build
-    marker — the strict handshake refuses a global build here, and a
-    grouped build there. Returns one row per group: (group, m, occupied,
-    n_zero, z_scaled, est). Same raw-estimate contract as the global
-    read-off: the linear-counting branch is deliberately absent (ln is
-    FP), n_zero flags the regime."""
+def hll_estimate_grouped(reg: DataFrame, group_col: str) -> DataFrame:
+    """Per-group raw HLL estimate read-off with the sketch's own (p,
+    w_bits) — :func:`_hll_readoff`'s staged integer arithmetic (the SAME
+    code object the global hll_estimate runs), but as a
+    PARTIAL-AGGREGABLE groupBy(group) over the bounded register table
+    (never a scalar SinglePartition: the grouped form is exactly what
+    removes it). Reads only a :func:`hll_build_grouped` table; lazy, no
+    job. Returns one row per group: (group, m, occupied, n_zero,
+    z_scaled, est). Same raw-estimate contract as the global read-off:
+    the linear-counting branch is deliberately absent (ln is FP), n_zero
+    flags the regime."""
     _hll_check_group_col(group_col)
-    reg = reg.withColumnRenamed(group_col, "g__")
-    # handshake on the meta rows (NULL group); _hll_handshake filters
-    # bucket < 0, which selects exactly the sentinels incl. the marker
-    reg = _hll_handshake(reg, p, w_bits, "grouped estimate read", grouped=True)
+    p, w_bits = _hll_params(reg, True, "grouped estimate read")
     agg = (
-        reg.where(F.col("bucket") >= 0)
+        reg.withColumnRenamed(group_col, "g__")
         .groupBy("g__")
         .agg(*_hll_occupancy_aggs(w_bits + 1))
     )

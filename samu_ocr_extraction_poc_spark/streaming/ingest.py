@@ -283,10 +283,15 @@ def latest_hll_state(spark: SparkSession, state_dir: str):
     highest ``v=<n>`` sub-directory carrying Spark's _SUCCESS marker
     (a version without the marker is a crashed half-write and is
     ignored). Returns (DataFrame, version) or (None, -1) when no
-    committed state exists. Driver-side os.listdir — state lives on the
-    driver-visible filesystem here; a cluster deployment swaps these few
-    lines for the Hadoop FileSystem API, nothing else changes."""
+    committed state exists. Raises ValueError when the version carries
+    no HLL parameters (a state written before the sketch carried them):
+    such a state must be rebuilt, not merged under guessed parameters.
+    Driver-side os.listdir — state lives on the driver-visible
+    filesystem here; a cluster deployment swaps these few lines for the
+    Hadoop FileSystem API, nothing else changes."""
     import os
+
+    from ..operators.sketch import hll_estimate
 
     best = -1
     if os.path.isdir(state_dir):
@@ -302,7 +307,15 @@ def latest_hll_state(spark: SparkSession, state_dir: str):
                     best = max(best, v)
     if best < 0:
         return None, -1
-    return spark.read.parquet(f"{state_dir}/v={best}"), best
+    state = spark.read.parquet(f"{state_dir}/v={best}")
+    try:
+        hll_estimate(state)  # validates the parameters; plans, runs nothing
+    except ValueError as e:
+        raise ValueError(
+            f"hll state at {state_dir}/v={best}: {e}; delete the state "
+            "directory and its checkpoint and replay the stream to rebuild it"
+        ) from None
+    return state, best
 
 
 def stream_hll(
@@ -318,13 +331,16 @@ def stream_hll(
     needs unbounded state). Each micro-batch builds its OWN register
     table (operators/sketch.py:hll_build — one partial-aggregable
     groupBy/max) and merges it into the persisted sketch via foreachBatch;
-    the merged <= 2^p + 2 rows are collected (the bounded collect-once
+    the merged <= 2^p rows are collected (the bounded collect-once
     discipline) and written as a NEW VERSION ``v=<batch_id>`` whose
     _SUCCESS marker is the commit point — an in-place overwrite deletes
     the old state before the new one exists, so a crash mid-write would
     silently reset the sketch to the replayed batch alone (r5 review
     finding); with versions, a torn write leaves no marker and the
-    previous committed version keeps serving.
+    previous committed version keeps serving. Each version keeps the
+    sketch's parameters in its ``bucket`` metadata, so a restart with
+    other (p, w_bits) is refused by the merge instead of garbling the
+    registers.
 
     The delivery-semantics argument: hll_merge is per-bucket MAX —
     associative, commutative, and IDEMPOTENT — so replaying a micro-batch
@@ -338,8 +354,9 @@ def stream_hll(
 
     Returns the streaming query (availableNow in tests); read the
     current sketch with :func:`latest_hll_state` (hll_estimate consumes
-    it directly — meta rows are carried through the state).
+    it directly).
     """
+    from ..functions.frames import values_frame
     from ..operators.corpus import _kgrams
     from ..operators.sketch import hll_build, hll_merge
 
@@ -351,14 +368,12 @@ def stream_hll(
         breg = hll_build(items, "tok", p=p, w_bits=w_bits)
         sess = batch.sparkSession
         state, _v = latest_hll_state(sess, state_dir)
-        merged = (
-            hll_merge(state, breg, p=p, w_bits=w_bits) if state is not None else breg
-        )
-        # bounded collect (<= 2^p register rows + 2 meta rows); the write
-        # targets this batch's own version dir, so a replayed batch
-        # overwrites only itself and the _SUCCESS marker commits it
-        rows = [(int(r["bucket"]), int(r["r"])) for r in merged.collect()]
-        sess.createDataFrame(rows, "bucket bigint, r bigint").coalesce(1).write.mode(
+        merged = hll_merge(state, breg) if state is not None else breg
+        # bounded collect (<= 2^p register rows) into a LocalRelation that
+        # keeps the schema's metadata; the write targets this batch's own
+        # version dir, so a replayed batch overwrites only itself and the
+        # _SUCCESS marker commits it
+        values_frame(sess, merged.collect(), merged.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{state_dir}/v={batch_id}")
 

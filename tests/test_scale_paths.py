@@ -772,7 +772,7 @@ def test_pair_operators_release_index_caches(spark):
     train = docs.where("doc_id % 2 = 0")
     test_docs = docs.where("doc_id % 2 = 1")
     calls = [
-        lambda: lsh_candidate_pairs(minhash_signatures(docs), num_hashes=8, rows_per_band=2),
+        lambda: lsh_candidate_pairs(minhash_signatures(docs), rows_per_band=2),
         lambda: simhash_multiprobe_pairs(simhash(docs), max_hamming=12),
         lambda: ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_df=100),
         lambda: shared_window_pairs(docs, k=16, max_df=50),
@@ -1662,21 +1662,13 @@ def test_bloom_membership_semantics(spark):
     direct = {(r["word_idx"], r["bits"]) for r in bloom.collect()}
     assert {(r["word_idx"], r["bits"]) for r in merged.collect()} == direct
 
-    # parameter handshake: probing with different m_bits/k must refuse —
-    # a silent mismatch would emit false NEGATIVES, the one failure a
-    # Bloom filter promises never to have
-    with pytest.raises(ValueError, match="meta mismatch"):
-        bloom_probe(bloom, probe, "key", m_bits=1 << 20).collect()
-    with pytest.raises(ValueError, match="meta mismatch"):
-        bloom_probe(bloom, probe, "key", k=5).collect()
-
 
 def test_cms_semantics(spark):
     """Count-min sketch: estimates never undercount (the structural
     guarantee); at a wide sketch over a tiny key set there are no
     collisions, so estimates are exact; merged sketches equal the sketch
     of the concatenated input (CMS linearity); a width/depth-mismatched
-    query or merge refuses (the meta handshake)."""
+    merge refuses."""
     import pytest as _pt
 
     from samu_ocr_extraction_poc_spark.operators.sketch import (
@@ -1704,8 +1696,6 @@ def test_cms_semantics(spark):
     assert em == eb
     assert dict(em)["a"] == 4 and dict(em)["d"] == 1
 
-    with _pt.raises(ValueError, match="cms meta mismatch"):
-        cms_query(sk, probe, "key", width=512).collect()
     with _pt.raises(ValueError, match="cms meta mismatch on right merge input"):
         cms_merge(sk, cms_build(ys, "key", depth=2))
 
@@ -1718,7 +1708,7 @@ def test_cms_semantics(spark):
     exact = {r["key"]: r["cnt"] for r in big.groupBy("key").count().withColumnRenamed("count", "cnt").collect()}
     nest = {
         r["key"]: r["est"]
-        for r in cms_query(nsk, big.distinct(), "key", width=16, depth=2).collect()
+        for r in cms_query(nsk, big.distinct(), "key").collect()
     }
     assert set(nest) == set(exact)
     assert all(nest[k] >= exact[k] for k in exact)
@@ -1931,7 +1921,7 @@ def test_hist_quantile_semantics(spark):
     """Histogram sketch: bin edges and interpolated estimates match the
     hand-computed integer arithmetic (incl. top-bin clamping of
     out-of-range values); merged histograms equal the histogram of the
-    concatenated input; a parameter-mismatched read or merge refuses."""
+    concatenated input; a parameter-mismatched merge refuses."""
     import pytest as _pt
 
     from samu_ocr_extraction_poc_spark.operators.sketch import (
@@ -1944,7 +1934,7 @@ def test_hist_quantile_semantics(spark):
     h = hist_build(vals, "v", lo=0, hi=100, n_bins=10)
     out = {
         r["p"]: (r["rnk"], r["est"], r["bin_lo"], r["bin_hi"])
-        for r in hist_quantiles(h, [20, 50, 80, 100], lo=0, hi=100, n_bins=10).collect()
+        for r in hist_quantiles(h, [20, 50, 80, 100]).collect()
     }
     # bins: 5->b0, 10,15->b1, 20->b2, 100 clamps into b9; N=5
     assert out[20] == (1, 0, 0, 10)  # 1st order stat, bin 0 first member
@@ -1955,35 +1945,25 @@ def test_hist_quantile_semantics(spark):
     # linearity: merge of two halves == histogram of the whole
     h1 = hist_build(vals.where(F.col("v") <= 10), "v", lo=0, hi=100, n_bins=10)
     h2 = hist_build(vals.where(F.col("v") > 10), "v", lo=0, hi=100, n_bins=10)
-    merged = hist_merge(h1, h2, lo=0, hi=100, n_bins=10)
-    em = sorted(map(tuple, hist_quantiles(merged, [50, 100], lo=0, hi=100, n_bins=10).collect()))
-    eb = sorted(map(tuple, hist_quantiles(h, [50, 100], lo=0, hi=100, n_bins=10).collect()))
+    merged = hist_merge(h1, h2)
+    em = sorted(map(tuple, hist_quantiles(merged, [50, 100]).collect()))
+    eb = sorted(map(tuple, hist_quantiles(h, [50, 100]).collect()))
     assert em == eb
 
     with _pt.raises(ValueError, match="hist meta mismatch"):
-        hist_quantiles(h, [50], lo=0, hi=100, n_bins=20).collect()
-    with _pt.raises(ValueError, match="hist meta mismatch"):
-        hist_merge(h, hist_build(vals, "v", lo=0, hi=200, n_bins=10), lo=0, hi=100, n_bins=10)
+        hist_merge(h, hist_build(vals, "v", lo=0, hi=200, n_bins=10))
 
-    # empty input: meta-only sketch reads off as zero quantile rows
+    # empty input: the bin-less sketch reads off as zero quantile rows
     empty = hist_build(vals.where(F.col("v") < 0), "v", lo=0, hi=100, n_bins=10)
-    assert hist_quantiles(empty, [50], lo=0, hi=100, n_bins=10).count() == 0
+    assert hist_quantiles(empty, [50]).count() == 0
 
     # overflow guard: an extreme outlier (>= 2^63 / n_bins — the
     # corrupt-input class) must clamp into the TOP bin, not wrap the
     # (v - lo) * n_bins product negative and land silently in bin 0
     huge = spark.createDataFrame([(2**62,), (-(2**62),), (50,)], "v bigint")
     hh = hist_build(huge, "v", lo=0, hi=100, n_bins=10)
-    bins = {r["b"]: r["cnt"] for r in hh.where(F.col("b") >= 0).collect()}
+    bins = {r["b"]: r["cnt"] for r in hh.collect()}
     assert bins == {9: 1, 0: 1, 5: 1}
-
-    # eager=False: same values, no checkpoint materialization in the plan
-    lazy = sorted(
-        map(tuple, hist_quantiles(h, [50], lo=0, hi=100, n_bins=10, eager=False).collect())
-    )
-    assert lazy == sorted(
-        map(tuple, hist_quantiles(h, [50], lo=0, hi=100, n_bins=10).collect())
-    )
 
 
 def test_grouped_quantiles_semantics(spark):
@@ -2553,7 +2533,7 @@ def test_lsh_probe_dedup_flags_known_dup(spark):
 
     # cross-check vs the self-join pairs over the union
     both = corpus.unionByName(batch)
-    pairs = lsh_candidate_pairs(minhash_signatures(both), num_hashes=8, rows_per_band=2)
+    pairs = lsh_candidate_pairs(minhash_signatures(both), rows_per_band=2)
     cross = {
         (r["doc_a"], r["doc_b"])
         for r in pairs.collect()
@@ -2702,7 +2682,7 @@ def test_probes_use_the_index_signature_parameters(spark, tmp_path):
         schema,
     )
     pairs = lsh_candidate_pairs(
-        minhash_signatures(corpus.unionByName(batch), num_hashes=16, k=5), 16, 4
+        minhash_signatures(corpus.unionByName(batch), num_hashes=16, k=5), rows_per_band=4
     )
     flagged = {b for a, b in ((r["doc_a"], r["doc_b"]) for r in pairs.collect()) if a < 10 <= b}
     assert flagged == {10, 11}  # premise: both populations present
@@ -2998,8 +2978,8 @@ def test_hll_semantics_and_plan(spark):
     oracle); the raw estimate lands within 3 standard errors
     (3 * 1.04/sqrt(m)) of the true distinct count on a 5k-item stream;
     duplicates never change a register (max-idempotence); merged halves
-    equal the full build register-for-register; parameter-mismatched
-    reads refuse (the meta handshake); and the BUILD plan shuffles only
+    equal the full build register-for-register; a parameter-mismatched
+    merge refuses; and the BUILD plan shuffles only
     the <= m partial registers — the exchange is hash-partitioned on
     bucket, never SinglePartition (the corpus-sized pass stays
     partial-aggregable map-side)."""
@@ -3019,7 +2999,7 @@ def test_hll_semantics_and_plan(spark):
     df = spark.createDataFrame([(x,) for x in items * 2], "key string")
 
     reg = hll_build(df, "key")
-    got = {r["bucket"]: r["r"] for r in reg.where("bucket >= 0").collect()}
+    got = {r["bucket"]: r["r"] for r in reg.collect()}
 
     # pure-Python replay of the documented md5/bit-length register rule
     want: dict[int, int] = {}
@@ -3038,17 +3018,15 @@ def test_hll_semantics_and_plan(spark):
 
     # duplicates are free: the single-copy stream gives the same registers
     reg1 = hll_build(spark.createDataFrame([(x,) for x in items], "key string"), "key")
-    assert {r["bucket"]: r["r"] for r in reg1.where("bucket >= 0").collect()} == want
+    assert {r["bucket"]: r["r"] for r in reg1.collect()} == want
 
     # merge of disjoint halves == full build, register for register
     d0 = df.where(F.crc32("key") % 2 == 0)
     d1 = df.where(F.crc32("key") % 2 == 1)
     merged = hll_merge(hll_build(d0, "key"), hll_build(d1, "key"))
-    assert {r["bucket"]: r["r"] for r in merged.where("bucket >= 0").collect()} == want
+    assert {r["bucket"]: r["r"] for r in merged.collect()} == want
 
-    # handshakes refuse mismatched parameters
-    with _pt.raises(ValueError, match="hll meta mismatch"):
-        hll_estimate(reg, p=9, w_bits=28).collect()
+    # a merge refuses mismatched parameters
     with _pt.raises(ValueError, match="hll meta mismatch"):
         hll_merge(reg, hll_build(d1, "key", p=9, w_bits=31))
     with _pt.raises(ValueError, match="p \\+ w_bits"):
@@ -3062,7 +3040,7 @@ def test_hll_semantics_and_plan(spark):
 
     # plan: the only corpus-sized stage ends at a partial agg; the
     # exchange carries hashpartitioning(bucket), never SinglePartition
-    plan = reg.where("bucket >= 0")._jdf.queryExecution().executedPlan().toString()
+    plan = reg._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning" in plan and "bucket" in plan
     assert "SinglePartition" not in plan
 
@@ -3534,7 +3512,7 @@ def test_hll_build_pre_hashed_matches_raw_build(spark):
         (r["bucket"], r["r"])
         for r in hll_build(hashed, "h", pre_hashed=True).collect()
     }
-    assert raw == pre and len(raw) > 2  # cells + the 2 meta sentinels
+    assert raw == pre and len(raw) > 2
 
     raw_g = {
         (r["grp"], r["bucket"], r["r"])

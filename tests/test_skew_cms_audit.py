@@ -2,7 +2,7 @@
 operators/sketch.py:cms_inner_product. Cross-engine value parity lives in
 tests/test_oracle_parity.py ("skew_audit", "cms_join_size"); these tests
 pin the semantics against pure-Python replays, the no-undercount
-guarantee, the handshake, and the plan shapes (no Window; top-k via
+guarantee, the shape refusal, and the plan shapes (no Window; top-k via
 TakeOrdered)."""
 
 from __future__ import annotations
@@ -119,7 +119,7 @@ def test_cms_inner_product_matches_serial_replay(spark, width):
     b = {f"k{i}": 13 - i for i in range(3, 13)}
     sk_a = cms_build(_str_keys_df(spark, a), "k", width=width, depth=3)
     sk_b = cms_build(_str_keys_df(spark, b), "k", width=width, depth=3)
-    got = cms_inner_product(sk_a, sk_b, width=width, depth=3).collect()
+    got = cms_inner_product(sk_a, sk_b).collect()
     assert len(got) == 1
     assert got[0]["est"] == _py_inner_product(a, b, width, 3)
 
@@ -132,7 +132,7 @@ def test_cms_inner_product_never_undercounts(spark):
     true_ip = sum(a[k] * b[k] for k in set(a) & set(b))
     sk_a = cms_build(_str_keys_df(spark, a), "k", width=8, depth=3)
     sk_b = cms_build(_str_keys_df(spark, b), "k", width=8, depth=3)
-    est = cms_inner_product(sk_a, sk_b, width=8, depth=3).collect()[0]["est"]
+    est = cms_inner_product(sk_a, sk_b).collect()[0]["est"]
     assert est >= true_ip > 0
 
 
@@ -145,7 +145,7 @@ def test_cms_inner_product_zero_overlap_is_zero_not_null(spark):
     )
     sk_a = cms_build(_str_keys_df(spark, a), "k", width=4096, depth=3)
     sk_b = cms_build(_str_keys_df(spark, b), "k", width=4096, depth=3)
-    got = cms_inner_product(sk_a, sk_b, width=4096, depth=3).collect()
+    got = cms_inner_product(sk_a, sk_b).collect()
     assert got[0]["est"] == 0
 
 
@@ -153,13 +153,13 @@ def test_cms_inner_product_rejects_shape_mismatch(spark):
     sk_a = cms_build(_str_keys_df(spark, {"x": 1}), "k", width=8, depth=3)
     sk_b = cms_build(_str_keys_df(spark, {"x": 1}), "k", width=16, depth=3)
     with pytest.raises(ValueError, match="meta mismatch"):
-        cms_inner_product(sk_a, sk_b, width=8, depth=3)
+        cms_inner_product(sk_a, sk_b)
 
 
 def test_cms_inner_product_plan_has_no_window(spark):
     sk_a = cms_build(_str_keys_df(spark, {"x": 2}), "k", width=8, depth=3)
     sk_b = cms_build(_str_keys_df(spark, {"y": 1}), "k", width=8, depth=3)
-    df = cms_inner_product(sk_a, sk_b, width=8, depth=3, eager=False)
+    df = cms_inner_product(sk_a, sk_b)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
 
@@ -196,27 +196,13 @@ def test_grouped_hll_matches_global_per_group(spark):
     for g in ("g0", "g1", "g2"):
         want = {
             r["bucket"]: r["r"]
-            for r in hll_build(df.where(df.g == g), "key")
-            .where("bucket >= 0")
-            .collect()
+            for r in hll_build(df.where(df.g == g), "key").collect()
         }
         gotr = {
             r["bucket"]: r["r"]
-            for r in reg.where(f"g = '{g}' AND bucket >= 0").collect()
+            for r in reg.where(f"g = '{g}'").collect()
         }
         assert gotr == want
-
-
-def test_grouped_hll_handshake_refuses_mismatch(spark):
-    from samu_ocr_extraction_poc_spark.operators.sketch import (
-        hll_build_grouped,
-        hll_estimate_grouped,
-    )
-
-    df = spark.createDataFrame([("a", "x")], "g string, key string")
-    reg = hll_build_grouped(df, "g", "key")
-    with pytest.raises(ValueError, match="hll meta mismatch"):
-        hll_estimate_grouped(reg, "g", p=9, w_bits=31).collect()
 
 
 def test_cms_inner_product_missing_depth_row_means_zero(spark):
@@ -240,7 +226,7 @@ def test_cms_inner_product_missing_depth_row_means_zero(spark):
     a, b = {pair[0]: 7}, {pair[1]: 5}
     sk_a = cms_build(_str_keys_df(spark, a), "k", width=width, depth=3)
     sk_b = cms_build(_str_keys_df(spark, b), "k", width=width, depth=3)
-    got = cms_inner_product(sk_a, sk_b, width=width, depth=3).collect()
+    got = cms_inner_product(sk_a, sk_b).collect()
     assert got[0]["est"] == 0
     assert _py_inner_product(a, b, width, 3) == 0
 
@@ -251,11 +237,11 @@ def test_cms_inner_product_refuses_overflowable_masses(spark):
     df = spark.createDataFrame([("x", big)], "k string, w long")
     sk = cms_build(df, "k", width=1, depth=3, weight_col="w")
     with pytest.raises(ValueError, match="overflow"):
-        cms_inner_product(sk, sk, width=1, depth=3)
+        cms_inner_product(sk, sk)
 
 
 def test_hll_grouped_and_global_cross_reads_refuse(spark):
-    """The grouped-build marker (bucket=-3) + strict handshake: a grouped
+    """The grouped flag in the register table's parameters: a grouped
     register table must be unreadable by the GLOBAL read-off/merge
     (which would silently aggregate registers across groups — occupied
     > m, negative z_scaled), and a global build unreadable by the
