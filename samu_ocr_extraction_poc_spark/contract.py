@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from .functions import textfns as TX
 from .operators import dedup as DD
 from .operators import similarity as SIM
+from .schema import TABLE_SCHEMAS
 
 NL = " \n "
 
@@ -45,8 +46,9 @@ def _utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str, par: bool = True) -> DataFrame:
-    """Load a testdata table.
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load a testdata table with its declared schema (schema.TABLE_SCHEMAS),
+    so the read runs no schema-inference job.
 
     The sandbox parquet files are single-row-group (unsplittable), so every
     scan would otherwise run as ONE task no matter the cluster size. A real
@@ -55,10 +57,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str, par: bool = True) -> DataFra
     the two-cluster-size scaling evidence mean anything). Correctness is
     unaffected.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if par:
-        return df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------
@@ -2471,9 +2471,12 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical gate (keep the component minimum of the full-corpus LSH
     clusters — keep_canonical), and deterministic stratified sampling
     (sample_documents). Each gate is its own audited operator; the
-    composition is two left-semi joins on doc_id (both sides small relative
-    to the corpus, AQE broadcasts them when they fit)."""
+    composition is a left-semi join on the quality gate's doc_ids and a
+    left-anti join on the canonical gate's drop list (both small relative
+    to the corpus; within the broadcast budget both are literal frames,
+    whose size the planner knows, so both joins plan as broadcasts)."""
     docs = _t(spark, sf_dir, "documents")
+    from .functions.frames import local_or_checkpoint
     from .functions.jobs import run_jobs
     from .operators import corpus as CP
 
@@ -2485,20 +2488,22 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-fills them (values unchanged; each job is what it was
     # sequentially)
     def _q_gate():
-        return CP.quality_filter(docs).select("doc_id").localCheckpoint(eager=True)
+        return local_or_checkpoint(CP.quality_filter(docs).select("doc_id"), 8)
 
-    def _canon_gate():
+    def _canon_drops():
         sig = DD.minhash_signatures(docs, num_hashes=8, k=3)
         pairs = DD.lsh_candidate_pairs(sig, rows_per_band=2)
-        return DD.keep_canonical(docs, pairs).select("doc_id")
+        return DD.canonical_drops(pairs)
 
-    q, canon = run_jobs(_q_gate, _canon_gate)
+    q, drops = run_jobs(_q_gate, _canon_drops)
     sampled = CP.sample_documents(
         docs, rates={"en": 500, "de": 250}, default_rate=100
     )
+    # an anti join keeps a null doc_id; none reaches it, since the md5
+    # sample filter and the semi join both drop null ids first
     return (
         sampled.join(q, "doc_id", "left_semi")
-        .join(canon, "doc_id", "left_semi")
+        .join(drops, "doc_id", "left_anti")
         .select("doc_id", "lang", "n_chars")
     )
 
@@ -2747,9 +2752,11 @@ def curate_corpus_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnowing near-dup canonical gate (MOSS candidate pairs -> connected
     components -> keep each cluster's minimum). Demonstrates the sampled
     winnowing index feeding the same pairs->clusters->apply machinery the
-    LSH path uses. Composition = three left-semi joins on doc_id (gate
-    outputs are small; AQE broadcasts them)."""
+    LSH path uses. Composition = two left-semi joins on doc_id and a
+    left-anti join on the canonical gate's drop list (gate outputs are
+    small; AQE broadcasts them)."""
     docs = _t(spark, sf_dir, "documents")
+    from .functions.frames import local_or_checkpoint
     from .functions.jobs import run_jobs
     from .operators import corpus as CP
     from .operators import winnow as WN
@@ -2761,24 +2768,23 @@ def curate_corpus_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # curate_corpus pattern); the blocklist gate is a narrow lazy filter
     # and stays in the final job
     def _src_gate():
-        return (
-            CP.source_filter(docs, min_mean_quality=0.52)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
+        return local_or_checkpoint(
+            CP.source_filter(docs, min_mean_quality=0.52).select("doc_id"), 8
         )
 
-    def _canon_gate():
+    def _canon_drops():
         wp = WN.winnow_candidate_pairs(
             docs, k=4, w=5, min_shared=2, max_df=20
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-        return DD.keep_canonical(docs, wp).select("doc_id")
+        return DD.canonical_drops(wp)
 
-    src, canon = run_jobs(_src_gate, _canon_gate)
+    src, drops = run_jobs(_src_gate, _canon_drops)
+    # the semi joins drop null doc_ids before the anti join, which keeps them
     return (
         docs.select("doc_id", "lang", "source")
         .join(bl, "doc_id", "left_semi")
         .join(src, "doc_id", "left_semi")
-        .join(canon, "doc_id", "left_semi")
+        .join(drops, "doc_id", "left_anti")
     )
 
 
@@ -4144,37 +4150,23 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the kmeans-Lloyd precedent) over the identical edge derivation, so
     every rank matches bit-exactly — no FP convergence tolerance exists.
     Output: every node with its final rank and degrees."""
+    from .functions.frames import collect_within_budget
     from .operators import graph as GR
 
     docs = _t(spark, sf_dir, "documents")
-    # doc_id is the primary key, so |distinct ids| == |docs| — count it
-    # ONCE and hand it to both operators (each would otherwise run its
-    # own distinct+count job over the same id set; value-identical)
-    n_docs = docs.select("doc_id").distinct().count()
-    edges = GR.synth_link_graph(docs, n_links=3, salt="pr", n=n_docs).localCheckpoint(
-        eager=True
-    )
-    ranks = GR.pagerank(docs, edges, iterations=8, n=n_docs)
-    # name-based joins: ranks' lineage contains the edge table, so
-    # attribute refs would trip the ambiguous-self-join check
-    out_deg = (
-        edges.groupBy("src").agg(F.count("*").alias("od"))
-        .withColumnRenamed("src", "node")
-    )
-    in_deg = (
-        edges.groupBy("dst").agg(F.count("*").alias("idg"))
-        .withColumnRenamed("dst", "node")
-    )
-    return (
-        ranks.join(out_deg, "node", "left")
-        .join(in_deg, "node", "left")
-        .select(
-            "node",
-            F.col("rank").alias("rank_e12"),
-            F.coalesce(F.col("idg"), F.lit(0)).cast("bigint").alias("in_deg"),
-            F.coalesce(F.col("od"), F.lit(0)).cast("bigint").alias("out_deg"),
-        )
-    )
+    # the graph needs |distinct ids| before it exists: collect the ids
+    # within pagerank's 64 B per node budget (their number is n, and the
+    # driver finish takes them), else count them; either way it is found
+    # ONCE and handed to both operators
+    ids = collect_within_budget(docs.select("doc_id").distinct(), 64)
+    n_docs = len(ids) if ids is not None else docs.select("doc_id").distinct().count()
+    edges = GR.synth_link_graph(docs, n_links=3, salt="pr", n=n_docs)
+    ranks = None
+    if ids is not None:
+        ranks = GR.pagerank_on_driver([r[0] for r in ids], edges, iterations=8, n=n_docs)
+    if ranks is None:
+        ranks = GR.pagerank(docs, edges, iterations=8, n=n_docs)
+    return ranks.select("node", F.col("rank").alias("rank_e12"), "in_deg", "out_deg")
 
 
 def _pagerank_sql(iterations: int = 8, n_links: int = 3, salt: str = "pr") -> str:

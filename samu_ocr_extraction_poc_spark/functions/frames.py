@@ -91,12 +91,30 @@ def collect_within_budget(df: DataFrame, row_bytes: int) -> list[Row] | None:
     row_bytes`` of them, else None. One ``limit(bound + 1).collect()``:
     the caller finishes on the driver with the rows, or goes on with
     ``df`` itself when None comes back. A threshold <= 0 returns None
-    without running anything."""
+    without running anything.
+
+    The last stage is coalesced to one task, so the limit is one job that
+    stops as soon as it has ``bound + 1`` rows; over several partitions
+    Spark's limit takes one partition first and then four times as many
+    per round, a job per round."""
     bound = broadcast_threshold(df.sparkSession) // row_bytes
     if bound <= 0:
         return None
-    rows = df.limit(bound + 1).collect()
+    rows = df.coalesce(1).limit(bound + 1).collect()
     return rows if len(rows) <= bound else None
+
+
+def local_or_checkpoint(df: DataFrame, row_bytes: int) -> DataFrame:
+    """``df`` materialized for later joins: as a :func:`values_frame` when
+    :func:`collect_within_budget` returns its rows, else as an eager
+    ``localCheckpoint``. The literal frame carries its size, so the join
+    that reads it is planned as a broadcast up front; a checkpointed RDD
+    has no size statistics, and AQE must run it as a stage of its own
+    before it can choose."""
+    rows = collect_within_budget(df, row_bytes)
+    if rows is None:
+        return df.localCheckpoint(eager=True)
+    return values_frame(df.sparkSession, rows, df.schema)
 
 
 def release_frame(df: DataFrame) -> None:

@@ -871,11 +871,18 @@ def keep_canonical(
     the corpus beyond that join (AQE broadcasts the drop side when it
     fits). Returns the surviving input rows, all columns.
     """
+    return df.join(canonical_drops(pairs, id_col), id_col, "left_anti")
+
+
+def canonical_drops(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The drop list of :func:`keep_canonical`: every clustered document
+    that is not its component's minimum, as one ``id_col`` column. On the
+    components' driver finish it is a LocalRelation, so a gate can
+    anti-join it without re-reading the corpus."""
     cc = connected_components(pairs)
-    drop = cc.where(F.col("doc_id") != F.col("component")).select(
+    return cc.where(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
-    return df.join(drop, id_col, "left_anti")
 
 
 def connected_components(

@@ -30,9 +30,11 @@ Scale notes (100 TB / 10^11-edge graph):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.frames import broadcast_threshold
+from ..functions.frames import broadcast_threshold, collect_within_budget, values_frame
 from .corpus import _md5_bucket
 
 PR_SCALE = 10**12
@@ -110,9 +112,27 @@ def pagerank(
     quality-weighting (exactness across engines is what the gate checks;
     more sweeps are a parameter, not a code path).
 
-    Returns (node, rank) with rank in scale units; join degrees back in
-    the caller if wanted.
+    Small graphs never enter the loop: when the distinct node ids fit the
+    session's ``autoBroadcastJoinThreshold`` at 64 B per node (the gate
+    of the loop's broadcast hints below), they are collected once and
+    :func:`pagerank_on_driver` finishes. A caller-passed ``n`` over that
+    gate skips the collect, and a threshold <= 0 always runs the loop.
+
+    Returns (node, rank, in_deg, out_deg): rank in scale units, and each
+    node's edge counts as target and as source.
     """
+    if n is not None and n <= 0:
+        raise ValueError(f"pagerank: n must be positive, got {n}")
+    spark = nodes.sparkSession
+    node_ids = nodes.select(F.col(id_col).cast("bigint").alias("node")).distinct()
+    if n is None or n * 64 < broadcast_threshold(spark):
+        ids = collect_within_budget(node_ids, 64)
+        if ids:  # no nodes: the loop's count raises
+            ranks = pagerank_on_driver(
+                [r[0] for r in ids], edges, iterations, damping_pct, scale, n
+            )
+            if ranks is not None:
+                return ranks
     # flat materialized node table (r6): node_t and out_deg are referenced
     # by EVERY iteration's plan, so with lineage-bearing frames the final
     # action's analysis walks `iterations` copies of the upstream scan
@@ -123,11 +143,8 @@ def pagerank(
     # entry passes the doc_id primary-key count, identical by
     # definition). The first iteration's join then materializes the
     # checkpoint instead.
-    node_t = (
-        nodes.select(F.col(id_col).cast("bigint").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    node_t = node_ids.localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
     if n is None:
         n = node_t.count()
     if n <= 0:
@@ -144,7 +161,7 @@ def pagerank(
     # the bound the joins stay sort-merge — at 10^9 nodes broadcasting
     # ranks would be wrong, and n is already collected for the teleport
     # term, so the gate costs nothing extra.
-    _bcast = n * 64 < broadcast_threshold(nodes.sparkSession)
+    _bcast = n * 64 < broadcast_threshold(spark)
     _hint = F.broadcast if _bcast else (lambda d: d)
     # All joins below are name-based using-joins on freshly-aliased
     # columns: from iteration 2 the ranks lineage contains the edge
@@ -178,7 +195,58 @@ def pagerank(
         )
         if checkpoint_every and it % checkpoint_every == 0 and it < iterations:
             ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", F.col("pr").alias("rank"))
+    in_deg = (
+        edges.groupBy("dst").agg(F.count("*").alias("in_deg")).withColumnRenamed("dst", "node")
+    )
+    return (
+        ranks.join(out_deg, "node", "left")
+        .join(in_deg, "node", "left")
+        .select(
+            "node",
+            F.col("pr").alias("rank"),
+            F.coalesce(F.col("in_deg"), F.lit(0)).cast("bigint").alias("in_deg"),
+            F.coalesce(F.col("out_deg"), F.lit(0)).cast("bigint").alias("out_deg"),
+        )
+    )
+
+
+def pagerank_on_driver(
+    node_ids: list,
+    edges: DataFrame,
+    iterations: int = 8,
+    damping_pct: int = 85,
+    scale: int = PR_SCALE,
+    n: int | None = None,
+) -> DataFrame | None:
+    """:func:`pagerank` over node ids already on the driver: the (src, dst)
+    edge list is collected once, at 16 B per edge within the broadcast
+    budget (None when it does not fit), and the sweeps run in Python.
+    Python ints are exact and every value is non-negative, so ``DIV`` is
+    ``//``. Null ids follow the loop's joins: a null node keeps the
+    teleport term and zero degrees, and an edge with a null endpoint moves
+    no mass but counts toward the other endpoint's degree. Returns
+    pagerank's (node, rank, in_deg, out_deg) as a LocalRelation."""
+    edge_rows = collect_within_budget(edges.select("src", "dst"), 16)
+    if edge_rows is None:
+        return None
+    n = n or len(node_ids)
+    out_deg = Counter(src for src, _ in edge_rows)
+    in_deg = Counter(dst for _, dst in edge_rows)
+    teleport = ((100 - damping_pct) * (scale // n)) // 100
+    rank = dict.fromkeys(node_ids, scale // n)
+    moving = [(s, d) for s, d in edge_rows if s is not None and d is not None and s in rank]
+    for _ in range(iterations):
+        contrib = Counter()
+        for src, dst in moving:
+            contrib[dst] += rank[src] // out_deg[src]
+        rank = {v: teleport + (damping_pct * contrib[v]) // 100 for v in rank}
+    rows = [
+        (v, r, in_deg[v] if v is not None else 0, out_deg[v] if v is not None else 0)
+        for v, r in rank.items()
+    ]
+    return values_frame(
+        edges.sparkSession, rows, "node bigint, rank bigint, in_deg bigint, out_deg bigint"
+    )
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:

@@ -180,6 +180,47 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
+
+def _columns(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in fields])
+
+
+# The contract's test tables (``<sf_dir>/<name>.parquet``), declared so a
+# read takes its schema from here: a parquet read without one infers it
+# from a file footer in a Spark job of its own. Timestamps are written
+# timezone-naive, so Spark reads them as TIMESTAMP_NTZ.
+_BIGINT, _INT, _DOUBLE, _STRING = T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType()
+TABLE_SCHEMAS = {
+    "customer": _columns(
+        ("c_custkey", _BIGINT), ("c_name", _STRING), ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE), ("c_mktsegment", _STRING),
+    ),
+    "documents": _columns(
+        ("doc_id", _BIGINT), ("text", _STRING), ("lang", _STRING),
+        ("source", _STRING), ("n_chars", _BIGINT),
+    ),
+    "embeddings": _columns(
+        ("vec_id", _BIGINT), ("embedding", T.ArrayType(T.FloatType())), ("label", _INT),
+    ),
+    "events": _columns(
+        ("event_id", _BIGINT), ("ts", T.TimestampNTZType()), ("user_id", _BIGINT),
+        ("event_type", _STRING), ("value", _DOUBLE), ("props", _STRING),
+    ),
+    "lineitem": _columns(
+        ("l_orderkey", _BIGINT), ("l_partkey", _BIGINT), ("l_suppkey", _BIGINT),
+        ("l_linenumber", _INT), ("l_quantity", _DOUBLE), ("l_extendedprice", _DOUBLE),
+        ("l_discount", _DOUBLE), ("l_tax", _DOUBLE), ("l_returnflag", _STRING),
+        ("l_linestatus", _STRING), ("l_shipdate", T.TimestampNTZType()),
+    ),
+    "nation": _columns(("n_nationkey", _INT), ("n_name", _STRING), ("n_regionkey", _INT)),
+    "orders": _columns(
+        ("o_orderkey", _BIGINT), ("o_custkey", _BIGINT), ("o_orderstatus", _STRING),
+        ("o_totalprice", _DOUBLE), ("o_orderdate", T.TimestampNTZType()),
+        ("o_orderpriority", _STRING),
+    ),
+    "region": _columns(("r_regionkey", _INT), ("r_name", _STRING)),
+}
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

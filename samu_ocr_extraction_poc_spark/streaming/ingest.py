@@ -17,10 +17,13 @@ The streaming analog of that architecture in Spark:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import DOCUMENTS_SCHEMA
+from ..schema import DOCUMENTS_SCHEMA, TABLE_SCHEMAS
 
 
 def stream_extract(
@@ -261,8 +264,7 @@ def stream_probe_dedup(spark: SparkSession, input_dir: str, index: DataFrame):
 
     num_hashes, rows_per_band, k = band_index_params(index)
     n_bands = num_hashes // rows_per_band
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    docs = spark.readStream.schema(schema).parquet(input_dir)
+    docs = spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(input_dir)
     out = docs.select(
         "*", row_minhash(F.col("text"), num_hashes=num_hashes, k=k).alias("mh")
     ).select(*docs.columns, "mh.*")
@@ -278,6 +280,22 @@ def stream_probe_dedup(spark: SparkSession, input_dir: str, index: DataFrame):
     )
 
 
+def _hll_versions(state_dir: str) -> dict[int, bool]:
+    """The ``v=<n>`` sub-directories of a :func:`stream_hll` state, as
+    {n: committed}; committed means Spark's _SUCCESS marker is there.
+    Driver-side os.listdir — state lives on the driver-visible
+    filesystem here; a cluster deployment swaps these few lines for the
+    Hadoop FileSystem API, nothing else changes."""
+    versions = {}
+    if os.path.isdir(state_dir):
+        for name in os.listdir(state_dir):
+            if name.startswith("v=") and name[2:].isdecimal():
+                versions[int(name[2:])] = os.path.exists(
+                    os.path.join(state_dir, name, "_SUCCESS")
+                )
+    return versions
+
+
 def latest_hll_state(spark: SparkSession, state_dir: str):
     """The current committed sketch of a :func:`stream_hll` run: the
     highest ``v=<n>`` sub-directory carrying Spark's _SUCCESS marker
@@ -285,26 +303,10 @@ def latest_hll_state(spark: SparkSession, state_dir: str):
     ignored). Returns (DataFrame, version) or (None, -1) when no
     committed state exists. Raises ValueError when the version carries
     no HLL parameters (a state written before the sketch carried them):
-    such a state must be rebuilt, not merged under guessed parameters.
-    Driver-side os.listdir — state lives on the driver-visible
-    filesystem here; a cluster deployment swaps these few lines for the
-    Hadoop FileSystem API, nothing else changes."""
-    import os
-
+    such a state must be rebuilt, not merged under guessed parameters."""
     from ..operators.sketch import hll_estimate
 
-    best = -1
-    if os.path.isdir(state_dir):
-        for name in os.listdir(state_dir):
-            if name.startswith("v="):
-                try:
-                    v = int(name[2:])
-                except ValueError:
-                    continue
-                if v > best and os.path.exists(
-                    os.path.join(state_dir, name, "_SUCCESS")
-                ):
-                    best = max(best, v)
+    best = max((v for v, done in _hll_versions(state_dir).items() if done), default=-1)
     if best < 0:
         return None, -1
     state = spark.read.parquet(f"{state_dir}/v={best}")
@@ -337,10 +339,11 @@ def stream_hll(
     the old state before the new one exists, so a crash mid-write would
     silently reset the sketch to the replayed batch alone (r5 review
     finding); with versions, a torn write leaves no marker and the
-    previous committed version keeps serving. Each version keeps the
-    sketch's parameters in its ``bucket`` metadata, so a restart with
-    other (p, w_bits) is refused by the merge instead of garbling the
-    registers.
+    previous committed version keeps serving. Once a version is
+    committed, the versions below it are deleted, so the state holds one
+    version between batches. Each version keeps the sketch's parameters
+    in its ``bucket`` metadata, so a restart with other (p, w_bits) is
+    refused by the merge instead of garbling the registers.
 
     The delivery-semantics argument: hll_merge is per-bucket MAX —
     associative, commutative, and IDEMPOTENT — so replaying a micro-batch
@@ -360,8 +363,7 @@ def stream_hll(
     from ..operators.corpus import _kgrams
     from ..operators.sketch import hll_build, hll_merge
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    docs = spark.readStream.schema(schema).parquet(input_dir)
+    docs = spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(input_dir)
 
     def update(batch: DataFrame, batch_id: int) -> None:
         items = batch.select(F.explode(_kgrams(F.col("text"), 2)).alias("tok"))
@@ -376,6 +378,11 @@ def stream_hll(
         values_frame(sess, merged.collect(), merged.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{state_dir}/v={batch_id}")
+        # the new version is committed, so every older one is superseded;
+        # a crash before this point leaves them for the next batch
+        for v in _hll_versions(state_dir):
+            if v < batch_id:
+                shutil.rmtree(f"{state_dir}/v={v}")
 
     return (
         docs.writeStream.foreachBatch(update)

@@ -19,13 +19,19 @@ def main() -> None:
     from samu_ocr_extraction_poc_spark.contract import QUERIES
     from samu_ocr_extraction_poc_spark.session import get_spark
 
-    spark = get_spark("explain", cores=8, shuffle_partitions=16)
+    # get_spark's defaults, the session the queries run in:
+    # local[$SPARK_GRAFT_CPUS] with twice as many shuffle partitions
+    # (local[*] with 32 when it is unset)
+    spark = get_spark("explain")
+    master = spark.sparkContext.master
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     lines = [
         "# PLANS — physical plans of the contract queries",
         "",
-        f"Generated by scripts/explain_all.py at {SF} (plan shapes, not data",
-        "volumes). Summary per query: exchanges / broadcast joins / sort-merge",
-        "joins / scans, then the formatted plan (truncated).",
+        f"Generated by scripts/explain_all.py at {SF} on {master} with {partitions}",
+        "shuffle partitions (plan shapes, not data volumes). Summary per query:",
+        "exchanges / broadcast joins / sort-merge joins / scans, then the",
+        "formatted plan (truncated).",
         "",
     ]
     for name, fn in QUERIES.items():

@@ -6,6 +6,8 @@ graph-shaping rules."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,18 +36,34 @@ def _py_pagerank(n_nodes, edges, iterations=8, damping=85, scale=SCALE):
     return rank
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Run with spark.sql.autoBroadcastJoinThreshold at ``value`` (None: the
+    session's own); "-1" pins pagerank's Spark loop."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        if value is not None:
+            spark.conf.set(key, value)
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_pagerank_matches_serial_fixed_point(spark):
     # hand graph: a hub (0), a sink chain, a dangling node (4 has no
     # out-edges -> its mass leaks, pinned semantics)
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 0), (3, 2)]
     nodes_df = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
     edges_df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["rank"]
-        for r in GR.pagerank(nodes_df, edges_df, iterations=8).collect()
-    }
     want = _py_pagerank(5, edges, iterations=8)
-    assert got == want
+    for threshold in (None, "-1"):  # the driver finish; the loop
+        with _broadcast_threshold(spark, threshold):
+            got = {
+                r["node"]: r["rank"]
+                for r in GR.pagerank(nodes_df, edges_df, iterations=8).collect()
+            }
+        assert got == want
     # dangling node 4 has no in-edges either: rank == bare teleport term
     assert got[4] == ((100 - 85) * (SCALE // 5)) // 100
     # mass never exceeds the scale (truncation + dangling only leak)
@@ -101,15 +119,18 @@ def test_synth_link_graph_drops_missing_targets(spark):
 def test_pagerank_checkpoint_path_identical(spark):
     nodes = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     edges = GR.synth_link_graph(nodes, n_links=3).localCheckpoint(eager=True)
-    a = {
-        r["node"]: r["rank"]
-        for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=2).collect()
-    }
-    b = {
-        r["node"]: r["rank"]
-        for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=0).collect()
-    }
+    with _broadcast_threshold(spark, "-1"):  # the loop, where checkpoints are
+        a = {
+            r["node"]: r["rank"]
+            for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=2).collect()
+        }
+        b = {
+            r["node"]: r["rank"]
+            for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=0).collect()
+        }
     assert a == b
+    # and the driver finish agrees with both
+    assert {r["node"]: r["rank"] for r in GR.pagerank(nodes, edges, iterations=6).collect()} == a
 
 
 def test_pagerank_and_synth_link_graph_reject_nonpositive_n(spark):
@@ -123,12 +144,17 @@ def test_pagerank_and_synth_link_graph_reject_nonpositive_n(spark):
 
 
 def test_pagerank_broadcast_gate_follows_session_threshold(spark):
-    """The rank/degree joins get a broadcast hint only when the estimated
-    table (64 B x n) fits under spark.sql.autoBroadcastJoinThreshold; a
-    threshold <= 0 (broadcasting off) or below the estimate gives no hint.
-    Ranks are the same either way."""
+    """The loop's rank/degree joins get a broadcast hint only when the
+    estimated table (64 B x n) fits under spark.sql.autoBroadcastJoinThreshold;
+    a threshold <= 0 (broadcasting off) or below the estimate gives no hint.
+    The loop runs with hints when the node ids fit but the edge list (16 B
+    per edge) does not: 10 nodes (640 B) and 50 edges (800 B) at 700 B. At
+    the default threshold the driver finish runs, with no joins at all.
+    Ranks are the same every way."""
     nodes = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    edges = spark.createDataFrame([(i, (i + 1) % 10) for i in range(10)], "src long, dst long")
+    edges = spark.createDataFrame(
+        [(i, (i + k) % 10) for i in range(10) for k in range(1, 6)], "src long, dst long"
+    )
 
     def run():
         ranks = GR.pagerank(nodes, edges, iterations=2)
@@ -139,12 +165,46 @@ def test_pagerank_broadcast_gate_follows_session_threshold(spark):
     old = spark.conf.get(key)
     try:
         n_hints, want = run()
-        assert n_hints > 0  # 640 B under the default threshold
+        assert n_hints == 0  # the driver finish's LocalRelation
+        spark.conf.set(key, "700")
+        n_hints, got = run()
+        assert n_hints > 0 and got == want
         for value in ("-1", "100"):  # off; below the 640 B estimate
             spark.conf.set(key, value)
             assert run() == (0, want)
     finally:
         spark.conf.set(key, old)
+
+
+def test_pagerank_driver_finish_matches_loop(spark):
+    """The driver finish returns the loop's ranks, degrees and column types
+    on a messy graph: a null node id, duplicate node rows, a duplicate
+    edge, a self-loop, a dangling node, edges with a null endpoint, and
+    edges whose source or target is not a node; also with a caller-passed
+    n. The finish's output is a LocalRelation."""
+    nodes = spark.createDataFrame(
+        [(0,), (1,), (2,), (3,), (3,), (4,), (None,)], "doc_id long"
+    )
+    edges = spark.createDataFrame(
+        [(0, 1), (0, 1), (0, 2), (1, 2), (2, 0), (2, 2), (3, 0), (3, None),
+         (None, 1), (7, 1), (1, 9)],
+        "src long, dst long",
+    )
+    for kwargs in ({"iterations": 5}, {"iterations": 3, "n": 5}, {"iterations": 0}):
+        out = {}
+        for threshold in (None, "-1"):
+            with _broadcast_threshold(spark, threshold):
+                ranks = GR.pagerank(nodes, edges, **kwargs)
+                plan = ranks._jdf.queryExecution().optimizedPlan().toString()
+                assert ("LocalRelation" in plan) == (threshold is None), plan
+                out[threshold] = (
+                    sorted(ranks.collect(), key=lambda r: (r["node"] is None, r["node"] or 0)),
+                    [(f.name, f.dataType) for f in ranks.schema.fields],
+                )
+        assert out[None] == out["-1"], kwargs
+    # the null node has zero degrees
+    null_row = out[None][0][-1]
+    assert null_row["node"] is None and (null_row["in_deg"], null_row["out_deg"]) == (0, 0)
 
 
 def _py_triangles(und_edges):

@@ -96,3 +96,12 @@ def test_edge_corpus_parity(spark, edge_dir, edge_duck, name):
     b = sorted([tuple(_norm(r[c]) for c in cols) for r in drows], key=key)
     bad = [(x, y) for x, y in zip(a, b) if x != y]
     assert not bad, f"{name}: {bad[:3]}"
+
+
+def test_edge_corpus_has_the_declared_documents_schema(spark, edge_dir):
+    """contract._t reads the edge corpus with the declared documents schema;
+    it is the schema Spark infers from the written files."""
+    from samu_ocr_extraction_poc_spark.schema import TABLE_SCHEMAS
+
+    inferred = spark.read.parquet(f"{edge_dir}/documents.parquet").schema
+    assert inferred == TABLE_SCHEMAS["documents"]

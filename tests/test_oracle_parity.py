@@ -93,7 +93,10 @@ def test_spark_output_types_are_driver_safe(spark, name):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
+    _assert_matches_oracle(QUERIES[name](spark, SF_DIR), duck, name)
+
+
+def _assert_matches_oracle(sdf, duck, name):
     spark_cols = sdf.columns
     spark_rows = [r.asDict() for r in sdf.collect()]
 
@@ -110,6 +113,90 @@ def test_query_matches_oracle(spark, duck, name):
     srows, drows = _rows(spark_rows, cols), _rows(duck_rows, cols)
     mismatches = [(a, b) for a, b in zip(srows, drows) if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+
+
+def _sibling_sf(sf: str) -> str:
+    """The ``sf`` test tables next to SF_DIR's."""
+    return os.path.join(os.path.dirname(SF_DIR), sf)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize("name", ["pagerank", "curate_corpus"])
+def test_driver_finish_and_spark_path_match_oracle(spark, name, sf):
+    """pagerank and curate_corpus finish small inputs on the driver (the
+    pagerank sweeps; the curation gates as literal frames); threshold -1
+    pins pagerank's Spark loop and the gates' checkpoints. Both paths
+    match the oracle."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{_sibling_sf(sf)}/documents.parquet'")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for value in (old, "-1"):
+            spark.conf.set(key, value)
+            _assert_matches_oracle(QUERIES[name](spark, _sibling_sf(sf)), con, name)
+    finally:
+        spark.conf.set(key, old)
+        con.close()
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_table_schemas_match_parquet(spark, sf):
+    """contract._t reads every test table with its declared schema; each
+    one is the schema Spark infers from the parquet file."""
+    from samu_ocr_extraction_poc_spark.schema import TABLE_SCHEMAS
+
+    for name, schema in TABLE_SCHEMAS.items():
+        inferred = spark.read.parquet(f"{_sibling_sf(sf)}/{name}.parquet").schema
+        assert inferred == schema, name
+
+
+def test_table_read_runs_no_job(spark):
+    """A schema-less parquet read infers the schema from a file footer in a
+    Spark job of its own; contract._t reads with the declared schema, so
+    reading a table and its schema submits no job."""
+    from samu_ocr_extraction_poc_spark.contract import _t
+
+    sc = spark.sparkContext
+    group = "table-read"
+    sc.setJobGroup(group, group)
+    try:
+        for name in ("customer", "documents", "embeddings", "events",
+                     "lineitem", "nation", "orders", "region"):
+            assert _t(spark, SF_DIR, name).schema.names
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+# Spark jobs per warm call at sf0.01 (local[4]). Each job pays Spark's
+# per-job floor (planning, AQE re-planning, JIT), which is what bounds
+# these queries on small tables; lower a number when a change cuts jobs.
+CURATION_JOB_BUDGET = {
+    "dedup_components": 8,
+    "dedup_apply": 9,
+    "bpe_train_merges": 3,
+    "pagerank": 7,
+    "curate_corpus": 18,
+}
+
+
+def test_curation_queries_stay_within_their_job_budget(spark):
+    """Each curation query, called warm at sf0.01, runs at most its budgeted
+    number of jobs. Jobs are counted with the scheduler's job-id counter,
+    which also sees the jobs that queries submit from their own threads
+    (outside the caller's job group)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    sf = _sibling_sf("sf0.01")
+    used = {}
+    for name in CURATION_JOB_BUDGET:
+        QUERIES[name](spark, sf).collect()  # warm
+        first = dag.nextJobId()
+        QUERIES[name](spark, sf).collect()
+        used[name] = dag.nextJobId() - first
+    over = {q: (n, CURATION_JOB_BUDGET[q]) for q, n in used.items() if n > CURATION_JOB_BUDGET[q]}
+    assert not over, f"jobs (used, budget): {over}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

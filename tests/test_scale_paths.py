@@ -3291,6 +3291,35 @@ def test_stream_hll_equals_batch_and_replay_noop(spark, tmp_path):
     assert {(r["bucket"], r["r"]) for r in again.collect()} == want
 
 
+def test_stream_hll_keeps_only_the_latest_state_version(spark, tmp_path):
+    """Each micro-batch commits its own state version and then deletes the
+    versions below it: after three micro-batches only the latest version
+    directory is left, holding the registers of everything that arrived."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from samu_ocr_extraction_poc_spark.operators.corpus import _kgrams
+    from samu_ocr_extraction_poc_spark.operators.sketch import hll_build
+    from samu_ocr_extraction_poc_spark.streaming.ingest import latest_hll_state, stream_hll
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i} beta w{i % 5} gamma", "en", "s", 30) for i in range(30)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    in_dir = str(tmp_path / "in")
+    state = str(tmp_path / "hll_state")
+    for part in range(3):  # one new file per run: one micro-batch each
+        docs.where(F.col("doc_id") % 3 == part).coalesce(1).write.mode("append").parquet(in_dir)
+        stream_hll(spark, in_dir, state).awaitTermination(180)
+    assert sorted(n for n in os.listdir(state) if n.startswith("v=")) == ["v=2"]
+    state_df, version = latest_hll_state(spark, state)
+    assert version == 2
+    items = docs.select(F.explode(_kgrams(F.col("text"), 2)).alias("tok"))
+    want = {(r["bucket"], r["r"]) for r in hll_build(items, "tok").collect()}
+    assert {(r["bucket"], r["r"]) for r in state_df.collect()} == want
+
+
 def test_salted_join_equals_plain_and_spreads_hot_key(spark):
     """Skew-salted join: result rows equal the unsalted join EXACTLY
     (the correctness pin — salting must never change semantics, only
