@@ -4157,15 +4157,17 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the graph needs |distinct ids| before it exists: collect the ids
     # within pagerank's 64 B per node budget (their number is n, and the
     # driver finish takes them), else count them; either way it is found
-    # ONCE and handed to both operators
+    # ONCE and handed to both operators. The driver finish never returns
+    # None here: at most 3 edges per node fit wherever the ids do
+    # (16 B x 3 < 64 B).
     ids = collect_within_budget(docs.select("doc_id").distinct(), 64)
     n_docs = len(ids) if ids is not None else docs.select("doc_id").distinct().count()
     edges = GR.synth_link_graph(docs, n_links=3, salt="pr", n=n_docs)
-    ranks = None
-    if ids is not None:
-        ranks = GR.pagerank_on_driver([r[0] for r in ids], edges, iterations=8, n=n_docs)
-    if ranks is None:
-        ranks = GR.pagerank(docs, edges, iterations=8, n=n_docs)
+    ranks = (
+        GR.pagerank_on_driver([r[0] for r in ids], edges, iterations=8, n=n_docs)
+        if ids is not None
+        else GR.pagerank(docs, edges, iterations=8, n=n_docs)
+    )
     return ranks.select("node", F.col("rank").alias("rank_e12"), "in_deg", "out_deg")
 
 

@@ -91,16 +91,11 @@ def collect_within_budget(df: DataFrame, row_bytes: int) -> list[Row] | None:
     row_bytes`` of them, else None. One ``limit(bound + 1).collect()``:
     the caller finishes on the driver with the rows, or goes on with
     ``df`` itself when None comes back. A threshold <= 0 returns None
-    without running anything.
-
-    The last stage is coalesced to one task, so the limit is one job that
-    stops as soon as it has ``bound + 1`` rows; over several partitions
-    Spark's limit takes one partition first and then four times as many
-    per round, a job per round."""
+    without running anything."""
     bound = broadcast_threshold(df.sparkSession) // row_bytes
     if bound <= 0:
         return None
-    rows = df.coalesce(1).limit(bound + 1).collect()
+    rows = df.limit(bound + 1).collect()
     return rows if len(rows) <= bound else None
 
 
@@ -110,8 +105,19 @@ def local_or_checkpoint(df: DataFrame, row_bytes: int) -> DataFrame:
     ``localCheckpoint``. The literal frame carries its size, so the join
     that reads it is planned as a broadcast up front; a checkpointed RDD
     has no size statistics, and AQE must run it as a stage of its own
-    before it can choose."""
-    rows = collect_within_budget(df, row_bytes)
+    before it can choose.
+
+    The collect reads ``df`` coalesced to one task, so it is one job: over
+    several partitions Spark's limit scans one partition and then the rest
+    in a second job. That suits a curation gate, whose last stage only
+    probes doc ids against broadcasts (the per-document scoring runs
+    upstream of its last exchange): on 200,000 synthetic documents the
+    quality gate took a median 9.5 s coalesced against 10.1 s in two jobs
+    (local[4], 4-core VM, warm, 3 runs each). It does not suit every
+    bounded collect: BPE's word table at its 81,920-word bound took 1.20 s
+    coalesced against 0.95 s, so :func:`collect_within_budget` keeps the
+    partitions."""
+    rows = collect_within_budget(df.coalesce(1), row_bytes)
     if rows is None:
         return df.localCheckpoint(eager=True)
     return values_frame(df.sparkSession, rows, df.schema)

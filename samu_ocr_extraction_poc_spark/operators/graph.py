@@ -34,7 +34,12 @@ from collections import Counter
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.frames import broadcast_threshold, collect_within_budget, values_frame
+from ..functions.frames import (
+    broadcast_threshold,
+    collect_within_budget,
+    release_frame,
+    values_frame,
+)
 from .corpus import _md5_bucket
 
 PR_SCALE = 10**12
@@ -124,26 +129,28 @@ def pagerank(
     if n is not None and n <= 0:
         raise ValueError(f"pagerank: n must be positive, got {n}")
     spark = nodes.sparkSession
-    node_ids = nodes.select(F.col(id_col).cast("bigint").alias("node")).distinct()
+    # flat materialized node table (r6): node_t and out_deg are referenced
+    # by EVERY iteration's plan, so with lineage-bearing frames the final
+    # action's analysis walks `iterations` copies of the upstream scan
+    # plan. The bounded collect reads the checkpoint, so above the budget
+    # its job has materialized node_t for the count and the loop. With
+    # n=None the number of collected ids, or the count below, is n (same
+    # distinct id set); a caller-passed n is TRUSTED — it must equal
+    # count(distinct cast(id as bigint)) or the teleport term and seed
+    # mass are silently wrong (the contract entry passes the doc_id
+    # primary-key count, identical by definition).
+    node_t = nodes.select(F.col(id_col).cast("bigint").alias("node")).distinct()
+    node_t = node_t.localCheckpoint(eager=False)
     if n is None or n * 64 < broadcast_threshold(spark):
-        ids = collect_within_budget(node_ids, 64)
+        ids = collect_within_budget(node_t, 64)
         if ids:  # no nodes: the loop's count raises
             ranks = pagerank_on_driver(
                 [r[0] for r in ids], edges, iterations, damping_pct, scale, n
             )
             if ranks is not None:
+                release_frame(node_t)
                 return ranks
-    # flat materialized node table (r6): node_t and out_deg are referenced
-    # by EVERY iteration's plan, so with lineage-bearing frames the final
-    # action's analysis walks `iterations` copies of the upstream scan
-    # plan. With n=None the count below doubles as n (same distinct id
-    # set) and materializes the checkpoint (guide §3.3); a caller-passed
-    # n is TRUSTED — it must equal count(distinct cast(id as bigint)) or
-    # the teleport term and seed mass are silently wrong (the contract
-    # entry passes the doc_id primary-key count, identical by
-    # definition). The first iteration's join then materializes the
-    # checkpoint instead.
-    node_t = node_ids.localCheckpoint(eager=False)
+            n = n or len(ids)
     edges = edges.localCheckpoint(eager=False)
     if n is None:
         n = node_t.count()

@@ -339,16 +339,19 @@ def stream_hll(
     the old state before the new one exists, so a crash mid-write would
     silently reset the sketch to the replayed batch alone (r5 review
     finding); with versions, a torn write leaves no marker and the
-    previous committed version keeps serving. Once a version is
-    committed, the versions below it are deleted, so the state holds one
-    version between batches. Each version keeps the sketch's parameters
+    previous committed version keeps serving. A replay of the batch that
+    committed the latest version writes nothing, so no write ever
+    replaces a committed version. Once a version is committed, the
+    versions below it are deleted, so the state holds one version
+    between batches. Each version keeps the sketch's parameters
     in its ``bucket`` metadata, so a restart with other (p, w_bits) is
     refused by the merge instead of garbling the registers.
 
     The delivery-semantics argument: hll_merge is per-bucket MAX —
     associative, commutative, and IDEMPOTENT — so replaying a micro-batch
     after a crash leaves the sketch bit-identical (the replayed batch
-    rewrites ITS OWN version number). At-least-once delivery is
+    writes ITS OWN version number, or nothing once that version is
+    committed). At-least-once delivery is
     therefore SUFFICIENT; no transactional sink or dedup ledger is
     needed, which is exactly why register sketches (not exact counters)
     are the streaming-metrics structure at 10^12 docs. Tests pin
@@ -369,17 +372,27 @@ def stream_hll(
         items = batch.select(F.explode(_kgrams(F.col("text"), 2)).alias("tok"))
         breg = hll_build(items, "tok", p=p, w_bits=w_bits)
         sess = batch.sparkSession
-        state, _v = latest_hll_state(sess, state_dir)
-        merged = hll_merge(state, breg) if state is not None else breg
-        # bounded collect (<= 2^p register rows) into a LocalRelation that
-        # keeps the schema's metadata; the write targets this batch's own
-        # version dir, so a replayed batch overwrites only itself and the
-        # _SUCCESS marker commits it
-        values_frame(sess, merged.collect(), merged.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/v={batch_id}")
-        # the new version is committed, so every older one is superseded;
-        # a crash before this point leaves them for the next batch
+        state, committed = latest_hll_state(sess, state_dir)
+        if committed > batch_id:
+            raise ValueError(
+                f"hll state at {state_dir} holds version {committed}, past "
+                f"micro-batch {batch_id}: its checkpoint was reset; delete the "
+                "state directory too and replay the stream to rebuild it"
+            )
+        # a replay of the batch that committed the latest version: that
+        # version already holds this batch's registers (max is idempotent),
+        # and it may be the only committed one, so it is never rewritten
+        if committed < batch_id:
+            merged = hll_merge(state, breg) if state is not None else breg
+            # bounded collect (<= 2^p register rows) into a LocalRelation
+            # that keeps the schema's metadata; the write targets this
+            # batch's own version dir, which holds no committed version,
+            # and the _SUCCESS marker commits it
+            values_frame(sess, merged.collect(), merged.schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{state_dir}/v={batch_id}")
+        # this batch's version is committed, so every older one is
+        # superseded; a crash before this point leaves them for the next batch
         for v in _hll_versions(state_dir):
             if v < batch_id:
                 shutil.rmtree(f"{state_dir}/v={v}")

@@ -3320,6 +3320,65 @@ def test_stream_hll_keeps_only_the_latest_state_version(spark, tmp_path):
     assert {(r["bucket"], r["r"]) for r in state_df.collect()} == want
 
 
+def test_stream_hll_replay_of_the_committed_batch_keeps_its_state(
+    spark, tmp_path, monkeypatch
+):
+    """At-least-once delivery replays a micro-batch whose sink ran but whose
+    commit was never logged. When that batch's version is the only
+    committed one, the replay must not rewrite it: an overwrite deletes the
+    directory before it writes, so a crash mid-write would leave no
+    committed state. The replay here runs with every parquet write torn
+    (directory deleted, then a crash); the state must survive intact. A
+    state whose checkpoint was deleted is refused, not silently ignored."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from samu_ocr_extraction_poc_spark.operators.corpus import _kgrams
+    from samu_ocr_extraction_poc_spark.operators.sketch import hll_build
+    from samu_ocr_extraction_poc_spark.streaming.ingest import latest_hll_state, stream_hll
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i} beta w{i % 5} gamma", "en", "s", 30) for i in range(30)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    in_dir = str(tmp_path / "in")
+    state = str(tmp_path / "hll_state")
+    for part in range(2):  # one new file per run: one micro-batch each
+        docs.where(F.col("doc_id") % 2 == part).coalesce(1).write.mode("append").parquet(in_dir)
+        stream_hll(spark, in_dir, state).awaitTermination(180)
+    assert sorted(n for n in os.listdir(state) if n.startswith("v=")) == ["v=1"]
+    # forget that batch 1 committed: the restart replays it
+    commits = f"{state}_ckpt/commits"
+    for name in os.listdir(commits):
+        if name in ("1", ".1.crc"):
+            os.remove(os.path.join(commits, name))
+
+    def torn_write(self, path, *args, **kwargs):
+        shutil.rmtree(path, ignore_errors=True)
+        raise OSError(f"crash while writing {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", torn_write)
+    stream_hll(spark, in_dir, state).awaitTermination(180)
+    monkeypatch.undo()
+
+    state_df, version = latest_hll_state(spark, state)
+    assert version == 1
+    items = docs.select(F.explode(_kgrams(F.col("text"), 2)).alias("tok"))
+    want = {(r["bucket"], r["r"]) for r in hll_build(items, "tok").collect()}
+    assert {(r["bucket"], r["r"]) for r in state_df.collect()} == want
+    assert os.listdir(commits).count("1") == 1  # the replay committed batch 1
+
+    # a state past its checkpoint (the checkpoint was deleted, the state
+    # kept) would restart at batch 0 below the committed version: refused
+    shutil.rmtree(f"{state}_ckpt")
+    with pytest.raises(Exception, match="checkpoint was reset"):
+        stream_hll(spark, in_dir, state).awaitTermination(180)
+    assert latest_hll_state(spark, state)[1] == 1
+
+
 def test_salted_join_equals_plain_and_spreads_hot_key(spark):
     """Skew-salted join: result rows equal the unsalted join EXACTLY
     (the correctness pin — salting must never change semantics, only
