@@ -4155,13 +4155,15 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # the graph needs |distinct ids| before it exists: collect the ids
-    # within pagerank's 64 B per node budget (their number is n, and the
-    # driver finish takes them), else count them; either way it is found
-    # ONCE and handed to both operators. The driver finish never returns
-    # None here: at most 3 edges per node fit wherever the ids do
-    # (16 B x 3 < 64 B).
+    # within pagerank's 64 B per node budget (the driver finish takes
+    # them), else count them; either way it is found ONCE and handed to
+    # both operators. n counts the non-null ids, as the oracle's
+    # count(DISTINCT doc_id) does, while a null id stays a node. The
+    # driver finish never returns None here: at most 3 edges per node fit
+    # wherever the ids do (16 B x 3 < 64 B).
     ids = collect_within_budget(docs.select("doc_id").distinct(), 64)
-    n_docs = len(ids) if ids is not None else docs.select("doc_id").distinct().count()
+    n_docs = (sum(r[0] is not None for r in ids) if ids is not None
+              else docs.select("doc_id").dropna().distinct().count())
     edges = GR.synth_link_graph(docs, n_links=3, salt="pr", n=n_docs)
     ranks = (
         GR.pagerank_on_driver([r[0] for r in ids], edges, iterations=8, n=n_docs)

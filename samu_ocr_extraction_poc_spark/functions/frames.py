@@ -107,17 +107,12 @@ def local_or_checkpoint(df: DataFrame, row_bytes: int) -> DataFrame:
     has no size statistics, and AQE must run it as a stage of its own
     before it can choose.
 
-    The collect reads ``df`` coalesced to one task, so it is one job: over
-    several partitions Spark's limit scans one partition and then the rest
-    in a second job. That suits a curation gate, whose last stage only
-    probes doc ids against broadcasts (the per-document scoring runs
-    upstream of its last exchange): on 200,000 synthetic documents the
-    quality gate took a median 9.5 s coalesced against 10.1 s in two jobs
-    (local[4], 4-core VM, warm, 3 runs each). It does not suit every
-    bounded collect: BPE's word table at its 81,920-word bound took 1.20 s
-    coalesced against 0.95 s, so :func:`collect_within_budget` keeps the
-    partitions."""
-    rows = collect_within_budget(df.coalesce(1), row_bytes)
+    The collect keeps ``df``'s partitions, at the cost of a second job
+    (Spark's limit scans one partition, then the rest): a row-local gate
+    scores its documents in that last stage, and coalesced to one task
+    the quality gate over 100,000 documents took a median 12.7 s against
+    7.8 s (local[4], 4-core VM, warm, 5 runs each)."""
+    rows = collect_within_budget(df, row_bytes)
     if rows is None:
         return df.localCheckpoint(eager=True)
     return values_frame(df.sparkSession, rows, df.schema)

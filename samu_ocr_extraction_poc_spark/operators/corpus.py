@@ -7,6 +7,8 @@ path), all exactly replayable by the DuckDB oracle (contract.py).
 - :func:`repetition_stats` — Gopher-style repetition quality signals
   (fraction of characters in duplicate word trigrams; top-bigram mass).
   Repetitious boilerplate scores high and gets filtered before training.
+  Like :func:`quality_filter` and :func:`gopher_repetition`, it is one
+  expression per row over sorted n-gram arrays (no groupBy(doc_id)).
 - :func:`pack_token_windows` — greedy sequence packing: hash-shard the
   corpus, order each shard deterministically, assign every document to the
   fixed-size token window its cumulative offset lands in. The shard is the
@@ -26,24 +28,73 @@ from pyspark.sql.window import Window
 from ..functions.textfns import let_bound, normalized, token_count, token_md5_long, tokens
 
 
+def _grams(toks: Column, k: int) -> Column:
+    """Word k-grams of a token array (a lambda variable or a column) WITH
+    multiplicity, in position order; empty when there are fewer than k
+    tokens."""
+    n = F.size(toks)
+    grams = F.transform(
+        F.sequence(F.lit(1), n - (k - 1)),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
+    )
+    # sequence(1, n-k+1) would run DESCENDING for n < k — guard to empty
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
 def _kgrams(text_col: Column, k: int) -> Column:
     """Word k-grams of the normalized text WITH multiplicity (dedup's
     shingles() is distinct — multiplicity is the whole point here).
     Token array let-bound (textfns.let_bound) — a direct reference inside
     the per-gram lambda re-tokenizes per element access, O(n^2)/row."""
+    return let_bound(tokens(normalized(text_col)), lambda toks: _grams(toks, k))
 
-    def body(toks: Column) -> Column:
-        n = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
+
+def _sum_len(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0).cast("bigint"), lambda a, e: a + F.length(e))
+
+
+def _repeats(s: Column, key=lambda e: e) -> Column:
+    """The elements of the sorted array ``s`` whose ``key`` equals a
+    neighbour's: every occurrence of each key that occurs >= 2 times. In
+    a document's sorted k-gram array equal grams are adjacent, so its
+    repetition signals need no explode -> groupBy(doc_id) -> join back."""
+    return F.filter(
+        s,
+        lambda e, i: (key(e) == key(F.get(s, i - 1))) | (key(e) == key(F.get(s, i + 1))),
+    )
+
+
+def _top_run(s: Column) -> Column:
+    """struct(run, top) over the sorted string array ``s``: the longest run
+    of equal elements and its element. The first maximal run wins, so
+    ``top`` is the lexicographically smallest of the most frequent
+    elements; ``run`` is 0 for an empty array."""
+    none = F.lit(None).cast("string")
+    init = F.struct(
+        none.alias("prev"), F.lit(0).alias("cur"), F.lit(0).alias("run"), none.alias("top")
+    )
+
+    def step(acc: Column, e: Column) -> Column:
+        cur = F.when(e == acc["prev"], acc["cur"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            e.alias("prev"),
+            cur.alias("cur"),
+            F.greatest(acc["run"], cur).alias("run"),
+            F.when(cur > acc["run"], e).otherwise(acc["top"]).alias("top"),
         )
-        # sequence(1, n-k+1) would run DESCENDING for n < k — guard to empty
-        return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
-    return let_bound(tokens(normalized(text_col)), body)
+    return F.aggregate(s, init, step)
+
+
+def _dup_trigram_char_frac(toks: Column) -> Column:
+    """Characters of the trigrams occurring >= 2 times over all trigram
+    characters, round(4); NULL without a trigram."""
+    return let_bound(
+        F.sort_array(_grams(toks, 3)),
+        lambda s: F.when(
+            F.size(s) > 0, F.round(_sum_len(_repeats(s)) / _sum_len(s), 4)
+        ),
+    )
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -54,29 +105,24 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     - ``top_bigram_frac``: occurrence share of the most frequent bigram.
 
     Both round(4) doubles; NULL when the document is too short to form the
-    n-gram. One explode + two partial-aggregable groupBys per signal.
+    n-gram, or has no id (the oracle joins the signals to documents by
+    id). Plan shape: one projection per row over the sorted trigram and
+    bigram arrays of the once-tokenized text; no shuffle, no join.
     """
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    def signals(toks: Column) -> Column:
+        top = let_bound(
+            F.sort_array(_grams(toks, 2)),
+            lambda s: F.when(F.size(s) > 0, F.round(_top_run(s)["run"] / F.size(s), 4)),
+        )
+        return F.struct(
+            _dup_trigram_char_frac(toks).alias("dup_trigram_char_frac"),
+            top.alias("top_bigram_frac"),
+        )
 
-    tri = base.select("doc_id", F.explode(_kgrams(F.col("text"), 3)).alias("g"))
-    tri_counts = tri.groupBy("doc_id", "g").agg(F.count("*").alias("cnt"))
-    tri_frac = tri_counts.groupBy("doc_id").agg(
-        F.round(
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt") * F.length("g")).otherwise(0))
-            / F.sum(F.col("cnt") * F.length("g")),
-            4,
-        ).alias("dup_trigram_char_frac")
+    s = F.when(
+        F.col(id_col).isNotNull(), let_bound(tokens(normalized(F.col(text_col))), signals)
     )
-    bi = base.select("doc_id", F.explode(_kgrams(F.col("text"), 2)).alias("g"))
-    bi_counts = bi.groupBy("doc_id", "g").agg(F.count("*").alias("cnt"))
-    bi_frac = bi_counts.groupBy("doc_id").agg(
-        F.round(F.max("cnt") / F.sum("cnt"), 4).alias("top_bigram_frac")
-    )
-    return (
-        base.select("doc_id")
-        .join(tri_frac, "doc_id", "left")
-        .join(bi_frac, "doc_id", "left")
-    )
+    return df.select(F.col(id_col).alias("doc_id"), s.alias("s")).select("doc_id", "s.*")
 
 
 def quality_filter(
@@ -91,27 +137,37 @@ def quality_filter(
     ratio, stopword density, length) clears ``min_quality`` AND whose
     duplicate-trigram character fraction stays under ``max_dup_trigram``
     (repetitious boilerplate). Short docs with no trigram signal pass the
-    repetition gate (NULL -> 0). The quality side is a narrow expression
-    on the scan; the repetition side is one explode + two partial-agg
-    groupBys joined back by doc id.
+    repetition gate (NULL -> 0). Plan shape: one generator over ``df``
+    that scores each row and emits it only when it passes; no shuffle, no
+    join.
 
     Returns (doc_id, quality, dup_trigram_char_frac) for survivors.
     """
     from ..functions.textfns import quality_score
 
-    rep = repetition_stats(df, text_col, id_col).select(
-        "doc_id", "dup_trigram_char_frac"
+    # as in repetition_stats, a row without an id gets no trigram signal
+    dup = F.when(
+        F.col(id_col).isNotNull(),
+        let_bound(tokens(normalized(F.col(text_col))), _dup_trigram_char_frac),
     )
-    scored = df.select(
-        F.col(id_col).alias("doc_id"), quality_score(F.col(text_col)).alias("quality")
+    row = F.struct(
+        F.col(id_col).alias("doc_id"),
+        quality_score(F.col(text_col)).alias("quality"),
+        dup.alias("dup_trigram_char_frac"),
     )
-    return (
-        scored.join(rep, "doc_id")
-        .where(
-            (F.col("quality") >= min_quality)
-            & (F.coalesce(F.col("dup_trigram_char_frac"), F.lit(0.0)) <= max_dup_trigram)
+    # The gate is a generator, not a .where: Catalyst pushes a Filter below
+    # a repartition (contract._t's round-robin exchange), where it scores
+    # every row in the scan's tasks (one task on a single-row-group file)
+    # and the projection above scores them again. Nothing pushes through a
+    # Generate while InferFiltersFromGenerate stays excluded (session.py).
+    return df.select(
+        F.inline(
+            F.filter(
+                F.array(row),
+                lambda r: (r["quality"] >= min_quality)
+                & (F.coalesce(r["dup_trigram_char_frac"], F.lit(0.0)) <= max_dup_trigram),
+            )
         )
-        .select("doc_id", "quality", "dup_trigram_char_frac")
     )
 
 
@@ -662,8 +718,8 @@ def gopher_repetition(
       the single most frequent word n-gram times its character length
       (token chars; joining spaces excluded), over total token characters.
       Tie-break: lexicographically smallest gram among the max-count set
-      (min(struct(-cnt, gram)) — the deterministic cross-engine rule, the
-      top_ngrams_per_stratum precedent).
+      (the deterministic cross-engine rule, the top_ngrams_per_stratum
+      precedent).
     - duplicate 5..10-gram character fraction (> 0.15 / 0.14 / 0.13 /
       0.12 / 0.11 / 0.10): characters of tokens COVERED by at least one
       occurrence of an n-gram occurring >= 2 times in the document, over
@@ -673,24 +729,17 @@ def gopher_repetition(
 
     Word stats tokenize the newline-FLATTENED text with empty tokens
     filtered (the gopher_rules r4 lesson: blank lines would otherwise
-    emit empty pseudo-tokens). Plan shape: line/paragraph stats and the
-    total-character denominator are ONE narrow projection on the scan;
-    the n-gram side is one explode into (k, pos, gram) structs for all
-    nine k at once, ONE partial-aggregable groupBy (positions collected
-    only for k >= 5, where coverage needs them), narrow-row shuffles
-    keyed by (doc_id[, k], idx), and two doc_id-keyed left joins back —
-    no window function, no SinglePartition anywhere. At 100 TB every
-    frame after the groupBy is duplicate-bounded, and the token-index
-    join ships (doc_id, idx, len) rows, never the token arrays.
+    emit empty pseudo-tokens). Plan shape: ONE projection per row, no
+    shuffle, no join. Line/paragraph stats come from array_distinct; each
+    k's n-gram signal reads the row's sorted k-gram array. The top k-gram
+    is the first maximal run (count x token chars of the smallest gram
+    among the most frequent). The 5..10-gram coverage sorts
+    (gram, pos) structs, keeps the sorted start positions of grams equal
+    to a neighbour, and sweeps the token indices once, carrying (next
+    start, cover end, covered chars).
     """
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    flat = F.replace(F.col("text"), F.lit("\n"), F.lit(" "))
-    toks_expr = F.filter(tokens(flat), lambda t: t != F.lit(""))
-
-    def sum_len(arr: Column) -> Column:
-        return F.aggregate(
-            arr, F.lit(0).cast("bigint"), lambda a, e: a + F.length(e)
-        )
+    nonempty = lambda x: x != F.lit("")  # noqa: E731
+    toks_expr = F.filter(tokens(F.replace(F.col(text_col), F.lit("\n"), F.lit(" "))), nonempty)
 
     def dup_stats(elems_expr: Column) -> Column:
         def body(elems: Column) -> Column:
@@ -698,108 +747,67 @@ def gopher_repetition(
                 return F.struct(
                     F.size(elems).cast("bigint").alias("n"),
                     (F.size(elems) - F.size(d)).cast("bigint").alias("dups"),
-                    (sum_len(elems) - sum_len(d)).alias("dup_chars"),
-                    sum_len(elems).alias("chars"),
+                    (_sum_len(elems) - _sum_len(d)).alias("dup_chars"),
+                    _sum_len(elems).alias("chars"),
                 )
 
             return let_bound(F.array_distinct(elems), with_distinct)
 
         return let_bound(elems_expr, body)
 
-    nonempty = lambda x: x != F.lit("")  # noqa: E731
-    stats = base.select(
-        "doc_id",
-        dup_stats(F.filter(F.split(F.col("text"), "\n"), nonempty)).alias("ls"),
-        dup_stats(F.filter(F.split(F.col("text"), "\n\n"), nonempty)).alias("ps"),
-        let_bound(toks_expr, sum_len).alias("total_chars"),
-    )
+    # the oracle joins the n-gram signals to a document by id: a row without
+    # an id gets none (0)
+    has_id = F.col(id_col).isNotNull()
 
-    wbase = base.select("doc_id", toks_expr.alias("w"))
-    w = F.col("w")
-    all_k = tuple(_GOPHER_TOP_THRESHOLDS) + tuple(_GOPHER_DUP_THRESHOLDS)
+    def top_chars(w: Column, k: int) -> Column:
+        return F.when(has_id, let_bound(
+            _top_run(F.sort_array(_grams(w, k))),
+            lambda t: t["run"] * (F.length(t["top"]) - (k - 1)),
+        ))
 
-    def gram_arr(k: int) -> Column:
-        n = F.size(w)
+    def dup_chars(w: Column, k: int) -> Column:
+        def starts(s: Column) -> Column:
+            return F.array_sort(
+                F.transform(_repeats(s, lambda e: e["gram"]), lambda e: e["pos"])
+            )
+
+        def sweep(p: Column) -> Column:
+            def step(acc: Column, t: Column) -> Column:
+                hit = F.get(p, acc["j"]) == t
+                end = F.when(hit, t + (k - 1)).otherwise(acc["end"])
+                return F.struct(
+                    F.when(hit, acc["j"] + 1).otherwise(acc["j"]).alias("j"),
+                    end.alias("end"),
+                    (
+                        acc["chars"]
+                        + F.when(t <= end, F.length(F.get(w, t - 1))).otherwise(0)
+                    ).alias("chars"),
+                )
+
+            zero = F.lit(0).cast("bigint")
+            init = F.struct(F.lit(0).alias("j"), F.lit(0).alias("end"), zero.alias("chars"))
+            return F.when(F.size(p) == 0, zero).otherwise(
+                F.aggregate(F.sequence(F.lit(1), F.size(w)), init, step, lambda a: a["chars"])
+            )
+
         grams = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.struct(
-                F.lit(k).alias("k"),
-                i.alias("pos"),
-                F.concat_ws(
-                    " ", *[F.element_at(w, i + j) for j in range(k)]
-                ).alias("gram"),
-            ),
+            _grams(w, k), lambda g, i: F.struct(g.alias("gram"), (i + 1).alias("pos"))
         )
-        # sequence(1, n-k+1) DESCENDS for n < k — guard to empty
-        return F.when(n >= k, grams).otherwise(
-            F.array().cast("array<struct<k:int,pos:int,gram:string>>")
+        return F.when(has_id, let_bound(let_bound(F.sort_array(grams), starts), sweep))
+
+    def ngram_stats(w: Column) -> Column:
+        return F.struct(
+            _sum_len(w).alias("total_chars"),
+            *[top_chars(w, k).alias(f"top{k}_chars") for k in _GOPHER_TOP_THRESHOLDS],
+            *[dup_chars(w, k).alias(f"dup{k}_chars") for k in _GOPHER_DUP_THRESHOLDS],
         )
 
-    grams = wbase.select(
-        "doc_id", F.explode(F.concat(*[gram_arr(k) for k in all_k])).alias("g")
-    ).select("doc_id", "g.k", "g.pos", "g.gram")
-    counts = grams.groupBy("doc_id", "k", "gram").agg(
-        F.count("*").alias("cnt"),
-        # positions are only needed for the k>=5 coverage path; nulls are
-        # skipped by collect_list, so k<=4 groups carry an empty array
-        F.collect_list(F.when(F.col("k") >= 5, F.col("pos"))).alias("ps"),
-    )
-
-    top_p = (
-        counts.where(F.col("k") <= 4)
-        .groupBy("doc_id", "k")
-        .agg(
-            F.min(
-                F.struct((-F.col("cnt")).alias("neg"), F.col("gram").alias("gram"))
-            ).alias("m")
-        )
-        .select(
-            "doc_id",
-            "k",
-            ((-F.col("m.neg")) * (F.length("m.gram") - (F.col("k") - 1))).alias(
-                "chars"
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("k") == k, F.col("chars"))).alias(
-                    f"top{k}_chars"
-                )
-                for k in _GOPHER_TOP_THRESHOLDS
-            ]
-        )
-    )
-
-    tok_idx = wbase.select(
-        "doc_id", F.posexplode(w).alias("idx0", "tok")
-    ).select("doc_id", (F.col("idx0") + 1).alias("idx"), F.length("tok").alias("len"))
-    cov_p = (
-        counts.where((F.col("k") >= 5) & (F.col("cnt") >= 2))
-        .select("doc_id", "k", F.explode("ps").alias("pos"))
-        .select(
-            "doc_id",
-            "k",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.col("k") - 1)
-            ).alias("idx"),
-        )
-        .distinct()
-        .join(tok_idx, ["doc_id", "idx"])
-        .groupBy("doc_id", "k")
-        .agg(F.sum("len").alias("chars"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("k") == k, F.col("chars"))).alias(
-                    f"dup{k}_chars"
-                )
-                for k in _GOPHER_DUP_THRESHOLDS
-            ]
-        )
-    )
-
-    joined = stats.join(top_p, "doc_id", "left").join(cov_p, "doc_id", "left")
+    stats = df.select(
+        F.col(id_col).alias("doc_id"),
+        dup_stats(F.filter(F.split(F.col(text_col), "\n"), nonempty)).alias("ls"),
+        dup_stats(F.filter(F.split(F.col(text_col), "\n\n"), nonempty)).alias("ps"),
+        let_bound(toks_expr, ngram_stats).alias("g"),
+    ).select("doc_id", "ls", "ps", "g.*")
 
     def z(c: str) -> Column:
         return F.coalesce(F.col(c), F.lit(0)).cast("bigint")
@@ -830,7 +838,7 @@ def gopher_repetition(
         *[f"is_top{k}_ok" for k in _GOPHER_TOP_THRESHOLDS],
         *[f"is_dup{k}_ok" for k in _GOPHER_DUP_THRESHOLDS],
     ]
-    out = joined.select(
+    out = stats.select(
         "doc_id",
         F.col("ls.n").alias("n_lines"),
         F.col("ls.dups").alias("dup_lines"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Column
 
 from ..functions.textfns import let_bound, normalized, tokens
+from .corpus import _grams
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -150,20 +151,8 @@ def filtered_tokens(text_col: Column) -> Column:
 def filtered_kgrams(text_col: Column, k: int) -> Column:
     """Word k-grams over :func:`filtered_tokens` WITH multiplicity —
     corpus._kgrams' shape on the empty-filtered array (position parity
-    with the phrase index). Token array let-bound; sequence guarded to
-    empty for n < k (the descending-sequence trap)."""
-
-    def body(toks: Column) -> Column:
-        n = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        )
-        return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
-
-    return let_bound(filtered_tokens(text_col), body)
+    with the phrase index). Token array let-bound."""
+    return let_bound(filtered_tokens(text_col), lambda toks: _grams(toks, k))
 
 
 def positional_index(

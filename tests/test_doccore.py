@@ -133,37 +133,36 @@ def test_paragraphs_backward_first_match_is_kept():
     assert get_numbered_paragraphs(blocks) == ["1. a 3. c", "", "3. c 2. b", "4. d. x"]
 
 
-def test_paragraphs_time_is_linear_in_the_filing():
-    """A caption plus P numbered 7-line paragraphs: doubling P may at most
-    ~2.5x the time (one paragraph-number lookup must not rescan the
-    filing)."""
-    import gc
-    import time
+def test_paragraph_lookup_visits_are_linear_in_the_filing():
+    """A caption plus P numbered 7-line paragraphs: doubling P at most
+    doubles the block reads (one paragraph-number lookup must not rescan
+    the filing). Reads are counted, not timed, so a busy host cannot fail
+    the check."""
 
-    def filing(p):
+    class Block(dict):
+        reads = 0
+
+        def get(self, key, default=None):
+            Block.reads += 1
+            return super().get(key, default)
+
+        def __getitem__(self, key):
+            Block.reads += 1
+            return super().__getitem__(key)
+
+    def reads(p):
         texts = ["IN THE CIRCUIT COURT OF JACKSON COUNTY, MISSOURI"]
         for n in range(1, p + 1):
             texts += [f"{n}. Plaintiff states"] + [f"line {j} of {n}" for j in range(5)] + ["and so on."]
-        return lines(texts)
+        blocks = [Block(b) for b in lines(texts)]
+        Block.reads = 0
+        paras = get_numbered_paragraphs(blocks)
+        assert len(paras) == p and paras[1] == "2. Plaintiff states " + " ".join(
+            f"line {j} of 2" for j in range(5)) + " and so on."
+        return Block.reads
 
-    def best(blocks):
-        out = []
-        gc.disable()  # as timeit does: a collection is not the code's time
-        try:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                paras = get_numbered_paragraphs(blocks)
-                out.append(time.perf_counter() - t0)
-        finally:
-            gc.enable()
-        return min(out), paras
-
-    small, paras = best(filing(800))
-    assert len(paras) == 800 and paras[1] == "2. Plaintiff states " + " ".join(
-        f"line {j} of 2" for j in range(5)) + " and so on."
-    large, paras = best(filing(1600))
-    assert len(paras) == 1600
-    assert large / small <= 2.5, (small, large)
+    small, large = reads(200), reads(400)
+    assert large <= 2 * small + 16, (small, large)
 
 
 # --- J1 queries -------------------------------------------------------------

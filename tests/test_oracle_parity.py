@@ -140,6 +140,42 @@ def test_driver_finish_and_spark_path_match_oracle(spark, name, sf):
         con.close()
 
 
+@pytest.mark.parametrize(
+    "name", ["pagerank", "repetition_stats", "quality_filter", "gopher_repetition"]
+)
+def test_null_doc_id_matches_oracle(spark, tmp_path, name):
+    """A documents table with one null doc_id. pagerank keeps it as a node
+    (the oracle's prnodes does) but leaves it out of n (its
+    count(DISTINCT doc_id) skips nulls), on the driver finish and on the
+    Spark loop (threshold -1). The repetition signals join to documents by
+    id in the oracles, so the null-id row gets none: NULL fractions, 0
+    Gopher n-gram chars, and a quality gate it passes on quality alone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{SF_DIR}/documents.parquet")
+    null_row = {c: [None] for c in table.column_names}
+    null_row["text"] = [
+        "the quick brown fox jumps over the lazy dog and a cat sat on the mat"
+        " in the sun of the day the quick brown fox"
+    ]
+    table = pa.concat_tables([table, pa.table(null_row, schema=table.schema)])
+    pq.write_table(table, tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for value in (old, "-1"):
+            spark.conf.set(key, value)
+            sdf = QUERIES[name](spark, str(tmp_path))
+            assert sdf.where(sdf[sdf.columns[0]].isNull()).count() == 1
+            _assert_matches_oracle(sdf, con, name)
+    finally:
+        spark.conf.set(key, old)
+        con.close()
+
+
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_declared_table_schemas_match_parquet(spark, sf):
     """contract._t reads every test table with its declared schema; each
@@ -178,7 +214,10 @@ CURATION_JOB_BUDGET = {
     "dedup_apply": 9,
     "bpe_train_merges": 3,
     "pagerank": 7,
-    "curate_corpus": 18,
+    "curate_corpus": 13,
+    "repetition_stats": 2,
+    "quality_filter": 2,
+    "gopher_repetition": 2,
 }
 
 

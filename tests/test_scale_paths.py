@@ -366,6 +366,43 @@ def test_pack_token_windows_has_no_global_window(spark):
     assert "hashpartitioning(shard" in plan  # the window runs per shard
 
 
+def _below_round_robin(plan: str) -> list[str]:
+    """The plan lines in the subtrees of its round-robin exchanges."""
+    below, depth = [], None
+    for line in plan.splitlines():
+        d = len(line) - len(line.lstrip(" :+-"))
+        if depth is not None and d <= depth:
+            depth = None
+        if depth is not None:
+            below.append(line)
+        elif "Exchange RoundRobinPartitioning" in line:
+            depth = d
+    return below
+
+
+@pytest.mark.parametrize(
+    "name", ["repetition_stats", "quality_filter", "gopher_repetition"]
+)
+def test_repetition_signals_are_row_local(spark, name):
+    """Per-document repetition signals are one expression per row: the
+    executed plan holds no join, no aggregate and no exchange but
+    contract._t's round-robin one, and quality_filter's gate (a generator,
+    not a Filter) is not pushed below that exchange into the scan."""
+    import re
+
+    from samu_ocr_extraction_poc_spark.contract import QUERIES
+
+    df = QUERIES[name](spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "Exchange RoundRobinPartitioning" in plan
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    exchanges = [l for l in plan.splitlines() if re.search(r"(?<![A-Za-z])Exchange\s", l)]
+    assert all("RoundRobinPartitioning" in l for l in exchanges), exchanges
+    filters = [l for l in _below_round_robin(plan) if re.search(r"(?<![A-Za-z])Filter\s", l)]
+    assert not filters, filters
+
+
 def test_global_shuffle_semantics_and_plan(spark):
     """Deterministic global training-order shuffle: the two-phase
     distributed rank (range buckets + collected offsets + partitioned
