@@ -1727,7 +1727,7 @@ def vocab_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(TX.tokens(TX.normalized(tail))).alias("key"))
         .where(F.length("key") > 0)
     )
-    return CP.vocab_coverage(words, "key", sizes=(1, 4, 16, 31, 100, 1000))
+    return CP.vocab_coverage(words, sizes=(1, 4, 16, 31, 100, 1000))
 
 
 VOCAB_COVERAGE_SQL = """
@@ -2079,7 +2079,7 @@ def dsir_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import corpus as CP
 
     return CP.dsir_importance(
-        _t(spark, sf_dir, "documents"), target_col="lang", target_value="en"
+        _t(spark, sf_dir, "documents"), target_value="en"
     )
 
 
@@ -2118,7 +2118,7 @@ def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import corpus as CP
 
     scores = CP.dsir_importance(
-        _t(spark, sf_dir, "documents"), target_col="lang", target_value="en"
+        _t(spark, sf_dir, "documents"), target_value="en"
     )
     return scores.orderBy(F.col("dsir_logratio").desc(), "doc_id").limit(100)
 
@@ -3991,7 +3991,7 @@ def asof_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "t")
         .agg(F.max("event_id").cast("bigint").alias("view_id"))
     )
-    out = TP.asof_join(left, right, key_col="user_id", time_col="t")
+    out = TP.asof_join(left, right, key_col="user_id")
     return out.select(
         "event_id",
         "user_id",
@@ -4049,9 +4049,6 @@ def range_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         points,
         intervals,
         key_col="user_id",
-        time_col="t",
-        lo_col="lo",
-        hi_col="hi",
         max_len_us=2 * TP.DAY_US,
     )
     return pairs.groupBy("signup_id", "user_id").agg(
@@ -4539,7 +4536,7 @@ def cohort_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
     )
-    return TP.cohort_retention(ev, user_col="user_id", time_col="t")
+    return TP.cohort_retention(ev)
 
 
 COHORT_SQL = """
@@ -4675,10 +4672,7 @@ def decayed_topics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.expr("t DIV 86400000000")).alias("m")
     ).collect()[0]["m"]
     # empty events -> max is NULL; any anchor gives the same empty result
-    return TP.decayed_counts(
-        ev, anchor_day=int(anchor) if anchor is not None else 0,
-        group_col="event_type",
-    )
+    return TP.decayed_counts(ev, anchor_day=int(anchor) if anchor is not None else 0)
 
 
 DECAYED_SQL = """

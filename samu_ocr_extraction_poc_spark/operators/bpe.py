@@ -43,11 +43,11 @@ from ..functions.frames import collect_within_budget, release_frame, values_fram
 from ..functions.textfns import let_bound, normalized, tokens
 
 
-def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
+def _word_freqs(df: DataFrame) -> DataFrame:
     """(word, freq) over the normalized corpus — the collapse that makes
     corpus-scale BPE cheap (pair stats need only the weighted vocabulary)."""
     return (
-        df.select(F.explode(tokens(normalized(F.col(text_col)))).alias("w"))
+        df.select(F.explode(tokens(normalized(F.col("text")))).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("freq"))
@@ -78,7 +78,6 @@ def _sym_pairs(s_col) -> "F.Column":
 def bpe_train(
     df: DataFrame,
     n_merges: int = 6,
-    text_col: str = "text",
     checkpoint_every: int = 16,
     stats: dict | None = None,
 ) -> list[tuple[int, str, str, str, int]]:
@@ -108,7 +107,7 @@ def bpe_train(
     # flat materialized word table (r6): every round's pair-count plan
     # re-analyzes the base's lineage; a localCheckpoint makes that base a
     # LogicalRDD so round plans stay O(replaces-since-checkpoint)
-    words = _word_freqs(df, text_col).select(
+    words = _word_freqs(df).select(
         _char_wrapped(F.col("w")).alias("s"), "freq"
     ).localCheckpoint(eager=False)
     # no pre-count (r6): the bounded collect or the first round's
@@ -186,12 +185,10 @@ def _train_on_driver(rows: list[Row], n_merges: int) -> list[tuple[int, str, str
     return merges
 
 
-def bpe_merge_table(
-    spark: SparkSession, df: DataFrame, n_merges: int = 6, text_col: str = "text"
-) -> DataFrame:
+def bpe_merge_table(spark: SparkSession, df: DataFrame, n_merges: int = 6) -> DataFrame:
     """:func:`bpe_train` as a DataFrame: (merge_idx, lhs, rhs, merged,
     pair_count) — the contract/oracle surface."""
-    rows = bpe_train(df, n_merges=n_merges, text_col=text_col)
+    rows = bpe_train(df, n_merges=n_merges)
     return values_frame(
         spark,
         rows,
@@ -202,8 +199,6 @@ def bpe_merge_table(
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a learned merge table: per-document BPE token counts under
     the trained vocabulary — the REAL token counter for budget/packing ops
@@ -229,8 +224,8 @@ def bpe_encode(
     ).cast("bigint")
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(normalized(F.col(text_col)))).alias("wd"),
+            F.col("doc_id"),
+            F.explode(tokens(normalized(F.col("text")))).alias("wd"),
         )
         .where(F.length("wd") > 0)
         .select("doc_id", n_syms.alias("n_syms"))

@@ -16,6 +16,11 @@ path), all exactly replayable by the DuckDB oracle (contract.py).
   global (single-partition) window function ever runs.
 - :func:`stratified_sample` — deterministic per-language downsampling via
   md5 buckets: reproducible across runs/engines, no RNG state to ship.
+
+Operators read the ``documents`` table's columns by name (``doc_id``,
+``text``, ``lang``, ``source``; schema.TABLE_SCHEMAS). ``doc_id`` is a key:
+no two rows share a non-null id, so scoring each row on its own text
+equals the oracles' ``GROUP BY doc_id``.
 """
 
 from __future__ import annotations
@@ -97,7 +102,7 @@ def _dup_trigram_char_frac(toks: Column) -> Column:
     )
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Per-document repetition signals (Gopher-style quality filtering):
 
     - ``dup_trigram_char_frac``: fraction of trigram characters belonging
@@ -120,17 +125,15 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         )
 
     s = F.when(
-        F.col(id_col).isNotNull(), let_bound(tokens(normalized(F.col(text_col))), signals)
+        F.col("doc_id").isNotNull(), let_bound(tokens(normalized(F.col("text"))), signals)
     )
-    return df.select(F.col(id_col).alias("doc_id"), s.alias("s")).select("doc_id", "s.*")
+    return df.select("doc_id", s.alias("s")).select("doc_id", "s.*")
 
 
 def quality_filter(
     df: DataFrame,
     min_quality: float = 0.4,
     max_dup_trigram: float = 0.4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Row-returning Gopher-style quality gate: keep documents whose
     composite quality score (functions/textfns.quality_score: distinct
@@ -147,12 +150,12 @@ def quality_filter(
 
     # as in repetition_stats, a row without an id gets no trigram signal
     dup = F.when(
-        F.col(id_col).isNotNull(),
-        let_bound(tokens(normalized(F.col(text_col))), _dup_trigram_char_frac),
+        F.col("doc_id").isNotNull(),
+        let_bound(tokens(normalized(F.col("text"))), _dup_trigram_char_frac),
     )
     row = F.struct(
-        F.col(id_col).alias("doc_id"),
-        quality_score(F.col(text_col)).alias("quality"),
+        F.col("doc_id"),
+        quality_score(F.col("text")).alias("quality"),
         dup.alias("dup_trigram_char_frac"),
     )
     # The gate is a generator, not a .where: Catalyst pushes a Filter below
@@ -182,7 +185,6 @@ def _md5_bucket(col: Column, hex_chars: int, modulus: int) -> Column:
 
 def global_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
     salt: str = "shuf",
     n_buckets: int = 256,
     docs_per_shard: int = 1000,
@@ -218,9 +220,9 @@ def global_shuffle(
 
     Returns (doc_id, shuffle_pos, shard, pos_in_shard).
     """
-    key = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string")))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         key.alias("k"),
         (
             F.conv(F.substring(key, 1, 4), 16, 10).cast("bigint")
@@ -266,8 +268,6 @@ def pack_assignments(
     df: DataFrame,
     budget: int = 256,
     n_shards: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sequence-packing ASSIGNMENTS: the (doc_id -> shard, bin) rows a
     training pipeline actually consumes (round-2 exposed only the per-bin
@@ -280,9 +280,9 @@ def pack_assignments(
     Returns one row per document: (doc_id, shard, bin, n_tok).
     """
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        _md5_bucket(F.col(id_col), 4, n_shards).alias("shard"),
-        token_count(F.col(text_col)).cast("bigint").alias("n_tok"),
+        F.col("doc_id"),
+        _md5_bucket(F.col("doc_id"), 4, n_shards).alias("shard"),
+        token_count(F.col("text")).cast("bigint").alias("n_tok"),
     )
     w = (
         Window.partitionBy("shard")
@@ -300,12 +300,10 @@ def pack_token_windows(
     df: DataFrame,
     budget: int = 256,
     n_shards: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-bin audit aggregates of :func:`pack_assignments` (the oracle /
     monitoring shape). Returns (shard, bin, n_docs, bin_tokens)."""
-    return pack_assignments(df, budget, n_shards, text_col, id_col).groupBy(
+    return pack_assignments(df, budget, n_shards).groupBy(
         "shard", "bin"
     ).agg(
         F.count("*").alias("n_docs"),
@@ -313,12 +311,10 @@ def pack_token_windows(
     )
 
 
-def _sample_rate(
-    rates: dict[str, int], default_rate: int, strat_col: str
-) -> Column:
+def _sample_rate(rates: dict[str, int], default_rate: int) -> Column:
     rate: Column = F.lit(default_rate)
     for lang, r in sorted(rates.items()):
-        rate = F.when(F.col(strat_col) == lang, F.lit(r)).otherwise(rate)
+        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return rate
 
 
@@ -327,8 +323,6 @@ def sample_documents(
     rates: dict[str, int],
     default_rate: int = 100,
     denom: int = 1000,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Row-returning stratified downsampling: the KEPT documents themselves
     (round-2 exposed only per-stratum counts — VERDICT r2 item 4). A
@@ -338,15 +332,13 @@ def sample_documents(
 
     Returns the input rows (all columns) of the kept documents.
     """
-    rate = _sample_rate(rates, default_rate, strat_col)
-    return df.where(_md5_bucket(F.col(id_col), 8, denom) < rate)
+    rate = _sample_rate(rates, default_rate)
+    return df.where(_md5_bucket(F.col("doc_id"), 8, denom) < rate)
 
 
 def sample_exact_n(
     df: DataFrame,
     n_per_stratum: int,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT-size stratified sample: keep exactly ``n_per_stratum``
     documents per stratum (or all, for smaller strata) — the "10k docs
@@ -358,8 +350,8 @@ def sample_exact_n(
 
     Returns the kept rows (all input columns).
     """
-    w = Window.partitionBy(strat_col).orderBy(
-        F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -373,15 +365,13 @@ def stratified_sample(
     rates: dict[str, int],
     default_rate: int = 100,
     denom: int = 1000,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-stratum audit counts of the :func:`sample_documents` filter.
     Reproducible across engines and runs (no RNG), map-side only until the
     count. Returns per-stratum (lang, n_total, n_kept)."""
-    rate = _sample_rate(rates, default_rate, strat_col)
-    kept = F.when(_md5_bucket(F.col(id_col), 8, denom) < rate, 1).otherwise(0)
-    return df.groupBy(F.col(strat_col).alias("lang")).agg(
+    rate = _sample_rate(rates, default_rate)
+    kept = F.when(_md5_bucket(F.col("doc_id"), 8, denom) < rate, 1).otherwise(0)
+    return df.groupBy("lang").agg(
         F.count("*").alias("n_total"),
         F.sum(kept).cast("bigint").alias("n_kept"),
     )
@@ -391,8 +381,6 @@ def remove_boilerplate(
     df: DataFrame,
     seg_tokens: int = 8,
     min_doc_freq: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet-style cross-document boilerplate removal: split every document
     into fixed-size non-overlapping token segments (the corpus has no
@@ -417,12 +405,12 @@ def remove_boilerplate(
     (doc_id, n_segments, n_removed, clean_text) — a fully-removed or empty
     document keeps its row with clean_text = ''.
     """
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     n_segs = F.ceil(n / F.lit(float(seg_tokens))).cast("int")
     # token array let-bound: slice(toks, ...) inside the per-segment lambda
     # re-tokenizes per element otherwise (O(n^2)/row)
     segs = let_bound(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.transform(
             F.sequence(F.lit(1), n_segs),
             lambda s: F.array_join(
@@ -432,7 +420,7 @@ def remove_boilerplate(
     )
     exploded = (
         df.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.when(n > 0, segs).otherwise(F.array().cast("array<string>")).alias("segs"),
         )
         .select("doc_id", F.posexplode("segs").alias("pos", "seg"))
@@ -460,7 +448,7 @@ def remove_boilerplate(
         ).alias("clean_text"),
     )
     out = (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -477,9 +465,6 @@ def remove_boilerplate(
 def exact_segment_dedup(
     df: DataFrame,
     seg_tokens: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """RefinedWeb-style exact segment dedup with KEEP-FIRST semantics: the
     corpus-wide FIRST occurrence of every fixed-size token segment survives
@@ -501,12 +486,12 @@ def exact_segment_dedup(
     Returns one row per input document:
     (doc_id, n_segments, n_removed, clean_text).
     """
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     n_segs = F.ceil(n / F.lit(float(seg_tokens))).cast("int")
     # token array let-bound: slice(toks, ...) inside the per-segment lambda
     # re-tokenizes per element otherwise (O(n^2)/row)
     segs = let_bound(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.transform(
             F.sequence(F.lit(1), n_segs),
             lambda s: F.array_join(
@@ -516,14 +501,13 @@ def exact_segment_dedup(
     )
     exploded = (
         df.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.when(n > 0, segs).otherwise(F.array().cast("array<string>")).alias("segs"),
         )
         .select("doc_id", F.posexplode("segs").alias("pos", "seg"))
         .withColumn("h", token_md5_long(F.col("seg")))
     )
-    if eager:
-        exploded.persist()
+    exploded.persist()
     first = exploded.groupBy("h").agg(
         F.min(F.struct("doc_id", "pos")).alias("f")
     )
@@ -546,7 +530,7 @@ def exact_segment_dedup(
         ).alias("clean_text"),
     )
     out = (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -555,9 +539,6 @@ def exact_segment_dedup(
             F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         )
     )
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return out
     out = out.localCheckpoint(eager=True)
     exploded.unpersist()
     return out
@@ -568,8 +549,6 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 def gopher_rules(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 50,
     max_words: int = 100_000,
 ) -> DataFrame:
@@ -595,7 +574,7 @@ def gopher_rules(
     length and alpha fraction down on exactly the multi-line pages the
     rules target (r4 advice item).
     """
-    flat = F.replace(F.col(text_col), F.lit("\n"), F.lit(" "))
+    flat = F.replace(F.col("text"), F.lit("\n"), F.lit(" "))
     stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
 
     def tok_stats(toks: Column) -> Column:
@@ -628,8 +607,8 @@ def gopher_rules(
             F.size(F.filter(lines, lambda l: F.rtrim(l).endswith("..."))).alias("n_ell"),
         )
 
-    ls = let_bound(F.split(F.col(text_col), "\n"), line_stats)
-    txt = F.col(text_col)
+    ls = let_bound(F.split(F.col("text"), "\n"), line_stats)
+    txt = F.col("text")
     n_hash = F.length(txt) - F.length(F.replace(txt, F.lit("#"), F.lit("")))
     n_dots = (F.length(txt) - F.length(F.replace(txt, F.lit("..."), F.lit("")))) / 3
 
@@ -637,7 +616,7 @@ def gopher_rules(
         return F.when(cond, 1).otherwise(0).cast("int")
 
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         st.alias("st"),
         ls.alias("ls"),
         n_hash.cast("bigint").alias("n_hash"),
@@ -688,11 +667,7 @@ _GOPHER_DUP_THRESHOLDS = {
 }
 
 
-def gopher_repetition(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher REPETITION rules (Rae et al. 2021, arXiv:2112.11446 App. A1,
     Table A1 'repetition removal') — the companion of :func:`gopher_rules`'
     A1.1 quality table; :func:`repetition_stats`' two signals were the
@@ -739,7 +714,7 @@ def gopher_repetition(
     start, cover end, covered chars).
     """
     nonempty = lambda x: x != F.lit("")  # noqa: E731
-    toks_expr = F.filter(tokens(F.replace(F.col(text_col), F.lit("\n"), F.lit(" "))), nonempty)
+    toks_expr = F.filter(tokens(F.replace(F.col("text"), F.lit("\n"), F.lit(" "))), nonempty)
 
     def dup_stats(elems_expr: Column) -> Column:
         def body(elems: Column) -> Column:
@@ -757,7 +732,7 @@ def gopher_repetition(
 
     # the oracle joins the n-gram signals to a document by id: a row without
     # an id gets none (0)
-    has_id = F.col(id_col).isNotNull()
+    has_id = F.col("doc_id").isNotNull()
 
     def top_chars(w: Column, k: int) -> Column:
         return F.when(has_id, let_bound(
@@ -803,9 +778,9 @@ def gopher_repetition(
         )
 
     stats = df.select(
-        F.col(id_col).alias("doc_id"),
-        dup_stats(F.filter(F.split(F.col(text_col), "\n"), nonempty)).alias("ls"),
-        dup_stats(F.filter(F.split(F.col(text_col), "\n\n"), nonempty)).alias("ps"),
+        F.col("doc_id"),
+        dup_stats(F.filter(F.split(F.col("text"), "\n"), nonempty)).alias("ls"),
+        dup_stats(F.filter(F.split(F.col("text"), "\n\n"), nonempty)).alias("ps"),
         let_bound(toks_expr, ngram_stats).alias("g"),
     ).select("doc_id", "ls", "ps", "g.*")
 
@@ -860,7 +835,6 @@ def gopher_repetition(
 
 def vocab_coverage(
     df: DataFrame,
-    key_col: str = "key",
     sizes: tuple[int, ...] = (100, 1000, 10000),
 ) -> DataFrame:
     """Top-V vocabulary coverage — the tokenizer-design calibration table:
@@ -899,7 +873,7 @@ def vocab_coverage(
     (there is no level for any V to land in); both engines agree.
     """
     counts = (
-        df.select(F.col(key_col).alias("k__"))
+        df.select(F.col("key").alias("k__"))
         .groupBy("k__")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
@@ -959,8 +933,6 @@ def vocab_coverage(
 
 def c4_rules(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_sentences: int = 3,
     min_line_words: int = 5,
 ) -> DataFrame:
@@ -979,7 +951,7 @@ def c4_rules(
     has_brace, keep, clean_text) with clean_text = the retained lines
     newline-joined when keep=1, else ''.
     """
-    txt = F.col(text_col)
+    txt = F.col("text")
 
     def line_keep(l: Column) -> Column:
         r = F.rtrim(l)
@@ -1006,7 +978,7 @@ def c4_rules(
     has_lorem = F.when(F.lower(txt).contains("lorem ipsum"), 1).otherwise(0).cast("int")
     has_brace = F.when(txt.contains("{"), 1).otherwise(0).cast("int")
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         st.alias("st"),
         has_lorem.alias("has_lorem"),
         has_brace.alias("has_brace"),
@@ -1035,12 +1007,8 @@ def c4_rules(
 
 def dsir_importance(
     df: DataFrame,
-    target_col: str = "lang",
     target_value: str = "en",
     n_buckets: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", arXiv:2302.03169): score
@@ -1051,7 +1019,7 @@ def dsir_importance(
     ratio  ln p_target(b) - ln p_raw(b).  Selecting the top-weighted
     documents approximates sampling from the target distribution — the
     published recipe for "give me web data that looks like Wikipedia".
-    Here the target is the ``target_col == target_value`` slice (the
+    Here the target is the ``lang == target_value`` slice (the
     pipeline shape is identical when the target is a separate corpus).
 
     Plan shape at scale: the feature explode is persisted once and feeds
@@ -1067,15 +1035,14 @@ def dsir_importance(
     """
     feats = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            (F.col(target_col) == F.lit(target_value)).alias("is_t"),
-            F.explode(_kgrams(F.col(text_col), 2)).alias("g"),
+            F.col("doc_id"),
+            (F.col("lang") == F.lit(target_value)).alias("is_t"),
+            F.explode(_kgrams(F.col("text"), 2)).alias("g"),
         )
         .withColumn("b", _md5_bucket(F.col("g"), 8, n_buckets))
         .drop("g")
     )
-    if eager:
-        feats.persist()
+    feats.persist()
     raw_counts = feats.groupBy("b").agg(F.count("*").alias("r_cnt"))
     tgt_counts = feats.where(F.col("is_t")).groupBy("b").agg(
         F.count("*").alias("t_cnt")
@@ -1105,9 +1072,6 @@ def dsir_importance(
         F.count("*").cast("bigint").alias("n_feat"),
         F.round(F.avg("w"), 4).alias("dsir_logratio"),
     )
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return scored
     scored = scored.localCheckpoint(eager=True)
     feats.unpersist()
     return scored
@@ -1115,8 +1079,6 @@ def dsir_importance(
 
 def unigram_surprise(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 1,
 ) -> DataFrame:
     """Perplexity-proxy quality signal (the CCNet/KenLM filter, self-
@@ -1139,11 +1101,11 @@ def unigram_surprise(
     Returns (doc_id, n_tok, surprise) with surprise = round(mean -ln p, 4).
     """
     unit = (
-        F.explode(tokens(normalized(F.col(text_col))))
+        F.explode(tokens(normalized(F.col("text"))))
         if ngram == 1
-        else F.explode(_kgrams(F.col(text_col), ngram))
+        else F.explode(_kgrams(F.col("text"), ngram))
     )
-    toks = df.select(F.col(id_col).alias("doc_id"), unit.alias("tok")).persist()
+    toks = df.select(F.col("doc_id"), unit.alias("tok")).persist()
     lm = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = lm.agg(F.sum("cnt").cast("bigint").alias("total"))
     scored = (
@@ -1164,9 +1126,6 @@ def unigram_surprise(
 
 def ccnet_bucket(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
     lo: int = 0,
     hi: int = 1 << 19,
     n_bins: int = 512,
@@ -1197,9 +1156,9 @@ def ccnet_bucket(
     """
     from .sketch import grouped_quantiles  # sketch imports corpus._kgrams
 
-    scored = unigram_surprise(df, text_col, id_col)
+    scored = unigram_surprise(df)
     langs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")
+        F.col("doc_id"), F.col("lang")
     )
     su = scored.join(langs, "doc_id").select(
         "doc_id",
@@ -1234,9 +1193,6 @@ def budget_sample(
     budgets: dict[str, int],
     default_budget: int = 2000,
     denom: int = 1000,
-    strat_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Token-BUDGET mixture sampling: where stratified/sample_documents
     takes fixed keep-rates, a training mix is usually specified as tokens
@@ -1256,11 +1212,11 @@ def budget_sample(
     """
     rate: Column = F.lit(default_budget)
     for lang, b in sorted(budgets.items()):
-        rate = F.when(F.col(strat_col) == lang, F.lit(b)).otherwise(rate)
+        rate = F.when(F.col("lang") == lang, F.lit(b)).otherwise(rate)
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(strat_col).alias("lang"),
-        token_count(F.col(text_col)).cast("bigint").alias("n_tok"),
+        F.col("doc_id"),
+        F.col("lang"),
+        token_count(F.col("text")).cast("bigint").alias("n_tok"),
         rate.cast("bigint").alias("budget"),
     )
     totals = base.groupBy("lang").agg(F.sum("n_tok").alias("total_tok"))
@@ -1282,11 +1238,7 @@ def budget_sample(
     )
 
 
-def source_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_stats(df: DataFrame) -> DataFrame:
     """Per-source (per-domain) quality aggregates — the audit table behind
     domain-level filtering (RefinedWeb/C4 drop whole domains, not just
     documents: a consistently-low-quality source is spam/SEO even when a
@@ -1294,39 +1246,34 @@ def source_stats(
     sources. Returns (source, n_docs, mean_quality round4)."""
     from ..functions.textfns import quality_score
 
-    return df.groupBy(F.col(source_col).alias("source")).agg(
+    return df.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
-        F.round(F.avg(quality_score(F.col(text_col))), 4).alias("mean_quality"),
+        F.round(F.avg(quality_score(F.col("text"))), 4).alias("mean_quality"),
     )
 
 
 def source_filter(
     df: DataFrame,
     min_mean_quality: float = 0.52,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Domain-level gate: keep every document whose SOURCE clears the mean
     quality bar — the aggregate-then-gate pattern (per-source stats are a
     tiny table, broadcast back; the corpus sees one narrow semi join, no
     second scan of the text). Returns surviving (doc_id, source)."""
-    good = source_stats(df, text_col, source_col).where(
+    good = source_stats(df).where(
         F.col("mean_quality") >= min_mean_quality
     )
     return df.join(
         F.broadcast(good.select(F.col("source").alias("__good_src"))),
-        df[source_col] == F.col("__good_src"),
+        df["source"] == F.col("__good_src"),
         "left_semi",
-    ).select(F.col(id_col).alias("doc_id"), F.col(source_col).alias("source"))
+    ).select("doc_id", "source")
 
 
 def blocklist_filter(
     df: DataFrame,
     blockwords: list[str],
     max_hits: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Blocklist curation gate (the bad-words pass every public web
     pipeline runs — C4's badwords filter): count normalized-token hits
@@ -1339,12 +1286,12 @@ def blocklist_filter(
     Returns surviving rows: (doc_id, n_tok, n_blocked).
     """
     arr = F.array(*[F.lit(w) for w in sorted(blockwords)])
-    toks = tokens(normalized(F.col(text_col)))
+    toks = tokens(normalized(F.col("text")))
     n_blocked = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            token_count(normalized(F.col(text_col))).cast("bigint").alias("n_tok"),
+            F.col("doc_id"),
+            token_count(normalized(F.col("text"))).cast("bigint").alias("n_tok"),
             n_blocked.cast("bigint").alias("n_blocked"),
         )
         .where(F.col("n_blocked") <= max_hits)
@@ -1355,8 +1302,6 @@ def epoch_upsample(
     df: DataFrame,
     factors: dict[str, int],
     default_factor: int = 1,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Mixture UPSAMPLING: repeat each stratum's documents ``factor``
     times — how training mixes give small high-quality strata multiple
@@ -1371,7 +1316,7 @@ def epoch_upsample(
     """
     factor: Column = F.lit(default_factor)
     for stratum, f in sorted(factors.items()):
-        factor = F.when(F.col(strat_col) == stratum, F.lit(f)).otherwise(factor)
+        factor = F.when(F.col("lang") == stratum, F.lit(f)).otherwise(factor)
     # sequence(1, 0) runs DESCENDING (the _kgrams guard): a factor <= 0
     # must yield an EMPTY epoch list (stratum dropped from the mix), not
     # a spurious epoch=1 copy
@@ -1379,8 +1324,8 @@ def epoch_upsample(
         factor >= 1, F.sequence(F.lit(1), factor)
     ).otherwise(F.array().cast("array<int>"))
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(strat_col).alias("stratum"),
+        F.col("doc_id"),
+        F.col("lang").alias("stratum"),
         F.explode(epochs).alias("epoch"),
     )
 
@@ -1389,8 +1334,6 @@ def top_ngrams_per_stratum(
     df: DataFrame,
     n: int = 2,
     top_k: int = 5,
-    text_col: str = "text",
-    strat_col: str = "lang",
 ) -> DataFrame:
     """Per-stratum most-frequent word n-grams — the corpus-audit table
     behind vocabulary drift / boilerplate monitoring. Grouped top-k via a
@@ -1401,8 +1344,8 @@ def top_ngrams_per_stratum(
     """
     counts = (
         df.select(
-            F.col(strat_col).alias("stratum"),
-            F.explode(_kgrams(F.col(text_col), n)).alias("g"),
+            F.col("lang").alias("stratum"),
+            F.explode(_kgrams(F.col("text"), n)).alias("g"),
         )
         .groupBy("stratum", "g")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -1419,8 +1362,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Overlapping token chunking — the sequence-prep op for training and
     retrieval corpora: windows of ``chunk_tokens`` whitespace tokens with
@@ -1435,8 +1376,8 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
-    n = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)).otherwise(F.size(toks))
+    toks = tokens(F.col("text"))
+    n = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(F.size(toks))
     # number of chunks: 1 + ceil(max(n - chunk_tokens, 0) / stride)
     n_chunks = (
         F.lit(1)
@@ -1452,7 +1393,7 @@ def chunk_documents(
         ),
     )
     out = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         n.alias("n_doc_tokens"),
         F.posexplode(F.when(n > 0, chunks).otherwise(F.array(F.array().cast("array<string>")))).alias(
             "pos", "chunk"
@@ -1470,8 +1411,6 @@ def hashed_classify(
     df: DataFrame,
     n_buckets: int = 4096,
     seed: str = "hc",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """fastText-style hashed bag-of-ngrams linear classifier INFERENCE
     (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -1547,11 +1486,11 @@ def hashed_classify(
     def over_toks(toks: Column) -> Column:
         return let_bound(F.filter(toks, lambda t: F.length(t) > 0), over_clean)
 
-    res = let_bound(tokens(normalized(F.col(text_col))), over_toks)
+    res = let_bound(tokens(normalized(F.col("text"))), over_toks)
     return (
         df.withColumn("__hc", res)
         .select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.col("__hc.n_feats").alias("n_feats"),
             F.col("__hc.score").alias("score"),
             F.when(F.col("__hc.score") > 0, F.lit(1))
@@ -1567,9 +1506,6 @@ def alpha_mix(
     budget_permille: int = 400,
     alpha_denom: int = 2,
     denom: int = 1_000_000,
-    strat_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Temperature-scaled mixture sampling audit: per-source keep rates
     proportional to ``n_tokens^alpha / n_tokens`` with alpha = 1/2 (the
@@ -1605,9 +1541,9 @@ def alpha_mix(
     if alpha_denom != 2:
         raise NotImplementedError("alpha is fixed at 1/2 (integer sqrt)")
     base = df.select(
-        F.col(strat_col).alias("source"),
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("bigint").alias("n_tok"),
+        F.col("source"),
+        F.col("doc_id"),
+        token_count(F.col("text")).cast("bigint").alias("n_tok"),
     )
     per_src = {
         r["source"]: (int(r["nd"]), int(r["nt"]))
@@ -1656,8 +1592,6 @@ def collocations(
     delta: int = 5,
     min_count: int = 5,
     top_k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus collocation (phrase) extraction — the word2vec phrase score
     (Mikolov et al. 2013 §4, "Distributed Representations of Words and
@@ -1689,8 +1623,8 @@ def collocations(
     count — keeps the operator a pure DataFrame transform, the
     tfidf_weighted_pairs ``n_docs`` precedent).
     """
-    toks = F.filter(tokens(normalized(F.col(text_col))), lambda t: F.length(t) > 0)
-    base = df.select(F.col(id_col).alias("doc"), toks.alias("w"))
+    toks = F.filter(tokens(normalized(F.col("text"))), lambda t: F.length(t) > 0)
+    base = df.select(F.col("doc_id").alias("doc"), toks.alias("w"))
     uni = (
         base.select(F.explode("w").alias("word"))
         .groupBy("word")

@@ -31,15 +31,15 @@ from ..functions.textfns import let_bound, normalized, token_count, token_md5_lo
 SIMHASH_BITS = 32
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: hash-groupBy on md5(text); keeps the min id as canonical.
 
     Returns (text_hash, keep_id, n_dups).
     """
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").cast("bigint").alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").cast("bigint").alias("n_dups"))
     )
 
 
@@ -77,10 +77,10 @@ def shingles(text_col: Column, k: int = 3) -> Column:
     return let_bound(tokens(normalized(text_col)), body)
 
 
-def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
+def doc_shingles(df: DataFrame, k: int = 3) -> DataFrame:
     """Exploded (doc_id, shingle) pairs — the inverted-index base."""
     return df.select(
-        F.col(id_col).alias("doc_id"), F.explode(shingles(F.col(text_col), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"), k)).alias("shingle")
     )
 
 
@@ -99,8 +99,6 @@ def shingle_base_hash(col: Column) -> Column:
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     k: int = 3,
 ) -> DataFrame:
@@ -114,7 +112,7 @@ def minhash_signatures(
     tokenizer per hash function in the optimized plan.
     """
     return df.select(
-        F.col(id_col).alias("doc_id"), row_minhash(F.col(text_col), num_hashes, k).alias("mh")
+        F.col("doc_id"), row_minhash(F.col("text"), num_hashes, k).alias("mh")
     ).select("doc_id", "mh.*")
 
 
@@ -173,8 +171,6 @@ def _banded(
 
 def band_index(
     corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     rows_per_band: int = 2,
     k: int = 3,
@@ -190,7 +186,7 @@ def band_index(
     :func:`build_band_index` / :func:`load_band_index`."""
     params = {"num_hashes": num_hashes, "rows_per_band": rows_per_band, "k": k}
     return _banded(
-        minhash_signatures(corpus, text_col, id_col, num_hashes, k), num_hashes, rows_per_band
+        minhash_signatures(corpus, num_hashes, k), num_hashes, rows_per_band
     ).select(
         F.col("doc_id").alias("index_id"),
         "band_id",
@@ -239,9 +235,7 @@ def load_band_index(spark: SparkSession, location: str) -> DataFrame:
     return index
 
 
-def lsh_probe_dedup(
-    batch: DataFrame, index: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def lsh_probe_dedup(batch: DataFrame, index: DataFrame) -> DataFrame:
     """INCREMENTAL near-dup dedup: probe a NEW batch against an EXISTING
     corpus's minhash-LSH band index — the batch-ingest production shape
     (a self-join over corpus+batch would re-pair the whole history on
@@ -264,7 +258,7 @@ def lsh_probe_dedup(
     probe side.
     """
     num_hashes, rows_per_band, k = band_index_params(index)
-    new_sig = minhash_signatures(batch, text_col, id_col, num_hashes, k)
+    new_sig = minhash_signatures(batch, num_hashes, k)
     hits = (
         _banded(new_sig, num_hashes, rows_per_band)
         .join(index.select("index_id", "band_id", "band_key"), ["band_id", "band_key"])
@@ -323,8 +317,6 @@ def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = 2) -> DataFr
 
 def minhash_jaccard_estimates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     rows_per_band: int = 2,
     k: int = 3,
@@ -348,7 +340,7 @@ def minhash_jaccard_estimates(
     avoid; exact-on-candidates is the audited compromise (the
     heavy_hitters verify-on-candidates precedent). All-integer output.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
+    sig = minhash_signatures(df, num_hashes, k)
     # flat materialized signature table (multi-referenced: banding + both
     # per-pair signature join sides — the lsh_candidate_pairs discipline)
     sig = sig.localCheckpoint(eager=False)
@@ -379,12 +371,12 @@ def minhash_jaccard_estimates(
     # broadcasts; the exploded frame feeds three consumers (sizes + both
     # intersection sides) and is persisted once.
     cand_ids = (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    shing = doc_shingles(cand_docs, text_col, id_col, k).localCheckpoint(eager=False)
+    cand_docs = df.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+    shing = doc_shingles(cand_docs, k).localCheckpoint(eager=False)
     sizes = shing.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sh_a = shing.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = shing.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -421,7 +413,7 @@ def minhash_jaccard_estimates(
     return out
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash over tokens (with multiplicity): per bit b, sum of +-1 by
     whether md5-int(token) has bit b set; simhash sets bit b iff sum > 0.
 
@@ -429,8 +421,8 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     explode + groupBy with 32 conditional sums (all map-side combinable).
     """
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(normalized(F.col(text_col)))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(tokens(normalized(F.col("text")))).alias("tok"),
     ).where(F.col("tok") != "")
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
     bit_sums = [
@@ -518,8 +510,6 @@ def simhash_multiprobe_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
     max_df: int = 100,
@@ -543,7 +533,7 @@ def ngram_jaccard_pairs(
     # once per self-join side is cheaper than the extra persist+count
     # materialization pass it used to take to run it once (interleaved
     # A/B 1.61 -> 1.34 s at sf0.1, values identical).
-    pairs_base = doc_shingles(df, text_col, id_col, k).repartition("shingle").persist()
+    pairs_base = doc_shingles(df, k).repartition("shingle").persist()
     sizes = pairs_base.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     df_counts = pairs_base.groupBy("shingle").agg(F.count("*").alias("df"))
     filtered = pairs_base.join(df_counts.where(F.col("df") <= max_df), "shingle")
@@ -588,8 +578,6 @@ def ngram_jaccard_pairs(
 
 def shared_window_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     min_shared: int = 1,
     max_df: int = 50,
@@ -611,7 +599,7 @@ def shared_window_pairs(
     # pass that used to run it once. The single eager action below fills
     # the lazy cache within one job (the multi-JOB fill race the
     # lsh_candidate_pairs convention guards against does not arise).
-    sh = doc_shingles(df, text_col, id_col, k).repartition("shingle").persist()
+    sh = doc_shingles(df, k).repartition("shingle").persist()
     dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     filtered = sh.join(dfc.where(F.col("df") <= max_df), "shingle")
     a = filtered.alias("a")
@@ -631,8 +619,6 @@ def shared_window_pairs(
 
 def remove_shared_windows(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
 ) -> DataFrame:
     """Exact-substring dedup APPLY (completes the Lee et al. "Deduplicating
@@ -668,11 +654,11 @@ def remove_shared_windows(
     Returns one row per input document:
     (doc_id, n_tokens, n_removed, clean_text).
     """
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     # sequence(1, 0) DESCENDS (the epoch_upsample/_kgrams trap): docs
     # shorter than k tokens get an explicitly empty window array
     win_hashes = let_bound(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.transform(
             F.sequence(F.lit(1), n - (k - 1)),
             lambda s: F.struct(
@@ -683,7 +669,7 @@ def remove_shared_windows(
     )
     wins = (
         df.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.when(n >= k, win_hashes)
             .otherwise(F.array().cast("array<struct<s:int,h:bigint>>"))
             .alias("ws"),
@@ -700,14 +686,12 @@ def remove_shared_windows(
         .where(~((F.col("doc_id") == F.col("f.doc_id")) & (F.col("s") == F.col("f.s"))))
         .select("doc_id", "s")
     )
-    out = _strip_dup_windows(df, dup, text_col, id_col, k).localCheckpoint(eager=True)
+    out = _strip_dup_windows(df, dup, k).localCheckpoint(eager=True)
     release_frame(wins)
     return out
 
 
-def _strip_dup_windows(
-    df: DataFrame, dup: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
+def _strip_dup_windows(df: DataFrame, dup: DataFrame, k: int) -> DataFrame:
     """Removal tail of :func:`remove_shared_windows`: duplicate
     (doc_id, s) window starts -> interval cover -> per-document removed-
     position ARRAYS (the only shuffled payload — duplicate metadata, tiny
@@ -720,7 +704,7 @@ def _strip_dup_windows(
     few removed positions; now only the removed (doc_id, position) set is
     shuffled/aggregated, and documents with no duplicates take a null-fast
     path that never rebuilds their token array membership test."""
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     rm = (
         dup.select(
             "doc_id", F.explode(F.sequence(F.col("s"), F.col("s") + (k - 1))).alias("p")
@@ -729,7 +713,7 @@ def _strip_dup_windows(
         .groupBy("doc_id")
         .agg(F.collect_list("p").alias("rmp"))
     )
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     kept_join = let_bound(
         toks,
         lambda ts: F.array_join(
@@ -737,7 +721,7 @@ def _strip_dup_windows(
         ),
     )
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+        df.select("doc_id", "text")
         .join(rm, "doc_id", "left")
         .select(
             "doc_id",
@@ -756,8 +740,6 @@ def _strip_dup_windows(
 def cross_corpus_contamination(
     train: DataFrame,
     test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     max_df: int = 50,
 ) -> DataFrame:
@@ -775,10 +757,10 @@ def cross_corpus_contamination(
     # the train index feeds both the df-count and the probe join — persist
     # AND materialize eagerly (lazy persists race; at scale: write the
     # window index table)
-    tr = doc_shingles(train, text_col, id_col, k).select(
+    tr = doc_shingles(train, k).select(
         F.col("doc_id").alias("train_id"), "shingle"
     ).persist()
-    te = doc_shingles(test, text_col, id_col, k)
+    te = doc_shingles(test, k)
     dfc = tr.groupBy("shingle").agg(F.count("*").alias("df"))
     tr_cut = tr.join(dfc.where(F.col("df") <= max_df), "shingle")
     out = (
@@ -798,12 +780,9 @@ def cross_corpus_contamination(
 def contamination_report(
     train: DataFrame,
     test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     max_df: int = 50,
     max_frac: float = 0.2,
-    eager: bool = True,
 ) -> DataFrame:
     """The decontamination DECISION table: one row per TEST document with
     its window totals, hit counts, contamination fraction, and the
@@ -819,13 +798,12 @@ def contamination_report(
 
     Returns (doc_id, n_windows, n_windows_hit, contam_frac, is_clean 0/1).
     """
-    tr = doc_shingles(train, text_col, id_col, k).select(
+    tr = doc_shingles(train, k).select(
         F.col("doc_id").alias("train_id"), "shingle"
     )
-    te = doc_shingles(test, text_col, id_col, k)
-    if eager:
-        tr.persist()
-        te.persist()
+    te = doc_shingles(test, k)
+    tr.persist()
+    te.persist()
     totals = te.groupBy("doc_id").agg(
         F.countDistinct("shingle").alias("n_windows")
     )
@@ -846,9 +824,6 @@ def contamination_report(
         frac.alias("contam_frac"),
         F.when(frac <= max_frac, 1).otherwise(0).cast("int").alias("is_clean"),
     )
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return out
     out = out.localCheckpoint(eager=True)
     te.unpersist()
     tr.unpersist()
@@ -858,7 +833,6 @@ def contamination_report(
 def keep_canonical(
     df: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """APPLY near-dup dedup to the corpus: cluster the candidate pairs
     (connected components) and keep exactly one document per cluster — the
@@ -871,24 +845,20 @@ def keep_canonical(
     the corpus beyond that join (AQE broadcasts the drop side when it
     fits). Returns the surviving input rows, all columns.
     """
-    return df.join(canonical_drops(pairs, id_col), id_col, "left_anti")
+    return df.join(canonical_drops(pairs), "doc_id", "left_anti")
 
 
-def canonical_drops(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def canonical_drops(pairs: DataFrame) -> DataFrame:
     """The drop list of :func:`keep_canonical`: every clustered document
-    that is not its component's minimum, as one ``id_col`` column. On the
+    that is not its component's minimum, as one ``doc_id`` column. On the
     components' driver finish it is a LocalRelation, so a gate can
     anti-join it without re-reading the corpus."""
     cc = connected_components(pairs)
-    return cc.where(F.col("doc_id") != F.col("component")).select(
-        F.col("doc_id").alias(id_col)
-    )
+    return cc.where(F.col("doc_id") != F.col("component")).select("doc_id")
 
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
     max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -1012,8 +982,8 @@ def connected_components(
     # self-loop (or a null src) and is dropped here.
     edges0 = (
         pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
-            F.least(F.col(id_a), F.col(id_b)).alias("dst"),
+            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("src"),
+            F.least(F.col("doc_a"), F.col("doc_b")).alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()

@@ -47,7 +47,6 @@ PR_SCALE = 10**12
 
 def synth_link_graph(
     nodes: DataFrame,
-    id_col: str = "doc_id",
     n_links: int = 3,
     salt: str = "pr",
     n: int | None = None,
@@ -67,8 +66,8 @@ def synth_link_graph(
     if n is not None and n <= 0:
         raise ValueError(f"synth_link_graph: n must be positive, got {n}")
     if n is None:
-        n = nodes.select(id_col).distinct().count()
-    ids = nodes.select(F.col(id_col).cast("bigint").alias("src")).distinct()
+        n = nodes.select("doc_id").distinct().count()
+    ids = nodes.select(F.col("doc_id").cast("bigint").alias("src")).distinct()
     raw = ids.select(
         "src", F.explode(F.sequence(F.lit(1), F.lit(n_links))).alias("j")
     ).select(
@@ -91,7 +90,6 @@ def synth_link_graph(
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
     iterations: int = 8,
     damping_pct: int = 85,
     scale: int = PR_SCALE,
@@ -139,7 +137,7 @@ def pagerank(
     # count(distinct cast(id as bigint)) or the teleport term and seed
     # mass are silently wrong (the contract entry passes the doc_id
     # primary-key count, identical by definition).
-    node_t = nodes.select(F.col(id_col).cast("bigint").alias("node")).distinct()
+    node_t = nodes.select(F.col("doc_id").cast("bigint").alias("node")).distinct()
     node_t = node_t.localCheckpoint(eager=False)
     if n is None or n * 64 < broadcast_threshold(spark):
         ids = collect_within_budget(node_t, 64)

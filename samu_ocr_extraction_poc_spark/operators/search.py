@@ -25,8 +25,6 @@ BM25_B = 0.75
 def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document BM25 score for a bag of query terms (no ranking).
 
@@ -48,8 +46,8 @@ def bm25_scores(
     """
     terms = [t.lower() for t in query_terms]
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalized(F.col(text_col))).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalized(F.col("text"))).alias("toks"),
     ).select(
         "doc_id",
         F.explode("toks").alias("term"),
@@ -98,8 +96,6 @@ def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 top-k documents for a bag of query terms.
 
@@ -116,7 +112,7 @@ def bm25_topk(
 
     Returns (rank, doc_id, score).
     """
-    scores = bm25_scores(df, query_terms, text_col, id_col)
+    scores = bm25_scores(df, query_terms)
     # eager k-row checkpoint: the rank join reads `top` on both sides; a
     # lazy frame would recompute the whole scoring pipeline twice
     top = (
@@ -155,9 +151,7 @@ def filtered_kgrams(text_col: Column, k: int) -> Column:
     return let_bound(filtered_tokens(text_col), lambda toks: _grams(toks, k))
 
 
-def positional_index(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def positional_index(df: DataFrame) -> DataFrame:
     """Positional inverted index: (term, doc_id, pos) rows, pos 1-based
     over :func:`filtered_tokens` — the structure phrase/proximity
     queries probe instead of re-scanning text. One narrow
@@ -172,8 +166,8 @@ def positional_index(
     in :func:`phrase_query` multiplicity-exact."""
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(filtered_tokens(F.col(text_col))).alias("pos0", "term"),
+            F.col("doc_id"),
+            F.posexplode(filtered_tokens(F.col("text"))).alias("pos0", "term"),
         )
         .select(
             "term",
@@ -220,8 +214,6 @@ def phrase_query(index: DataFrame, terms: list[str]) -> DataFrame:
 def phrase_match_counts(
     df: DataFrame,
     terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Row-local phrase matcher — the NARROW formulation of
     :func:`phrase_query` for when the corpus is already being scanned
@@ -252,8 +244,8 @@ def phrase_match_counts(
 
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            let_bound(filtered_tokens(F.col(text_col)), body).alias("st"),
+            F.col("doc_id"),
+            let_bound(filtered_tokens(F.col("text")), body).alias("st"),
         )
         .where(F.size("st") > 0)
         .select(
@@ -308,9 +300,6 @@ def proximity_query(
         pa,
         ib,
         key_col="doc_id",
-        time_col="t",
-        lo_col="lo",
-        hi_col="hi",
         bucket_us=2 * window,
         max_len_us=None,
     )
@@ -327,8 +316,6 @@ def tfidf_weighted_pairs(
     max_df: int | None = None,
     idf_scale: int = 1000,
     top_k: int = 30,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """All-pairs IDF-weighted lexical similarity with a document-frequency
     screen (Bayardo et al. 2007, "Scaling Up All Pairs Similarity
@@ -377,8 +364,8 @@ def tfidf_weighted_pairs(
 
     posting = (
         df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(bigrams(tokens(normalized(F.col(text_col))))).alias("term"),
+            F.col("doc_id").alias("doc"),
+            F.explode(bigrams(tokens(normalized(F.col("text"))))).alias("term"),
         )
         .groupBy("doc", "term")
         .agg(F.count("*").cast("bigint").alias("tf"))

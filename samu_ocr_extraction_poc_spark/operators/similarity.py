@@ -48,8 +48,6 @@ def brute_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of each query against the corpus.
 
@@ -57,9 +55,9 @@ def brute_topk(
     once. Returns (query_id, rank, neighbor_id, cos).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -73,11 +71,11 @@ def brute_topk(
     )
 
 
-def label_centroids(corpus: DataFrame, vec_col: str = "embedding", label_col: str = "label") -> DataFrame:
+def label_centroids(corpus: DataFrame) -> DataFrame:
     """Per-label centroid as (label, dim, cval) rows — posexplode + avg, all
     relational (and therefore oracle-replayable)."""
     return (
-        corpus.select(F.col(label_col).alias("label"), F.posexplode(vec_col).alias("dim", "v"))
+        corpus.select(F.col("label"), F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(F.avg(F.col("v").cast("double")).alias("cval"))
     )
@@ -87,15 +85,12 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """IVF ANN: route query -> nearest centroid by cosine, then exact top-k
     within that cluster. Returns (query_id, rank, neighbor_id, cos)."""
-    cent = label_centroids(corpus, vec_col, label_col)
+    cent = label_centroids(corpus)
     qdims = queries.select(
-        F.col(id_col).alias("query_id"), F.posexplode(vec_col).alias("dim", "qv")
+        F.col("vec_id").alias("query_id"), F.posexplode("embedding").alias("dim", "qv")
     ).withColumn("qv", F.col("qv").cast("double"))
     # query x centroid cosine via the dim join (both sides tiny)
     qc = (
@@ -118,9 +113,9 @@ def ivf_topk(
     routed = qc.withColumn("rn", F.row_number().over(wbest)).where(F.col("rn") == 1).select(
         "query_id", "label"
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     cand = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), F.col(label_col).alias("label")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"), F.col("label")
     ).join(F.broadcast(routed), "label")
     scored = cand.join(F.broadcast(q), "query_id").select(
         "query_id",
@@ -135,12 +130,7 @@ def ivf_topk(
     )
 
 
-def centroid_classify(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def centroid_classify(corpus: DataFrame) -> DataFrame:
     """Nearest-centroid (Rocchio) classification — the cheap domain/quality
     tagger used to route corpus slices (classify each document embedding
     to the closest labeled-domain centroid): per-label centroids from the
@@ -160,7 +150,7 @@ def centroid_classify(
     # kmeans_assign formulation: no join, no N x d x k shuffle agg).
     # First-minimum position over ascending label ids = the lowest label
     # among exact ties, the same (d2 asc, pred asc) rule as before.
-    rows = label_centroids(corpus, vec_col, label_col).collect()
+    rows = label_centroids(corpus).collect()
     by_label: dict[int, dict[int, float]] = {}
     for r in rows:
         by_label.setdefault(r["label"], {})[r["dim"]] = r["cval"]
@@ -179,8 +169,8 @@ def centroid_classify(
         ),
     )
     base = corpus.select(
-        F.col(label_col).alias("true_label"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        F.col("label").alias("true_label"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
     return base.select("true_label", pred.alias("pred")).groupBy(
         F.col("true_label").cast("int").alias("true_label"),
@@ -205,8 +195,6 @@ def kmeans_assign(
     corpus: DataFrame,
     k: int = 8,
     iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means with NARROW assignment (iterative DataFrame
     algorithm): builds the cluster labels the IVF path needs when the
@@ -247,8 +235,8 @@ def kmeans_assign(
     # corpus scan + repartition and re-analyzed its lineage; the seed
     # collect below materializes the checkpoint (guide §3.3)
     base = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        F.col("vec_id").alias("vid"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     ).localCheckpoint(eager=False)
     cent = [
         (i, list(r["v"]))
@@ -302,7 +290,7 @@ def kmeans_assign(
             ]
     # localCheckpoint (eager) materializes the final assignment and cuts
     # lineage — the caller gets a plain frame with no unpersist obligation
-    out = assign.select(F.col("vid").alias(id_col), "cluster").localCheckpoint(
+    out = assign.select(F.col("vid").alias("vec_id"), "cluster").localCheckpoint(
         eager=True
     )
     release_frame(base)
@@ -343,8 +331,6 @@ def _sign_buckets(
     planes: list[list[int]],
     n_tables: int,
     bits_per_table: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """(vid, vec, t, bkt) rows: each vector exploded into its n_tables
     sign-bit bucket keys. Quantize ONCE per row (q = floor(v*1e6) as
@@ -376,9 +362,9 @@ def _sign_buckets(
         + ")"
     )
     quantized = corpus.selectExpr(
-        f"{id_col} AS vid",
-        f"{vec_col} AS vec",
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * "
+        "vec_id AS vid",
+        "embedding AS vec",
+        f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * "
         f"{float(QUANT_SCALE)}) AS LONG)) AS q",
     )
     dotted = quantized.selectExpr(
@@ -408,8 +394,6 @@ def hyperplane_lsh_pairs(
     dim: int,
     n_tables: int = 6,
     bits_per_table: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Label-free cosine LSH (Charikar's random-hyperplane scheme), standard
     multi-table construction: T independent tables of b sign bits each; a
@@ -427,7 +411,7 @@ def hyperplane_lsh_pairs(
     Returns distinct (id_a, id_b, cos).
     """
     planes = _hyperplanes(n_tables * bits_per_table, dim)
-    base = _sign_buckets(corpus, planes, n_tables, bits_per_table, id_col, vec_col)
+    base = _sign_buckets(corpus, planes, n_tables, bits_per_table)
     a = base.alias("a")
     b = base.alias("b")
     return (
@@ -451,8 +435,6 @@ def semantic_contamination(
     threshold: float = 0.35,
     n_tables: int = 6,
     bits_per_table: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Benchmark contamination in EMBEDDING space (the semantic sibling of
     dedup.cross_corpus_contamination's exact-window check): for each TEST
@@ -467,8 +449,8 @@ def semantic_contamination(
     only: (vec_id, n_train_hits, max_cos).
     """
     planes = _hyperplanes(n_tables * bits_per_table, dim)
-    tr = _sign_buckets(train, planes, n_tables, bits_per_table, id_col, vec_col)
-    te = _sign_buckets(test, planes, n_tables, bits_per_table, id_col, vec_col)
+    tr = _sign_buckets(train, planes, n_tables, bits_per_table)
+    te = _sign_buckets(test, planes, n_tables, bits_per_table)
     cand = (
         te.alias("a")
         .join(tr.alias("b"), ["t", "bkt"])
@@ -485,7 +467,7 @@ def semantic_contamination(
         "train_id",
         F.round(cosine(F.col("va"), F.col("vb")), 4).alias("cos"),
     ).where(F.col("cos") >= threshold)
-    return hits.groupBy(F.col("test_id").alias(id_col)).agg(
+    return hits.groupBy(F.col("test_id").alias("vec_id")).agg(
         F.count("*").cast("bigint").alias("n_train_hits"),
         F.max("cos").alias("max_cos"),
     )
@@ -494,9 +476,6 @@ def semantic_contamination(
 def cosine_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Embedding near-dup pairs with cosine >= threshold.
 
@@ -506,7 +485,7 @@ def cosine_near_dup_pairs(
     Returns (id_a, id_b, cos).
     """
     base = corpus.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), F.col(label_col).alias("label")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"), F.col("label")
     )
     a = base.alias("a")
     b = base.alias("b")
@@ -527,8 +506,6 @@ def semantic_dedup(
     k: int = 8,
     iterations: int = 3,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication of an UNLABELED corpus by embedding. K-means the
@@ -550,18 +527,18 @@ def semantic_dedup(
     Returns one row per input vector: (vec_id, cluster, is_kept) with
     is_kept as 0/1 int.
     """
-    assign = kmeans_assign(corpus, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col)
+    assign = kmeans_assign(corpus, k=k, iterations=iterations)
     # norm precomputed ONCE per vector (IEEE-identical to computing it
     # inside the pair predicate — same expression, evaluated earlier):
     # the pair join then does ONE O(d) reduction per pair instead of
     # three (measured ~2x on the sandbox pair stage)
     base = (
         corpus.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("nrm"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("vec"),
+            _norm(F.col("embedding")).alias("nrm"),
         )
-        .join(assign.select(F.col(id_col).alias("vid"), "cluster"), "vid")
+        .join(assign.select(F.col("vec_id").alias("vid"), "cluster"), "vid")
         # persist, NOT localCheckpoint (r6 A/B): a checkpointed LogicalRDD
         # loses the size statistics the planner needs to broadcast the
         # pair-join sides — measured 2.5 s -> 4.6 s when flattened; the
@@ -587,7 +564,7 @@ def semantic_dedup(
     out = (
         base.join(dups.withColumn("dup", F.lit(1)), "vid", "left")
         .select(
-            F.col("vid").alias(id_col),
+            F.col("vid").alias("vec_id"),
             F.col("cluster").cast("int").alias("cluster"),
             F.when(F.col("dup").isNull(), 1).otherwise(0).cast("int").alias("is_kept"),
         )
@@ -599,8 +576,6 @@ def semantic_dedup(
 
 def quantize_embeddings(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits_range: int = 127,
 ) -> DataFrame:
     """Symmetric per-vector int8-style quantization — the memory path for
@@ -614,7 +589,7 @@ def quantize_embeddings(
     """
     from ..functions.textfns import let_bound
 
-    v = F.col(vec_col)
+    v = F.col("embedding")
     scale = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     # scale let-bound: referencing the array_max expression inside the
     # per-component lambda re-reduces the vector per element (O(d^2)/row)
@@ -629,7 +604,7 @@ def quantize_embeddings(
         ),
     )
     return corpus.select(
-        F.col(id_col).alias("vec_id"), q.alias("qvec"), scale.cast("double").alias("scale")
+        F.col("vec_id"), q.alias("qvec"), scale.cast("double").alias("scale")
     )
 
 
@@ -637,8 +612,6 @@ def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k over QUANTIZED vectors: integer dot product
     of the int8 codes, normalized by the integer L2 norms — exact integer
@@ -648,10 +621,10 @@ def quantized_topk(
 
     Returns (query_id, rank, neighbor_id, qcos round(4)).
     """
-    qc = quantize_embeddings(corpus, id_col, vec_col).select(
+    qc = quantize_embeddings(corpus).select(
         F.col("vec_id").alias("neighbor_id"), F.col("qvec").alias("cq")
     )
-    qq = quantize_embeddings(queries, id_col, vec_col).select(
+    qq = quantize_embeddings(queries).select(
         F.col("vec_id").alias("query_id"), F.col("qvec").alias("qq")
     )
 
@@ -689,8 +662,6 @@ def build_ivf_index(
     location: str,
     k_clusters: int = 8,
     iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Build and PERSIST an IVF index: k-means cluster labels
     (kmeans_assign — deterministic relational Lloyd's), the corpus written
@@ -701,9 +672,7 @@ def build_ivf_index(
     every subsequent query batch, which is the entire point of IVF at
     corpus scale.
     """
-    base = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
+    base = corpus.select("vec_id", "embedding")
     assign = kmeans_assign(base, k_clusters, iterations)
     lists = base.join(assign, "vec_id")
     (
@@ -735,8 +704,6 @@ def ivf_topk_indexed(
     queries: DataFrame,
     k: int = 3,
     n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query a persisted IVF index (build_ivf_index): route each query to
     its ``n_probe`` nearest centroids (tiny broadcast table), prune the
@@ -749,7 +716,7 @@ def ivf_topk_indexed(
     """
     cent = spark.read.parquet(f"{location}/centroids")
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     qc = q.crossJoin(F.broadcast(cent)).select(
         "query_id",

@@ -33,8 +33,6 @@ def _group_sketch_sets(
     k: int,
     ngram: int,
     n_sub: int,
-    group_col: str,
-    text_col: str,
 ) -> DataFrame:
     """(grp, h) rows: each group's k smallest distinct n-gram hashes —
     the KMV sketch SET (not just the k-th minimum), which is what makes
@@ -42,8 +40,8 @@ def _group_sketch_sets(
     min-k as described in kmv_distinct_tokens."""
     hashed = (
         df.select(
-            F.col(group_col).alias("grp"),
-            F.explode(_kgrams(F.col(text_col), ngram)).alias("tok"),
+            F.col("lang").alias("grp"),
+            F.explode(_kgrams(F.col("text"), ngram)).alias("tok"),
         )
         .select("grp", token_md5_long(F.col("tok")).alias("h"))
         .distinct()
@@ -152,7 +150,6 @@ def bloom_probe(
     bloom: DataFrame,
     batch: DataFrame,
     key_col: str = "key",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Probe a :func:`bloom_build` filter with its own (m_bits, k): an
     element is a (probable) member iff ALL k of its bit positions are
@@ -170,9 +167,7 @@ def bloom_probe(
     impossible).
     """
     m_bits, k = column_params(bloom, *_BLOOM)
-    probes = _bloom_positions(batch, m_bits, k, key_col, id_col).withColumnRenamed(
-        id_col, "doc_id"
-    )
+    probes = _bloom_positions(batch, m_bits, k, key_col, "doc_id")
     hits = (
         probes.join(F.broadcast(bloom), "word_idx", "left")
         .select(
@@ -999,8 +994,6 @@ def kmv_distinct_tokens(
     k: int = 64,
     ngram: int = 2,
     n_sub: int = 64,
-    group_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-group distinct word-``ngram`` count estimate via a KMV sketch
     (n-grams of the normalized text — the vocabulary unit whose distinct
@@ -1018,12 +1011,12 @@ def kmv_distinct_tokens(
     Groups with fewer than k distinct n-grams get their exact count.
     Returns (group_col, n_mins, distinct_est) — n_mins = min(k, exact D).
     """
-    mink = _group_sketch_sets(df, k, ngram, n_sub, group_col, text_col)
+    mink = _group_sketch_sets(df, k, ngram, n_sub)
     est = mink.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n_mins"), F.max("h").alias("kth")
     )
     return est.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_mins",
         F.when(F.col("n_mins") < k, F.col("n_mins").cast("double"))
         .otherwise(
@@ -1038,8 +1031,6 @@ def kmv_group_overlap(
     k: int = 64,
     ngram: int = 2,
     n_sub: int = 64,
-    group_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """Pairwise group overlap from MERGED KMV sketches — the property that
     makes a sketch worth having at 100 TB: each group's k-minimum set is
@@ -1057,7 +1048,7 @@ def kmv_group_overlap(
 
     Returns (lang_a, lang_b, k_used, jaccard_est, union_est).
     """
-    mins = _group_sketch_sets(df, k, ngram, n_sub, group_col, text_col).persist()
+    mins = _group_sketch_sets(df, k, ngram, n_sub).persist()
     # lazy persist (r6): all six plan branches sit under ONE final action,
     # which fills the cache in a single job (block-level locks serialize
     # any same-partition race inside a job) - the separate count

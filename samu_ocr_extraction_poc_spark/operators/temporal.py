@@ -35,11 +35,10 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key_col: str = "k",
-    time_col: str = "t",
     bucket_us: int = DAY_US,
 ) -> DataFrame:
     """Backward as-of join: for every left row, the right row with the
-    LARGEST ``time_col`` <= the left row's time, per ``key_col`` — "the
+    LARGEST ``t`` <= the left row's time, per ``key_col`` — "the
     most recent prior observation" (trade-to-quote, event-to-state,
     click-to-impression attribution).
 
@@ -72,11 +71,11 @@ def asof_join(
     payload you need downstream). Right columns come back as
     ``matched_<col>`` (NULL when unmatched).
     """
-    lb = left.withColumn("__b", F.expr(f"{time_col} DIV {bucket_us}"))
+    lb = left.withColumn("__b", F.expr(f"t DIV {bucket_us}"))
     rpay = [c for c in right.columns if c != key_col]
-    cand = F.struct(*[F.col(c) for c in [time_col] + [c for c in rpay if c != time_col]])
+    cand = F.struct(*[F.col(c) for c in ["t"] + [c for c in rpay if c != "t"]])
     rb = right.select(
-        F.col(key_col), F.expr(f"{time_col} DIV {bucket_us}").alias("__b"), cand.alias("__cand")
+        F.col(key_col), F.expr(f"t DIV {bucket_us}").alias("__b"), cand.alias("__cand")
     )
     rbest = rb.groupBy(key_col, "__b").agg(F.max("__cand").alias("__best"))
     axis = (
@@ -94,7 +93,7 @@ def asof_join(
         key_col, "__b", F.max("__best").over(w).alias("__cand")
     )
     in_bucket = lb.join(rb, [key_col, "__b"]).where(
-        F.col(f"__cand.{time_col}") <= F.col(time_col)
+        F.col("__cand.t") <= F.col("t")
     )
     carried = lb.join(carry, [key_col, "__b"], "left")
     lcols = [c for c in left.columns]
@@ -105,9 +104,9 @@ def asof_join(
         .agg(F.max("__cand").alias("__m"))
     )
     out_cols = [F.col(c) for c in lcols]
-    out_cols.append(F.col(f"__m.{time_col}").alias(f"matched_{time_col}"))
+    out_cols.append(F.col("__m.t").alias("matched_t"))
     for c in rpay:
-        if c != time_col:
+        if c != "t":
             out_cols.append(F.col(f"__m.{c}").alias(f"matched_{c}"))
     return best.select(*out_cols)
 
@@ -116,9 +115,6 @@ def range_join(
     points: DataFrame,
     intervals: DataFrame,
     key_col: str = "k",
-    time_col: str = "t",
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     bucket_us: int = DAY_US,
     max_len_us: int | None = None,
 ) -> DataFrame:
@@ -137,27 +133,27 @@ def range_join(
     """
     if max_len_us is not None:
         too_long = intervals.where(
-            F.col(hi_col) - F.col(lo_col) > max_len_us
+            F.col("hi") - F.col("lo") > max_len_us
         ).limit(1).count()
         if too_long:
             raise ValueError(
                 f"range_join: interval longer than max_len_us={max_len_us} — "
                 "replication bound violated; widen max_len_us or split intervals"
             )
-    pb = points.withColumn("__b", F.expr(f"{time_col} DIV {bucket_us}"))
+    pb = points.withColumn("__b", F.expr(f"t DIV {bucket_us}"))
     ib = intervals.withColumn(
         "__b",
         F.explode(
             F.sequence(
-                F.expr(f"{lo_col} DIV {bucket_us}"),
-                F.expr(f"{hi_col} DIV {bucket_us}"),
+                F.expr(f"lo DIV {bucket_us}"),
+                F.expr(f"hi DIV {bucket_us}"),
             )
         ),
     )
     return (
         pb.join(ib, [key_col, "__b"])
         .where(
-            (F.col(time_col) >= F.col(lo_col)) & (F.col(time_col) <= F.col(hi_col))
+            (F.col("t") >= F.col("lo")) & (F.col("t") <= F.col("hi"))
         )
         .drop("__b")
     )
@@ -166,8 +162,6 @@ def range_join(
 def decayed_counts(
     events: DataFrame,
     anchor_day: int,
-    group_col: str = "event_type",
-    time_col: str = "t",
     bucket_us: int = DAY_US,
     scale: int = 10_000,
     max_age: int = 62,
@@ -197,8 +191,8 @@ def decayed_counts(
     if scale <= 0:
         raise ValueError(f"decayed_counts: scale must be positive, got {scale}")
     ev = events.select(
-        F.col(group_col).alias("g"),
-        F.expr(f"{time_col} DIV {bucket_us}").cast("bigint").alias("d"),
+        F.col("event_type").alias("g"),
+        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
     )
     return (
         ev.where(F.col("d") <= anchor_day)
@@ -214,15 +208,13 @@ def decayed_counts(
             F.count("*").cast("bigint").alias("n_events"),
             F.sum("contrib").cast("bigint").alias("decayed_score"),
         )
-        .select(F.col("g").alias(group_col), "n_events", "decayed_score")
+        .select(F.col("g").alias("event_type"), "n_events", "decayed_score")
     )
 
 
 def sliding_active_users(
     events: DataFrame,
     window_days: int = 7,
-    user_col: str = "user_id",
-    time_col: str = "t",
     bucket_us: int = DAY_US,
     eager: bool = True,
 ) -> DataFrame:
@@ -245,8 +237,8 @@ def sliding_active_users(
     The distinct (user, day) frame feeds BOTH the DAU agg and the
     replication, so ``eager=True`` (default) localCheckpoints it once
     instead of re-running the scan + distinct shuffle per consumer;
-    ``eager=False`` keeps the full declarative lineage (the dedup-ops
-    plan-inspection convention).
+    ``eager=False`` keeps the full declarative lineage for plan
+    inspection.
     """
     if window_days < 1:
         raise ValueError(
@@ -255,8 +247,8 @@ def sliding_active_users(
             "DESCEND and fabricate report days before the activity"
         )
     ev = events.select(
-        F.col(user_col).alias("u"),
-        F.expr(f"{time_col} DIV {bucket_us}").cast("bigint").alias("d"),
+        F.col("user_id").alias("u"),
+        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
     ).distinct()
     if eager:
         ev = ev.localCheckpoint(eager=True)
@@ -287,8 +279,6 @@ def sliding_active_users(
 
 def cohort_retention(
     events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "t",
     bucket_us: int = DAY_US,
     eager: bool = True,
 ) -> DataFrame:
@@ -319,11 +309,11 @@ def cohort_retention(
     ``active`` feeds two consumers and ``cohort`` feeds two more, so
     ``eager=True`` (default) localCheckpoints both once instead of
     re-running the scan + shuffles per consumer; ``eager=False`` keeps
-    the declarative lineage (the dedup-ops plan-inspection convention).
+    the declarative lineage for plan inspection.
     """
     ev = events.select(
-        F.col(user_col).alias("u"),
-        F.expr(f"{time_col} DIV {bucket_us}").cast("bigint").alias("d"),
+        F.col("user_id").alias("u"),
+        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
     )
     active = ev.distinct()
     if eager:
@@ -349,9 +339,6 @@ def cohort_retention(
 def funnel(
     events: DataFrame,
     stages: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    time_col: str = "t",
 ) -> DataFrame:
     """Strictly-ordered funnel conversion (the product-analytics staple;
     same semantics as ClickHouse windowFunnel in strict_order-less mode
@@ -373,7 +360,7 @@ def funnel(
     convert), integer time units end-to-end.
     """
     ev = events.select(
-        F.col(user_col).alias("u"), F.col(type_col).alias("et"), F.col(time_col).alias("t")
+        F.col("user_id").alias("u"), F.col("event_type").alias("et"), F.col("t")
     )
     cur = (
         ev.where(F.col("et") == stages[0])
@@ -394,7 +381,7 @@ def funnel(
     for i in range(2, len(stages) + 1):
         reached = reached + F.when(F.col(f"t{i}").isNotNull(), 1).otherwise(0)
     return cur.select(
-        F.col("u").alias(user_col),
+        F.col("u").alias("user_id"),
         *[
             F.coalesce(F.col(f"t{i}"), F.lit(-1)).cast("bigint").alias(f"t{i}_us")
             for i in range(1, len(stages) + 1)

@@ -39,8 +39,6 @@ def winnow_fingerprints(
     df: DataFrame,
     k: int = 4,
     w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Distinct winnowing fingerprints, one row per (doc_id, fp).
 
@@ -51,7 +49,7 @@ def winnow_fingerprints(
     # sequence(1, 0) runs DESCENDING (the _kgrams guard): gate the empty
     # case to an empty array instead
     mins = let_bound(
-        _gram_hashes(F.col(text_col), k),
+        _gram_hashes(F.col("text"), k),
         lambda hs: F.when(
             F.size(hs) >= 1,
             F.transform(
@@ -61,7 +59,7 @@ def winnow_fingerprints(
         ).otherwise(F.array().cast("array<bigint>")),
     )
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.explode(mins).alias("fp"))
+        df.select(F.col("doc_id"), F.explode(mins).alias("fp"))
         .distinct()
     )
 
@@ -72,9 +70,6 @@ def winnow_candidate_pairs(
     w: int = 5,
     min_shared: int = 2,
     max_df: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints —
     the MOSS match candidate generator. Same plan discipline as
@@ -92,9 +87,7 @@ def winnow_candidate_pairs(
     # exchange serves the df groupBy, the cut join, and the self-join; the
     # final eager action fills the lazy cache in one job, so the old
     # per-stage persist+count materialization passes were pure overhead.
-    fps = winnow_fingerprints(df, k=k, w=w, text_col=text_col, id_col=id_col)
-    if eager:
-        fps = fps.repartition("fp").persist()
+    fps = winnow_fingerprints(df, k=k, w=w).repartition("fp").persist()
     dfc = fps.groupBy("fp").agg(F.count("*").alias("df_cnt"))
     filtered = fps.join(dfc.where(F.col("df_cnt") <= max_df), "fp").select(
         "doc_id", "fp"
@@ -108,9 +101,6 @@ def winnow_candidate_pairs(
         .agg(F.count("*").cast("bigint").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-    if not eager:
-        # plan-inspection hook (tests): nothing was persisted or executed
-        return out
     out = out.localCheckpoint(eager=True)
     fps.unpersist()
     return out

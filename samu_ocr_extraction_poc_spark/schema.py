@@ -195,6 +195,9 @@ TABLE_SCHEMAS = {
         ("c_custkey", _BIGINT), ("c_name", _STRING), ("c_nationkey", _INT),
         ("c_acctbal", _DOUBLE), ("c_mktsegment", _STRING),
     ),
+    # doc_id is a key: no two rows share a non-null doc_id, so the row-local
+    # per-document operators (operators/corpus.py) equal the oracles'
+    # GROUP BY doc_id (tests/test_oracle_edge.py checks every table).
     "documents": _columns(
         ("doc_id", _BIGINT), ("text", _STRING), ("lang", _STRING),
         ("source", _STRING), ("n_chars", _BIGINT),

@@ -69,8 +69,6 @@ def exclude_manifest_files(df: DataFrame) -> DataFrame:
 
 def spans_from_plain_text(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     words_per_line: int = 8,
     lines_per_page: int = 5,
 ) -> DataFrame:
@@ -124,10 +122,10 @@ def spans_from_plain_text(
             ),
         )
 
-    spans = let_bound(F.split(F.trim(F.col(text_col)), r"\s+"), build)
+    spans = let_bound(F.split(F.trim(F.col("text")), r"\s+"), build)
     out = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.when(F.length(F.trim(F.col(text_col))) > 0, spans).otherwise(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.when(F.length(F.trim(F.col("text"))) > 0, spans).otherwise(
             F.array().cast(DOCUMENTS_SCHEMA["spans"].dataType)
         ).alias("spans"),
     )
@@ -154,8 +152,6 @@ def write_training_shards(
     location: str,
     budget: int = 256,
     n_shards: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> None:
     """The training-pipeline SINK: join the corpus with its packing
     assignment (operators/corpus.py:pack_assignments — doc -> (shard, bin))
@@ -170,9 +166,8 @@ def write_training_shards(
 
     from ..operators.corpus import pack_assignments
 
-    assign = pack_assignments(docs, budget=budget, n_shards=n_shards,
-                              text_col=text_col, id_col=id_col)
-    rows = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")) \
+    assign = pack_assignments(docs, budget=budget, n_shards=n_shards)
+    rows = docs.select("doc_id", "text") \
         .join(assign, "doc_id")
     (
         # leading 'shard' satisfies the writer's required ordering on the

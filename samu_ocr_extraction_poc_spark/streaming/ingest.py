@@ -105,7 +105,6 @@ def stream_exact_dedup(
     spark: SparkSession,
     input_dir: str,
     watermark: str = "1 hour",
-    ts_col: str = "ingest_ts",
 ):
     """Streaming exact dedup for a continuously-arriving corpus: md5 the
     normalized text, then ``dropDuplicatesWithinWatermark`` on the hash so
@@ -126,12 +125,12 @@ def stream_exact_dedup(
 
     schema = (
         "doc_id long, text string, lang string, source string, n_chars long, "
-        f"{ts_col} timestamp"
+        "ingest_ts timestamp"
     )
     docs = spark.readStream.schema(schema).parquet(input_dir)
     return (
         docs.withColumn("text_hash", F.md5(normalized(F.col("text"))))
-        .withWatermark(ts_col, watermark)
+        .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
 
@@ -140,7 +139,6 @@ def stream_near_dedup(
     spark: SparkSession,
     input_dir: str,
     watermark: str = "1 hour",
-    ts_col: str = "ingest_ts",
     num_hashes: int = 8,
 ):
     """Streaming NEAR-dup dedup: the minhash signature (operators/dedup.py
@@ -159,13 +157,13 @@ def stream_near_dedup(
 
     schema = (
         "doc_id long, text string, lang string, source string, n_chars long, "
-        f"{ts_col} timestamp"
+        "ingest_ts timestamp"
     )
     docs = spark.readStream.schema(schema).parquet(input_dir)
     return (
         docs.select("*", row_minhash(F.col("text"), num_hashes=num_hashes).alias("mh"))
         .select(*docs.columns, "mh.*")
-        .withWatermark(ts_col, watermark)
+        .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark([f"h{i}" for i in range(num_hashes)])
         .drop(*[f"h{i}" for i in range(num_hashes)])
     )

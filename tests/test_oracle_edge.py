@@ -6,11 +6,13 @@ documents-based oracled query must stay engine-identical on these."""
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from test_oracle_parity import _sibling_sf
 
 EDGE_DOCS = [
     (1, "", "en", "src0", 0),
@@ -105,3 +107,26 @@ def test_edge_corpus_has_the_declared_documents_schema(spark, edge_dir):
 
     inferred = spark.read.parquet(f"{edge_dir}/documents.parquet").schema
     assert inferred == TABLE_SCHEMAS["documents"]
+
+
+_PERFBENCH_DATA = Path(__file__).resolve().parents[1] / "perfbench" / "data"
+DOCUMENTS_FILES = {
+    **{sf: _sibling_sf(sf) for sf in ("sf0.001", "sf0.01", "sf0.1")},
+    **{f"perfbench-{sf}": str(_PERFBENCH_DATA / sf) for sf in ("sf0.01", "sf0.1")},
+}
+
+
+@pytest.mark.parametrize("sf_dir", DOCUMENTS_FILES.values(), ids=DOCUMENTS_FILES.keys())
+def test_documents_doc_id_is_a_key(sf_dir):
+    """No two rows of a documents table share a non-null doc_id
+    (schema.TABLE_SCHEMAS): the row-local operators score each row, the
+    oracles group by doc_id, and the two agree only on a key."""
+    n, n_ids = duckdb.sql(
+        f"SELECT count(doc_id), count(DISTINCT doc_id) FROM '{sf_dir}/documents.parquet'"
+    ).fetchone()
+    assert n > 0 and n == n_ids, (n, n_ids)
+
+
+def test_edge_corpus_doc_id_is_a_key():
+    ids = [row[0] for row in EDGE_DOCS if row[0] is not None]
+    assert len(ids) == len(set(ids))

@@ -1829,7 +1829,7 @@ def test_vocab_coverage_semantics_and_plan(spark):
     df = spark.createDataFrame(rows, "key string").repartition(5)
     out = {
         r["v"]: (r["covered"], r["total"], r["total_types"], r["cover_permille"])
-        for r in vocab_coverage(df, "key", sizes=(1, 2, 3, 4, 5, 100)).collect()
+        for r in vocab_coverage(df, sizes=(1, 2, 3, 4, 5, 100)).collect()
     }
     # total 26 occurrences, 5 types, levels {10:1, 5:3, 1:1}; V=2 and V=3
     # land inside the three-way tie at count 5
@@ -1842,8 +1842,8 @@ def test_vocab_coverage_semantics_and_plan(spark):
         100: (26, 26, 5, 1000),  # V > total_types clamps to full coverage
     }
     empty = spark.createDataFrame([], "key string")
-    assert vocab_coverage(empty, "key", sizes=(1, 10)).count() == 0
-    plan = _plan(vocab_coverage(df, "key", sizes=(1, 2)))
+    assert vocab_coverage(empty, sizes=(1, 10)).count() == 0
+    plan = _plan(vocab_coverage(df, sizes=(1, 2)))
     assert "Window" not in plan and "row_number" not in plan
     # the only SinglePartition is the scalar totals over the bounded level
     # table (the length_quantiles documented class) — never the vocabulary
@@ -1922,7 +1922,7 @@ def test_alpha_mix_semantics_and_plan(spark):
             r["n_kept"], r["kept_tokens"],
         )
         for r in alpha_mix(
-            df, budget_permille=400, strat_col="source"
+            df, budget_permille=400
         ).collect()
     }
     # ttot=118, budget=47, wsum=15
@@ -1949,7 +1949,7 @@ def test_alpha_mix_semantics_and_plan(spark):
             sum(1 for i in ids if kept[i]),
             sum(toks_of[i] for i in ids if kept[i]),
         ), src
-    plan = _plan(alpha_mix(df, strat_col="source"))
+    plan = _plan(alpha_mix(df))
     assert "Join" not in plan and "Window" not in plan
     assert "SinglePartition" not in plan
 
@@ -2150,7 +2150,7 @@ def test_dsir_ranks_target_language_highest(spark):
     from samu_ocr_extraction_poc_spark.operators.corpus import dsir_importance
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    scores = dsir_importance(docs, target_col="lang", target_value="en")
+    scores = dsir_importance(docs, target_value="en")
     by_lang = {
         r["lang"]: r["m"]
         for r in scores.join(docs.select("doc_id", "lang"), "doc_id")
@@ -2444,13 +2444,32 @@ def test_centroid_classify_separable_fixture(spark):
     assert out == {(0, 0): 4, (1, 1): 4, (2, 2): 4}
 
 
+def _checkpoint_plan(spark, run) -> str:
+    """The executed plan of the eager localCheckpoint job that ``run()``
+    ends in, read from the SQL status store: the AQE final plan followed
+    by the initial plan. Explain mode "simple" keeps each node and its
+    arguments on one line, as ``executedPlan().toString()`` does."""
+    key = "spark.sql.ui.explainMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "simple")
+    try:
+        run()
+    finally:
+        spark.conf.set(key, old)
+    last = spark._jsparkSession.sharedState().statusStore().executionsList().last()
+    call = last.details().splitlines()[0]  # the call site, whatever the job group
+    assert ".localCheckpoint(" in call, call
+    return last.physicalPlanDescription()
+
+
 def test_new_corpus_ops_plan_shapes(spark):
-    """Scale guards for the round-3 additions (lazy plan-inspection forms):
-    DSIR's bucket-weight join must be a broadcast (the weight table is
-    <= n_buckets rows; a shuffle join would move the corpus-sized feature
-    frame), segment dedup's survivor selection must be an aggregation
-    (never a global window), and neither plan — nor the lazy winnowing
-    fingerprint op — may contain a single-partition exchange."""
+    """Scale guards for the round-3 additions, read off the executed plans
+    of their eager checkpoint jobs: DSIR's bucket-weight join must be a
+    broadcast (the weight table is <= n_buckets rows; a shuffle join would
+    move the corpus-sized feature frame), segment dedup's survivor
+    selection must be an aggregation (never a global window), and neither
+    plan — nor the lazy winnowing fingerprint op — may contain a
+    single-partition exchange."""
     from samu_ocr_extraction_poc_spark.operators.corpus import (
         dsir_importance,
         exact_segment_dedup,
@@ -2459,7 +2478,7 @@ def test_new_corpus_ops_plan_shapes(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
 
-    dsir_plan = _plan(dsir_importance(docs, eager=False))
+    dsir_plan = _checkpoint_plan(spark, lambda: dsir_importance(docs))
     assert "BroadcastHashJoin" in dsir_plan
     # the ONLY single-partition exchange allowed is the 1-row corpus-totals
     # scalar aggregate (two-phase: 32 partial rows move, not the corpus)
@@ -2470,7 +2489,7 @@ def test_new_corpus_ops_plan_shapes(spark):
             assert "keys=[], functions=[partial_" in below, ln
     assert "Window" not in dsir_plan
 
-    seg_plan = _plan(exact_segment_dedup(docs, eager=False))
+    seg_plan = _checkpoint_plan(spark, lambda: exact_segment_dedup(docs))
     assert "SinglePartition" not in seg_plan
     assert "Window" not in seg_plan  # survivor = min-struct agg, not a window
 
@@ -2488,8 +2507,8 @@ def test_new_corpus_ops_plan_shapes(spark):
     train = docs.where(F.col("doc_id") % 2 == 0)
     test_side = docs.where(F.col("doc_id") % 2 == 1)
     for plan in (
-        _plan(winnow_candidate_pairs(docs, eager=False)),
-        _plan(contamination_report(train, test_side, eager=False)),
+        _checkpoint_plan(spark, lambda: winnow_candidate_pairs(docs)),
+        _checkpoint_plan(spark, lambda: contamination_report(train, test_side)),
         _plan(lsh_probe_dedup(test_side, band_index(train))),
     ):
         assert "SinglePartition" not in plan
@@ -3167,7 +3186,7 @@ def test_asof_join_semantics(spark):
     right = spark.createDataFrame(right_rows, "k string, t bigint, rid bigint")
     out = {
         r["lid"]: (r["matched_t"], r["matched_rid"])
-        for r in asof_join(left, right, key_col="k", time_col="t", bucket_us=100).collect()
+        for r in asof_join(left, right, key_col="k", bucket_us=100).collect()
     }
     # brute-force reference
     want = {}
@@ -3202,8 +3221,7 @@ def test_range_join_semantics_and_plan(spark):
     pairs = sorted(
         (r["pid"], r["iid"])
         for r in range_join(
-            points, intervals, key_col="k", time_col="t",
-            lo_col="lo", hi_col="hi", bucket_us=100, max_len_us=250,
+            points, intervals, key_col="k", bucket_us=100, max_len_us=250,
         ).collect()
     )
     # interval 100 spans buckets 1..3 and must match pids 2,3,4 exactly
@@ -3213,14 +3231,12 @@ def test_range_join_semantics_and_plan(spark):
 
     with _pt.raises(ValueError, match="replication bound"):
         range_join(
-            points, intervals, key_col="k", time_col="t",
-            lo_col="lo", hi_col="hi", bucket_us=100, max_len_us=100,
+            points, intervals, key_col="k", bucket_us=100, max_len_us=100,
         )
 
     plan = (
         range_join(
-            points, intervals, key_col="k", time_col="t",
-            lo_col="lo", hi_col="hi", bucket_us=100,
+            points, intervals, key_col="k", bucket_us=100,
         )
         ._jdf.queryExecution()
         .executedPlan()
