@@ -343,9 +343,9 @@ def run_amortization(spark) -> dict:
         build_sec = _timed(
             lambda: SIM.build_ivf_index(ecorpus, ivf_loc, k_clusters=8), n=1
         )
-        inline_sec = _timed(lambda: SIM.ivf_topk(ecorpus, queries, k=3).count())
+        inline_sec = _timed(lambda: SIM.ivf_topk(ecorpus, queries).count())
         indexed_sec = _timed(
-            lambda: SIM.ivf_topk_indexed(spark, ivf_loc, queries, k=3).count()
+            lambda: SIM.ivf_topk_indexed(spark, ivf_loc, queries).count()
         )
         out["ivf_topk"] = {
             "build_sec": build_sec,

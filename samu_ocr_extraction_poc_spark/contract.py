@@ -603,9 +603,7 @@ def ngram_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the early c/na bound inside ngram_jaccard_pairs prunes background pairs
     right after the count, and only true near-dups (25-260 pairs at sandbox
     sfs — still non-vacuous) reach the sort."""
-    pairs = DD.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.5, max_df=100
-    )
+    pairs = DD.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
     return pairs.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(20)
 
 
@@ -636,7 +634,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache discipline (persists its exploded probe frame, eager result,
     releases before returning) — no persist here (round-2 leaked one)."""
     sig = DD.simhash(_t(spark, sf_dir, "documents"))
-    return DD.simhash_multiprobe_pairs(sig, max_hamming=12)
+    return DD.simhash_multiprobe_pairs(sig)
 
 
 SIMHASH_PAIRS_SQL = (
@@ -755,7 +753,7 @@ FROM c
 def shared_window_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dup candidates: pairs sharing a 16-word window
     (operators/dedup.py:shared_window_pairs), top-50 by shared count."""
-    pairs = DD.shared_window_pairs(_t(spark, sf_dir, "documents"), k=16, max_df=50)
+    pairs = DD.shared_window_pairs(_t(spark, sf_dir, "documents"))
     return pairs.orderBy(F.col("n_shared").desc(), "doc_a", "doc_b").limit(50)
 
 
@@ -784,7 +782,7 @@ def contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 2 == 0)
     test = docs.where(F.col("doc_id") % 2 == 1)
-    return DD.cross_corpus_contamination(train, test, k=16, max_df=50)
+    return DD.cross_corpus_contamination(train, test)
 
 
 CONTAMINATION_SQL = """
@@ -808,12 +806,12 @@ def contamination_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination_report) over the same id-parity pseudo-split as
     contamination_check: per TEST doc window totals, hits, round(4)
     contamination fraction (an exact integer ratio — no FP drift) and the
-    clean/drop verdict at max_frac=0.2. Every test doc gets a row — the
+    clean/drop verdict at fraction 0.2. Every test doc gets a row — the
     clean ones are the output a pipeline keeps."""
     docs = _t(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 2 == 0)
     test = docs.where(F.col("doc_id") % 2 == 1)
-    return DD.contamination_report(train, test, k=16, max_df=50, max_frac=0.2)
+    return DD.contamination_report(train, test)
 
 
 CONTAMINATION_REPORT_SQL = """
@@ -873,7 +871,7 @@ def pack_token_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing (operators/corpus.py): shard-local token windows."""
     from .operators import corpus as CP
 
-    return CP.pack_token_windows(_t(spark, sf_dir, "documents"), budget=256, n_shards=32)
+    return CP.pack_token_windows(_t(spark, sf_dir, "documents"))
 
 
 PACK_SQL = """
@@ -897,7 +895,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-token windows, 16-token overlap."""
     from .operators import corpus as CP
 
-    return CP.chunk_documents(_t(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16)
+    return CP.chunk_documents(_t(spark, sf_dir, "documents"))
 
 
 CHUNK_SQL = """
@@ -925,9 +923,7 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic md5-bucket stratified sampling (operators/corpus.py)."""
     from .operators import corpus as CP
 
-    return CP.stratified_sample(
-        _t(spark, sf_dir, "documents"), rates={"en": 500, "de": 250}, default_rate=100
-    )
+    return CP.stratified_sample(_t(spark, sf_dir, "documents"), rates={"en": 500, "de": 250})
 
 
 STRATIFIED_SQL = """
@@ -945,9 +941,7 @@ def quality_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction <= 0.4. Survivor rows with both signals."""
     from .operators import corpus as CP
 
-    return CP.quality_filter(
-        _t(spark, sf_dir, "documents"), min_quality=0.4, max_dup_trigram=0.4
-    )
+    return CP.quality_filter(_t(spark, sf_dir, "documents"))
 
 
 # CTE names prefixed q* so the block composes with _CC_CTES (whose shingle
@@ -1026,9 +1020,7 @@ def boilerplate_strip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and the ordered re-assembly."""
     from .operators import corpus as CP
 
-    return CP.remove_boilerplate(
-        _t(spark, sf_dir, "documents"), seg_tokens=8, min_doc_freq=2
-    )
+    return CP.remove_boilerplate(_t(spark, sf_dir, "documents"), seg_tokens=8)
 
 
 BOILERPLATE_SQL = """
@@ -1680,7 +1672,7 @@ def heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.length("key") > 0)
     )
     return SK.cms_heavy_hitters(
-        words, "key", num=1, den=500, width=128, depth=3
+        words, "key", den=500, width=128, depth=3
     ).withColumnRenamed("key", "word")
 
 
@@ -1765,7 +1757,7 @@ def length_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     h = SK.hist_build(
-        docs.select(F.length("text").alias("len")), "len", lo=0, hi=4096, n_bins=64
+        docs.select(F.length("text").alias("len")), "len", hi=4096, n_bins=64
     )
     return SK.hist_quantiles(h, [10, 25, 50, 75, 90, 99])
 
@@ -1812,7 +1804,7 @@ def source_length_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return SK.grouped_quantiles(
-        docs, "source", "n_chars", [25, 50, 75, 95], lo=0, hi=1024, n_bins=64
+        docs, "source", "n_chars", [25, 50, 75, 95], hi=1024, n_bins=64
     )
 
 
@@ -2078,9 +2070,7 @@ def dsir_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm_surprise argument)."""
     from .operators import corpus as CP
 
-    return CP.dsir_importance(
-        _t(spark, sf_dir, "documents"), target_value="en"
-    )
+    return CP.dsir_importance(_t(spark, sf_dir, "documents"))
 
 
 DSIR_SQL = """
@@ -2117,9 +2107,7 @@ def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(4) weight broken by doc_id so the cut is total and replayable."""
     from .operators import corpus as CP
 
-    scores = CP.dsir_importance(
-        _t(spark, sf_dir, "documents"), target_value="en"
-    )
+    scores = CP.dsir_importance(_t(spark, sf_dir, "documents"))
     return scores.orderBy(F.col("dsir_logratio").desc(), "doc_id").limit(100)
 
 
@@ -2311,9 +2299,7 @@ def epoch_upsample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-quality-strata pattern. Narrow explode, one row per copy."""
     from .operators import corpus as CP
 
-    return CP.epoch_upsample(
-        _t(spark, sf_dir, "documents"), factors={"en": 3, "de": 2}, default_factor=1
-    )
+    return CP.epoch_upsample(_t(spark, sf_dir, "documents"), factors={"en": 3, "de": 2})
 
 
 EPOCH_UPSAMPLE_SQL = """
@@ -2329,7 +2315,7 @@ def top_ngrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never global), lexicographic tie-break."""
     from .operators import corpus as CP
 
-    return CP.top_ngrams_per_stratum(_t(spark, sf_dir, "documents"), n=2, top_k=5)
+    return CP.top_ngrams_per_stratum(_t(spark, sf_dir, "documents"))
 
 
 TOP_NGRAMS_SQL = """
@@ -2379,9 +2365,7 @@ def winnow_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens at ~28% of the index size on this corpus)."""
     from .operators import winnow as WN
 
-    return WN.winnow_candidate_pairs(
-        _t(spark, sf_dir, "documents"), k=4, w=5, min_shared=2, max_df=20
-    )
+    return WN.winnow_candidate_pairs(_t(spark, sf_dir, "documents"), min_shared=2, max_df=20)
 
 
 WINNOW_PAIRS_SQL = _WINNOW_CTES + """,
@@ -2404,7 +2388,7 @@ def kmv_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_mins == k)."""
     from .operators import sketch as SK
 
-    return SK.kmv_distinct_tokens(_t(spark, sf_dir, "documents"), k=64, ngram=2)
+    return SK.kmv_distinct_tokens(_t(spark, sf_dir, "documents"), k=64)
 
 
 KMV_SQL = """
@@ -2431,7 +2415,7 @@ def kmv_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the same sketch sets and merge arithmetic."""
     from .operators import sketch as SK
 
-    return SK.kmv_group_overlap(_t(spark, sf_dir, "documents"), k=64, ngram=2)
+    return SK.kmv_group_overlap(_t(spark, sf_dir, "documents"))
 
 
 KMV_OVERLAP_SQL = """
@@ -2496,9 +2480,7 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return DD.canonical_drops(pairs)
 
     q, drops = run_jobs(_q_gate, _canon_drops)
-    sampled = CP.sample_documents(
-        docs, rates={"en": 500, "de": 250}, default_rate=100
-    )
+    sampled = CP.sample_documents(docs, rates={"en": 500, "de": 250})
     # an anti join keeps a null doc_id; none reaches it, since the md5
     # sample filter and the semi join both drop null ids first
     return (
@@ -2526,9 +2508,7 @@ def sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     same filter (VERDICT r2 item 4)."""
     from .operators import corpus as CP
 
-    return CP.sample_documents(
-        _t(spark, sf_dir, "documents"), rates={"en": 500, "de": 250}, default_rate=100
-    )
+    return CP.sample_documents(_t(spark, sf_dir, "documents"), rates={"en": 500, "de": 250})
 
 
 SAMPLE_DOCS_SQL = """
@@ -2692,7 +2672,7 @@ def pack_assignments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes; pack_token_windows is their per-bin audit aggregate."""
     from .operators import corpus as CP
 
-    return CP.pack_assignments(_t(spark, sf_dir, "documents"), budget=256, n_shards=32)
+    return CP.pack_assignments(_t(spark, sf_dir, "documents"), n_shards=32)
 
 
 PACK_ASSIGN_SQL = """
@@ -2773,9 +2753,9 @@ def curate_corpus_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _canon_drops():
-        wp = WN.winnow_candidate_pairs(
-            docs, k=4, w=5, min_shared=2, max_df=20
-        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        wp = WN.winnow_candidate_pairs(docs, min_shared=2, max_df=20).select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+        )
         return DD.canonical_drops(wp)
 
     src, drops = run_jobs(_src_gate, _canon_drops)
@@ -2827,9 +2807,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the documents corpus — the textual counterpart of embed_topk."""
     from .operators.search import bm25_topk
 
-    return bm25_topk(
-        _t(spark, sf_dir, "documents"), ["customer", "merge", "slow"], k=10
-    )
+    return bm25_topk(_t(spark, sf_dir, "documents"), ["customer", "merge", "slow"])
 
 
 BM25_SQL = """
@@ -2874,7 +2852,7 @@ def embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     corpus = emb.where(F.col("vec_id") >= 5)
-    return SIM.ivf_topk(corpus, queries, k=3)
+    return SIM.ivf_topk(corpus, queries)
 
 
 EMBED_IVF_SQL = """
@@ -2955,16 +2933,11 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_sql(
-    k: int = 8,
-    iterations: int = 3,
-    tail: str | None = None,
-    src: str = "embeddings",
-) -> str:
-    """DuckDB replay of kmeans_assign (similarity.py): unrolled Lloyd.
-    ``tail`` overrides the final SELECT (it may reference the assignment
-    CTE ``a{iterations}``, ``dims`` and the source CTE ``esrc``) —
-    SEMANTIC_DEDUP_SQL reuses the identical Lloyd unroll and adds the
+def _kmeans_sql(tail: str | None = None, src: str = "embeddings") -> str:
+    """DuckDB replay of kmeans_assign (similarity.py): Lloyd with k = 8
+    unrolled for 3 iterations. ``tail`` overrides the final SELECT (it may
+    reference the assignment CTE ``a3``, ``dims`` and the source CTE
+    ``esrc``) — SEMANTIC_DEDUP_SQL reuses the identical Lloyd unroll and adds the
     within-cluster near-dup pass. ``src`` is the source relation (a table
     name or parenthesized subquery — the dedup entry injects duplicates)."""
     parts = [
@@ -2972,10 +2945,10 @@ def _kmeans_sql(
 dims AS (SELECT vec_id AS vid, generate_subscripts(embedding, 1) AS dim,
              unnest(CAST(embedding AS DOUBLE[])) AS v FROM esrc),
 seeds AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cluster
-          FROM (SELECT vec_id FROM esrc ORDER BY vec_id LIMIT {k})),
+          FROM (SELECT vec_id FROM esrc ORDER BY vec_id LIMIT 8)),
 c0 AS (SELECT s.cluster, d.dim, d.v AS cval FROM dims d JOIN seeds s ON d.vid = s.vec_id)"""
     ]
-    for it in range(1, iterations + 1):
+    for it in range(1, 4):
         parts.append(
             f""",
 s{it} AS (SELECT d.vid, c.cluster, sum((d.v - c.cval) * (d.v - c.cval)) AS d2
@@ -2984,7 +2957,7 @@ a{it} AS (SELECT vid, cluster FROM (SELECT vid, cluster,
             row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn FROM s{it})
       WHERE rn = 1)"""
         )
-        if it < iterations:
+        if it < 3:
             parts.append(
                 f""",
 c{it} AS (SELECT a.cluster, d.dim, avg(d.v) AS cval
@@ -2993,9 +2966,9 @@ c{it} AS (SELECT a.cluster, d.dim, avg(d.v) AS cval
     parts.append(
         tail
         if tail is not None
-        else f"""
+        else """
 SELECT CAST(cluster AS INT) AS cluster, count(*) AS n_members
-FROM a{iterations} GROUP BY cluster"""
+FROM a3 GROUP BY cluster"""
     )
     return "".join(parts)
 
@@ -3018,26 +2991,26 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding", "label"
     )
     injected = emb.select("vec_id", "embedding", "label").unionByName(dup)
-    return SIM.semantic_dedup(injected, k=8, iterations=3, threshold=0.999)
+    return SIM.semantic_dedup(injected, threshold=0.999)
 
 
-def _semantic_dedup_sql(k: int = 8, iterations: int = 3, threshold: float = 0.999) -> str:
+def _semantic_dedup_sql() -> str:
     src = (
         "(SELECT vec_id, embedding FROM embeddings"
         " UNION ALL"
         " SELECT vec_id + 10000 AS vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0)"
     )
-    tail = f""",
+    tail = """,
 ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM esrc),
-mem AS (SELECT a{iterations}.vid, a{iterations}.cluster, ev.v
-        FROM a{iterations} JOIN ev ON ev.vec_id = a{iterations}.vid),
+mem AS (SELECT a3.vid, a3.cluster, ev.v
+        FROM a3 JOIN ev ON ev.vec_id = a3.vid),
 sdup AS (SELECT DISTINCT b.vid
          FROM mem a JOIN mem b ON a.cluster = b.cluster AND a.vid < b.vid
-         WHERE round(list_cosine_similarity(a.v, b.v), 4) >= {threshold})
+         WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.999)
 SELECT m.vid AS vec_id, CAST(m.cluster AS INT) AS cluster,
        CAST(CASE WHEN s.vid IS NULL THEN 1 ELSE 0 END AS INT) AS is_kept
 FROM mem m LEFT JOIN sdup s ON s.vid = m.vid"""
-    return _kmeans_sql(k=k, iterations=iterations, tail=tail, src=src)
+    return _kmeans_sql(tail=tail, src=src)
 
 
 SEMANTIC_DEDUP_SQL = _semantic_dedup_sql()
@@ -3052,7 +3025,7 @@ def embed_hyperplane_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same as embed_blocked_top_pairs). Round 1 left this rows-only because
     float-dot signs near zero are summation-order-dependent."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = SIM.hyperplane_lsh_pairs(emb, dim=64, n_tables=6, bits_per_table=4)
+    pairs = SIM.hyperplane_lsh_pairs(emb, dim=64)
     return pairs.orderBy(F.col("cos").desc(), "id_a", "id_b").limit(50)
 
 
@@ -3105,9 +3078,7 @@ def embed_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     train = emb.where(F.col("vec_id") % 2 == 0)
     test = emb.where(F.col("vec_id") % 2 == 1)
-    return SIM.semantic_contamination(
-        train, test, dim=64, threshold=0.35, n_tables=6, bits_per_table=4
-    )
+    return SIM.semantic_contamination(train, test, dim=64, threshold=0.35)
 
 
 EMBED_CONTAMINATION_SQL = _hyperplane_ctes() + """,
@@ -4170,27 +4141,26 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", F.col("rank").alias("rank_e12"), "in_deg", "out_deg")
 
 
-def _pagerank_sql(iterations: int = 8, n_links: int = 3, salt: str = "pr") -> str:
+def _pagerank_sql() -> str:
     """DuckDB replay of synth_link_graph + pagerank: identical md5 edge
-    derivation, the same BIGINT fixed-point update unrolled ``iterations``
-    times. `pr`, not `rank`, as the internal column name (window-function
-    keyword)."""
-    links = ", ".join(f"({j})" for j in range(1, n_links + 1))
+    derivation (3 links per node, salt 'pr'), the same BIGINT fixed-point
+    update unrolled 8 times. `pr`, not `rank`, as the internal column name
+    (window-function keyword)."""
     tele = "((15 * (1000000000000 // (SELECT n FROM prn))) // 100)"
     parts = [
-        f"""WITH prn AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
+        """WITH prn AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
 prnodes AS (SELECT DISTINCT CAST(doc_id AS BIGINT) AS node FROM documents),
 prraw AS (SELECT nn.node AS src,
-                 ('0x' || substr(md5('{salt}:' || CAST(nn.node AS VARCHAR) || ':' || CAST(t.j AS VARCHAR)), 1, 15))::BIGINT
+                 ('0x' || substr(md5('pr:' || CAST(nn.node AS VARCHAR) || ':' || CAST(t.j AS VARCHAR)), 1, 15))::BIGINT
                    % (SELECT n FROM prn) AS dst
-          FROM prnodes nn, (VALUES {links}) t(j)),
+          FROM prnodes nn, (VALUES (1), (2), (3)) t(j)),
 predges AS (SELECT DISTINCT src, dst FROM prraw
             WHERE src <> dst AND dst IN (SELECT node FROM prnodes)),
 proutd AS (SELECT src, CAST(count(*) AS BIGINT) AS out_deg FROM predges GROUP BY src),
 prind AS (SELECT dst, CAST(count(*) AS BIGINT) AS in_deg FROM predges GROUP BY dst),
 prr0 AS (SELECT node, (1000000000000 // (SELECT n FROM prn)) AS pr FROM prnodes)"""
     ]
-    for it in range(1, iterations + 1):
+    for it in range(1, 9):
         parts.append(
             f""",
 prs{it} AS (SELECT e.dst, sum(r.pr // o.out_deg) AS c
@@ -4200,11 +4170,11 @@ prr{it} AS (SELECT nn.node, {tele} + (85 * coalesce(s.c, 0)) // 100 AS pr
         FROM prnodes nn LEFT JOIN prs{it} s ON s.dst = nn.node)"""
         )
     parts.append(
-        f"""
+        """
 SELECT r.node, CAST(r.pr AS BIGINT) AS rank_e12,
        CAST(coalesce(i.in_deg, 0) AS BIGINT) AS in_deg,
        CAST(coalesce(o.out_deg, 0) AS BIGINT) AS out_deg
-FROM prr{iterations} r
+FROM prr8 r
 LEFT JOIN prind i ON i.dst = r.node
 LEFT JOIN proutd o ON o.src = r.node"""
     )
@@ -4226,7 +4196,7 @@ def tfidf_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import search as SE
 
     docs = _t(spark, sf_dir, "documents")
-    return SE.tfidf_weighted_pairs(docs, n_docs=docs.count(), top_k=30)
+    return SE.tfidf_weighted_pairs(docs, n_docs=docs.count())
 
 
 TFIDF_PAIRS_SQL = """
@@ -4268,7 +4238,7 @@ def record_linkage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import linkage as LK
 
     cust = _t(spark, sf_dir, "customer")
-    return LK.blocked_link_pairs(LK.synth_dirty_records(cust, copies=2))
+    return LK.blocked_link_pairs(LK.synth_dirty_records(cust))
 
 
 RECORD_LINKAGE_SQL = """
@@ -4489,7 +4459,7 @@ def minhash_jaccard_est_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy_hitters verify-on-candidates shape) — the all-pairs exact
     join this measurement exists to justify avoiding."""
     docs = _t(spark, sf_dir, "documents")
-    return DD.minhash_jaccard_estimates(docs, num_hashes=8, rows_per_band=2, k=3)
+    return DD.minhash_jaccard_estimates(docs)
 
 
 _MJ_AGREE = " + ".join(
@@ -4631,7 +4601,7 @@ def salted_join_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("ck"), "c_nationkey"
     )
-    j = SK.salted_join(big, dim, key_col="ck", salt_src_col="o_orderkey", n_salts=16)
+    j = SK.salted_join(big, dim, key_col="ck", salt_src_col="o_orderkey")
     return j.groupBy("c_nationkey").agg(
         F.count("*").cast("bigint").alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(12,2)"))
@@ -4739,7 +4709,7 @@ def skew_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_custkey"))
         .alias("ck")
     )
-    return SK.skew_audit(big, "ck", top_k=20, hot_share_e4=100)
+    return SK.skew_audit(big, "ck", top_k=20)
 
 
 SKEW_AUDIT_SQL = """

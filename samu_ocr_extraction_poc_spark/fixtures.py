@@ -180,8 +180,8 @@ def expense_doc() -> list[dict]:
     """2-page expense doc: $1,234.50-style values, OTHER Diagnosis/provider
     labels, missing-PRICE line item dropped (A7, C2-C4, F6-F7)."""
 
-    def field(page, type_, value, label=None):
-        return span("expense_field", json.dumps({"Page": page, "Type": type_, "Label": label, "Value": value}))
+    def field(page, type_, value):
+        return span("expense_field", json.dumps({"Page": page, "Type": type_, "Label": None, "Value": value}))
 
     def item(page, fields):
         return span("expense_item", json.dumps({"Page": page, "Fields": fields}))
@@ -319,12 +319,13 @@ def letter_doc() -> list[dict]:
     return _seq(spans)
 
 
-def skew_doc(n_pages: int = 400, lines_per_page: int = 30) -> list[dict]:
-    """One 400-page doc among 1-page docs (salting / Arrow-batch-cap test)."""
+def skew_doc() -> list[dict]:
+    """One 400-page doc of 30 lines a page among 1-page docs (salting /
+    Arrow-batch-cap test)."""
     spans = []
-    for p in range(1, n_pages + 1):
+    for p in range(1, 401):
         spans.append(span("page_break", str(p)))
-        for i in range(lines_per_page):
+        for i in range(30):
             spans.append(span("line", f"Page {p} line {i} of the long filing."))
     return _seq(spans)
 

@@ -71,12 +71,6 @@ _NEGATIVE = {
     "breach", "unfortunately", "negative", "pain", "loss", "overdue",
 }
 
-_STOPWORDS = {
-    "the", "a", "an", "of", "to", "in", "on", "for", "and", "or", "is",
-    "are", "was", "were", "be", "been", "by", "with", "as", "at", "that",
-    "this", "it", "its", "from",
-}
-
 _WORD_RE = re.compile(r"[A-Za-z]+")
 
 _COUNTY_STATE = {"County", "State"}

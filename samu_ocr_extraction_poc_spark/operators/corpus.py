@@ -130,16 +130,12 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     return df.select("doc_id", s.alias("s")).select("doc_id", "s.*")
 
 
-def quality_filter(
-    df: DataFrame,
-    min_quality: float = 0.4,
-    max_dup_trigram: float = 0.4,
-) -> DataFrame:
+def quality_filter(df: DataFrame) -> DataFrame:
     """Row-returning Gopher-style quality gate: keep documents whose
     composite quality score (functions/textfns.quality_score: distinct
-    ratio, stopword density, length) clears ``min_quality`` AND whose
-    duplicate-trigram character fraction stays under ``max_dup_trigram``
-    (repetitious boilerplate). Short docs with no trigram signal pass the
+    ratio, stopword density, length) is at least 0.4 AND whose
+    duplicate-trigram character fraction is at most 0.4 (repetitious
+    boilerplate). Short docs with no trigram signal pass the
     repetition gate (NULL -> 0). Plan shape: one generator over ``df``
     that scores each row and emits it only when it passes; no shuffle, no
     join.
@@ -167,8 +163,8 @@ def quality_filter(
         F.inline(
             F.filter(
                 F.array(row),
-                lambda r: (r["quality"] >= min_quality)
-                & (F.coalesce(r["dup_trigram_char_frac"], F.lit(0.0)) <= max_dup_trigram),
+                lambda r: (r["quality"] >= 0.4)
+                & (F.coalesce(r["dup_trigram_char_frac"], F.lit(0.0)) <= 0.4),
             )
         )
     )
@@ -185,7 +181,6 @@ def _md5_bucket(col: Column, hex_chars: int, modulus: int) -> Column:
 
 def global_shuffle(
     df: DataFrame,
-    salt: str = "shuf",
     n_buckets: int = 256,
     docs_per_shard: int = 1000,
 ) -> DataFrame:
@@ -197,7 +192,7 @@ def global_shuffle(
     order; pack_assignments hashes docs to shards but gives no global
     order).
 
-    Order key = md5(salt ':' doc_id); ties broken by doc_id (128-bit
+    Order key = md5('shuf:' doc_id); ties broken by doc_id (128-bit
     collisions aside, the key alone is already unique). The scale path is
     the two-phase distributed rank — a global ``row_number`` window would
     serialize the corpus through one SinglePartition sort:
@@ -220,7 +215,7 @@ def global_shuffle(
 
     Returns (doc_id, shuffle_pos, shard, pos_in_shard).
     """
-    key = F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string")))
+    key = F.md5(F.concat(F.lit("shuf:"), F.col("doc_id").cast("string")))
     base = df.select(
         F.col("doc_id"),
         key.alias("k"),
@@ -264,15 +259,11 @@ def global_shuffle(
     )
 
 
-def pack_assignments(
-    df: DataFrame,
-    budget: int = 256,
-    n_shards: int = 32,
-) -> DataFrame:
+def pack_assignments(df: DataFrame, n_shards: int = 32) -> DataFrame:
     """Sequence-packing ASSIGNMENTS: the (doc_id -> shard, bin) rows a
     training pipeline actually consumes (round-2 exposed only the per-bin
     audit aggregates — VERDICT r2 item 4). Each document goes to the
-    ``budget``-token window its cumulative token offset starts in, within
+    256-token window its cumulative token offset starts in, within
     its md5 hash shard (shard-local cumulative sums — the scale path; a
     global ORDER BY would serialize the corpus through one partition,
     pinned by tests/test_scale_paths.py).
@@ -291,19 +282,15 @@ def pack_assignments(
     )
     return (
         base.withColumn("start", F.sum("n_tok").over(w) - F.col("n_tok"))
-        .withColumn("bin", F.floor(F.col("start") / F.lit(float(budget))).cast("bigint"))
+        .withColumn("bin", F.floor(F.col("start") / F.lit(256.0)).cast("bigint"))
         .select("doc_id", "shard", "bin", "n_tok")
     )
 
 
-def pack_token_windows(
-    df: DataFrame,
-    budget: int = 256,
-    n_shards: int = 32,
-) -> DataFrame:
+def pack_token_windows(df: DataFrame) -> DataFrame:
     """Per-bin audit aggregates of :func:`pack_assignments` (the oracle /
     monitoring shape). Returns (shard, bin, n_docs, bin_tokens)."""
-    return pack_assignments(df, budget, n_shards).groupBy(
+    return pack_assignments(df).groupBy(
         "shard", "bin"
     ).agg(
         F.count("*").alias("n_docs"),
@@ -311,29 +298,24 @@ def pack_token_windows(
     )
 
 
-def _sample_rate(rates: dict[str, int], default_rate: int) -> Column:
-    rate: Column = F.lit(default_rate)
+def _sample_rate(rates: dict[str, int]) -> Column:
+    rate: Column = F.lit(100)
     for lang, r in sorted(rates.items()):
         rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return rate
 
 
-def sample_documents(
-    df: DataFrame,
-    rates: dict[str, int],
-    default_rate: int = 100,
-    denom: int = 1000,
-) -> DataFrame:
+def sample_documents(df: DataFrame, rates: dict[str, int]) -> DataFrame:
     """Row-returning stratified downsampling: the KEPT documents themselves
     (round-2 exposed only per-stratum counts — VERDICT r2 item 4). A
-    document survives iff its md5 bucket (of ``denom``) is below its
-    stratum's rate — deterministic across engines and runs (no RNG state),
-    a pure narrow filter on the scan (no shuffle at any corpus size).
+    document survives iff its md5 bucket (of 1000) is below its
+    stratum's rate (per mille; 100 for a language ``rates`` omits) —
+    deterministic across engines and runs (no RNG state), a pure narrow
+    filter on the scan (no shuffle at any corpus size).
 
     Returns the input rows (all columns) of the kept documents.
     """
-    rate = _sample_rate(rates, default_rate)
-    return df.where(_md5_bucket(F.col("doc_id"), 8, denom) < rate)
+    return df.where(_md5_bucket(F.col("doc_id"), 8, 1000) < _sample_rate(rates))
 
 
 def sample_exact_n(
@@ -360,33 +342,23 @@ def sample_exact_n(
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, int],
-    default_rate: int = 100,
-    denom: int = 1000,
-) -> DataFrame:
+def stratified_sample(df: DataFrame, rates: dict[str, int]) -> DataFrame:
     """Per-stratum audit counts of the :func:`sample_documents` filter.
     Reproducible across engines and runs (no RNG), map-side only until the
     count. Returns per-stratum (lang, n_total, n_kept)."""
-    rate = _sample_rate(rates, default_rate)
-    kept = F.when(_md5_bucket(F.col("doc_id"), 8, denom) < rate, 1).otherwise(0)
+    kept = F.when(_md5_bucket(F.col("doc_id"), 8, 1000) < _sample_rate(rates), 1).otherwise(0)
     return df.groupBy("lang").agg(
         F.count("*").alias("n_total"),
         F.sum(kept).cast("bigint").alias("n_kept"),
     )
 
 
-def remove_boilerplate(
-    df: DataFrame,
-    seg_tokens: int = 8,
-    min_doc_freq: int = 2,
-) -> DataFrame:
+def remove_boilerplate(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
     """CCNet-style cross-document boilerplate removal: split every document
     into fixed-size non-overlapping token segments (the corpus has no
     newlines — a delimiter-split would be the line-level variant), count in
     how many DISTINCT documents each segment occurs, drop the segments
-    reaching ``min_doc_freq`` documents (shared boilerplate: headers,
+    found in 2 or more documents (shared boilerplate: headers,
     footers, licence blocks, near-dup carry-over), and re-assemble each
     document from its surviving segments in order.
 
@@ -431,7 +403,7 @@ def remove_boilerplate(
         F.countDistinct("doc_id").alias("doc_freq")
     )
     tagged = exploded.join(freq, "h").withColumn(
-        "keep", F.col("doc_freq") < min_doc_freq
+        "keep", F.col("doc_freq") < 2
     )
     per_doc = tagged.groupBy("doc_id").agg(
         F.count("*").alias("n_segments"),
@@ -550,7 +522,6 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 def gopher_rules(
     df: DataFrame,
     min_words: int = 50,
-    max_words: int = 100_000,
 ) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021, arXiv:2112.11446 App. A1.1)
     — the standard rule-based pre-training filter, as one narrow
@@ -560,7 +531,7 @@ def gopher_rules(
     with no FP anywhere.
 
     Rules (each an is_* 1/0 column, ``keep`` = all):
-    word count in [min_words, max_words]; mean word length in [3, 10];
+    word count in [min_words, 100000]; mean word length in [3, 10];
     '#'/'...' symbol-to-word ratio < 0.1; >80% of words contain an
     alphabetic char; >=2 distinct Gopher stopwords; <90% of lines
     bullet-started; <30% of lines ellipsis-ended. The line rules operate
@@ -625,7 +596,7 @@ def gopher_rules(
     flags = base.select(
         "doc_id",
         F.col("st.n_words").cast("bigint").alias("n_words"),
-        flag(F.col("st.n_words").between(min_words, max_words)).alias("is_word_count_ok"),
+        flag(F.col("st.n_words").between(min_words, 100_000)).alias("is_word_count_ok"),
         flag(
             (F.col("st.n_words") > 0)
             & (3 * F.col("st.n_words") <= F.col("st.sum_len"))
@@ -931,17 +902,13 @@ def vocab_coverage(
     return out
 
 
-def c4_rules(
-    df: DataFrame,
-    min_sentences: int = 3,
-    min_line_words: int = 5,
-) -> DataFrame:
+def c4_rules(df: DataFrame) -> DataFrame:
     """C4 cleaning heuristics (Raffel et al. 2020, arXiv:1910.10683 §2.2)
     — the other canonical rule-based filter next to :func:`gopher_rules`,
     one narrow projection over the scan. Line level: keep only lines that
     end in terminal punctuation (. ! ? ") after right-trim AND have at
-    least ``min_line_words`` words. Page level: drop the document when the
-    retained text has fewer than ``min_sentences`` sentence terminators,
+    least 5 words. Page level: drop the document when the
+    retained text has fewer than 3 sentence terminators,
     or the ORIGINAL page mentions 'lorem ipsum' (case-insensitive) or
     contains a curly brace (code). Bad-words filtering is its own
     operator (blocklist_filter); three-sentence-span dedup is the segment
@@ -958,7 +925,7 @@ def c4_rules(
         ends = (
             r.endswith(".") | r.endswith("!") | r.endswith("?") | r.endswith('"')
         )
-        return ends & (token_count(l) >= min_line_words)
+        return ends & (token_count(l) >= 5)
 
     def stats(lines: Column) -> Column:
         kept = F.filter(lines, line_keep)
@@ -985,7 +952,7 @@ def c4_rules(
     )
     keep = (
         F.when(
-            (F.col("st.n_sent") >= min_sentences)
+            (F.col("st.n_sent") >= 3)
             & (F.col("has_lorem") == 0)
             & (F.col("has_brace") == 0),
             1,
@@ -1005,27 +972,23 @@ def c4_rules(
     )
 
 
-def dsir_importance(
-    df: DataFrame,
-    target_value: str = "en",
-    n_buckets: int = 1024,
-) -> DataFrame:
+def dsir_importance(df: DataFrame) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", arXiv:2302.03169): score
     every raw document by how target-like its hashed n-gram features are.
-    Features are word bigrams hashed into ``n_buckets`` md5 buckets; the
+    Features are word bigrams hashed into 1024 md5 buckets; the
     target and raw bag-of-buckets distributions are estimated with add-one
     smoothing; a document's weight is its mean per-feature log-likelihood
     ratio  ln p_target(b) - ln p_raw(b).  Selecting the top-weighted
     documents approximates sampling from the target distribution — the
     published recipe for "give me web data that looks like Wikipedia".
-    Here the target is the ``lang == target_value`` slice (the
+    Here the target is the ``lang == 'en'`` slice (the
     pipeline shape is identical when the target is a separate corpus).
 
     Plan shape at scale: the feature explode is persisted once and feeds
     the two bucket-count aggregations (partial-aggregable groupBys over at
-    most ``n_buckets`` rows each) and the scoring join; the per-bucket
-    weight table is <= n_buckets rows — broadcast to the scoring join, so
+    most 1024 rows each) and the scoring join; the per-bucket
+    weight table is <= 1024 rows — broadcast to the scoring join, so
     the only corpus-sized shuffle is the final per-document aggregation.
     Smoothed log ratios are exact-integer ratios fed to ln: last-ulp libm
     differences wash out in the round(4) mean (the lm_surprise argument).
@@ -1036,10 +999,10 @@ def dsir_importance(
     feats = (
         df.select(
             F.col("doc_id"),
-            (F.col("lang") == F.lit(target_value)).alias("is_t"),
+            (F.col("lang") == F.lit("en")).alias("is_t"),
             F.explode(_kgrams(F.col("text"), 2)).alias("g"),
         )
-        .withColumn("b", _md5_bucket(F.col("g"), 8, n_buckets))
+        .withColumn("b", _md5_bucket(F.col("g"), 8, 1024))
         .drop("g")
     )
     feats.persist()
@@ -1059,11 +1022,11 @@ def dsir_importance(
             (
                 F.log(
                     (F.coalesce(F.col("t_cnt"), F.lit(0)) + 1).cast("double")
-                    / (F.col("t_tot") + n_buckets).cast("double")
+                    / (F.col("t_tot") + 1024).cast("double")
                 )
                 - F.log(
                     (F.col("r_cnt") + 1).cast("double")
-                    / (F.col("r_tot") + n_buckets).cast("double")
+                    / (F.col("r_tot") + 1024).cast("double")
                 )
             ).alias("w"),
         )
@@ -1124,12 +1087,7 @@ def unigram_surprise(
     return scored
 
 
-def ccnet_bucket(
-    df: DataFrame,
-    lo: int = 0,
-    hi: int = 1 << 19,
-    n_bins: int = 512,
-) -> DataFrame:
+def ccnet_bucket(df: DataFrame) -> DataFrame:
     """CCNet-style per-language perplexity bucketing (Wenzek et al. 2020
     §3, "each language is split in head/middle/tail by perplexity
     tertiles"): score every document with the self-trained unigram LM
@@ -1168,7 +1126,7 @@ def ccnet_bucket(
         F.round(F.col("surprise") * 10000).cast("bigint").alias("su_i"),
     )
     cuts = (
-        grouped_quantiles(su, "lang", "su_i", [33, 66], lo=lo, hi=hi, n_bins=n_bins)
+        grouped_quantiles(su, "lang", "su_i", [33, 66], hi=1 << 19, n_bins=512)
         .groupBy("lang")
         .agg(
             F.max(F.when(F.col("p") == 33, F.col("est"))).alias("c33"),
@@ -1192,15 +1150,14 @@ def budget_sample(
     df: DataFrame,
     budgets: dict[str, int],
     default_budget: int = 2000,
-    denom: int = 1000,
 ) -> DataFrame:
     """Token-BUDGET mixture sampling: where stratified/sample_documents
     takes fixed keep-rates, a training mix is usually specified as tokens
     per stratum ("500B English, 300B German, ..."). Compute each stratum's
-    total token count, derive the keep-rate as min(denom, budget*denom //
-    total) in pure integer arithmetic (bit-identical cross-engine — no FP
-    rate), and keep documents whose md5 bucket falls under it. Expected
-    kept tokens ≈ budget (md5 buckets are uniform and independent of
+    total token count, derive the keep-rate per mille as min(1000,
+    budget*1000 // total) in pure integer arithmetic (bit-identical
+    cross-engine — no FP rate), and keep documents whose md5 bucket falls
+    under it. Expected kept tokens ≈ budget (md5 buckets are uniform and independent of
     document length); an exact greedy cut would need a per-stratum global
     token cumsum — a stratum-sized sort at 10^12 docs for a guarantee the
     uniform sample already gives within sampling error.
@@ -1227,13 +1184,13 @@ def budget_sample(
     keep_buckets = F.when(
         F.col("total_tok") > 0,
         F.least(
-            F.lit(denom).cast("bigint"),
-            F.expr(f"(budget * {int(denom)}) DIV total_tok").cast("bigint"),
+            F.lit(1000).cast("bigint"),
+            F.expr("(budget * 1000) DIV total_tok").cast("bigint"),
         ),
     ).otherwise(F.lit(0).cast("bigint"))
     return (
         base.join(F.broadcast(totals), "lang")
-        .where(_md5_bucket(F.col("doc_id"), 8, denom) < keep_buckets)
+        .where(_md5_bucket(F.col("doc_id"), 8, 1000) < keep_buckets)
         .select("doc_id", "lang", "n_tok")
     )
 
@@ -1298,15 +1255,11 @@ def blocklist_filter(
     )
 
 
-def epoch_upsample(
-    df: DataFrame,
-    factors: dict[str, int],
-    default_factor: int = 1,
-) -> DataFrame:
+def epoch_upsample(df: DataFrame, factors: dict[str, int]) -> DataFrame:
     """Mixture UPSAMPLING: repeat each stratum's documents ``factor``
-    times — how training mixes give small high-quality strata multiple
-    epochs while the bulk web corpus gets one (the counterpart of
-    sample_documents' downsampling; a mixture spec needs both
+    times (once for a language ``factors`` omits) — how training mixes
+    give small high-quality strata multiple epochs while the bulk web
+    corpus gets one (the counterpart of sample_documents' downsampling; a mixture spec needs both
     directions). Pure narrow row multiplication (explode of a sequence,
     no shuffle); the emitted ``epoch`` number keeps downstream shard
     hashing stable per copy (hash on (doc_id, epoch), so copies spread
@@ -1314,7 +1267,7 @@ def epoch_upsample(
 
     Returns (doc_id, stratum, epoch) — one row per copy.
     """
-    factor: Column = F.lit(default_factor)
+    factor: Column = F.lit(1)
     for stratum, f in sorted(factors.items()):
         factor = F.when(F.col("lang") == stratum, F.lit(f)).otherwise(factor)
     # sequence(1, 0) runs DESCENDING (the _kgrams guard): a factor <= 0
@@ -1330,12 +1283,8 @@ def epoch_upsample(
     )
 
 
-def top_ngrams_per_stratum(
-    df: DataFrame,
-    n: int = 2,
-    top_k: int = 5,
-) -> DataFrame:
-    """Per-stratum most-frequent word n-grams — the corpus-audit table
+def top_ngrams_per_stratum(df: DataFrame) -> DataFrame:
+    """Per-stratum 5 most frequent word bigrams — the corpus-audit table
     behind vocabulary drift / boilerplate monitoring. Grouped top-k via a
     per-stratum window (partitioned — never global); ties broken
     lexicographically so the cut is total and replayable.
@@ -1345,7 +1294,7 @@ def top_ngrams_per_stratum(
     counts = (
         df.select(
             F.col("lang").alias("stratum"),
-            F.explode(_kgrams(F.col("text"), n)).alias("g"),
+            F.explode(_kgrams(F.col("text"), 2)).alias("g"),
         )
         .groupBy("stratum", "g")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -1353,35 +1302,29 @@ def top_ngrams_per_stratum(
     w = Window.partitionBy("stratum").orderBy(F.col("cnt").desc(), F.col("g").asc())
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= 5)
         .select("stratum", F.col("rank").cast("int").alias("rank"), F.col("g").alias("ngram"), "cnt")
     )
 
 
-def chunk_documents(
-    df: DataFrame,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-) -> DataFrame:
+def chunk_documents(df: DataFrame) -> DataFrame:
     """Overlapping token chunking — the sequence-prep op for training and
-    retrieval corpora: windows of ``chunk_tokens`` whitespace tokens with
-    ``overlap`` tokens of context carried between consecutive chunks
-    (stride = chunk_tokens - overlap). The final chunk keeps the tail even
-    when shorter; a document shorter than one chunk yields exactly one.
+    retrieval corpora: windows of 64 whitespace tokens with 16 tokens of
+    context carried between consecutive chunks (stride 48). The final
+    chunk keeps the tail even when shorter; a document shorter than one
+    chunk yields exactly one.
 
     Pure array HOFs (sequence/transform/slice + posexplode): the chunking
     is narrow on the corpus scan — no shuffle until whatever consumes the
     chunks. Returns (doc_id, chunk_id, n_tokens, chunk_text).
     """
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
-    stride = chunk_tokens - overlap
+    stride = 48
     toks = tokens(F.col("text"))
     n = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(F.size(toks))
-    # number of chunks: 1 + ceil(max(n - chunk_tokens, 0) / stride)
+    # number of chunks: 1 + ceil(max(n - 64, 0) / stride)
     n_chunks = (
         F.lit(1)
-        + F.ceil(F.greatest(n - chunk_tokens, F.lit(0)) / float(stride)).cast("int")
+        + F.ceil(F.greatest(n - 64, F.lit(0)) / float(stride)).cast("int")
     )
     # token array let-bound: slice(toks, ...) inside the per-chunk lambda
     # re-tokenizes per element otherwise (O(n^2)/row)
@@ -1389,7 +1332,7 @@ def chunk_documents(
         toks,
         lambda t: F.transform(
             F.sequence(F.lit(1), n_chunks),
-            lambda c: F.slice(t, (c - 1) * stride + 1, chunk_tokens),
+            lambda c: F.slice(t, (c - 1) * stride + 1, 64),
         ),
     )
     out = df.select(
@@ -1407,16 +1350,12 @@ def chunk_documents(
     )
 
 
-def hashed_classify(
-    df: DataFrame,
-    n_buckets: int = 4096,
-    seed: str = "hc",
-) -> DataFrame:
+def hashed_classify(df: DataFrame) -> DataFrame:
     """fastText-style hashed bag-of-ngrams linear classifier INFERENCE
     (Joulin et al. 2016, "Bag of Tricks for Efficient Text
     Classification", arXiv:1607.01759 — the architecture behind the
     CCNet / LLaMA-pipeline quality and language classifiers): every
-    word unigram and bigram is hashed into ``n_buckets`` via the
+    word unigram and bigram is hashed into 4096 buckets via the
     hashing trick, each bucket carries a fixed integer weight, and the
     document score is the sum of its feature-bucket weights. Here the
     weight table is itself md5-derived from the bucket id (a
@@ -1442,9 +1381,9 @@ def hashed_classify(
     def bucket_of(feat: Column) -> Column:
         return (
             F.conv(
-                F.substring(F.md5(F.concat(F.lit(seed + ":"), feat)), 1, 8), 16, 10
+                F.substring(F.md5(F.concat(F.lit("hc:"), feat)), 1, 8), 16, 10
             ).cast("bigint")
-            % n_buckets
+            % 4096
         )
 
     def weight_of(feat: Column) -> Column:
@@ -1452,7 +1391,7 @@ def hashed_classify(
             F.conv(
                 F.substring(
                     F.md5(
-                        F.concat(F.lit(seed + "w:"), bucket_of(feat).cast("string"))
+                        F.concat(F.lit("hcw:"), bucket_of(feat).cast("string"))
                     ),
                     1,
                     8,
@@ -1501,25 +1440,20 @@ def hashed_classify(
     )
 
 
-def alpha_mix(
-    df: DataFrame,
-    budget_permille: int = 400,
-    alpha_denom: int = 2,
-    denom: int = 1_000_000,
-) -> DataFrame:
+def alpha_mix(df: DataFrame) -> DataFrame:
     """Temperature-scaled mixture sampling audit: per-source keep rates
     proportional to ``n_tokens^alpha / n_tokens`` with alpha = 1/2 (the
     GPT-3 / Pile-style size^alpha reweighting that upsamples small
     high-quality sources relative to raw proportions), targeting a total
-    token budget of ``budget_permille``/1000 of the corpus. The source
+    token budget of 400/1000 of the corpus. The source
     weight is the EXACT integer sqrt of its token count (driver-side
     math.isqrt over the collected bounded per-source table — the
     kmeans-centroid / cms_heavy_hitters collect-once discipline; the
     DuckDB oracle recovers the same integer via floor(sqrt(x)) with a
     +/-1 exactness correction, so no FP value ever crosses the gate);
-    rates are pure integer arithmetic: rate_s = min(denom,
-    budget * w_s * denom DIV (W * tok_s)) with budget = ttot *
-    budget_permille DIV 1000. Document selection is the deterministic
+    rates are pure integer arithmetic: rate_s = min(10^6,
+    budget * w_s * 10^6 DIV (W * tok_s)) with budget = ttot * 400 DIV
+    1000. Document selection is the deterministic
     md5-bucket filter (strict <), so expected kept tokens per source
     ~ budget * w_s / W.
 
@@ -1528,18 +1462,17 @@ def alpha_mix(
     is a per-source literal CASE — no join) feeding a second
     partial-aggregable groupBy to #sources rows. No window, no
     broadcast, no corpus-sized shuffle. BIGINT headroom: the rate
-    numerator is budget * w * denom ~ tokens^1.5 * denom — at a real
-    10^14-token corpus drop ``denom`` to 10^3 or route the one
+    numerator is budget * w * 10^6 ~ tokens^1.5 * 10^6 — at a real
+    10^14-token corpus drop the 10^6 to 10^3 or route the one
     multiplication through DECIMAL(38,0).
 
     Returns per-source (source, n_docs, n_tokens, weight, rate, n_kept,
-    kept_tokens). ``alpha_denom`` is fixed at 2 (isqrt); other alphas
-    need an integer k-th-root, same discipline.
+    kept_tokens). Alpha is fixed at 1/2 (isqrt); other alphas need an
+    integer k-th-root, same discipline.
     """
     import math
 
-    if alpha_denom != 2:
-        raise NotImplementedError("alpha is fixed at 1/2 (integer sqrt)")
+    denom = 1_000_000
     base = df.select(
         F.col("source"),
         F.col("doc_id"),
@@ -1554,7 +1487,7 @@ def alpha_mix(
     weights = {s: math.isqrt(nt) for s, (_, nt) in per_src.items()}
     wsum = sum(weights.values())
     ttot = sum(nt for _, nt in per_src.values())
-    budget = (ttot * budget_permille) // 1000
+    budget = (ttot * 400) // 1000
     rates = {
         s: min(denom, (budget * w * denom) // (wsum * per_src[s][1]))
         if w > 0

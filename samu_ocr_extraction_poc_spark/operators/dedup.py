@@ -315,19 +315,14 @@ def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = 2) -> DataFr
     return out
 
 
-def minhash_jaccard_estimates(
-    df: DataFrame,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    k: int = 3,
-) -> DataFrame:
+def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
     """Sketch-quality table for MinHash (the hll_distinct pattern applied
     to Jaccard): for every LSH candidate pair, the signature-agreement
     ESTIMATE next to the EXACT shingle-set Jaccard and the signed error —
-    the measurement that justifies (num_hashes, rows_per_band) choices
-    before a 100 TB dedup run is launched.
+    the measurement that justifies the (8 hashes, 2 rows per band, k=3)
+    choices before a 100 TB dedup run is launched.
 
-    est_e4   = (#{i: h_i(a) = h_i(b)} * 10000) DIV num_hashes
+    est_e4   = (#{i: h_i(a) = h_i(b)} * 10000) DIV 8
                (E[est] = J by the MinHash property, Broder 1997)
     exact_e4 = (|A ∩ B| * 10000) DIV (|A| + |B| - |A ∩ B|)
     err_e4   = est_e4 - exact_e4
@@ -340,22 +335,22 @@ def minhash_jaccard_estimates(
     avoid; exact-on-candidates is the audited compromise (the
     heavy_hitters verify-on-candidates precedent). All-integer output.
     """
-    sig = minhash_signatures(df, num_hashes, k)
+    sig = minhash_signatures(df)
     # flat materialized signature table (multi-referenced: banding + both
     # per-pair signature join sides — the lsh_candidate_pairs discipline)
     sig = sig.localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs(sig, rows_per_band)
+    pairs = lsh_candidate_pairs(sig)
     agree = None
-    for i in range(num_hashes):
+    for i in range(8):
         term = F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
         agree = term if agree is None else agree + term
     sig_a = sig.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
+        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(8)],
     )
     sig_b = sig.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
+        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(8)],
     )
     est = (
         pairs.join(sig_a, "doc_a")
@@ -376,7 +371,7 @@ def minhash_jaccard_estimates(
         .distinct()
     )
     cand_docs = df.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    shing = doc_shingles(cand_docs, k).localCheckpoint(eager=False)
+    shing = doc_shingles(cand_docs).localCheckpoint(eager=False)
     sizes = shing.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sh_a = shing.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = shing.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -394,12 +389,12 @@ def minhash_jaccard_estimates(
             "doc_a",
             "doc_b",
             "n_agree",
-            F.expr(f"(n_agree * 10000) DIV {num_hashes}").alias("est_e4"),
+            F.expr("(n_agree * 10000) DIV 8").alias("est_e4"),
             F.expr(
                 "(coalesce(inter, 0) * 10000) DIV (sza + szb - coalesce(inter, 0))"
             ).alias("exact_e4"),
             F.expr(
-                f"(n_agree * 10000) DIV {num_hashes}"
+                "(n_agree * 10000) DIV 8"
                 " - (coalesce(inter, 0) * 10000) DIV (sza + szb - coalesce(inter, 0))"
             ).alias("err_e4"),
         )
@@ -439,27 +434,21 @@ def simhash(df: DataFrame) -> DataFrame:
     return agg.select("doc_id", sh.alias("simhash"))
 
 
-def simhash_multiprobe_pairs(
-    sig: DataFrame,
-    max_hamming: int = 12,
-    key_bits: int = 16,
-    rotations: tuple[int, ...] = (0, 8, 16, 24),
-    hash_bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_multiprobe_pairs(sig: DataFrame) -> DataFrame:
     """SimHash near-dup pairs via multi-probe rotation blocking.
 
     Round-1 used a single 8-bit prefix block: 256 buckets, so the per-bucket
     self-join grows O(n^2/256) — a scale-killer at 10^9+ docs (VERDICT.md
     item 5). Here each doc emits one 16-bit key per cyclic rotation of the
-    hash (top key_bits of rot_r(simhash)); a pair is a candidate iff it
+    hash (top 16 bits of rot_r(simhash)); a pair is a candidate iff it
     collides on ANY rotation. 2^16 buckets shrink every per-bucket join by
     ~256x while the 4 probes recover recall a single wider key would lose:
     a pair agreeing on any of the four stride-8 16-bit cyclic windows
     (offsets 0/8/16/24) is caught, so hamming<=1 pairs are ALWAYS found
     (one flipped bit can corrupt at most two of the four windows); pairs up
-    to max_hamming are found with high probability but not guaranteed (12
+    to hamming 12 are found with high probability but not guaranteed (12
     adversarially-placed flips can touch all four windows). Exact
-    hamming(<= max_hamming) re-ranks candidates; integer-only arithmetic
+    hamming(<= 12) re-ranks candidates; integer-only arithmetic
     end-to-end so the DuckDB oracle (which mirrors the same blocking, hence
     the same recall) replays it bit-for-bit.
 
@@ -470,7 +459,7 @@ def simhash_multiprobe_pairs(
 
     Returns (doc_a, doc_b, hamming).
     """
-    mask = (1 << hash_bits) - 1
+    mask = (1 << SIMHASH_BITS) - 1
     sh = F.col("simhash")
     probes = F.array(
         *[
@@ -478,12 +467,12 @@ def simhash_multiprobe_pairs(
                 F.lit(r).alias("probe"),
                 F.shiftright(
                     F.shiftleft(sh, r).bitwiseAND(F.lit(mask)).bitwiseOR(
-                        F.shiftright(sh, hash_bits - r)
+                        F.shiftright(sh, SIMHASH_BITS - r)
                     ),
-                    hash_bits - key_bits,
+                    SIMHASH_BITS - 16,
                 ).alias("bkey"),
             )
-            for r in rotations
+            for r in (0, 8, 16, 24)
         ]
     )
     base = sig.select("doc_id", "simhash", F.explode(probes).alias("p")).select(
@@ -501,22 +490,18 @@ def simhash_multiprobe_pairs(
         .where(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
         .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 12)
         .localCheckpoint(eager=True)
     )
     base.unpersist()
     return out
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    k: int = 3,
-    threshold: float = 0.5,
-    max_df: int = 100,
-) -> DataFrame:
-    """Exact n-gram Jaccard over the shingle inverted index.
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Exact 3-gram Jaccard over the shingle inverted index, pairs with
+    Jaccard >= 0.5.
 
-    Hot shingles (document frequency > max_df) are excluded from candidate
+    Hot shingles (document frequency > 100) are excluded from candidate
     generation — bounds join fan-out at web scale; the final Jaccard is
     still computed on full shingle sets, so the cut only loses pairs whose
     ONLY common shingles are corpus-stopword shingles (deterministic and
@@ -533,10 +518,10 @@ def ngram_jaccard_pairs(
     # once per self-join side is cheaper than the extra persist+count
     # materialization pass it used to take to run it once (interleaved
     # A/B 1.61 -> 1.34 s at sf0.1, values identical).
-    pairs_base = doc_shingles(df, k).repartition("shingle").persist()
+    pairs_base = doc_shingles(df).repartition("shingle").persist()
     sizes = pairs_base.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     df_counts = pairs_base.groupBy("shingle").agg(F.count("*").alias("df"))
-    filtered = pairs_base.join(df_counts.where(F.col("df") <= max_df), "shingle")
+    filtered = pairs_base.join(df_counts.where(F.col("df") <= 100), "shingle")
     a = filtered.alias("a")
     b = filtered.alias("b")
     common = (
@@ -550,11 +535,11 @@ def ngram_jaccard_pairs(
     # Result-preserving early cut: jaccard = c/(na+nb-c) <= c/na, so any pair
     # with c/na below the threshold can never pass the final filter — prune
     # it after the FIRST size join, before the second join and the sort.
-    # Slack covers the final round(.,4) lift plus FP division. At threshold
-    # 0 this is a no-op; at 0.5 it drops ~99.98% of background pairs
-    # (measured sf0.1: 1.13M -> ~3k rows into the second join).
+    # Slack covers the final round(.,4) lift plus FP division. It drops
+    # ~99.98% of background pairs (measured sf0.1: 1.13M -> ~3k rows into
+    # the second join).
     half_cut = common.join(sa, "doc_a").where(
-        F.col("n_common") / F.col("na") >= threshold - 1e-4
+        F.col("n_common") / F.col("na") >= 0.5 - 1e-4
     )
     out = (
         half_cut
@@ -566,7 +551,7 @@ def ngram_jaccard_pairs(
                 F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")), 4
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
         # eager: the caller gets a materialized pair frame (at scale: the
         # written pair table) and the inverted-index caches release NOW —
         # a lazy return would pin them for the caller's lifetime
@@ -576,21 +561,16 @@ def ngram_jaccard_pairs(
     return out
 
 
-def shared_window_pairs(
-    df: DataFrame,
-    k: int = 16,
-    min_shared: int = 1,
-    max_df: int = 50,
-) -> DataFrame:
+def shared_window_pairs(df: DataFrame) -> DataFrame:
     """Exact-substring duplication candidates (the training-data dedup of
     Lee et al., "Deduplicating Training Data Makes Language Models Better"):
-    two documents sharing ANY exact k-word window almost surely share a
-    long copied passage. Inverted index over distinct k-word windows;
-    windows appearing in > max_df documents (boilerplate) are cut from
+    two documents sharing ANY exact 16-word window almost surely share a
+    long copied passage. Inverted index over distinct 16-word windows;
+    windows appearing in > 50 documents (boilerplate) are cut from
     candidate generation — the same fan-out bound as ngram_jaccard_pairs.
 
     Returns (doc_a, doc_b, n_shared) with n_shared = number of distinct
-    shared windows, >= min_shared.
+    shared windows, >= 1.
     """
     # shingle-keyed cached index (r6, the ngram_jaccard_pairs layout): one
     # exchange serves the df groupBy, the cut join, and the self-join; the
@@ -599,9 +579,9 @@ def shared_window_pairs(
     # pass that used to run it once. The single eager action below fills
     # the lazy cache within one job (the multi-JOB fill race the
     # lsh_candidate_pairs convention guards against does not arise).
-    sh = doc_shingles(df, k).repartition("shingle").persist()
+    sh = doc_shingles(df, 16).repartition("shingle").persist()
     dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    filtered = sh.join(dfc.where(F.col("df") <= max_df), "shingle")
+    filtered = sh.join(dfc.where(F.col("df") <= 50), "shingle")
     a = filtered.alias("a")
     b = filtered.alias("b")
     out = (
@@ -609,7 +589,7 @@ def shared_window_pairs(
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 1)
         # eager pair result so the index caches release before returning
         .localCheckpoint(eager=True)
     )
@@ -737,32 +717,27 @@ def _strip_dup_windows(df: DataFrame, dup: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cross_corpus_contamination(
-    train: DataFrame,
-    test: DataFrame,
-    k: int = 16,
-    max_df: int = 50,
-) -> DataFrame:
+def cross_corpus_contamination(train: DataFrame, test: DataFrame) -> DataFrame:
     """Benchmark-contamination check: for each TEST document, how many of
-    its exact k-word windows appear anywhere in the TRAIN corpus (and in
+    its exact 16-word windows appear anywhere in the TRAIN corpus (and in
     how many train documents). The standard pre-training hygiene pass —
     a test doc with any hit leaked into the training set.
 
     Same inverted-index construction as shared_window_pairs, but the join
     is train x test (no self-join): the train index is built once, hot
-    boilerplate windows (train df > max_df) are cut, and each test window
+    boilerplate windows (train df > 50) are cut, and each test window
     probes it. Returns (doc_id, n_windows_hit, n_train_docs) for
     contaminated test docs only.
     """
     # the train index feeds both the df-count and the probe join — persist
     # AND materialize eagerly (lazy persists race; at scale: write the
     # window index table)
-    tr = doc_shingles(train, k).select(
+    tr = doc_shingles(train, 16).select(
         F.col("doc_id").alias("train_id"), "shingle"
     ).persist()
-    te = doc_shingles(test, k)
+    te = doc_shingles(test, 16)
     dfc = tr.groupBy("shingle").agg(F.count("*").alias("df"))
-    tr_cut = tr.join(dfc.where(F.col("df") <= max_df), "shingle")
+    tr_cut = tr.join(dfc.where(F.col("df") <= 50), "shingle")
     out = (
         te.join(tr_cut, "shingle")
         .groupBy("doc_id")
@@ -777,38 +752,33 @@ def cross_corpus_contamination(
     return out
 
 
-def contamination_report(
-    train: DataFrame,
-    test: DataFrame,
-    k: int = 16,
-    max_df: int = 50,
-    max_frac: float = 0.2,
-) -> DataFrame:
+def contamination_report(train: DataFrame, test: DataFrame) -> DataFrame:
     """The decontamination DECISION table: one row per TEST document with
     its window totals, hit counts, contamination fraction, and the
     clean/drop verdict — what a pre-training pipeline actually consumes
     (cross_corpus_contamination reports only the contaminated docs'
     hit counts; the decision needs the denominator and the clean rows
-    too). frac = hits/windows is an exact integer ratio in double — no FP
-    drift cross-engine — and the verdict compares the round(4) fraction.
+    too). Windows are 16 words; frac = hits/windows is an exact integer
+    ratio in double — no FP drift cross-engine — and a document is clean
+    when the round(4) fraction is at most 0.2.
 
     Same index construction: train windows persisted+materialized once,
-    hot windows (train df > max_df) cut before the probe join. The test
+    hot windows (train df > 50) cut before the probe join. The test
     window frame feeds the totals agg and the probe — persisted too.
 
     Returns (doc_id, n_windows, n_windows_hit, contam_frac, is_clean 0/1).
     """
-    tr = doc_shingles(train, k).select(
+    tr = doc_shingles(train, 16).select(
         F.col("doc_id").alias("train_id"), "shingle"
     )
-    te = doc_shingles(test, k)
+    te = doc_shingles(test, 16)
     tr.persist()
     te.persist()
     totals = te.groupBy("doc_id").agg(
         F.countDistinct("shingle").alias("n_windows")
     )
     dfc = tr.groupBy("shingle").agg(F.count("*").alias("df"))
-    tr_cut = tr.join(dfc.where(F.col("df") <= max_df), "shingle")
+    tr_cut = tr.join(dfc.where(F.col("df") <= 50), "shingle")
     hits = (
         te.join(tr_cut, "shingle")
         .groupBy("doc_id")
@@ -822,7 +792,7 @@ def contamination_report(
         F.col("n_windows").cast("bigint").alias("n_windows"),
         F.coalesce(F.col("nh"), F.lit(0)).cast("bigint").alias("n_windows_hit"),
         frac.alias("contam_frac"),
-        F.when(frac <= max_frac, 1).otherwise(0).cast("int").alias("is_clean"),
+        F.when(frac <= 0.2, 1).otherwise(0).cast("int").alias("is_clean"),
     )
     out = out.localCheckpoint(eager=True)
     te.unpersist()
@@ -859,7 +829,6 @@ def canonical_drops(pairs: DataFrame) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """Distributed connected components over a near-dup pair graph — the
@@ -897,8 +866,8 @@ def connected_components(
     full large+small star pass saved per call, and an input that is
     already a star forest runs zero rounds). The forest test is the only
     stop: an unchanged edge set is a fixpoint, hence a star forest, so no
-    other "nothing changed" test could fire first, and ``max_iter`` raises
-    on non-convergence. Cache discipline: O(1) live frames, and
+    other "nothing changed" test could fire first, and 20 rounds without
+    the forest raise. Cache discipline: O(1) live frames, and
     the lineage is localCheckpoint-truncated EVERY round — a star round
     references the previous frame ~4 times (the adjacency union reads it
     twice, small-star joins the large-star output against its own
@@ -1018,10 +987,10 @@ def connected_components(
         converged = _is_star_forest(edges)
         rounds = 0
         while not converged:
-            if rounds == max_iter:
+            if rounds == 20:
                 raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} rounds; "
-                    "raise max_iter (expected O(log n) rounds)"
+                    "connected_components did not converge in 20 rounds "
+                    "(expected O(log n) rounds)"
                 )
             # eager=False: the forest-test aggregate is the round's
             # materializing action — one scheduled job per round instead

@@ -91,18 +91,16 @@ def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
     iterations: int = 8,
-    damping_pct: int = 85,
-    scale: int = PR_SCALE,
     checkpoint_every: int = 16,
     n: int | None = None,
 ) -> DataFrame:
     """All-integer fixed-point PageRank (Page et al. 1999; damping as the
-    integer percentage ``damping_pct``).
+    integer percentage d = 85, ranks in units of ``PR_SCALE``).
 
     Per node v each iteration::
 
         share(u)  = rank(u) DIV out_deg(u)                 (u with out-edges)
-        rank'(v)  = ((100-d) * (scale DIV N)) DIV 100
+        rank'(v)  = ((100-d) * (PR_SCALE DIV N)) DIV 100
                   + (d * sum_{u->v} share(u)) DIV 100
 
     Every operation is BIGINT; integer-division truncation and dangling /
@@ -121,7 +119,7 @@ def pagerank(
     :func:`pagerank_on_driver` finishes. A caller-passed ``n`` over that
     gate skips the collect, and a threshold <= 0 always runs the loop.
 
-    Returns (node, rank, in_deg, out_deg): rank in scale units, and each
+    Returns (node, rank, in_deg, out_deg): rank in PR_SCALE units, and each
     node's edge counts as target and as source.
     """
     if n is not None and n <= 0:
@@ -142,9 +140,7 @@ def pagerank(
     if n is None or n * 64 < broadcast_threshold(spark):
         ids = collect_within_budget(node_t, 64)
         if ids:  # no nodes: the loop's count raises
-            ranks = pagerank_on_driver(
-                [r[0] for r in ids], edges, iterations, damping_pct, scale, n
-            )
+            ranks = pagerank_on_driver([r[0] for r in ids], edges, iterations, n)
             if ranks is not None:
                 release_frame(node_t)
                 return ranks
@@ -154,7 +150,7 @@ def pagerank(
         n = node_t.count()
     if n <= 0:
         raise ValueError(f"pagerank: n must be positive, got {n}")
-    teleport = ((100 - damping_pct) * (scale // n)) // 100
+    teleport = ((100 - 85) * (PR_SCALE // n)) // 100
     # A checkpointed LogicalRDD carries NO size statistics, so without a
     # hint every per-iteration join planned as SortMergeJoin (16 extra
     # sort+exchange pairs for 8 rounds — the semantic_dedup stats lesson,
@@ -180,7 +176,7 @@ def pagerank(
     )
     # `pr`, not `rank`, internally: `rank` is a window-function keyword
     # inside F.expr and must not shadow the column reference.
-    ranks = node_t.select("node", F.lit(scale // n).cast("bigint").alias("pr"))
+    ranks = node_t.select("node", F.lit(PR_SCALE // n).cast("bigint").alias("pr"))
     for it in range(1, iterations + 1):
         shares = ranks.join(_hint(out_deg), "node").select(
             F.col("node").alias("src"), F.expr("pr DIV out_deg").alias("share")
@@ -195,7 +191,7 @@ def pagerank(
             "node",
             (
                 F.lit(teleport).cast("bigint")
-                + F.expr(f"({damping_pct} * coalesce(c, 0)) DIV 100")
+                + F.expr("(85 * coalesce(c, 0)) DIV 100")
             ).alias("pr"),
         )
         if checkpoint_every and it % checkpoint_every == 0 and it < iterations:
@@ -219,8 +215,6 @@ def pagerank_on_driver(
     node_ids: list,
     edges: DataFrame,
     iterations: int = 8,
-    damping_pct: int = 85,
-    scale: int = PR_SCALE,
     n: int | None = None,
 ) -> DataFrame | None:
     """:func:`pagerank` over node ids already on the driver: the (src, dst)
@@ -237,14 +231,14 @@ def pagerank_on_driver(
     n = n or len(node_ids)
     out_deg = Counter(src for src, _ in edge_rows)
     in_deg = Counter(dst for _, dst in edge_rows)
-    teleport = ((100 - damping_pct) * (scale // n)) // 100
-    rank = dict.fromkeys(node_ids, scale // n)
+    teleport = ((100 - 85) * (PR_SCALE // n)) // 100
+    rank = dict.fromkeys(node_ids, PR_SCALE // n)
     moving = [(s, d) for s, d in edge_rows if s is not None and d is not None and s in rank]
     for _ in range(iterations):
         contrib = Counter()
         for src, dst in moving:
             contrib[dst] += rank[src] // out_deg[src]
-        rank = {v: teleport + (damping_pct * contrib[v]) // 100 for v in rank}
+        rank = {v: teleport + (85 * contrib[v]) // 100 for v in rank}
     rows = [
         (v, r, in_deg[v] if v is not None else 0, out_deg[v] if v is not None else 0)
         for v, r in rank.items()

@@ -41,9 +41,9 @@ def _h(col: Column, start: int, hex_chars: int, modulus: int) -> Column:
     )
 
 
-def synth_dirty_records(customer: DataFrame, copies: int = 2) -> DataFrame:
+def synth_dirty_records(customer: DataFrame) -> DataFrame:
     """Deterministic dirty-record table: each customer row becomes
-    ``copies + 1`` records — the original (variant 0) plus perturbed
+    3 records — the original (variant 0) plus 2 perturbed
     copies whose corruptions are drawn from md5 windows of
     ``custkey:variant`` (replayable in closed form by the oracle):
 
@@ -67,7 +67,7 @@ def synth_dirty_records(customer: DataFrame, copies: int = 2) -> DataFrame:
         F.col("c_nationkey").cast("bigint").alias("nat0"),
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents0"),
         F.col("c_mktsegment").alias("seg0"),
-        F.explode(F.sequence(F.lit(0), F.lit(copies))).alias("v"),
+        F.explode(F.sequence(F.lit(0), F.lit(2))).alias("v"),
     )
     perturb = F.col("v") > 0
     pos = (_h(key, 3, 2, 9) + 1).cast("int")  # 1..9

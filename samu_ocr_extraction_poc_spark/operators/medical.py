@@ -95,18 +95,17 @@ ONTOLOGY_DICT: dict[str, tuple[str, str, str, str, str, float]] = {
 }
 
 
-def infer_med_entities(text: str, dictionary: dict | None = None) -> list[dict]:
-    """N5 inference stand-in: dictionary-match raw text -> entity payloads
-    (the role of StartICD10CMInferenceJob etc.), document-order, one entity
+def infer_med_entities(text: str) -> list[dict]:
+    """N5 inference stand-in: ``ONTOLOGY_DICT``-match raw text -> entity
+    payloads (the role of StartICD10CMInferenceJob etc.), document-order, one entity
     per term occurrence (the reference's savers dedup by code afterwards,
     A3)."""
     import re as _re
 
-    dictionary = dictionary if dictionary is not None else ONTOLOGY_DICT
     out = []
     for m in _re.finditer(r"[A-Za-z][A-Za-z-]+", text or ""):
         term = m.group(0).lower()
-        hit = dictionary.get(term)
+        hit = ONTOLOGY_DICT.get(term)
         if not hit:
             continue
         system, category, type_, code, desc, score = hit
@@ -125,7 +124,7 @@ def infer_med_entities(text: str, dictionary: dict | None = None) -> list[dict]:
     return out
 
 
-def add_inferred_entities(spans: list[dict], dictionary: dict | None = None) -> list[dict]:
+def add_inferred_entities(spans: list[dict]) -> list[dict]:
     """Pre-processor: append med_entity spans inferred from line text —
     used when a corpus carries raw clinical text without model outputs.
     Documents that already contain med_entity spans are left untouched
@@ -135,7 +134,7 @@ def add_inferred_entities(spans: list[dict], dictionary: dict | None = None) -> 
     if any(s.get("kind") == "med_entity" for s in spans):
         return [dict(s) for s in spans]
     text = " ".join(s.get("text") or "" for s in spans if s.get("kind") == "line")
-    inferred = infer_med_entities(text, dictionary)
+    inferred = infer_med_entities(text)
     out = [dict(s) for s in spans]
     next_offset = max((s.get("offset") or 0 for s in spans), default=-1) + 1
     for e in inferred:

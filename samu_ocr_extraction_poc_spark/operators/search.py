@@ -92,32 +92,28 @@ def bm25_scores(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """BM25 top-k documents for a bag of query terms.
+def bm25_topk(df: DataFrame, query_terms: list[str]) -> DataFrame:
+    """BM25 top-10 documents for a bag of query terms.
 
     Ranking is distributed top-k, never a global window: round-2 used
     ``row_number() OVER (ORDER BY score)`` with no partition key, which
     Spark executes by moving EVERY matching document through one partition
     ("No Partition Defined for Window operation") — a scale-killer for
     common query terms (billions of hits at 10^12 docs). Here
-    ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject: each
-    partition keeps its local top k, the driver merges k·P rows. The rank
-    is then derived on the k-row result via a broadcast self-join count
+    ``orderBy(...).limit(10)`` compiles to TakeOrderedAndProject: each
+    partition keeps its local top 10, the driver merges 10·P rows. The rank
+    is then derived on the 10-row result via a broadcast self-join count
     (rank = 1 + #rows strictly better) — no window operator anywhere in
     the plan (pinned by tests/test_scale_paths.py).
 
     Returns (rank, doc_id, score).
     """
     scores = bm25_scores(df, query_terms)
-    # eager k-row checkpoint: the rank join reads `top` on both sides; a
+    # eager 10-row checkpoint: the rank join reads `top` on both sides; a
     # lazy frame would recompute the whole scoring pipeline twice
     top = (
         scores.orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
+        .limit(10)
         .localCheckpoint(eager=True)
     )
     better = (F.col("b.score") > F.col("a.score")) | (
@@ -309,44 +305,36 @@ def proximity_query(
     )
 
 
-def tfidf_weighted_pairs(
-    df: DataFrame,
-    n_docs: int,
-    min_df: int = 2,
-    max_df: int | None = None,
-    idf_scale: int = 1000,
-    top_k: int = 30,
-) -> DataFrame:
+def tfidf_weighted_pairs(df: DataFrame, n_docs: int) -> DataFrame:
     """All-pairs IDF-weighted lexical similarity with a document-frequency
     screen (Bayardo et al. 2007, "Scaling Up All Pairs Similarity
     Search": candidate volume from an inverted index is Σ df(t)^2, so the
     screen that drops ubiquitous terms IS the scalability mechanism —
-    df > max_df terms carry near-zero IDF weight and quadratic join
-    cost).
+    terms in more than max_df = max(n_docs DIV 20, 2) documents carry
+    near-zero IDF weight and quadratic join cost).
 
     Terms are word BIGRAMS of the normalized token stream (open enough
     vocabulary for document-level discrimination; unigram vocabularies
     saturate). All arithmetic is integer so the DuckDB oracle replays
     every score exactly:
 
-        w(t)            = (n_docs * idf_scale) DIV df(t)      -- integer IDF
+        w(t)            = (n_docs * 1000) DIV df(t)           -- integer IDF
         score(a, b)     = Σ_shared-t  tf_a(t) * tf_b(t) * w(t)
 
     Plan shape at scale: one tokenize+explode into postings, one
     partially-aggregable (doc, term) tf groupBy, a df groupBy on term
-    with the min/max-df screen applied BEFORE the self-join (the only
-    quadratic stage, bounded by max_df), and a final TakeOrderedAndProject
+    with the df screen (2 <= df(t) <= max_df) applied BEFORE the
+    self-join (the only quadratic stage, bounded by max_df), and a final TakeOrderedAndProject
     for the top-k — no global sort, no window.
 
     ``n_docs`` is the corpus size (callers pass the bounded count —
     keeps the operator a pure DataFrame transform).
 
-    Returns the ``top_k`` (doc_a, doc_b, n_shared_terms, score) pairs by
+    Returns the top 30 (doc_a, doc_b, n_shared_terms, score) pairs by
     (score DESC, doc_a, doc_b) — a total order, so the cut is
     deterministic.
     """
-    if max_df is None:
-        max_df = max(n_docs // 20, min_df)
+    max_df = max(n_docs // 20, 2)
 
     def bigrams(toks: Column) -> Column:
         clean = F.filter(toks, lambda t: F.length(t) > 0)
@@ -380,8 +368,8 @@ def tfidf_weighted_pairs(
     weights = (
         posting.groupBy("term")
         .agg(F.count("*").cast("bigint").alias("dft"))
-        .where((F.col("dft") >= min_df) & (F.col("dft") <= max_df))
-        .select("term", F.expr(f"({n_docs} * {idf_scale}) DIV dft").alias("w"))
+        .where((F.col("dft") >= 2) & (F.col("dft") <= max_df))
+        .select("term", F.expr(f"({n_docs} * 1000) DIV dft").alias("w"))
     )
     kept = posting.join(weights, "term")
     pa = kept.select(
@@ -404,5 +392,5 @@ def tfidf_weighted_pairs(
             .alias("score"),
         )
         .orderBy(F.col("score").desc(), "doc_a", "doc_b")
-        .limit(top_k)
+        .limit(30)
     )

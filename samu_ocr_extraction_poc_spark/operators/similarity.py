@@ -81,12 +81,8 @@ def label_centroids(corpus: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """IVF ANN: route query -> nearest centroid by cosine, then exact top-k
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF ANN: route query -> nearest centroid by cosine, then exact top-3
     within that cluster. Returns (query_id, rank, neighbor_id, cos)."""
     cent = label_centroids(corpus)
     qdims = queries.select(
@@ -125,7 +121,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select("query_id", "rank", "neighbor_id", "cos")
     )
 
@@ -326,14 +322,9 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[int]]:
 # hyperplane_lsh_pairs below and HYPERPLANE_SQL in contract.py.
 
 
-def _sign_buckets(
-    corpus: DataFrame,
-    planes: list[list[int]],
-    n_tables: int,
-    bits_per_table: int,
-) -> DataFrame:
-    """(vid, vec, t, bkt) rows: each vector exploded into its n_tables
-    sign-bit bucket keys. Quantize ONCE per row (q = floor(v*1e6) as
+def _sign_buckets(corpus: DataFrame, planes: list[list[int]]) -> DataFrame:
+    """(vid, vec, t, bkt) rows: each vector exploded into its 6 tables'
+    4-sign-bit bucket keys. Quantize ONCE per row (q = floor(v*1e6) as
     long), then every plane dot is a pure integer zip_with over q —
     computing floor inside each of the n_tables*bits dots would redo the
     same float work 24x per row. Shared by the self-join
@@ -353,6 +344,7 @@ def _sign_buckets(
     # plane-literal note below, which round 3 already moved to F.expr).
     # The parsed expression tree is identical, so every bucket bit — and
     # the oracle replay — is unchanged.
+    n_tables, bits_per_table = 6, 4
     n_planes = n_tables * bits_per_table
     plane_sql = (
         "array("
@@ -389,15 +381,10 @@ def _sign_buckets(
     ).selectExpr("vid", "vec", "tb.t AS t", "tb.bkt AS bkt")
 
 
-def hyperplane_lsh_pairs(
-    corpus: DataFrame,
-    dim: int,
-    n_tables: int = 6,
-    bits_per_table: int = 4,
-) -> DataFrame:
+def hyperplane_lsh_pairs(corpus: DataFrame, dim: int) -> DataFrame:
     """Label-free cosine LSH (Charikar's random-hyperplane scheme), standard
-    multi-table construction: T independent tables of b sign bits each; a
-    pair is a candidate if it collides in ANY table (recall
+    multi-table construction: T = 6 independent tables of b = 4 sign bits
+    each; a pair is a candidate if it collides in ANY table (recall
     1-(1-p^b)^T for per-plane agreement p); exact cosine re-ranks. All
     JVM-side — planes are literal array columns, signs via
     aggregate(zip_with(...)), tables explode into (table, bucket) keys.
@@ -410,8 +397,7 @@ def hyperplane_lsh_pairs(
     bit-for-bit by the DuckDB oracle (HYPERPLANE_SQL in contract.py).
     Returns distinct (id_a, id_b, cos).
     """
-    planes = _hyperplanes(n_tables * bits_per_table, dim)
-    base = _sign_buckets(corpus, planes, n_tables, bits_per_table)
+    base = _sign_buckets(corpus, _hyperplanes(24, dim))
     a = base.alias("a")
     b = base.alias("b")
     return (
@@ -433,8 +419,6 @@ def semantic_contamination(
     test: DataFrame,
     dim: int,
     threshold: float = 0.35,
-    n_tables: int = 6,
-    bits_per_table: int = 4,
 ) -> DataFrame:
     """Benchmark contamination in EMBEDDING space (the semantic sibling of
     dedup.cross_corpus_contamination's exact-window check): for each TEST
@@ -448,9 +432,9 @@ def semantic_contamination(
     cosine runs only on colliding pairs. Returns contaminated test rows
     only: (vec_id, n_train_hits, max_cos).
     """
-    planes = _hyperplanes(n_tables * bits_per_table, dim)
-    tr = _sign_buckets(train, planes, n_tables, bits_per_table)
-    te = _sign_buckets(test, planes, n_tables, bits_per_table)
+    planes = _hyperplanes(24, dim)
+    tr = _sign_buckets(train, planes)
+    te = _sign_buckets(test, planes)
     cand = (
         te.alias("a")
         .join(tr.alias("b"), ["t", "bkt"])
@@ -501,24 +485,19 @@ def cosine_near_dup_pairs(
     )
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    threshold: float = 0.95,
-) -> DataFrame:
+def semantic_dedup(corpus: DataFrame, threshold: float = 0.95) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication of an UNLABELED corpus by embedding. K-means the
-    embeddings (the deterministic relational Lloyd of
-    :func:`kmeans_assign`), then within each learned cluster drop every
-    vector that has a lower-id member at cosine >= ``threshold`` — the
+    embeddings into 8 clusters (3 rounds of the deterministic relational
+    Lloyd of :func:`kmeans_assign`), then within each learned cluster drop
+    every vector that has a lower-id member at cosine >= ``threshold`` — the
     keep-lowest-id deterministic variant of the paper's keep-one-per-group
     rule (the paper keeps the member farthest from the centroid; any
     single-survivor choice gives the same dedup rate, and lowest-id is
     replayable cross-engine with no FP tie risk).
 
     This is :func:`cosine_near_dup_pairs` without the label crutch: the
-    blocking structure is LEARNED. At 100 TB you raise ``k`` so clusters
+    blocking structure is LEARNED. At 100 TB you raise k so clusters
     stay bounded (k ~ N/10^4: the per-cluster self-join is the only
     quadratic term and runs per-block); clusters are md5-balanced only as
     much as k-means makes them — the skew lever is k, which the paper
@@ -527,7 +506,7 @@ def semantic_dedup(
     Returns one row per input vector: (vec_id, cluster, is_kept) with
     is_kept as 0/1 int.
     """
-    assign = kmeans_assign(corpus, k=k, iterations=iterations)
+    assign = kmeans_assign(corpus)
     # norm precomputed ONCE per vector (IEEE-identical to computing it
     # inside the pair predicate — same expression, evaluated earlier):
     # the pair join then does ONE O(d) reduction per pair instead of
@@ -574,10 +553,7 @@ def semantic_dedup(
     return out
 
 
-def quantize_embeddings(
-    corpus: DataFrame,
-    bits_range: int = 127,
-) -> DataFrame:
+def quantize_embeddings(corpus: DataFrame) -> DataFrame:
     """Symmetric per-vector int8-style quantization — the memory path for
     vector search at corpus scale (4x smaller than float32, integer dot
     products). scale = max|v| per vector; q_d = floor(v_d/scale*127 + 0.5)
@@ -599,7 +575,7 @@ def quantize_embeddings(
             v,
             lambda x: F.when(
                 s > 0,
-                F.floor(x.cast("double") / s * F.lit(float(bits_range)) + F.lit(0.5)),
+                F.floor(x.cast("double") / s * F.lit(127.0) + F.lit(0.5)),
             ).otherwise(F.lit(0)).cast("int"),
         ),
     )
@@ -702,7 +678,6 @@ def ivf_topk_indexed(
     spark,
     location: str,
     queries: DataFrame,
-    k: int = 3,
     n_probe: int = 1,
 ) -> DataFrame:
     """Query a persisted IVF index (build_ivf_index): route each query to
@@ -710,7 +685,7 @@ def ivf_topk_indexed(
     inverted-list scan to the union of probed clusters (a LITERAL isin
     filter so directory-partition pruning reaches the scan — the union is
     collected driver-side, <= n_queries * n_probe ints, an index lookup
-    not a data collect), then exact cosine + per-query top-k within the
+    not a data collect), then exact cosine + per-query top-3 within the
     probed lists. With n_probe = k_clusters this EQUALS brute_topk (pinned
     by test). Returns (query_id, rank, neighbor_id, cos).
     """
@@ -751,6 +726,6 @@ def ivf_topk_indexed(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select("query_id", "rank", "neighbor_id", "cos")
     )

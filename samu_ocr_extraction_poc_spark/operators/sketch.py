@@ -28,25 +28,20 @@ from .corpus import _kgrams
 _HASH_DOMAIN = float(1 << 60)
 
 
-def _group_sketch_sets(
-    df: DataFrame,
-    k: int,
-    ngram: int,
-    n_sub: int,
-) -> DataFrame:
-    """(grp, h) rows: each group's k smallest distinct n-gram hashes —
+def _group_sketch_sets(df: DataFrame, k: int) -> DataFrame:
+    """(grp, h) rows: each group's k smallest distinct bigram hashes —
     the KMV sketch SET (not just the k-th minimum), which is what makes
     the sketch mergeable (see kmv_group_overlap). Hierarchical exact
     min-k as described in kmv_distinct_tokens."""
     hashed = (
         df.select(
             F.col("lang").alias("grp"),
-            F.explode(_kgrams(F.col("text"), ngram)).alias("tok"),
+            F.explode(_kgrams(F.col("text"), 2)).alias("tok"),
         )
         .select("grp", token_md5_long(F.col("tok")).alias("h"))
         .distinct()
     )
-    sub = hashed.withColumn("sub", F.col("h") % n_sub)
+    sub = hashed.withColumn("sub", F.col("h") % 64)
     w1 = Window.partitionBy("grp", "sub").orderBy("h")
     cand = (
         sub.withColumn("rn", F.row_number().over(w1))
@@ -366,7 +361,6 @@ def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
 def cms_heavy_hitters(
     df: DataFrame,
     key_col: str = "key",
-    num: int = 1,
     den: int = 500,
     width: int = 1 << 12,
     depth: int = 4,
@@ -376,7 +370,7 @@ def cms_heavy_hitters(
     Charikar et al. 2002's find-then-verify discipline applied to
     frequencies):
     return every key whose exact occurrence count satisfies
-    ``cnt * den >= total * num`` (frequency >= num/den of the stream).
+    ``cnt * den >= total`` (frequency >= 1/den of the stream).
 
     The naive plan — ``groupBy(key).count()`` then filter — shuffles one
     partial-count row per distinct key per input partition: at 100 TB the
@@ -394,7 +388,7 @@ def cms_heavy_hitters(
     2. every key INSTANCE is point-estimated row-locally — ``least`` over
        ``depth`` ``element_at`` probes of the literal, pure md5
        arithmetic, no join, no explode, no shuffle — and filtered by
-       ``est * den >= total * num``. CMS never undercounts, so the
+       ``est * den >= total``. CMS never undercounts, so the
        survivor set is a SUPERSET of the true heavy hitters: the screen
        is provably lossless and the final result needs no sketch caveat.
     3. only survivors reach the exchange; the exact groupBy count and the
@@ -402,7 +396,7 @@ def cms_heavy_hitters(
        collision-induced false candidates.
 
     All-integer comparisons (cross-multiplied; fits BIGINT for
-    ``total * max(num, den)`` < 2^63, i.e. any real corpus), so the
+    ``total * den`` < 2^63, i.e. any real corpus), so the
     DuckDB oracle is the plain exact-count SQL — the screen's
     losslessness is exactly what the parity gate then proves. Keep
     ``width`` modest: the literal is depth*width BIGINTs embedded in the
@@ -429,7 +423,7 @@ def cms_heavy_hitters(
         for j in range(depth)
     ]
     est = probes[0] if depth == 1 else F.least(*probes)
-    bar = F.lit(int(total) * num).cast("bigint")
+    bar = F.lit(int(total)).cast("bigint")
     return (
         keyed.where(est * den >= bar)
         .groupBy("k__")
@@ -442,7 +436,6 @@ def cms_heavy_hitters(
 def hist_build(
     df: DataFrame,
     value_col: str,
-    lo: int = 0,
     hi: int = 1 << 20,
     n_bins: int = 256,
 ) -> DataFrame:
@@ -454,9 +447,9 @@ def hist_build(
     wrong plan or non-replayable cross-engine. n_bins counts bound memory
     regardless of corpus size; the build is ONE partial-aggregable
     groupBy/count on a narrow integer projection. Mergeable: per-bin sum
-    (hist_merge). Values below lo / at-or-above hi clamp into the first /
-    last bin (documented, oracled identically — pick [lo, hi) to cover
-    the mass you care about).
+    (hist_merge). The bins cover [lo, hi) with lo = 0; values below lo /
+    at-or-above hi clamp into the first / last bin (documented, oracled
+    identically — pick hi to cover the mass you care about).
 
     Bin index is pure integer arithmetic: the VALUE is clamped into
     [lo, hi] first, then b = least(n_bins - 1, ((v_cl - lo) * n_bins)
@@ -470,6 +463,7 @@ def hist_build(
     bit-identically. Stored as (b, cnt) rows; ``b`` carries ``{lo, hi,
     n_bins}`` as column metadata, so every read interpolates against the
     edges the sketch was built with."""
+    lo = 0
     span = hi - lo
     cells = (
         df.select(F.col(value_col).cast("bigint").alias("v__"))
@@ -579,7 +573,6 @@ def grouped_quantiles(
     group_col: str,
     value_col: str,
     percentiles: list[int],
-    lo: int = 0,
     hi: int = 1 << 20,
     n_bins: int = 256,
 ) -> DataFrame:
@@ -590,9 +583,9 @@ def grouped_quantiles(
     clamp-first integer bin arithmetic and floor-interpolation read-off,
     so DuckDB replays every value exactly.
 
-    Plan shape at scale: ONE partial-aggregable groupBy over
-    (group, bin) is the only pass that touches the corpus; every later
-    frame is bounded by #groups * n_bins rows — the per-group cumulative
+    Plan shape at scale: ONE partial-aggregable groupBy over (group, bin),
+    the bins splitting [0, hi), is the only pass that touches the corpus;
+    every later frame is bounded by #groups * n_bins rows — the per-group cumulative
     is an equi-join on the group key over <= n_bins^2 bin pairs per
     group, rank targets are a #groups x len(percentiles) cross join, the
     carrying bin a min-struct agg. NO window anywhere: a per-group
@@ -606,6 +599,7 @@ def grouped_quantiles(
     hist_build contract).
     """
     _check_group_col(group_col, _QUANTILE_GROUP_RESERVED, "grouped_quantiles")
+    lo = 0
     span = hi - lo
     cells = (
         df.select(
@@ -693,15 +687,15 @@ def grouped_quantiles(
     )
 
 
-def hll_hash(col: Column, p: int = 8, w_bits: int = 32, prefix: str = "hll:") -> Column:
+def hll_hash(col: Column, p: int = 8, w_bits: int = 32) -> Column:
     """The HLL item hash: the first (p + w_bits)/4 hex chars of md5 as a
-    BIGINT — identical on DuckDB via ('0x' || substr(md5(prefix || x),
+    BIGINT — identical on DuckDB via ('0x' || substr(md5('hll:' || x),
     1, n_hex))::BIGINT. Exposed so callers computing EXACT distinct
     counts next to the sketch (the hll_distinct contract entry) hash the
     same domain the sketch saw."""
     n_hex = (p + w_bits) // 4
     return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col)), 1, n_hex), 16, 10
+        F.substring(F.md5(F.concat(F.lit("hll:"), col)), 1, n_hex), 16, 10
     ).cast("bigint")
 
 
@@ -989,29 +983,24 @@ def hll_estimate_grouped(reg: DataFrame, group_col: str) -> DataFrame:
     )
 
 
-def kmv_distinct_tokens(
-    df: DataFrame,
-    k: int = 64,
-    ngram: int = 2,
-    n_sub: int = 64,
-) -> DataFrame:
-    """Per-group distinct word-``ngram`` count estimate via a KMV sketch
+def kmv_distinct_tokens(df: DataFrame, k: int = 64) -> DataFrame:
+    """Per-group distinct word-bigram count estimate via a KMV sketch
     (n-grams of the normalized text — the vocabulary unit whose distinct
     count actually explodes at corpus scale).
 
     Scale path: the k smallest hashes per group are found hierarchically —
-    a first row_number window over (group, hash % n_sub) sub-buckets keeps
-    k candidates per sub-bucket (each sub-bucket partition holds ~1/n_sub
+    a first row_number window over (group, hash % 64) sub-buckets keeps
+    k candidates per sub-bucket (each sub-bucket partition holds ~1/64
     of the group's distinct hashes, so no partition is group-sized), then
-    a second window over the <= k*n_sub surviving rows per group takes the
+    a second window over the <= k*64 surviving rows per group takes the
     true k minima. Both steps are exact: the k smallest overall are always
     among each sub-bucket's k smallest. No single-partition window at any
-    corpus size (raise n_sub for bigger groups).
+    corpus size (raise the 64 sub-buckets for bigger groups).
 
     Groups with fewer than k distinct n-grams get their exact count.
     Returns (group_col, n_mins, distinct_est) — n_mins = min(k, exact D).
     """
-    mink = _group_sketch_sets(df, k, ngram, n_sub)
+    mink = _group_sketch_sets(df, k)
     est = mink.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n_mins"), F.max("h").alias("kth")
     )
@@ -1026,17 +1015,12 @@ def kmv_distinct_tokens(
     )
 
 
-def kmv_group_overlap(
-    df: DataFrame,
-    k: int = 64,
-    ngram: int = 2,
-    n_sub: int = 64,
-) -> DataFrame:
+def kmv_group_overlap(df: DataFrame) -> DataFrame:
     """Pairwise group overlap from MERGED KMV sketches — the property that
     makes a sketch worth having at 100 TB: each group's k-minimum set is
-    computed ONCE from its own data, and any pair's union/Jaccard estimate
-    then comes from the two k-row sketches alone, never re-reading the
-    corpus (Beyer et al., SIGMOD 2007: kmin_k(A∪B) ⊆ kmin_k(A) ∪
+    computed ONCE from its own data (k = 64 bigram hashes), and any pair's
+    union/Jaccard estimate then comes from the two k-row sketches alone,
+    never re-reading the corpus (Beyer et al., SIGMOD 2007: kmin_k(A∪B) ⊆ kmin_k(A) ∪
     kmin_k(B), so the merge is exact on sketch data).
 
     For each group pair a < b: K = the k smallest of the two sketch sets'
@@ -1048,7 +1032,7 @@ def kmv_group_overlap(
 
     Returns (lang_a, lang_b, k_used, jaccard_est, union_est).
     """
-    mins = _group_sketch_sets(df, k, ngram, n_sub).persist()
+    mins = _group_sketch_sets(df, 64).persist()
     # lazy persist (r6): all six plan branches sit under ONE final action,
     # which fills the cache in a single job (block-level locks serialize
     # any same-partition race inside a job) - the separate count
@@ -1068,7 +1052,7 @@ def kmv_group_overlap(
         .dropDuplicates(["ga", "gb", "h"])
     )
     w = Window.partitionBy("ga", "gb").orderBy("h")
-    ku = pu.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
+    ku = pu.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 64)
     ina = mins.select(F.col("grp").alias("ga"), "h", F.lit(1).alias("in_a"))
     inb = mins.select(F.col("grp").alias("gb"), "h", F.lit(1).alias("in_b"))
     j = ku.join(ina, ["ga", "h"], "left").join(inb, ["gb", "h"], "left")
@@ -1087,7 +1071,7 @@ def kmv_group_overlap(
             F.col("gb").alias("lang_b"),
             "k_used",
             F.round(F.col("n_both") / F.col("k_used"), 4).alias("jaccard_est"),
-            F.when(F.col("k_used") < k, F.col("k_used").cast("double"))
+            F.when(F.col("k_used") < 64, F.col("k_used").cast("double"))
             .otherwise(
                 F.round(
                     (F.col("k_used") - 1).cast("double")

@@ -108,14 +108,13 @@ def salted_join(
     dim: DataFrame,
     key_col: str,
     salt_src_col: str,
-    n_salts: int = 16,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-salted equi-join for HOT KEYS (the row-splitting above handles
     hot ROWS): the big side gets a deterministic salt from md5 of a
     row-identifying column, the dim side replicates to every salt, and
     the join key becomes (key, salt) — a hot key's rows spread over
-    ``n_salts`` tasks instead of one.
+    16 salt tasks instead of one.
 
     When to reach for this instead of the defaults, in order:
     1. broadcast the dim side (no shuffle at all) — always first choice
@@ -133,13 +132,11 @@ def salted_join(
     stable across retries and re-runs; a NULL ``salt_src_col`` falls
     back to salt 0 rather than NULL (a NULL salt would silently
     un-match rows the unsalted join matches). The dim side grows
-    n_salts×: keep it to the small-but-unbroadcastable middle ground
+    16×: keep it to the small-but-unbroadcastable middle ground
     the method exists for. Result rows equal the unsalted join exactly
     (pinned by test) — which is also why ``how`` is restricted to the
     big-side-preserving joins: under right/full outer an unmatched dim
     row would surface once per salt copy."""
-    if n_salts < 1:
-        raise ValueError("n_salts must be >= 1")
     allowed = {"inner", "left", "left_outer", "leftouter", "semi",
                "left_semi", "leftsemi", "anti", "left_anti", "leftanti"}
     if how.lower() not in allowed:
@@ -151,11 +148,11 @@ def salted_join(
     from .corpus import _md5_bucket
 
     salt = F.coalesce(
-        _md5_bucket(F.col(salt_src_col), 8, n_salts), F.lit(0).cast("bigint")
+        _md5_bucket(F.col(salt_src_col), 8, 16), F.lit(0).cast("bigint")
     )
     b = big.withColumn("__salt", salt)
     d = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>"))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(15)).cast("array<bigint>"))
     )
     return b.join(d, [key_col, "__salt"], how).drop("__salt")
 
@@ -164,14 +161,13 @@ def skew_audit(
     df: DataFrame,
     key_col: str,
     top_k: int = 20,
-    hot_share_e4: int = 100,
 ) -> DataFrame:
     """Join-key skew REPORT — the measurement that decides whether a key
     needs :func:`salted_join` (or a broadcast, or AQE skew handling)
     before the 100 TB join is launched: per-key counts on the fact side,
     the ``top_k`` heaviest keys, each with its corpus share and its
-    ratio to the mean key, plus a hot flag at ``hot_share_e4`` (e4
-    fixed-point; default 100 = any key holding >= 1% of rows).
+    ratio to the mean key, plus a hot flag for any key holding >= 1% of
+    rows.
 
     Distributed shape: ONE partial-aggregable groupBy/count on the key
     (a hot key collapses map-side — the audit itself never suffers the
@@ -192,7 +188,7 @@ def skew_audit(
       ``total * n_keys < 2^63`` — four orders of magnitude beyond the
       naive triple product's domain; past ~10^12 rows x 10^6 keys,
       pre-aggregate or drop the e4 scale
-    - ``is_hot``    = share_e4 >= hot_share_e4
+    - ``is_hot``    = share_e4 >= 100
 
     Ordering (cnt DESC, key ASC NULLS LAST) is total — the top-k SET is
     deterministic, and NULLS LAST matches ANSI/DuckDB ASC default (Spark
@@ -230,6 +226,6 @@ def skew_audit(
             ).cast("bigint").alias("xmean_e4"),
             "total",
             "n_keys",
-            F.expr("CAST(cnt * 10000 DIV total >= " + str(int(hot_share_e4)) + " AS INT)").alias("is_hot"),
+            F.expr("CAST(cnt * 10000 DIV total >= 100 AS INT)").alias("is_hot"),
         )
     )

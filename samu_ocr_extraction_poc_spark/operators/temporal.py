@@ -162,7 +162,6 @@ def range_join(
 def decayed_counts(
     events: DataFrame,
     anchor_day: int,
-    bucket_us: int = DAY_US,
     scale: int = 10_000,
     max_age: int = 62,
 ) -> DataFrame:
@@ -192,7 +191,7 @@ def decayed_counts(
         raise ValueError(f"decayed_counts: scale must be positive, got {scale}")
     ev = events.select(
         F.col("event_type").alias("g"),
-        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
+        F.expr(f"t DIV {DAY_US}").cast("bigint").alias("d"),
     )
     return (
         ev.where(F.col("d") <= anchor_day)
@@ -215,7 +214,6 @@ def decayed_counts(
 def sliding_active_users(
     events: DataFrame,
     window_days: int = 7,
-    bucket_us: int = DAY_US,
     eager: bool = True,
 ) -> DataFrame:
     """Rolling distinct-active-user counts — the DAU/WAU stickiness table
@@ -248,7 +246,7 @@ def sliding_active_users(
         )
     ev = events.select(
         F.col("user_id").alias("u"),
-        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
+        F.expr(f"t DIV {DAY_US}").cast("bigint").alias("d"),
     ).distinct()
     if eager:
         ev = ev.localCheckpoint(eager=True)
@@ -279,7 +277,6 @@ def sliding_active_users(
 
 def cohort_retention(
     events: DataFrame,
-    bucket_us: int = DAY_US,
     eager: bool = True,
 ) -> DataFrame:
     """Cohort retention matrix (the other product-analytics staple next
@@ -302,7 +299,7 @@ def cohort_retention(
     5. cohort sizes (one row per day — timespan-bounded, broadcast
        territory) join back for the rate.
 
-    All-integer: days are ``t DIV bucket_us``, the rate is
+    All-integer: days are ``t DIV DAY_US``, the rate is
     ``active*10000 DIV cohort_users``. Age 0 is the cohort itself
     (retention_e4 = 10000 by construction — pinned by test).
 
@@ -313,7 +310,7 @@ def cohort_retention(
     """
     ev = events.select(
         F.col("user_id").alias("u"),
-        F.expr(f"t DIV {bucket_us}").cast("bigint").alias("d"),
+        F.expr(f"t DIV {DAY_US}").cast("bigint").alias("d"),
     )
     active = ev.distinct()
     if eager:

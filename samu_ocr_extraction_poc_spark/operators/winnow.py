@@ -66,13 +66,11 @@ def winnow_fingerprints(
 
 def winnow_candidate_pairs(
     df: DataFrame,
-    k: int = 4,
-    w: int = 5,
     min_shared: int = 2,
     max_df: int = 20,
 ) -> DataFrame:
-    """Document pairs sharing >= ``min_shared`` winnowing fingerprints —
-    the MOSS match candidate generator. Same plan discipline as
+    """Document pairs sharing >= ``min_shared`` winnowing fingerprints
+    (:func:`winnow_fingerprints` at k = 4, w = 5) — the MOSS match candidate generator. Same plan discipline as
     dedup.shared_window_pairs: the fingerprint index is persisted and
     eagerly materialized once (it feeds the df-cut and both self-join
     sides), fingerprints appearing in more than ``max_df`` documents are
@@ -87,7 +85,7 @@ def winnow_candidate_pairs(
     # exchange serves the df groupBy, the cut join, and the self-join; the
     # final eager action fills the lazy cache in one job, so the old
     # per-stage persist+count materialization passes were pure overhead.
-    fps = winnow_fingerprints(df, k=k, w=w).repartition("fp").persist()
+    fps = winnow_fingerprints(df).repartition("fp").persist()
     dfc = fps.groupBy("fp").agg(F.count("*").alias("df_cnt"))
     filtered = fps.join(dfc.where(F.col("df_cnt") <= max_df), "fp").select(
         "doc_id", "fp"

@@ -32,17 +32,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build a local SparkSession; ``cores=None`` -> local[*].
+    """Build a local SparkSession on ``local[n]`` with ``2n`` shuffle
+    partitions (unless ``shuffle_partitions`` is given). n is ``cores``,
+    else ``SPARK_GRAFT_CPUS``, else the number of cores this process may
+    run on (``os.sched_getaffinity``), as bench.py and perfbench pick it.
 
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` is deliberately low:
     each record carries a whole document's span array, so batches are sized
     by document count, not rows (skew discipline, SURVEY.md §4).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    master = f"local[{cores}]" if cores else "local[*]"
-    shuffle = shuffle_partitions or (cores * 2 if cores else 32)
+    cores = (
+        cores
+        or int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
+        or len(os.sched_getaffinity(0))
+    )
+    shuffle = shuffle_partitions or cores * 2
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")

@@ -161,17 +161,14 @@ def decode_bmp(content: bytes) -> tuple[int, int, bytes]:
     return width, height, bytes(rgb)
 
 
-def encode_wav(samples: list[int], framerate: int = 8000, sampwidth: int = 2) -> bytes:
-    """PCM WAV from integer samples (mono)."""
+def encode_wav(samples: list[int]) -> bytes:
+    """16-bit PCM WAV at 8 kHz from integer samples (mono)."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
-        w.setsampwidth(sampwidth)
-        w.setframerate(framerate)
-        if sampwidth == 1:
-            w.writeframes(bytes((s + 128) & 0xFF for s in samples))
-        else:
-            w.writeframes(b"".join(struct.pack("<h", s) for s in samples))
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(b"".join(struct.pack("<h", s) for s in samples))
     return buf.getvalue()
 
 
@@ -402,7 +399,7 @@ def synth_media_table(spark, n: int = 64) -> DataFrame:
             samples = [
                 struct.unpack_from(">h", raw, 2 * j)[0] for j in range(len(raw) // 2)
             ]
-            content = encode_wav(samples, framerate=8000)
+            content = encode_wav(samples)
             mime = "audio/wav"
         else:
             content = b"".join(

@@ -67,16 +67,12 @@ def exclude_manifest_files(df: DataFrame) -> DataFrame:
     return df.where(~F.input_file_name().contains("Manifest"))
 
 
-def spans_from_plain_text(
-    df: DataFrame,
-    words_per_line: int = 8,
-    lines_per_page: int = 5,
-) -> DataFrame:
+def spans_from_plain_text(df: DataFrame) -> DataFrame:
     """Ingestion adapter: plain-text documents -> the engine's interleaved
     (doc_id, spans) corpus shape (BASELINE.json input_hint). This is the
     on-ramp for a user whose corpus is raw text / JSONL / CSV rather than
-    pre-segmented spans: words fold into ``words_per_line``-word line spans
-    with a ``page_break`` span after every ``lines_per_page`` lines, offsets
+    pre-segmented spans: words fold into 8-word line spans with a
+    ``page_break`` span after every 5 lines, offsets
     sequential — the correspondence-letter structure run_extraction expects.
 
     Pure array HOFs (transform/sequence/slice/flatten): zero shuffle, zero
@@ -96,20 +92,20 @@ def spans_from_plain_text(
     # word array let-bound (textfns.let_bound): line_span references it
     # inside the per-line lambda, which would re-split the text per line
     def build(words):
-        n_lines = F.ceil(F.size(words) / float(words_per_line)).cast("int")
+        n_lines = F.ceil(F.size(words) / 8.0).cast("int")
         line_span = lambda i: F.struct(  # noqa: E731
             F.lit("line").alias("kind"),
             F.array_join(
-                F.slice(words, (i - 1) * words_per_line + 1, words_per_line), " "
+                F.slice(words, (i - 1) * 8 + 1, 8), " "
             ).alias("text"),
             F.lit(None).cast("string").alias("media_ref"),
             F.lit(None).cast("int").alias("offset"),  # filled below
         )
-        # line i, plus a page_break after every lines_per_page-th line
+        # line i, plus a page_break after every 5th line
         per_line = F.transform(
             F.sequence(F.lit(1), n_lines),
             lambda i: F.when(
-                i % lines_per_page == 0, F.array(line_span(i), page_break)
+                i % 5 == 0, F.array(line_span(i), page_break)
             ).otherwise(F.array(line_span(i))),
         )
         return F.transform(
@@ -150,7 +146,6 @@ def read_text_corpus(spark: SparkSession, path: str, fmt: str = "parquet") -> Da
 def write_training_shards(
     docs: DataFrame,
     location: str,
-    budget: int = 256,
     n_shards: int = 32,
 ) -> None:
     """The training-pipeline SINK: join the corpus with its packing
@@ -166,7 +161,7 @@ def write_training_shards(
 
     from ..operators.corpus import pack_assignments
 
-    assign = pack_assignments(docs, budget=budget, n_shards=n_shards)
+    assign = pack_assignments(docs, n_shards=n_shards)
     rows = docs.select("doc_id", "text") \
         .join(assign, "doc_id")
     (

@@ -101,11 +101,7 @@ def stream_user_totals(
     )
 
 
-def stream_exact_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "1 hour",
-):
+def stream_exact_dedup(spark: SparkSession, input_dir: str):
     """Streaming exact dedup for a continuously-arriving corpus: md5 the
     normalized text, then ``dropDuplicatesWithinWatermark`` on the hash so
     the dedup state is actually BOUNDED — plain ``dropDuplicates(subset)``
@@ -115,7 +111,7 @@ def stream_exact_dedup(
     10^12 docs unbounded dedup state is the failure mode. First occurrence
     within the watermark horizon wins, matching the batch keep-first
     semantics (operators/dedup.py); a duplicate arriving more than
-    ``watermark`` after its original is re-admitted — the deliberate
+    the 1-hour watermark after its original is re-admitted — the deliberate
     state-size/recall trade.
 
     Returns the streaming DataFrame of surviving (deduped) documents;
@@ -130,22 +126,17 @@ def stream_exact_dedup(
     docs = spark.readStream.schema(schema).parquet(input_dir)
     return (
         docs.withColumn("text_hash", F.md5(normalized(F.col("text"))))
-        .withWatermark("ingest_ts", watermark)
+        .withWatermark("ingest_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
 
 
-def stream_near_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "1 hour",
-    num_hashes: int = 8,
-):
+def stream_near_dedup(spark: SparkSession, input_dir: str):
     """Streaming NEAR-dup dedup: the minhash signature (operators/dedup.py
     family, computed row-locally via row_minhash — no aggregation state,
     which is what makes it legal upstream of a stateful dedup) is the
     dedup key for ``dropDuplicatesWithinWatermark``. Documents whose full
-    num_hashes-signature collides within the watermark horizon collapse to
+    8-hash signature collides within the 1-hour watermark horizon collapse to
     the first arrival — the streaming analog of the batch pairs->clusters
     pipeline at its highest-precision point (a full-signature match is the
     strictest LSH band). State is bounded by the watermark, same
@@ -161,51 +152,37 @@ def stream_near_dedup(
     )
     docs = spark.readStream.schema(schema).parquet(input_dir)
     return (
-        docs.select("*", row_minhash(F.col("text"), num_hashes=num_hashes).alias("mh"))
+        docs.select("*", row_minhash(F.col("text")).alias("mh"))
         .select(*docs.columns, "mh.*")
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark([f"h{i}" for i in range(num_hashes)])
-        .drop(*[f"h{i}" for i in range(num_hashes)])
+        .withWatermark("ingest_ts", "1 hour")
+        .dropDuplicatesWithinWatermark([f"h{i}" for i in range(8)])
+        .drop(*[f"h{i}" for i in range(8)])
     )
 
 
-def stream_event_metrics(
-    spark: SparkSession,
-    events: DataFrame | None = None,
-    input_dir: str | None = None,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-):
-    """Watermarked tumbling-window aggregation over an event stream.
-
-    Pass ``input_dir`` for a real file stream; the returned DataFrame is a
+def stream_event_metrics(spark: SparkSession, input_dir: str):
+    """Watermarked (30 minutes) 1-hour tumbling-window aggregation over
+    the event file stream in ``input_dir``; the returned DataFrame is a
     streaming frame to be started with ``writeStream`` (tests use the memory
     sink + availableNow trigger).
     """
-    if events is None:
-        if input_dir is None:
-            raise ValueError("need events or input_dir")
-        schema = (
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        events = spark.readStream.schema(schema).parquet(input_dir)
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    events = spark.readStream.schema(schema).parquet(input_dir)
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("wstart"), "event_type", "n", "total_value")
     )
 
 
-def stream_curate(
-    spark: SparkSession,
-    input_dir: str,
-    min_quality: float = 0.4,
-):
+def stream_curate(spark: SparkSession, input_dir: str):
     """Stateless streaming curation stage: score each arriving document
-    with the composite quality gate and scrub PII, keeping survivors —
-    quality_score and redact_pii are pure Column expressions, so this
+    with the composite quality gate (quality >= 0.4) and scrub PII,
+    keeping survivors — quality_score and redact_pii are pure Column expressions, so this
     stage carries NO state (unlike the dedup stages it composes with) and
     backpressures only on the scan. The standard ingest order is
     curate (stateless) -> near-dup dedup (watermark-bounded state): cheap
@@ -230,7 +207,7 @@ def stream_curate(
             quality_score(F.col("text")).alias("quality"),
             redact_pii(F.col("text")).alias("clean_text"),
         )
-        .where(F.col("quality") >= min_quality)
+        .where(F.col("quality") >= 0.4)
     )
 
 
@@ -318,19 +295,13 @@ def latest_hll_state(spark: SparkSession, state_dir: str):
     return state, best
 
 
-def stream_hll(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    p: int = 8,
-    w_bits: int = 32,
-):
+def stream_hll(spark: SparkSession, input_dir: str, state_dir: str):
     """Streaming HLL maintenance: a continuously-updated distinct-count
     sketch over the arriving corpus's word bigrams (vocabulary growth is
     THE live signal a crawl-ingest dashboard wants, and the exact answer
     needs unbounded state). Each micro-batch builds its OWN register
-    table (operators/sketch.py:hll_build — one partial-aggregable
-    groupBy/max) and merges it into the persisted sketch via foreachBatch;
+    table (operators/sketch.py:hll_build at p = 8, w_bits = 32 — one
+    partial-aggregable groupBy/max) and merges it into the persisted sketch via foreachBatch;
     the merged <= 2^p rows are collected (the bounded collect-once
     discipline) and written as a NEW VERSION ``v=<batch_id>`` whose
     _SUCCESS marker is the commit point — an in-place overwrite deletes
@@ -342,8 +313,8 @@ def stream_hll(
     replaces a committed version. Once a version is committed, the
     versions below it are deleted, so the state holds one version
     between batches. Each version keeps the sketch's parameters
-    in its ``bucket`` metadata, so a restart with other (p, w_bits) is
-    refused by the merge instead of garbling the registers.
+    in its ``bucket`` metadata, so a state built with other (p, w_bits)
+    is refused by the merge instead of garbling the registers.
 
     The delivery-semantics argument: hll_merge is per-bucket MAX —
     associative, commutative, and IDEMPOTENT — so replaying a micro-batch
@@ -368,7 +339,7 @@ def stream_hll(
 
     def update(batch: DataFrame, batch_id: int) -> None:
         items = batch.select(F.explode(_kgrams(F.col("text"), 2)).alias("tok"))
-        breg = hll_build(items, "tok", p=p, w_bits=w_bits)
+        breg = hll_build(items, "tok")
         sess = batch.sparkSession
         state, committed = latest_hll_state(sess, state_dir)
         if committed > batch_id:

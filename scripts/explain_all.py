@@ -20,8 +20,8 @@ def main() -> None:
     from samu_ocr_extraction_poc_spark.session import get_spark
 
     # get_spark's defaults, the session the queries run in:
-    # local[$SPARK_GRAFT_CPUS] with twice as many shuffle partitions
-    # (local[*] with 32 when it is unset)
+    # local[$SPARK_GRAFT_CPUS] (the cores this process may run on when it
+    # is unset) with twice as many shuffle partitions
     spark = get_spark("explain")
     master = spark.sparkContext.master
     partitions = spark.conf.get("spark.sql.shuffle.partitions")

@@ -203,6 +203,7 @@ def test_table_read_runs_no_job(spark):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
     assert jobs == []
 
 

@@ -132,7 +132,7 @@ def test_media_codec_exact_values():
     assert decode_bmp(encode_bmp(3, 2, rgb32)) == (3, 2, rgb32)
 
     samples = [0, 16384, -16384, 32767, -32768, 0, 100, -100]
-    duration_ms, n, vals = decode_wav(encode_wav(samples, framerate=8000))
+    duration_ms, n, vals = decode_wav(encode_wav(samples))
     assert n == len(samples) and duration_ms == 1
     assert vals[1] == 0.5 and vals[4] == -1.0
 
@@ -461,7 +461,7 @@ def test_bm25_has_no_window_and_takes_ordered_topk(spark):
     assert "TakeOrderedAndProject" in topk_plan
     assert "Window" not in topk_plan
 
-    ranked = bm25_topk(docs, ["customer", "merge", "slow"], k=10)
+    ranked = bm25_topk(docs, ["customer", "merge", "slow"])
     plan = _plan(ranked)
     assert "Window" not in plan
     # ranks are still the dense 1..k sequence with (score desc, doc_id) order
@@ -610,7 +610,7 @@ def test_hyperplane_lsh_recall_vs_brute(spark):
         "label",
     )
     corpus = emb.unionByName(dup)
-    pairs = hyperplane_lsh_pairs(corpus, dim=64, n_tables=6, bits_per_table=4)
+    pairs = hyperplane_lsh_pairs(corpus, dim=64)
     found = {(r["id_a"], r["id_b"]) for r in pairs.where("cos >= 0.99").collect()}
     want = {(r["vec_id"], r["vec_id"] + 10000) for r in emb.select("vec_id").collect()}
     missed = want - found
@@ -711,7 +711,7 @@ def test_simhash_multiprobe_recall_and_blocking(spark):
     ]
     sig = spark.createDataFrame(rows, "doc_id string, simhash long")
     got = {(r["doc_a"], r["doc_b"]): r["hamming"]
-           for r in simhash_multiprobe_pairs(sig, max_hamming=12).collect()}
+           for r in simhash_multiprobe_pairs(sig).collect()}
     assert got[("a", "b")] == 1
     assert got[("a", "c")] == 1
     assert ("a", "d") not in got  # hamming 13 exceeds the threshold
@@ -810,11 +810,11 @@ def test_pair_operators_release_index_caches(spark):
     test_docs = docs.where("doc_id % 2 = 1")
     calls = [
         lambda: lsh_candidate_pairs(minhash_signatures(docs), rows_per_band=2),
-        lambda: simhash_multiprobe_pairs(simhash(docs), max_hamming=12),
-        lambda: ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_df=100),
-        lambda: shared_window_pairs(docs, k=16, max_df=50),
-        lambda: cross_corpus_contamination(train, test_docs, k=16, max_df=50),
-        lambda: remove_boilerplate(docs, seg_tokens=8, min_doc_freq=2),
+        lambda: simhash_multiprobe_pairs(simhash(docs)),
+        lambda: ngram_jaccard_pairs(docs),
+        lambda: shared_window_pairs(docs),
+        lambda: cross_corpus_contamination(train, test_docs),
+        lambda: remove_boilerplate(docs, seg_tokens=8),
     ]
     # ContextCleaner releases dereferenced checkpoint blocks asynchronously,
     # so count cumulatively: at most ONE live frame (the eager result) per
@@ -873,7 +873,7 @@ def test_chunk_documents_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_id"], r["chunk_id"]): (r["n_tokens"], r["chunk_text"])
-        for r in chunk_documents(df, chunk_tokens=64, overlap=16).collect()
+        for r in chunk_documents(df).collect()
     }
     expected = {}
     for i, n in enumerate(lengths):
@@ -1063,6 +1063,7 @@ def test_connected_components_driver_finish_matches_loop(spark):
                     jobs = set(sc.statusTracker().getJobIdsForGroup(group)) - before
                 finally:
                     sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setJobDescription(None)
             assert stats["finish"] == finish
             out[finish] = (sorted(cc.collect()), cc.schema, len(jobs))
         assert out["driver"][:2] == out["spark"][:2]
@@ -1090,7 +1091,7 @@ def test_remove_boilerplate_known_corpus(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in remove_boilerplate(docs, seg_tokens=4, min_doc_freq=2).collect()
+        for r in remove_boilerplate(docs, seg_tokens=4).collect()
     }
     assert len(out) == 5
     assert out[1]["clean_text"] == "a b c d e f g h"
@@ -1280,11 +1281,11 @@ def test_training_shard_write_read_roundtrip(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     loc = str(tmp_path / "shards")
-    write_training_shards(docs, loc, budget=256, n_shards=8)
+    write_training_shards(docs, loc, n_shards=8)
 
     expect = {
         r["doc_id"]: (r["shard"], r["bin"])
-        for r in pack_assignments(docs, budget=256, n_shards=8).collect()
+        for r in pack_assignments(docs, n_shards=8).collect()
     }
     back = spark.read.parquet(loc)
     got = {r["doc_id"]: (r["shard"], r["bin"]) for r in back.collect()}
@@ -1345,7 +1346,7 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
             .collect()
         )
     }
-    est = kmv_group_overlap(docs, k=64).collect()
+    est = kmv_group_overlap(docs).collect()
     assert len(est) == len(sets) * (len(sets) - 1) // 2
     for r in est:
         a, b = sets[r["lang_a"]], sets[r["lang_b"]]
@@ -1490,12 +1491,12 @@ def test_ivf_index_build_query_roundtrip(spark, tmp_path):
     exact = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
              for r in brute_topk(emb, queries, k=3).collect()}
     full = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-            for r in ivf_topk_indexed(spark, loc, queries, k=3, n_probe=4).collect()}
+            for r in ivf_topk_indexed(spark, loc, queries, n_probe=4).collect()}
     assert full == exact
 
-    one = ivf_topk_indexed(spark, loc, queries, k=3, n_probe=1)
+    one = ivf_topk_indexed(spark, loc, queries, n_probe=1)
     rows = one.collect()
-    assert rows and ivf_topk_indexed(spark, loc, queries, k=3, n_probe=1).collect() == rows
+    assert rows and ivf_topk_indexed(spark, loc, queries, n_probe=1).collect() == rows
     # every query still gets k results from its probed list
     from collections import Counter
 
@@ -1778,7 +1779,7 @@ def test_cms_heavy_hitters_exact_and_plan(spark):
         got = {
             r["key"]: r["cnt"]
             for r in cms_heavy_hitters(
-                df, "key", num=1, den=10, width=width, depth=2
+                df, "key", den=10, width=width, depth=2
             ).collect()
         }
         assert got == expected, width
@@ -1803,10 +1804,10 @@ def test_cms_heavy_hitters_exact_and_plan(spark):
     assert false_candidates  # the screen really over-admits at width 4...
     got4 = {
         r["key"]: r["cnt"]
-        for r in cms_heavy_hitters(df, "key", num=1, den=10, width=4, depth=1).collect()
+        for r in cms_heavy_hitters(df, "key", den=10, width=4, depth=1).collect()
     }
     assert got4 == expected  # ...and the exact verify kills every one
-    plan = _plan(cms_heavy_hitters(df, "key", num=1, den=10, width=16, depth=2))
+    plan = _plan(cms_heavy_hitters(df, "key", den=10, width=16, depth=2))
     assert "SinglePartition" not in plan
     assert "Join" not in plan  # literal probe, not a cell-table join
     ex = plan.index("Exchange hashpartitioning(k__")
@@ -1921,9 +1922,7 @@ def test_alpha_mix_semantics_and_plan(spark):
             r["n_docs"], r["n_tokens"], r["weight"], r["rate"],
             r["n_kept"], r["kept_tokens"],
         )
-        for r in alpha_mix(
-            df, budget_permille=400
-        ).collect()
+        for r in alpha_mix(df).collect()
     }
     # ttot=118, budget=47, wsum=15
     exp_rate = {
@@ -1968,7 +1967,7 @@ def test_hist_quantile_semantics(spark):
     )
 
     vals = spark.createDataFrame([(5,), (10,), (15,), (20,), (100,)], "v bigint")
-    h = hist_build(vals, "v", lo=0, hi=100, n_bins=10)
+    h = hist_build(vals, "v", hi=100, n_bins=10)
     out = {
         r["p"]: (r["rnk"], r["est"], r["bin_lo"], r["bin_hi"])
         for r in hist_quantiles(h, [20, 50, 80, 100]).collect()
@@ -1980,25 +1979,25 @@ def test_hist_quantile_semantics(spark):
     assert out[100] == (5, 90, 90, 100)  # clamped 100 reported in top bin
 
     # linearity: merge of two halves == histogram of the whole
-    h1 = hist_build(vals.where(F.col("v") <= 10), "v", lo=0, hi=100, n_bins=10)
-    h2 = hist_build(vals.where(F.col("v") > 10), "v", lo=0, hi=100, n_bins=10)
+    h1 = hist_build(vals.where(F.col("v") <= 10), "v", hi=100, n_bins=10)
+    h2 = hist_build(vals.where(F.col("v") > 10), "v", hi=100, n_bins=10)
     merged = hist_merge(h1, h2)
     em = sorted(map(tuple, hist_quantiles(merged, [50, 100]).collect()))
     eb = sorted(map(tuple, hist_quantiles(h, [50, 100]).collect()))
     assert em == eb
 
     with _pt.raises(ValueError, match="hist meta mismatch"):
-        hist_merge(h, hist_build(vals, "v", lo=0, hi=200, n_bins=10))
+        hist_merge(h, hist_build(vals, "v", hi=200, n_bins=10))
 
     # empty input: the bin-less sketch reads off as zero quantile rows
-    empty = hist_build(vals.where(F.col("v") < 0), "v", lo=0, hi=100, n_bins=10)
+    empty = hist_build(vals.where(F.col("v") < 0), "v", hi=100, n_bins=10)
     assert hist_quantiles(empty, [50]).count() == 0
 
     # overflow guard: an extreme outlier (>= 2^63 / n_bins — the
     # corrupt-input class) must clamp into the TOP bin, not wrap the
     # (v - lo) * n_bins product negative and land silently in bin 0
     huge = spark.createDataFrame([(2**62,), (-(2**62),), (50,)], "v bigint")
-    hh = hist_build(huge, "v", lo=0, hi=100, n_bins=10)
+    hh = hist_build(huge, "v", hi=100, n_bins=10)
     bins = {r["b"]: r["cnt"] for r in hh.collect()}
     assert bins == {9: 1, 0: 1, 5: 1}
 
@@ -2018,7 +2017,7 @@ def test_grouped_quantiles_semantics(spark):
     df = spark.createDataFrame(rows, "g string, v bigint")
     out = {
         (r["g"], r["p"]): (r["rnk"], r["est"], r["bin_lo"], r["bin_hi"])
-        for r in grouped_quantiles(df, "g", "v", [50, 100], lo=0, hi=100, n_bins=10).collect()
+        for r in grouped_quantiles(df, "g", "v", [50, 100], hi=100, n_bins=10).collect()
     }
     # group a matches the ungrouped hist_quantiles hand computation
     assert out[("a", 50)] == (3, 15, 10, 20)
@@ -2030,7 +2029,7 @@ def test_grouped_quantiles_semantics(spark):
     assert not any(g == "c" for (g, _p) in out)
 
     plan = grouped_quantiles(
-        df, "g", "v", [50], lo=0, hi=100, n_bins=10
+        df, "g", "v", [50], hi=100, n_bins=10
     )._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
 
@@ -2150,7 +2149,7 @@ def test_dsir_ranks_target_language_highest(spark):
     from samu_ocr_extraction_poc_spark.operators.corpus import dsir_importance
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    scores = dsir_importance(docs, target_value="en")
+    scores = dsir_importance(docs)
     by_lang = {
         r["lang"]: r["m"]
         for r in scores.join(docs.select("doc_id", "lang"), "doc_id")
@@ -2393,7 +2392,7 @@ def test_winnowing_guarantee_and_sampling_rate(spark):
     assert not (by_doc[1] & by_doc[3]) and not (by_doc[2] & by_doc[3])
     assert 4 not in by_doc  # empty doc -> no rows
 
-    pairs = winnow_candidate_pairs(docs, k=4, w=5, min_shared=1, max_df=20).collect()
+    pairs = winnow_candidate_pairs(docs, min_shared=1, max_df=20).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
     # sampling: the fingerprint index is a strict fraction of the k-gram index
@@ -2530,7 +2529,7 @@ def test_contamination_report_verdicts(spark):
         [(1, leaked), (2, " ".join(f"z{i}" for i in range(20)))],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in contamination_report(train, test, k=16, max_frac=0.2).collect()}
+    out = {r["doc_id"]: r for r in contamination_report(train, test).collect()}
     assert set(out) == {1, 2}
     assert out[1]["n_windows"] == 5 and out[1]["n_windows_hit"] == 5
     assert out[1]["contam_frac"] == 1.0 and out[1]["is_clean"] == 0
@@ -2973,8 +2972,8 @@ def test_winnow_max_df_cut_drops_ubiquitous_fingerprints(spark):
     )
     # all 5 docs share the run's fingerprints: with max_df=4 the shared
     # fps are cut and no pair survives; with max_df=5 pairs appear
-    assert winnow_candidate_pairs(docs, k=4, w=5, min_shared=1, max_df=4).count() == 0
-    assert winnow_candidate_pairs(docs, k=4, w=5, min_shared=1, max_df=5).count() > 0
+    assert winnow_candidate_pairs(docs, min_shared=1, max_df=4).count() == 0
+    assert winnow_candidate_pairs(docs, min_shared=1, max_df=5).count() > 0
 
 
 def test_epoch_upsample_zero_factor_drops_stratum(spark):
@@ -2987,7 +2986,7 @@ def test_epoch_upsample_zero_factor_drops_stratum(spark):
         [(1, "a", "en"), (2, "b", "fr"), (3, "c", "de")],
         "doc_id long, text string, lang string",
     )
-    out = epoch_upsample(docs, factors={"en": 2, "fr": 0}, default_factor=1).collect()
+    out = epoch_upsample(docs, factors={"en": 2, "fr": 0}).collect()
     got = {}
     for r in out:
         got.setdefault(r["stratum"], set()).add((r["doc_id"], r["epoch"]))
@@ -3457,7 +3456,7 @@ def test_salted_join_equals_plain_and_spreads_hot_key(spark):
     )
     salted = sorted(
         (r["k"], r["row_id"], r["dim_val"])
-        for r in salted_join(big, dim, "k", "row_id", n_salts=16).collect()
+        for r in salted_join(big, dim, "k", "row_id").collect()
     )
     assert salted == plain and len(plain) > 1800
 
@@ -3478,8 +3477,8 @@ def test_salted_join_equals_plain_and_spreads_hot_key(spark):
     assert sizes["mx"] < hot_total / 8  # vs hot_total in the unsalted layout
 
     # determinism across runs
-    s1 = sorted(map(tuple, salted_join(big, dim, "k", "row_id", n_salts=16).collect()))
-    s2 = sorted(map(tuple, salted_join(big, dim, "k", "row_id", n_salts=16).collect()))
+    s1 = sorted(map(tuple, salted_join(big, dim, "k", "row_id").collect()))
+    s2 = sorted(map(tuple, salted_join(big, dim, "k", "row_id").collect()))
     assert s1 == s2
 
     # NULL salt source falls back to salt 0 — the row still matches
@@ -3488,13 +3487,13 @@ def test_salted_join_equals_plain_and_spreads_hot_key(spark):
     nullish = spark.createDataFrame(
         [("hot", None), ("hot", 7)], "k string, row_id bigint"
     )
-    nj = salted_join(nullish, dim, "k", "row_id", n_salts=16).collect()
+    nj = salted_join(nullish, dim, "k", "row_id").collect()
     assert len(nj) == 2  # a NULL salt would silently drop the first row
 
     # big-side-preserving joins only: right/full outer would surface an
     # unmatched dim row once per salt copy
     with _pt.raises(ValueError, match="big-side-preserving"):
-        salted_join(big, dim, "k", "row_id", n_salts=16, how="full")
+        salted_join(big, dim, "k", "row_id", how="full")
 
 
 def test_funnel_strict_order_semantics(spark):
@@ -3612,9 +3611,7 @@ def test_minhash_jaccard_estimates_match_replay(spark):
         (r["doc_a"], r["doc_b"]): (
             r["n_agree"], r["est_e4"], r["exact_e4"], r["err_e4"]
         )
-        for r in minhash_jaccard_estimates(
-            df, num_hashes=8, rows_per_band=2, k=3
-        ).collect()
+        for r in minhash_jaccard_estimates(df).collect()
     }
     audit = _py_minhash_audit(texts, num_hashes=8, k=3)
     # every emitted pair matches the serial arithmetic exactly

@@ -41,8 +41,8 @@ def _builds(keys):
         SK.bloom_build(keys, "key", m_bits=1 << 12, k=4),
         SK.cms_build(half_a, "key", width=64, depth=3),
         SK.cms_build(half_b, "key", width=64, depth=3),
-        SK.hist_build(half_a, "v", lo=0, hi=300, n_bins=30),
-        SK.hist_build(half_b, "v", lo=0, hi=300, n_bins=30),
+        SK.hist_build(half_a, "v", hi=300, n_bins=30),
+        SK.hist_build(half_b, "v", hi=300, n_bins=30),
         SK.hll_build(half_a, "key", p=9, w_bits=31),
         SK.hll_build(half_b, "key", p=9, w_bits=31),
         SK.hll_build_grouped(keys, "g", "key", p=9, w_bits=31),
